@@ -24,10 +24,9 @@ over this engine's own DOM (parser/nodes.py):
 All integer/string outputs (scores are scaled to integer e3 units)
 so driver hashing never sees a float.
 
-`main_content_stage` lifts the per-doc election to Spark via
-mapInArrow over (doc_id, html, base_uri) batches — the same typed
-RecordBatch idiom as select_stage (operators/pipeline.py:244), one
-map-only stage, no shuffle.
+`main_content_stage` lifts the per-doc election to Spark on the shared
+per-document Arrow kernel (operators/pipeline.py doc_stage) over
+(doc_id, html[, base_uri]) — one map-only stage, no shuffle.
 
 Reference parity anchor: text assembly semantics are the reference's
 Element.text() whitespace normalisation (org/jsoup/nodes/
@@ -37,7 +36,6 @@ Element.java); the scoring layer is public readability knowledge.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 from ..parser import tags as _tags
 from ..parser.nodes import (
@@ -128,17 +126,6 @@ def _text_and_anchors(root: Element) -> tuple[str, list[Element]]:
             stack.pop()
             _tail(node, accum, top[2])
     return java_trim("".join(accum)), anchors
-
-
-def _link_density(el: Element) -> float:
-    total = len(el.text())
-    if total == 0:
-        return 0.0
-    linked = 0
-    for d in el.elements():
-        if d.name == "a":
-            linked += len(d.text())
-    return min(1.0, linked / total)
 
 
 def _memo_text(el: Element, memo: dict[int, str]) -> str:
@@ -242,48 +229,7 @@ def extract_main(doc: Document) -> dict:
 
 def main_content_stage(docs: "DataFrame") -> "DataFrame":
     """(doc_id, html[, base_uri]) -> (doc_id, tag, el_id, el_class,
-    score_e3, text). Map-only mapInArrow stage, select_stage idiom."""
-    import pyarrow as pa
-    from ..operators.pipeline import _parse_doc
-
-    has_base = "base_uri" in docs.columns
-    out_schema = pa.schema([
-        ("doc_id", pa.string()), ("tag", pa.string()),
-        ("el_id", pa.string()), ("el_class", pa.string()),
-        ("score_e3", pa.int64()), ("text", pa.string()),
-    ])
-
-    def run(batches: Iterator["pa.RecordBatch"]) \
-            -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            doc_ids = batch.column(idx["doc_id"])
-            htmls = batch.column(idx["html"]).to_pylist()
-            bases = (batch.column(idx["base_uri"]).to_pylist()
-                     if has_base else [""] * len(htmls))
-            tags: list = []
-            ids: list = []
-            classes: list = []
-            scores: list = []
-            texts: list = []
-            for html, base in zip(htmls, bases):
-                r = extract_main(_parse_doc(html or "", base or ""))
-                tags.append(r["tag"])
-                ids.append(r["el_id"])
-                classes.append(r["el_class"])
-                scores.append(r["score_e3"])
-                texts.append(r["text"])
-            yield pa.RecordBatch.from_arrays([
-                doc_ids.cast(pa.string())
-                if doc_ids.type != pa.string() else doc_ids,
-                pa.array(tags, pa.string()),
-                pa.array(ids, pa.string()),
-                pa.array(classes, pa.string()),
-                pa.array(scores, pa.int64()),
-                pa.array(texts, pa.string()),
-            ], schema=out_schema)
-
-    return docs.mapInArrow(
-        run,
-        schema=("doc_id string, tag string, el_id string, "
-                "el_class string, score_e3 long, text string"))
+    score_e3, text). Map-only stage (operators.pipeline.page_stage)."""
+    from .. import schemas
+    from ..operators.pipeline import page_stage
+    return page_stage(docs, extract_main, schemas.MAIN_CONTENT_OUT)

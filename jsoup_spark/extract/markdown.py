@@ -25,14 +25,13 @@ pinned, deterministic policy:
   (``\\ ` * _ [ ]`` always; ``#``, ``-``, ``>``, ``1.`` only where
   they would start a block) so conversion round-trips visually.
 
-`markdown_stage` lifts the walk to Spark via mapInArrow (map-only,
-the select_stage idiom).
+`markdown_stage` lifts the walk to Spark on the shared per-document
+Arrow kernel (operators/pipeline.py doc_stage), map-only.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 from ..parser.nodes import Document, Element, TextNode
 
@@ -252,29 +251,9 @@ def to_markdown(doc: Document) -> str:
 
 
 def markdown_stage(docs: "DataFrame") -> "DataFrame":
-    """(doc_id, html[, base_uri]) -> (doc_id, markdown). Map-only
-    mapInArrow stage."""
-    import pyarrow as pa
-    from ..operators.pipeline import _parse_doc
-
-    has_base = "base_uri" in docs.columns
-    out_schema = pa.schema([("doc_id", pa.string()),
-                            ("markdown", pa.string())])
-
-    def run(batches: Iterator["pa.RecordBatch"]) \
-            -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            doc_ids = batch.column(idx["doc_id"])
-            htmls = batch.column(idx["html"]).to_pylist()
-            bases = (batch.column(idx["base_uri"]).to_pylist()
-                     if has_base else [""] * len(htmls))
-            mds = [to_markdown(_parse_doc(h or "", b or ""))
-                   for h, b in zip(htmls, bases)]
-            yield pa.RecordBatch.from_arrays([
-                doc_ids.cast(pa.string())
-                if doc_ids.type != pa.string() else doc_ids,
-                pa.array(mds, pa.string()),
-            ], schema=out_schema)
-
-    return docs.mapInArrow(run, schema="doc_id string, markdown string")
+    """(doc_id, html[, base_uri]) -> (doc_id, markdown). Map-only stage
+    (operators.pipeline.page_stage)."""
+    from .. import schemas
+    from ..operators.pipeline import page_stage
+    return page_stage(docs, lambda doc: {"markdown": to_markdown(doc)},
+                      schemas.MARKDOWN_OUT)

@@ -32,8 +32,9 @@ Precedence (first non-empty wins):
   site_name:   og:site_name;  lang: html[lang]
                > meta[http-equiv=content-language]
 
-`metadata_stage` lifts extraction to Spark (mapInArrow, flat string
-columns, map-only plan — the select_stage idiom).
+`metadata_stage` lifts extraction to Spark on the shared per-document
+Arrow kernel (operators/pipeline.py doc_stage): flat string columns,
+map-only plan.
 
 Reference parity anchor: attribute/text access semantics are the
 reference's (org/jsoup/nodes/Element.java attr()/text(); absUrl for
@@ -43,7 +44,7 @@ canonical); the vocabularies are public standards.
 from __future__ import annotations
 
 import json
-from typing import Any, Iterator
+from typing import Any
 
 from ..parser.nodes import Document, Element
 from ..select.selector import select
@@ -197,47 +198,9 @@ def extract_metadata(doc: Document) -> dict:
     }
 
 
-_OUT_FIELDS = ("title", "description", "author", "published",
-               "canonical_url", "image", "site_name", "lang",
-               "jsonld_type")
-
-
 def metadata_stage(docs: "DataFrame") -> "DataFrame":
-    """(doc_id, html[, base_uri]) -> flat metadata columns.
-    Map-only mapInArrow stage (select_stage idiom)."""
-    import pyarrow as pa
-    from ..operators.pipeline import _parse_doc
-
-    has_base = "base_uri" in docs.columns
-    out_schema = pa.schema(
-        [("doc_id", pa.string())]
-        + [(f, pa.string()) for f in _OUT_FIELDS]
-        + [("n_meta", pa.int32())])
-
-    def run(batches: Iterator["pa.RecordBatch"]) \
-            -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            doc_ids = batch.column(idx["doc_id"])
-            htmls = batch.column(idx["html"]).to_pylist()
-            bases = (batch.column(idx["base_uri"]).to_pylist()
-                     if has_base else [""] * len(htmls))
-            cols: dict[str, list] = {f: [] for f in _OUT_FIELDS}
-            n_meta: list[int] = []
-            for html, base in zip(htmls, bases):
-                r = extract_metadata(_parse_doc(html or "", base or ""))
-                for f in _OUT_FIELDS:
-                    cols[f].append(r[f])
-                n_meta.append(r["n_meta"])
-            yield pa.RecordBatch.from_arrays(
-                [doc_ids.cast(pa.string())
-                 if doc_ids.type != pa.string() else doc_ids]
-                + [pa.array(cols[f], pa.string()) for f in _OUT_FIELDS]
-                + [pa.array(n_meta, pa.int32())],
-                schema=out_schema)
-
-    return docs.mapInArrow(
-        run,
-        schema=("doc_id string, " +
-                ", ".join(f"{f} string" for f in _OUT_FIELDS)
-                + ", n_meta int"))
+    """(doc_id, html[, base_uri]) -> flat metadata columns. Map-only
+    stage (operators.pipeline.page_stage)."""
+    from .. import schemas
+    from ..operators.pipeline import page_stage
+    return page_stage(docs, extract_metadata, schemas.METADATA_OUT)

@@ -4,8 +4,9 @@ Spark-first layering:
 * plan-level stages (reassembly, bucketing, joins, aggregation) are pure
   Catalyst expressions;
 * the per-document algorithms (WHATWG parse, selector eval, cleaning) run
-  inside ``mapInPandas`` over Arrow batches — batched, never row-at-a-time
-  Python UDFs.
+  inside one ``mapInArrow`` kernel, ``doc_stage``, over Arrow batches —
+  batched, never row-at-a-time Python UDFs. Every parse-gated stage is its
+  Catalyst preparation plus a ``per_doc`` function handed to that kernel.
 
 Scale design (north rule):
 * ``bucket_by_size`` range-partitions on html length so a handful of
@@ -24,20 +25,24 @@ Output span contract (per-row invariant, BASELINE.json):
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
+import functools
+from typing import Callable, Iterator, Sequence
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import schemas
 from ..clean import safelist as safelist_mod
 from ..clean.cleaner import clean_document
-from ..clean.serializer import inner_html
+from ..clean.serializer import DEFAULT, OutputSettings, inner_html
 from ..extract.spans import extract_spans, stream_spans
-from ..parser.treebuilder import HtmlTreeBuilder
+from ..parser.nodes import Element
+from ..parser.treebuilder import HtmlTreeBuilder, parse
+from ..parser.xmlbuilder import parse_xml
 from ..select.selector import compile_query, select
-from ..sources.corpus import BASE_URI, assemble_html
+from ..sources.corpus import BASE_URI, assemble_html, span_html
 
 # ---------------------------------------------------------------- bucketing
 
@@ -63,13 +68,94 @@ def bucket_by_size(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return out.drop("_size_class", "_salt")
 
 
+# ---------------------------------------------------------------- kernel
+
+def _values(col: pa.Array) -> list:
+    """One Python value per row of an input column. Strings and null-free
+    integers convert through NumPy, many times faster than to_pylist and
+    with the same values (None for a null string). A list<struct> column
+    is read as flat child arrays plus offsets, each row a list of field
+    tuples: to_pylist on the nested column would build one dict per
+    element."""
+    t = col.type
+    if pa.types.is_list(t) and pa.types.is_struct(t.value_type):
+        off = col.offsets.to_numpy().tolist()  # slice-aware, indexes values
+        flat = list(zip(*(_values(col.values.field(k))
+                          for k in range(t.value_type.num_fields))))
+        return [flat[a:b] for a, b in zip(off, off[1:])]
+    if (pa.types.is_string(t) or pa.types.is_large_string(t)
+            or (pa.types.is_integer(t) and col.null_count == 0)):
+        return col.to_numpy(zero_copy_only=False).tolist()
+    return col.to_pylist()
+
+
+def doc_stage(prepared: DataFrame, in_cols: Sequence[str],
+              per_doc: Callable[..., Sequence[tuple]],
+              out_schema: T.StructType) -> DataFrame:
+    """The per-document Arrow kernel behind every parse-gated stage.
+
+    Projects ``doc_id`` plus ``in_cols`` from ``prepared`` and runs one
+    ``mapInArrow``. For each document, ``per_doc(*values)`` (one value per
+    ``in_cols`` entry) returns its output rows as tuples matching
+    ``out_schema`` without the leading ``doc_id``: one row for 1:1 stages,
+    any number for 1:N stages. Each input batch becomes one RecordBatch:
+    its rows convert in one ``pa.array`` against the Arrow form of
+    ``out_schema`` (Arrow's builders fill the flat child buffers and
+    offsets of nested columns), and ``doc_id`` is one Arrow take on the
+    rows' source index, so a batch with no output rows is still a typed
+    result."""
+    arrow_schema = to_arrow_schema(out_schema)
+    row_type = pa.struct(list(arrow_schema)[1:])
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows: list = []
+            src: list = []
+            for i, values in enumerate(zip(*map(_values, batch.columns[1:]))):
+                out = per_doc(*values)
+                rows += out
+                src += [i] * len(out)
+            # from_arrays casts each array to its schema type, e.g. a long
+            # doc_id to the declared string
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).take(pa.array(src, pa.int32()))]
+                + pa.array(rows, row_type).flatten(),
+                schema=arrow_schema)
+
+    return prepared.select("doc_id", *in_cols).mapInArrow(
+        run, schema=out_schema)
+
+
+def page_stage(docs: DataFrame, per_page: Callable[..., dict],
+               out_schema: T.StructType) -> DataFrame:
+    """(doc_id, html[, base_uri]) -> one row per page: the ``out_schema``
+    fields of the dict ``per_page`` returns for the parsed page. A null
+    html or base_uri reads as ""."""
+    fields = out_schema.names[1:]
+    in_cols = ["html"] + (["base_uri"] if "base_uri" in docs.columns else [])
+
+    def per_doc(html, base_uri=""):
+        r = per_page(parse(html or "", base_uri or ""))
+        return [tuple(r[f] for f in fields)]
+
+    return doc_stage(docs, in_cols, per_doc, out_schema)
+
+
+@functools.lru_cache(maxsize=256)
+def _compiled(language: str, query: str):
+    """A CSS or XPath query compiled once per process: where the stage is
+    built, to fail fast, and on a worker at its first document. Compiled
+    queries carry per-call memos, so they are never shipped inside a
+    closure."""
+    if language == "css":
+        return compile_query(query)
+    if language == "xpath":
+        from ..select.xpath import compile_xpath
+        return compile_xpath(query)
+    raise ValueError(f"unknown query language {language!r}")
+
+
 # ---------------------------------------------------------------- extract
-
-def _parse_doc(html: str, base_uri: str):
-    tb = HtmlTreeBuilder()
-    doc = tb.parse(html, base_uri)
-    return doc
-
 
 def extract_stage(docs: DataFrame, *, bucket: bool = False,
                   stream_threshold: int = 8 << 20) -> DataFrame:
@@ -91,35 +177,21 @@ def extract_stage(docs: DataFrame, *, bucket: bool = False,
     Set 0 to force streaming, or a negative value to disable.
     """
     # html + input media spans in ONE projection — a join here would shuffle
-    # the whole corpus against itself.
-    # sort_array over offset-FIRST structs instead of array_sort with a
-    # comparator lambda: the comparator is interpreted per comparison,
-    # while sort_array's natural struct ordering stays in codegen (offsets
-    # are unique per doc per the input contract, so the orders agree).
+    # the whole corpus against itself. Media spans sort on offset-first
+    # structs for the reason span_html gives.
     media_in = F.sort_array(F.transform(
         F.filter(F.col("spans"), lambda s: s["kind"] == "media"),
         lambda s: F.struct(s["offset"].alias("offset"),
                            s["text"].alias("text"),
                            s["media_ref"].alias("media_ref"))))
-    html = F.array_join(
-        F.transform(
-            F.sort_array(F.transform(
-                F.filter(F.col("spans"), lambda s: s["kind"] == "html"),
-                lambda s: F.struct(s["offset"].alias("o"),
-                                   s["text"].alias("t")))),
-            lambda s: s["t"],
-        ),
-        "",
-    )
     # column-pruning audit (r8): base_uri is a corpus-level constant and
     # html_len is only the bucketing key — neither belongs in the Arrow
-    # transfer. base_uri rides the closure; html_len exists only on the
+    # transfer. BASE_URI rides the closure; html_len exists only on the
     # bucketed plan and is dropped again before the exchange output is
     # serialized to Python.
-    base_uri = BASE_URI
     prepared = docs.select(
         "doc_id",
-        html.alias("html"),
+        span_html().alias("html"),
         media_in.alias("_media_in"),
     )
     if bucket:
@@ -127,119 +199,20 @@ def extract_stage(docs: DataFrame, *, bucket: bool = False,
             prepared.withColumn("html_len", F.length("html"))
         ).drop("html_len")
 
-    import pyarrow as pa
+    def per_doc(html, media):
+        if 0 <= stream_threshold < len(html):
+            errors: list = []
+            spans = stream_spans(html, BASE_URI, errors_out=errors)
+        else:
+            doc = parse(html, BASE_URI)
+            spans = extract_spans(doc)
+            errors = doc.errors
+        for _offset, t, r in media:
+            spans.append(("media", t or "", r or "", len(spans)))
+        return [(spans, len(spans), len(errors), len(html))]
 
-    span_type = pa.struct([
-        ("kind", pa.string()), ("text", pa.string()),
-        ("media_ref", pa.string()), ("order", pa.int32())])
-    out_schema = pa.schema([
-        ("doc_id", pa.string()),
-        ("spans", pa.list_(span_type)),
-        ("n_spans", pa.int32()),
-        ("n_parse_errors", pa.int32()),
-        ("bytes_tokenized", pa.int64()),
-    ])
-
-    # r9 transport-overlap experiment (VERDICT r8 #3): flushing output
-    # every N docs so the JVM reader deserializes chunk K while Python
-    # parses K+1 was measured paired-in-one-session at sf0.1/x20:
-    # unchunked 0.537 s min-wall vs 768-chunk 0.576 vs 256-chunk 0.590 —
-    # per-chunk RecordBatch assembly outweighs the overlap, the same
-    # conclusion NOTES_r8 reached for input batch sizing. Default is
-    # therefore "one output batch per input batch" (off); the env knob
-    # stays for re-probing on other topologies.
-    out_chunk = int(os.environ.get("JSOUP_SPARK_EXTRACT_OUT_CHUNK",
-                                   "1000000000"))
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        # mapInArrow, not mapInPandas: the output spans are nested structs
-        # and the pandas->arrow conversion of nested objects dominates the
-        # stage; building the RecordBatch directly halves the overhead
-        for batch in batches:
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            doc_ids = batch.column(idx["doc_id"])
-            if doc_ids.type != pa.string():
-                doc_ids = doc_ids.cast(pa.string())
-            htmls = batch.column(idx["html"]).to_pylist()
-            # flat columnar read of the (already offset-sorted) media spans:
-            # to_pylist on the nested list<struct> built one dict per span,
-            # which dominated batch overhead on media-bearing corpora
-            media_col = batch.column(idx["_media_in"])
-            m_off = media_col.offsets.to_pylist()  # n+1 (slice-aware)
-            m_vals = media_col.values
-            m_texts = m_vals.field("text").to_pylist()
-            m_refs = m_vals.field("media_ref").to_pylist()
-            # column-wise span assembly: flat field lists + offsets beat
-            # pa.array() over per-span python dicts by a wide margin.
-            # Output flushes every `out_chunk` docs rather than once per
-            # input batch (r9, guide-§2.6-style overlap inside the task):
-            # the JVM's reader thread deserializes and counts chunk K
-            # while this worker parses chunk K+1, hiding most of the
-            # output leg of the serialize->parse->read phase chain that
-            # batch-size sweeps alone could not move (NOTES_r8 §1).
-            kinds: list = []
-            texts: list = []
-            refs: list = []
-            orders: list = []
-            offsets = [0]
-            out_n, out_err, out_bytes = [], [], []
-            chunk_start = 0
-
-            def flush(upto: int):
-                nonlocal kinds, texts, refs, orders, offsets
-                nonlocal out_n, out_err, out_bytes, chunk_start
-                struct = pa.StructArray.from_arrays(
-                    [pa.array(kinds, pa.string()),
-                     pa.array(texts, pa.string()),
-                     pa.array(refs, pa.string()),
-                     pa.array(orders, pa.int32())],
-                    fields=list(span_type))
-                spans_col = pa.ListArray.from_arrays(
-                    pa.array(offsets, pa.int32()), struct)
-                rb = pa.RecordBatch.from_arrays([
-                    doc_ids.slice(chunk_start, upto - chunk_start),
-                    spans_col,
-                    pa.array(out_n, pa.int32()),
-                    pa.array(out_err, pa.int32()),
-                    pa.array(out_bytes, pa.int64()),
-                ], schema=out_schema)
-                kinds, texts, refs, orders = [], [], [], []
-                offsets = [0]
-                out_n, out_err, out_bytes = [], [], []
-                chunk_start = upto
-                return rb
-
-            for di, html in enumerate(htmls):
-                if stream_threshold >= 0 and len(html) > stream_threshold:
-                    errs: list = []
-                    tuples = stream_spans(html, base_uri, errors_out=errs)
-                    n_errors = len(errs)
-                else:
-                    doc = _parse_doc(html, base_uri)
-                    tuples = extract_spans(doc)
-                    n_errors = len(doc.errors)
-                for k, t, r, _ord in tuples:
-                    kinds.append(k)
-                    texts.append(t)
-                    refs.append(r)
-                order = len(tuples)
-                orders.extend(range(order))
-                for j in range(m_off[di], m_off[di + 1]):
-                    kinds.append("media")
-                    texts.append(m_texts[j] or "")
-                    refs.append(m_refs[j] or "")
-                    orders.append(order)
-                    order += 1
-                offsets.append(offsets[-1] + order)
-                out_n.append(order)
-                out_err.append(n_errors)
-                out_bytes.append(len(html))
-                if di + 1 - chunk_start >= out_chunk:
-                    yield flush(di + 1)
-            if out_n or not htmls:
-                yield flush(len(htmls))
-
-    return prepared.mapInArrow(run, schema=schemas.EXTRACT_OUT)
+    return doc_stage(prepared, ["html", "_media_in"], per_doc,
+                     schemas.EXTRACT_OUT)
 
 
 def partition_metrics(extracted: DataFrame) -> DataFrame:
@@ -263,90 +236,34 @@ def select_stage(docs: DataFrame, query: str, *, bucket: bool = False,
                  first_only: bool = False, language: str = "css") -> DataFrame:
     """CSS- or XPath-select over each document; one output row per match.
 
-    The query is compiled once per executor batch (cost-ordered evaluator
+    The query is compiled once per worker process (cost-ordered evaluator
     tree for CSS, SURVEY §2.c; XPath-subset AST for language='xpath',
     reference Element.selectXpath, nodes/Element.java:784-801) and
-    evaluated over the per-doc DOM.
+    evaluated over the per-doc DOM. A selective query can produce zero
+    matches for a whole batch (reference Selector.select returns empty
+    Elements, select/Selector.java:126-142); the kernel returns that batch
+    as a typed empty result.
     """
+    _compiled(language, query)  # a bad query fails before any task runs
     if language == "css":
-        compiler, evaluate = compile_query, select
-    elif language == "xpath":
-        from ..select.xpath import compile_xpath, select_xpath
-        compiler, evaluate = compile_xpath, select_xpath
+        evaluate = select
     else:
-        raise ValueError(f"unknown query language {language!r}")
-    compiler(query)  # fail fast on driver for bad queries
-    base_uri = BASE_URI
+        from ..select.xpath import select_xpath as evaluate
     prepared = assemble_html(docs)
     if bucket:
         prepared = bucket_by_size(prepared)
-    # prune the Arrow transfer to what the workers read: base_uri is a
+
+    def per_doc(html):
+        matches = evaluate(parse(html, BASE_URI), _compiled(language, query))
+        if first_only:
+            matches = matches[:1]
+        return [(i, el.name, el.attr("id"), el.own_text(), el.text(),
+                 [(k, "" if v is None else v) for k, v in el.attrs.items()])
+                for i, el in enumerate(matches)]
+
+    # doc_stage prunes the Arrow transfer to (doc_id, html): base_uri is a
     # corpus constant (closure) and html_len only keys the bucket shuffle
-    prepared = prepared.select("doc_id", "html")
-
-    import pyarrow as pa
-
-    # mapInArrow, not mapInPandas: a selective selector can legitimately
-    # produce ZERO matches for a whole batch (reference Selector.select
-    # returns empty Elements, select/Selector.java:126-142). A pandas
-    # empty frame defaults its columns to float64, which pyarrow cannot
-    # convert to the attrs map<string,string> field — building the typed
-    # RecordBatch directly makes the empty batch a first-class result
-    # (and drops the dict->map conversion overhead on the hot path).
-    out_schema = pa.schema([
-        ("doc_id", pa.string()), ("match_idx", pa.int32()),
-        ("tag", pa.string()), ("el_id", pa.string()),
-        ("own_text", pa.string()), ("text", pa.string()),
-        ("attrs", pa.map_(pa.string(), pa.string())),
-    ])
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        ev = compiler(query)
-        for batch in batches:
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            doc_ids = batch.column(idx["doc_id"]).to_pylist()
-            htmls = batch.column(idx["html"]).to_pylist()
-            out_doc: list = []
-            out_idx: list = []
-            out_tag: list = []
-            out_id: list = []
-            out_own: list = []
-            out_text: list = []
-            # flat key/value lists + per-row offsets for the map column
-            akeys: list = []
-            avals: list = []
-            aoffs = [0]
-            for doc_id, html in zip(doc_ids, htmls):
-                doc = _parse_doc(html, base_uri)
-                matches = evaluate(doc, ev)
-                if first_only:
-                    matches = matches[:1]
-                for i, el in enumerate(matches):
-                    out_doc.append(doc_id)
-                    out_idx.append(i)
-                    out_tag.append(el.name)
-                    out_id.append(el.attr("id"))
-                    out_own.append(el.own_text())
-                    out_text.append(el.text())
-                    for k, v in el.attrs.items():
-                        akeys.append(k)
-                        avals.append(v if v is not None else "")
-                    aoffs.append(len(akeys))
-            attrs_col = pa.MapArray.from_arrays(
-                pa.array(aoffs, pa.int32()),
-                pa.array(akeys, pa.string()),
-                pa.array(avals, pa.string()))
-            yield pa.RecordBatch.from_arrays([
-                pa.array(out_doc, pa.string()),
-                pa.array(out_idx, pa.int32()),
-                pa.array(out_tag, pa.string()),
-                pa.array(out_id, pa.string()),
-                pa.array(out_own, pa.string()),
-                pa.array(out_text, pa.string()),
-                attrs_col,
-            ], schema=out_schema)
-
-    return prepared.mapInArrow(run, schema=schemas.SELECT_OUT)
+    return doc_stage(prepared, ["html"], per_doc, schemas.SELECT_OUT)
 
 
 def positions_stage(docs: DataFrame, query: str) -> DataFrame:
@@ -355,37 +272,19 @@ def positions_stage(docs: DataFrame, query: str) -> DataFrame:
     of elements matched by a CSS query — one row per match with
     (src_start, src_end) of the open tag and (end_start, end_end) of the
     close tag (implicit ranges are zero-width, Range.isImplicit)."""
-    compile_query(query)
-    base_uri = BASE_URI
-    prepared = assemble_html(docs).select("doc_id", "html")
+    _compiled("css", query)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..parser.treebuilder import HtmlTreeBuilder
-        ev = compile_query(query)
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "match_idx", "tag",
-                                    "src_start", "src_end",
-                                    "end_start", "end_end")}
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                doc = HtmlTreeBuilder().parse(html, base_uri,
-                                              track_positions=True)
-                for i, el in enumerate(select(doc, ev)):
-                    src = el.source_range() or (-1, -1)
-                    end = el.end_source_range() or (-1, -1)
-                    rows["doc_id"].append(doc_id)
-                    rows["match_idx"].append(i)
-                    rows["tag"].append(el.name)
-                    rows["src_start"].append(src[0])
-                    rows["src_end"].append(src[1])
-                    rows["end_start"].append(end[0])
-                    rows["end_end"].append(end[1])
-            pdf_out = pd.DataFrame(rows)
-            for c in ("match_idx", "src_start", "src_end", "end_start",
-                      "end_end"):
-                pdf_out[c] = pdf_out[c].astype("int32")
-            yield pdf_out
+    def per_doc(html):
+        doc = parse(html, BASE_URI, track_positions=True)
+        rows = []
+        for i, el in enumerate(select(doc, _compiled("css", query))):
+            src = el.source_range() or (-1, -1)
+            end = el.end_source_range() or (-1, -1)
+            rows.append((i, el.name, src[0], src[1], end[0], end[1]))
+        return rows
 
-    return prepared.mapInPandas(run, schema=schemas.POSITIONS_OUT)
+    return doc_stage(assemble_html(docs), ["html"], per_doc,
+                     schemas.POSITIONS_OUT)
 
 
 # ------------------------------------------------------- fragment / xml
@@ -399,59 +298,30 @@ def fragment_stage(docs: DataFrame, context: str,
     Exercises the fragment machinery end to end (context-driven initial
     insertion mode, implied cells/rows, re-homing of content pushed
     outside the context root)."""
-    from ..parser.nodes import Element
-    from ..parser.treebuilder import HtmlTreeBuilder
+    def per_doc(frag):
+        els = [n for n in HtmlTreeBuilder().parse_fragment(frag, context)
+               if isinstance(n, Element)]
+        return [(i, el.name, el.text()) for i, el in enumerate(els)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "node_idx", "tag", "text")}
-            for doc_id, frag in zip(pdf["doc_id"], pdf[fragment_col]):
-                nodes = HtmlTreeBuilder().parse_fragment(frag, context)
-                idx = 0
-                for n in nodes:
-                    if isinstance(n, Element):
-                        rows["doc_id"].append(doc_id)
-                        rows["node_idx"].append(idx)
-                        rows["tag"].append(n.name)
-                        rows["text"].append(n.text())
-                        idx += 1
-            pdf_out = pd.DataFrame(rows)
-            pdf_out["node_idx"] = pdf_out["node_idx"].astype("int32")
-            yield pdf_out
-
-    return docs.select("doc_id", fragment_col).mapInPandas(
-        run, schema=schemas.FRAGMENT_OUT)
+    return doc_stage(docs, [fragment_col], per_doc, schemas.FRAGMENT_OUT)
 
 
 def xml_stage(docs: DataFrame, xml_col: str = "xml") -> DataFrame:
     """XML parse (Parser.xmlParser semantics, reference parser/
     XmlTreeBuilder.java): one output row per element in document order —
     (doc_id, el_idx, tag, own_text). CDATA sections contribute to text."""
-    from ..parser.nodes import Element
-    from ..parser.xmlbuilder import parse_xml
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "el_idx", "tag", "own_text")}
-            for doc_id, xml in zip(pdf["doc_id"], pdf[xml_col]):
-                doc = parse_xml(xml)
-                idx = 0
-                stack = list(reversed(doc.children))
-                while stack:
-                    n = stack.pop()
-                    if isinstance(n, Element):
-                        rows["doc_id"].append(doc_id)
-                        rows["el_idx"].append(idx)
-                        rows["tag"].append(n.name)
-                        rows["own_text"].append(n.own_text())
-                        idx += 1
-                        stack.extend(reversed(n.children))
-            pdf_out = pd.DataFrame(rows)
-            pdf_out["el_idx"] = pdf_out["el_idx"].astype("int32")
-            yield pdf_out
+    def per_doc(xml):
+        rows = []
+        stack = list(reversed(parse_xml(xml).children))
+        while stack:
+            n = stack.pop()
+            if isinstance(n, Element):
+                rows.append((len(rows), n.name, n.own_text()))
+                stack.extend(reversed(n.children))
+        return rows
 
-    return docs.select("doc_id", xml_col).mapInPandas(
-        run, schema=schemas.XML_OUT)
+    return doc_stage(docs, [xml_col], per_doc, schemas.XML_OUT)
 
 
 # ---------------------------------------------------------------- clean
@@ -461,48 +331,19 @@ def clean_stage(docs: DataFrame, safelist_name: str = "basic",
     """Safelist-clean each document; emits cleaned html + text + counters."""
     if safelist_name not in safelist_mod.PRESETS:
         raise ValueError(f"unknown safelist {safelist_name!r}")
-    base_uri = BASE_URI
-    prepared = assemble_html(docs).select("doc_id", "html")
+    sl = safelist_mod.PRESETS[safelist_name]()
+    settings = DEFAULT if pretty else OutputSettings(pretty=False)
 
-    import pyarrow as pa
+    def per_doc(html):
+        result = clean_document(parse(html, BASE_URI), sl)
+        body = result.doc.body
+        if body is None:
+            return [("", "", result.num_discarded)]
+        return [(inner_html(body, settings), body.text(),
+                 result.num_discarded)]
 
-    # mapInArrow like extract/select: the columns are flat strings, so the
-    # win here is smaller than on the nested-struct stages, but skipping
-    # the arrow->pandas->arrow round trip still drops a copy of every html
-    # payload per batch (measured r7: see BENCH.md).
-    out_schema = pa.schema([
-        ("doc_id", pa.string()), ("clean_html", pa.string()),
-        ("clean_text", pa.string()), ("num_discarded", pa.int32()),
-    ])
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        sl = safelist_mod.PRESETS[safelist_name]()
-        from ..clean.serializer import DEFAULT, OutputSettings
-        settings = DEFAULT if pretty else OutputSettings(pretty=False)
-        for batch in batches:
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            doc_ids = batch.column(idx["doc_id"])
-            htmls = batch.column(idx["html"]).to_pylist()
-            out_html: list = []
-            out_text: list = []
-            discarded: list = []
-            for html in htmls:
-                doc = _parse_doc(html, base_uri)
-                result = clean_document(doc, sl)
-                body = result.doc.body
-                out_html.append(
-                    inner_html(body, settings) if body is not None else "")
-                out_text.append(body.text() if body is not None else "")
-                discarded.append(result.num_discarded)
-            yield pa.RecordBatch.from_arrays([
-                doc_ids.cast(pa.string()) if doc_ids.type != pa.string()
-                else doc_ids,
-                pa.array(out_html, pa.string()),
-                pa.array(out_text, pa.string()),
-                pa.array(discarded, pa.int32()),
-            ], schema=out_schema)
-
-    return prepared.mapInArrow(run, schema=schemas.CLEAN_OUT)
+    return doc_stage(assemble_html(docs), ["html"], per_doc,
+                     schemas.CLEAN_OUT)
 
 
 # ---------------------------------------------------------------- helpers
@@ -527,27 +368,16 @@ def css_path_stage(docs: DataFrame, query: str) -> DataFrame:
     query — one row (doc_id, match_idx, css_path) per match. The
     generator is differentially fuzzed per-element against the compiled
     reference (tools/fuzz_selectxml.py cssel block)."""
-    compile_query(query)
-    base_uri = BASE_URI
-    prepared = assemble_html(docs).select("doc_id", "html")
+    from ..extract.functions import css_selector
+    _compiled("css", query)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..extract.functions import css_selector
-        ev = compile_query(query)
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "match_idx", "css_path")}
-            for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
-                doc = _parse_doc(html, base_uri)
-                for i, el in enumerate(select(doc, ev)):
-                    rows["doc_id"].append(doc_id)
-                    rows["match_idx"].append(i)
-                    rows["css_path"].append(css_selector(el))
-            out = pd.DataFrame(rows)
-            out["match_idx"] = out["match_idx"].astype("int32")
-            yield out
+    def per_doc(html):
+        doc = parse(html, BASE_URI)
+        return [(i, css_selector(el))
+                for i, el in enumerate(select(doc, _compiled("css", query)))]
 
-    return prepared.mapInPandas(
-        run, schema="doc_id string, match_idx int, css_path string")
+    return doc_stage(assemble_html(docs), ["html"], per_doc,
+                     schemas.CSS_PATH_OUT)
 
 
 def xpath_xml_stage(docs: DataFrame, query: str,
@@ -558,24 +388,12 @@ def xpath_xml_stage(docs: DataFrame, query: str,
     differentially fuzzed via tools/fuzz_xpath.py xpathxml mode). One row
     per matched element: (doc_id, match_idx, tag, own_text). `tag` is the
     PRESERVED-case tag name (el.tagName())."""
-    from ..select.xpath import compile_xpath, select_xpath
-    compile_xpath(query)
+    from ..select.xpath import select_xpath
+    _compiled("xpath", query)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..parser.xmlbuilder import parse_xml
-        ev = compile_xpath(query)
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "match_idx", "tag", "own_text")}
-            for doc_id, xml in zip(pdf["doc_id"], pdf[xml_col]):
-                doc = parse_xml(xml)
-                for i, el in enumerate(select_xpath(doc, ev)):
-                    rows["doc_id"].append(doc_id)
-                    rows["match_idx"].append(i)
-                    rows["tag"].append(el.tag_name_case or el.name)
-                    rows["own_text"].append(el.own_text())
-            out = pd.DataFrame(rows)
-            out["match_idx"] = out["match_idx"].astype("int32")
-            yield out
+    def per_doc(xml):
+        matches = select_xpath(parse_xml(xml), _compiled("xpath", query))
+        return [(i, el.tag_name_case or el.name, el.own_text())
+                for i, el in enumerate(matches)]
 
-    return docs.select("doc_id", xml_col).mapInPandas(
-        run, schema="doc_id string, match_idx int, tag string, own_text string")
+    return doc_stage(docs, [xml_col], per_doc, schemas.XPATH_XML_OUT)

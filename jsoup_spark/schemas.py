@@ -4,7 +4,7 @@ Input table per BASELINE.json input_hint:
     doc_id: string, spans: array<struct<kind,text,media_ref,offset:int>>
 Output table (FIXTURES.md §2):
     doc_id: string, spans: array<struct<kind,text,media_ref,order:int>>
-plus per-doc extraction metrics for lineage/counters.
+plus one output schema per parse-gated stage (the only declaration).
 """
 
 from __future__ import annotations
@@ -79,10 +79,50 @@ XML_OUT = T.StructType([
     T.StructField("own_text", T.StringType(), True),
 ])
 
-METRICS = T.StructType([
-    T.StructField("partition_id", T.IntegerType(), False),
-    T.StructField("docs", T.LongType(), False),
-    T.StructField("bytes_tokenized", T.LongType(), False),
-    T.StructField("parse_errors", T.LongType(), False),
-    T.StructField("spans_out", T.LongType(), False),
+CSS_PATH_OUT = T.StructType([
+    T.StructField("doc_id", T.StringType(), True),
+    T.StructField("match_idx", T.IntegerType(), True),
+    T.StructField("css_path", T.StringType(), True),
 ])
+
+XPATH_XML_OUT = T.StructType([
+    T.StructField("doc_id", T.StringType(), True),
+    T.StructField("match_idx", T.IntegerType(), True),
+    T.StructField("tag", T.StringType(), True),
+    T.StructField("own_text", T.StringType(), True),
+])
+
+MAIN_CONTENT_OUT = T.StructType([
+    T.StructField("doc_id", T.StringType(), True),
+    T.StructField("tag", T.StringType(), True),
+    T.StructField("el_id", T.StringType(), True),
+    T.StructField("el_class", T.StringType(), True),
+    T.StructField("score_e3", T.LongType(), True),
+    T.StructField("text", T.StringType(), True),
+])
+
+METADATA_OUT = T.StructType(
+    [T.StructField("doc_id", T.StringType(), True)]
+    + [T.StructField(f, T.StringType(), True)
+       for f in ("title", "description", "author", "published",
+                 "canonical_url", "image", "site_name", "lang",
+                 "jsonld_type")]
+    + [T.StructField("n_meta", T.IntegerType(), True)])
+
+MARKDOWN_OUT = T.StructType([
+    T.StructField("doc_id", T.StringType(), True),
+    T.StructField("markdown", T.StringType(), True),
+])
+
+FEED_OUT = T.StructType(
+    [T.StructField("doc_id", T.LongType(), True),
+     T.StructField("ord", T.IntegerType(), True)]
+    + [T.StructField(f, T.StringType(), True)
+       for f in ("kind", "feed_title", "item_title", "link", "item_id",
+                 "published", "summary")])
+
+SITEMAP_OUT = T.StructType(
+    [T.StructField("doc_id", T.LongType(), True),
+     T.StructField("ord", T.IntegerType(), True)]
+    + [T.StructField(f, T.StringType(), True)
+       for f in ("kind", "loc", "lastmod", "changefreq", "priority")])

@@ -77,16 +77,15 @@ def synthesize(documents: DataFrame, with_media: bool = True) -> DataFrame:
                                 f"array({spans}) as spans")
 
 
-def assemble_html(docs: DataFrame, base_uri_lit: str = BASE_URI) -> DataFrame:
-    """Reconstruct raw HTML per doc: concat of kind='html' span texts in
-    offset order — pure Catalyst (array_sort/filter/transform/array_join),
-    no shuffle, no Python."""
-    # sort_array over offset-FIRST structs, not array_sort with a
-    # comparator lambda: the comparator is interpreted per COMPARISON at
-    # execution time while the natural struct ordering stays in codegen
-    # (offsets are unique per doc by the span contract — the same
-    # equivalence extract_stage relies on, operators/pipeline.py)
-    html = F.array_join(
+def span_html():
+    """Catalyst expression for a doc's raw HTML: the concat of its
+    kind='html' span texts in offset order — no shuffle, no Python.
+
+    sort_array over offset-FIRST structs, not array_sort with a comparator
+    lambda: the comparator is interpreted per COMPARISON at execution time
+    while the natural struct ordering stays in codegen (offsets are unique
+    per doc by the span contract, so the two orders agree)."""
+    return F.array_join(
         F.transform(
             F.sort_array(F.transform(
                 F.filter(F.col("spans"), lambda s: s["kind"] == "html"),
@@ -96,6 +95,12 @@ def assemble_html(docs: DataFrame, base_uri_lit: str = BASE_URI) -> DataFrame:
         ),
         "",
     )
+
+
+def assemble_html(docs: DataFrame, base_uri_lit: str = BASE_URI) -> DataFrame:
+    """Reconstruct raw HTML per doc (``span_html``) next to its length and
+    the corpus base URI."""
+    html = span_html()
     return docs.select(
         "doc_id",
         html.alias("html"),

@@ -21,8 +21,9 @@ longest-match rule evaluation:
   published Google/RFC 9309 semantics), `$` end-anchor and `*`
   wildcard support, crawl-delay and sitemap directives.
 
-`feed_stage` / `sitemap_stage` lift parsing to Spark via mapInPandas
-explode (one row per entry — the warc_stage idiom).
+`feed_stage` / `sitemap_stage` lift parsing to Spark on the shared
+per-document Arrow kernel (operators/pipeline.py doc_stage), one row
+per entry.
 
 Reference parity anchor: XML tree semantics are the reference's
 XmlTreeBuilder (parser/XmlTreeBuilder.java); the three formats are
@@ -32,7 +33,6 @@ public standards.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 from jsoup_spark import parse_xml
 from jsoup_spark.select.selector import select
@@ -220,52 +220,27 @@ def crawl_delay(robots: dict, agent: str) -> str:
 
 def feed_stage(df: "DataFrame") -> "DataFrame":
     """(doc_id, xml string) -> one row per feed entry."""
-    import pandas as pd
+    from jsoup_spark import schemas
+    from jsoup_spark.operators.pipeline import doc_stage
 
-    def run(batches: Iterator["pd.DataFrame"]) \
-            -> Iterator["pd.DataFrame"]:
-        cols = ("doc_id", "ord", "kind", "feed_title", "item_title",
-                "link", "item_id", "published", "summary")
-        for pdf in batches:
-            rows = []
-            for doc_id, xml in zip(pdf["doc_id"], pdf["xml"]):
-                f = parse_feed(xml)
-                for i, e in enumerate(f["entries"]):
-                    rows.append((doc_id, i, f["kind"], f["title"],
-                                 e["title"], e["link"], e["id"],
-                                 e["published"], e["summary"]))
-            out = pd.DataFrame(rows, columns=cols)
-            out["ord"] = out["ord"].astype("int32")
-            yield out
+    def per_doc(xml):
+        f = parse_feed(xml)
+        return [(i, f["kind"], f["title"], e["title"], e["link"], e["id"],
+                 e["published"], e["summary"])
+                for i, e in enumerate(f["entries"])]
 
-    return df.mapInPandas(
-        run, schema=("doc_id long, ord int, kind string, "
-                     "feed_title string, item_title string, "
-                     "link string, item_id string, published string, "
-                     "summary string"))
+    return doc_stage(df, ["xml"], per_doc, schemas.FEED_OUT)
 
 
 def sitemap_stage(df: "DataFrame") -> "DataFrame":
     """(doc_id, xml string) -> one row per sitemap entry."""
-    import pandas as pd
+    from jsoup_spark import schemas
+    from jsoup_spark.operators.pipeline import doc_stage
 
-    def run(batches: Iterator["pd.DataFrame"]) \
-            -> Iterator["pd.DataFrame"]:
-        cols = ("doc_id", "ord", "kind", "loc", "lastmod",
-                "changefreq", "priority")
-        for pdf in batches:
-            rows = []
-            for doc_id, xml in zip(pdf["doc_id"], pdf["xml"]):
-                s = parse_sitemap(xml)
-                for i, e in enumerate(s["entries"]):
-                    rows.append((doc_id, i, s["kind"], e["loc"],
-                                 e["lastmod"], e["changefreq"],
-                                 e["priority"]))
-            out = pd.DataFrame(rows, columns=cols)
-            out["ord"] = out["ord"].astype("int32")
-            yield out
+    def per_doc(xml):
+        s = parse_sitemap(xml)
+        return [(i, s["kind"], e["loc"], e["lastmod"], e["changefreq"],
+                 e["priority"])
+                for i, e in enumerate(s["entries"])]
 
-    return df.mapInPandas(
-        run, schema=("doc_id long, ord int, kind string, loc string, "
-                     "lastmod string, changefreq string, "
-                     "priority string"))
+    return doc_stage(df, ["xml"], per_doc, schemas.SITEMAP_OUT)

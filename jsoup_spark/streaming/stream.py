@@ -5,10 +5,10 @@ pull-based progressive parse of ONE input; at corpus scale the analog is a
 stream of documents: ``readStream`` over the span table (file source or any
 rate/kafka source with the same schema) → the same extract stage →
 checkpointed sink. The per-batch extraction function is identical to the
-batch path (mapInPandas is stream-safe — stateless per document), and
-watermarking is unnecessary because extraction is per-row (no event-time
-aggregation); a windowed error-rate monitor is included as the stateful
-example.
+batch path (the mapInArrow kernel is stream-safe — stateless per
+document), and watermarking is unnecessary because extraction is per-row
+(no event-time aggregation); a windowed error-rate monitor is included as
+the stateful example.
 """
 
 from __future__ import annotations

@@ -3,6 +3,7 @@ multimodal plumbing, checkpoint/resume, streaming."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -41,11 +42,12 @@ def test_extract_stage_matches_local_engine(spark):
 
 def test_extract_plan_is_catalyst_first(spark):
     """Reassembly must stay in Catalyst (no Python) and scan only needed
-    columns; the only Python boundary is the single mapInPandas."""
+    columns; the only Python boundary is the single mapInArrow."""
     from jsoup_spark.operators.pipeline import extract_stage
     plan = extract_stage(_corpus(spark), bucket=True)._jdf \
         .queryExecution().executedPlan().toString()
-    assert plan.count("MapInArrow") + plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
+    assert plan.count("MapInPandas") == 0
     assert "BatchEvalPython" not in plan  # no row-at-a-time python udfs
 
 
@@ -463,6 +465,96 @@ def test_select_stage_empty_batches(spark):
     # attrs map column survives the Arrow seam with values intact
     any_attrs = select_stage(_corpus(spark).limit(5), "[lang]").collect()
     assert all(isinstance(r["attrs"], dict) for r in any_attrs)
+
+
+# Small inputs modelled on the __spark_entry__ queries. Some docs have no
+# match (no <li>, no <title>, an empty fragment), so spread over more
+# partitions than rows they yield zero-row and zero-match batches.
+_PAGES = [
+    "<html><head><title>Doc 1</title></head><body><div id=main "
+    "class='en article'><p>one two</p><img src='a.png' alt='fig'><ul>"
+    "<li>src</li><li>en</li></ul><script>track(1)</script></div></body>"
+    "</html>",
+    "<p>no title, <b>no list</b>",
+    "<html><head><title>Doc 3</title><meta property=og:title "
+    "content=T3></head><body><ul><li>only</ul></body></html>",
+]
+_SPAN_ROWS = [
+    (str(i), [("html", h[:20], "", 0), ("media", "m", f"http://i/{i}", 1),
+              ("html", h[20:], "", 2)])
+    for i, h in enumerate(_PAGES, 1)]
+_XML = ['<doc id="1"><Item k="a">en</Item><note><![CDATA[x & y]]></note>'
+        '</doc>', "<doc/>", '<doc><item>b</item><?pi skip?></doc>']
+
+
+def _spread(spark, rows, schema):
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2 * len(rows) + 2), schema)
+
+
+def _spans(spark):
+    return _spread(spark, _SPAN_ROWS, "doc_id string, spans array<struct<"
+                   "kind:string,text:string,media_ref:string,offset:int>>")
+
+
+def _pages(spark):
+    # a null html reads as an empty page
+    return _spread(spark, list(enumerate(_PAGES + [None], 1)),
+                   "doc_id long, html string")
+
+
+def _xml(spark):
+    return _spread(spark, [(str(i), x) for i, x in enumerate(_XML, 1)],
+                   "doc_id string, xml string")
+
+
+def _stage_cases():
+    from jsoup_spark import schemas
+    from jsoup_spark.extract import maincontent, markdown, metadata
+    from jsoup_spark.operators import pipeline as P
+    frags = [("1", "<td>cell <b>1</b><td>en"), ("2", ""), ("3", "<td>x")]
+    return {
+        # name: (stage over small input, declared schema, output rows)
+        "extract": (lambda s: P.extract_stage(_spans(s)),
+                    schemas.EXTRACT_OUT, 3),
+        "select": (lambda s: P.select_stage(_spans(s), "ul > li"),
+                   schemas.SELECT_OUT, 3),
+        "positions": (lambda s: P.positions_stage(_spans(s), "title"),
+                      schemas.POSITIONS_OUT, 2),
+        "fragment": (lambda s: P.fragment_stage(_spread(
+            s, frags, "doc_id string, fragment_html string"), context="tr"),
+            schemas.FRAGMENT_OUT, 3),
+        "xml": (lambda s: P.xml_stage(_xml(s)), schemas.XML_OUT, 6),
+        "clean": (lambda s: P.clean_stage(_spans(s), "basic"),
+                  schemas.CLEAN_OUT, 3),
+        "css_path": (lambda s: P.css_path_stage(_spans(s), "ul li"),
+                     schemas.CSS_PATH_OUT, 3),
+        "xpath_xml": (lambda s: P.xpath_xml_stage(_xml(s), "//Item | //note"),
+                      schemas.XPATH_XML_OUT, 2),
+        "main_content": (lambda s: maincontent.main_content_stage(
+            _pages(s)), schemas.MAIN_CONTENT_OUT, 4),
+        "metadata": (lambda s: metadata.metadata_stage(_pages(s)),
+                     schemas.METADATA_OUT, 4),
+        "markdown": (lambda s: markdown.markdown_stage(_pages(s)),
+                     schemas.MARKDOWN_OUT, 4),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_stage_cases()))
+def test_parse_stage_kernel_plan_and_sparse_batches(spark, name):
+    """Every parse-gated stage runs as exactly one MapInArrow with no
+    pandas, row-at-a-time Python or shuffle; over more partitions than
+    rows (zero-row and zero-match batches) it returns its declared schema
+    and the expected row count."""
+    build, schema, n_rows = _stage_cases()[name]
+    df = build(spark)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan
+    assert "BatchEvalPython" not in plan
+    assert "Exchange" not in plan
+    assert df.schema == schema
+    assert len(df.collect()) == n_rows
 
 
 def test_entry_queries_all_callables():
