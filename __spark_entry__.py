@@ -4,10 +4,10 @@ Queries come in three families, all built on jsoup_spark:
 
 * extraction (parser-gated): the corpus synthesizer builds deterministic
   HTML from the `documents` table with Catalyst expressions; the extraction
-  pipeline (WHATWG parse → span emit → select → clean) runs in mapInPandas;
-  the DuckDB oracle recomputes the expected outputs symbolically. An oracle
-  match therefore certifies the whole tokenizer/tree-builder/text/selector/
-  cleaner stack end to end.
+  pipeline (WHATWG parse → span emit → select → clean) runs in one
+  per-document Arrow kernel (mapInArrow); the DuckDB oracle recomputes
+  the expected outputs symbolically. An oracle match therefore certifies
+  the whole tokenizer/tree-builder/text/selector/cleaner stack end to end.
 * text analysis / dedup: Catalyst-only operators whose hashes (md5-hex) are
   identical across Spark and DuckDB.
 * similarity: brute-force + IVF ANN over `embeddings` (cosine rounded to 6

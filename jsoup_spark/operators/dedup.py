@@ -13,7 +13,11 @@ Scale notes (100TB design):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from hashlib import md5
+
+from pyspark.sql import DataFrame, Window, functions as F, types as T
+
+from .pipeline import doc_stage
 
 MINHASH_PERMS = 4          # 4 disjoint 8-hex windows of md5(shingle)
 LSH_BANDS = 2              # 2 bands x 2 rows
@@ -131,45 +135,12 @@ def minhash_lsh_buckets(documents: DataFrame) -> DataFrame:
     contract keeps the DuckDB oracle byte-identical. The Catalyst
     formulation lives on in minhash_signatures (a declared query of its
     own); tests pin the two paths band-key-identical."""
-    import pyarrow as pa
-
-    out_schema = pa.schema([
-        ("doc_id", pa.int64()), ("band", pa.int32()),
-        ("band_key", pa.string())])
-
-    def run(batches):
-        from hashlib import md5 as _h
-        for batch in batches:
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            ids = batch.column(idx["doc_id"]).to_pylist()
-            texts = batch.column(idx["text"]).to_pylist()
-            out_ids: list = []
-            out_band: list = []
-            out_key: list = []
-            for did, text in zip(ids, texts):
-                if text is None:
-                    k0 = k1 = _NULL_BAND_KEY
-                else:
-                    hexes = [_h(s.encode()).hexdigest()
-                             for s in _py_shingles(text)]
-                    mh = [min(h[p:p + 8] for h in hexes)
-                          for p in (0, 8, 16, 24)]
-                    k0 = _h((mh[0] + "|" + mh[1]).encode()).hexdigest()
-                    k1 = _h((mh[2] + "|" + mh[3]).encode()).hexdigest()
-                out_ids.append(did)
-                out_band.append(0)
-                out_key.append(k0)
-                out_ids.append(did)
-                out_band.append(1)
-                out_key.append(k1)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_ids, pa.int64()),
-                 pa.array(out_band, pa.int32()),
-                 pa.array(out_key, pa.string())], schema=out_schema)
-
-    bands = documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text",
-    ).mapInArrow(run, schema="doc_id long, band int, band_key string")
+    bands = doc_stage(
+        _long_ids(documents), ["text"],
+        lambda text: list(enumerate(_band_keys(text, LSH_BANDS))),
+        T.StructType([T.StructField("doc_id", T.LongType()),
+                      T.StructField("band", T.IntegerType()),
+                      T.StructField("band_key", T.StringType())]))
     return (
         bands.groupBy("band", "band_key")
         .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("min_doc_id"))
@@ -305,58 +276,41 @@ def _py_shingles(text: str) -> list:
     return [text]
 
 
+def _band_keys(text: str | None, bands: int) -> list:
+    """LSH band keys 0..bands-1 of one text via hashlib md5: band b is
+    md5 of the min 8-hex windows 2b and 2b+1 over its shingles' md5s,
+    joined by '|' (md5-hex, so the DuckDB oracle recomputes it)."""
+    if text is None:
+        return [_NULL_BAND_KEY] * bands
+    hexes = [md5(s.encode()).hexdigest() for s in _py_shingles(text)]
+    mh = [min(h[p:p + 8] for h in hexes) for p in range(0, 16 * bands, 8)]
+    return [md5((mh[2 * b] + "|" + mh[2 * b + 1]).encode()).hexdigest()
+            for b in range(bands)]
+
+
+def _long_ids(documents: DataFrame) -> DataFrame:
+    """(doc_id long, text): what every dedup Arrow stage reads."""
+    return documents.select(F.col("doc_id").cast("long").alias("doc_id"),
+                            "text")
+
+
 def _band_keys_arrow(documents: DataFrame) -> DataFrame:
     """(doc_id, band_key): band-0 LSH key per doc via hashlib md5."""
-    import pyarrow as pa
-
-    schema = pa.schema([("doc_id", pa.int64()), ("band_key", pa.string())])
-
-    def run(batches):
-        from hashlib import md5 as _h
-        for batch in batches:
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            ids = batch.column(idx["doc_id"]).to_pylist()
-            texts = batch.column(idx["text"]).to_pylist()
-            keys = []
-            for text in texts:
-                if text is None:
-                    keys.append(_NULL_BAND_KEY)
-                    continue
-                hexes = [_h(s.encode()).hexdigest()
-                         for s in _py_shingles(text)]
-                mh0 = min(h[:8] for h in hexes)
-                mh1 = min(h[8:16] for h in hexes)
-                keys.append(_h((mh0 + "|" + mh1).encode()).hexdigest())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()), pa.array(keys, pa.string())],
-                schema=schema)
-
-    return documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text",
-    ).mapInArrow(run, schema="doc_id long, band_key string")
+    return doc_stage(
+        _long_ids(documents), ["text"],
+        lambda text: [(k,) for k in _band_keys(text, 1)],
+        T.StructType([T.StructField("doc_id", T.LongType()),
+                      T.StructField("band_key", T.StringType())]))
 
 
 def _shingle_arrays_arrow(documents: DataFrame) -> DataFrame:
     """(doc_id, sh): DISTINCT shingle list per doc (first-occurrence
     order, = array_distinct) — no hashing at all on this branch."""
-    import pyarrow as pa
-
-    schema = pa.schema([("doc_id", pa.int64()),
-                        ("sh", pa.list_(pa.string()))])
-
-    def run(batches):
-        for batch in batches:
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            ids = batch.column(idx["doc_id"]).to_pylist()
-            texts = batch.column(idx["text"]).to_pylist()
-            out = [list(dict.fromkeys(_py_shingles(t))) for t in texts]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()),
-                 pa.array(out, pa.list_(pa.string()))], schema=schema)
-
-    return documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text",
-    ).mapInArrow(run, schema="doc_id long, sh array<string>")
+    return doc_stage(
+        _long_ids(documents), ["text"],
+        lambda text: [(list(dict.fromkeys(_py_shingles(text))),)],
+        T.StructType([T.StructField("doc_id", T.LongType()),
+                      T.StructField("sh", T.ArrayType(T.StringType()))]))
 
 
 def simhash(documents: DataFrame, bits: int = 16) -> DataFrame:

@@ -29,13 +29,12 @@ shapes) is real and tested. Codec work is two-tier:
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from . import codecs
+from .pipeline import doc_stage
 
 MEDIA_META = T.StructType([
     T.StructField("media_type", T.StringType(), False),   # image|audio|video
@@ -64,8 +63,8 @@ def synthesize_media(docs: DataFrame, *, real: bool = False,
     real=False (default): md5-derived opaque bytes, pure Catalyst —
     stands in for fetched bytes so the pipeline shape is testable.
     real=True: genuine decodable payloads (alternating PNG / BMP images
-    whose pixels derive from the doc_id hash) built in a mapInPandas
-    stage, so the REAL decoders run end-to-end with zero fixtures.
+    whose pixels derive from the doc_id hash) built in the per-document
+    Arrow kernel, so the REAL decoders run end-to-end with zero fixtures.
     codec="jpeg" (with real=True): every payload is a baseline JPEG from
     the native encoder instead of the lossless PNG/BMP mix.
     codec="jpeg_arith": arithmetic-coded (SOF9) JPEG from the native QM
@@ -94,57 +93,45 @@ def synthesize_media(docs: DataFrame, *, real: bool = False,
         T.StructField("meta", MEDIA_META, False),
     ])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, metas = [], [], []
-            for doc_id in pdf["doc_id"]:
-                img = _hash_image(str(doc_id))
-                if codec == "jpeg":
-                    b, mime = codecs.encode_jpeg(img), "image/jpeg"
-                elif codec == "jpeg_arith":
-                    from .jpeg_arith import encode_jpeg_arith
-                    b = encode_jpeg_arith(img)
-                    mime = "image/jpeg"
-                elif codec == "webp":
-                    b = codecs.encode_webp_lossless(
-                        img, predictor=True, subtract_green=True,
-                        cache_bits=6)
-                    mime = "image/webp"
-                elif codec == "gif":
-                    from .gif import encode_gif
-                    b, mime = encode_gif(img), "image/gif"
-                elif codec == "tiff":
-                    from .tiff import encode_tiff
-                    b = encode_tiff(img.astype("int64"),
-                                    compression=5, predictor=2)
-                    mime = "image/tiff"
-                elif codec == "ccitt":
-                    # bilevel fax page: G4 (T.6) TIFF, MinIsWhite;
-                    # black iff (x+y+h2) % 5 == 0 — closed-form black
-                    # count for the symbolic oracle
-                    from .tiff import encode_tiff
-                    hd = hashlib.sha256(str(doc_id).encode()).digest()
-                    w_, ht_ = 16 + hd[0] % 48, 16 + hd[1] % 48
-                    yy, xx = np.mgrid[0:ht_, 0:w_]
-                    bits = ((xx + yy + hd[2]) % 5 == 0).astype(np.uint8)
-                    b = encode_tiff(bits[:, :, None].astype("int64"),
-                                    photometric=0, bit_depth=1,
-                                    compression=4)
-                    mime = "image/tiff"
-                elif int(hashlib.md5(str(doc_id).encode())
-                         .hexdigest(), 16) % 2 == 0:
-                    b, mime = codecs.encode_png(img), "image/png"
-                else:
-                    b, mime = codecs.encode_bmp(img), "image/bmp"
-                ids.append(doc_id)
-                payloads.append(b)
-                metas.append({"media_type": "image", "mime": mime,
-                              "n_bytes": len(b),
-                              "source_ref": f"mem://{doc_id}"})
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": payloads, "meta": metas})
+    def per_doc(doc_id):
+        doc_id = str(doc_id)
+        img = _hash_image(doc_id)
+        if codec == "jpeg":
+            b, mime = codecs.encode_jpeg(img), "image/jpeg"
+        elif codec == "jpeg_arith":
+            from .jpeg_arith import encode_jpeg_arith
+            b, mime = encode_jpeg_arith(img), "image/jpeg"
+        elif codec == "webp":
+            b = codecs.encode_webp_lossless(
+                img, predictor=True, subtract_green=True, cache_bits=6)
+            mime = "image/webp"
+        elif codec == "gif":
+            from .gif import encode_gif
+            b, mime = encode_gif(img), "image/gif"
+        elif codec == "tiff":
+            from .tiff import encode_tiff
+            b = encode_tiff(img.astype("int64"), compression=5, predictor=2)
+            mime = "image/tiff"
+        elif codec == "ccitt":
+            # bilevel fax page: G4 (T.6) TIFF, MinIsWhite; black iff
+            # (x+y+h2) % 5 == 0 — closed-form black count for the
+            # symbolic oracle
+            from .tiff import encode_tiff
+            hd = hashlib.sha256(doc_id.encode()).digest()
+            w_, ht_ = 16 + hd[0] % 48, 16 + hd[1] % 48
+            yy, xx = np.mgrid[0:ht_, 0:w_]
+            bits = ((xx + yy + hd[2]) % 5 == 0).astype(np.uint8)
+            b = encode_tiff(bits[:, :, None].astype("int64"),
+                            photometric=0, bit_depth=1, compression=4)
+            mime = "image/tiff"
+        elif int(hashlib.md5(doc_id.encode()).hexdigest(), 16) % 2 == 0:
+            b, mime = codecs.encode_png(img), "image/png"
+        else:
+            b, mime = codecs.encode_bmp(img), "image/bmp"
+        return [(b, ("image", mime, len(b), f"mem://{doc_id}"))]
 
-    return docs.select("doc_id").mapInPandas(run, schema=out_schema)
+    # the key doubles as the one input value: the payload derives from it
+    return doc_stage(docs, ["doc_id"], per_doc, out_schema)
 
 
 def _hash_image(doc_id: str) -> "np.ndarray":
@@ -210,42 +197,24 @@ def decode_image_array(payload: bytes):
 
 
 def decode_stage(media: DataFrame, *, fake: bool = True) -> DataFrame:
-    """mapInPandas decode/feature-extract stage, batched over Arrow.
+    """Decode/feature-extract stage on the per-document Arrow kernel.
 
     Natively-decodable payloads yield REAL 8-dim features
     ([mean_r, mean_g, mean_b, mean_all, std_r, std_g, std_b, std_all]
     / 255, gray broadcast across channels); stub-tier payloads fall back
     to the deterministic hash feature (fake mode)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, mtypes, ws, hs, frames, feats = [], [], [], [], [], []
-            for doc_id, payload, meta in zip(
-                    pdf["doc_id"], pdf["payload"], pdf["meta"]):
-                b = bytes(payload)
-                arr = decode_image_array(b)
-                if arr is not None:
-                    h_, w = arr.shape[0], arr.shape[1]
-                    feats.append(_image_feature(arr))
-                else:
-                    w, h_ = decode_image(b, fake=fake)
-                    digest = hashlib.sha256(b).digest()
-                    feats.append([x / 255.0 for x in digest[:8]])
-                ids.append(doc_id)
-                mtypes.append(meta["media_type"])
-                ws.append(w)
-                hs.append(h_)
-                frames.append(1)
-            yield pd.DataFrame({
-                "doc_id": ids,
-                "media_type": mtypes,
-                "width": pd.array(ws, dtype="int32"),
-                "height": pd.array(hs, dtype="int32"),
-                "n_frames": pd.array(frames, dtype="int32"),
-                "feature": feats,
-            })
+    def per_doc(payload, media_type):
+        arr = decode_image_array(payload)
+        if arr is not None:
+            return [(media_type, arr.shape[1], arr.shape[0], 1,
+                     _image_feature(arr))]
+        w, h = decode_image(payload, fake=fake)
+        digest = hashlib.sha256(payload).digest()
+        return [(media_type, w, h, 1, [x / 255.0 for x in digest[:8]])]
 
-    return media.mapInPandas(run, schema=DECODED)
+    return doc_stage(media, ["payload", "meta.media_type"], per_doc,
+                     DECODED)
 
 
 def _image_feature(arr: "np.ndarray") -> list:
@@ -304,41 +273,26 @@ RESIZED = T.StructType([
 
 def resize_stage(media: DataFrame, max_side: int = 128, *,
                  fake: bool = True) -> DataFrame:
-    """Image resize as an Arrow-batched mapInPandas stage: aspect-
-    preserving clamp of the longer side to `max_side`.
+    """Image resize on the per-document Arrow kernel: aspect-preserving
+    clamp of the longer side to `max_side`.
 
     Natively-decodable payloads are REALLY resampled (codecs.resize_area
     box filter) and re-encoded as PNG. Stub-tier payloads keep the real
     geometry but a deterministic hash blob for pixels (fake mode)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, outs = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                arr = decode_image_array(b)
-                if arr is not None:
-                    small = codecs.resize_area(arr, max_side)
-                    nh, nw = small.shape[0], small.shape[1]
-                    out = codecs.encode_png(small)
-                else:
-                    w, h = decode_image(b, fake=fake)
-                    scale = min(1.0, max_side / max(w, h))
-                    nw, nh = max(1, int(w * scale)), max(1, int(h * scale))
-                    blob = hashlib.sha256(b).digest() * (1 + nw * nh // 32)
-                    out = blob[: max(1, nw * nh // 8)]
-                ids.append(doc_id)
-                ws.append(nw)
-                hs.append(nh)
-                outs.append(out)
-            yield pd.DataFrame({
-                "doc_id": ids,
-                "width": pd.array(ws, dtype="int32"),
-                "height": pd.array(hs, dtype="int32"),
-                "payload": outs,
-            })
+    def per_doc(payload):
+        arr = decode_image_array(payload)
+        if arr is not None:
+            small = codecs.resize_area(arr, max_side)
+            return [(small.shape[1], small.shape[0],
+                     codecs.encode_png(small))]
+        w, h = decode_image(payload, fake=fake)
+        scale = min(1.0, max_side / max(w, h))
+        nw, nh = max(1, int(w * scale)), max(1, int(h * scale))
+        blob = hashlib.sha256(payload).digest() * (1 + nw * nh // 32)
+        return [(nw, nh, blob[: max(1, nw * nh // 8)])]
 
-    return media.mapInPandas(run, schema=RESIZED)
+    return doc_stage(media, ["payload"], per_doc, RESIZED)
 
 
 FRAMES = T.StructType([
@@ -355,25 +309,11 @@ def frame_sample_stage(media: DataFrame, n_frames: int = 4, *,
     payload (one row per frame — the fan-out shape a training pipeline
     feeds to a vision encoder). Frame decode is the stubbed codec."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, tss, frames = [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                w, h, total, fps = decode_video(b, fake=fake)
-                step = max(1, total // n_frames)
-                for i in range(min(n_frames, total)):
-                    fi = i * step
-                    ids.append(doc_id)
-                    idxs.append(fi)
-                    tss.append(fi / fps)
-                    frames.append(hashlib.sha256(
-                        b + fi.to_bytes(4, "big")).digest())
-            yield pd.DataFrame({
-                "doc_id": ids,
-                "frame_idx": pd.array(idxs, dtype="int32"),
-                "ts_sec": pd.array(tss, dtype="float64"),
-                "frame": frames,
-            })
+    def per_doc(payload):
+        _w, _h, total, fps = decode_video(payload, fake=fake)
+        step = max(1, total // n_frames)
+        return [(fi, fi / fps,
+                 hashlib.sha256(payload + fi.to_bytes(4, "big")).digest())
+                for fi in range(0, min(n_frames, total) * step, step)]
 
-    return media.mapInPandas(run, schema=FRAMES)
+    return doc_stage(media, ["payload"], per_doc, FRAMES)

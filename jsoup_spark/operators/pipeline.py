@@ -5,8 +5,10 @@ Spark-first layering:
   Catalyst expressions;
 * the per-document algorithms (WHATWG parse, selector eval, cleaning) run
   inside one ``mapInArrow`` kernel, ``doc_stage``, over Arrow batches —
-  batched, never row-at-a-time Python UDFs. Every parse-gated stage is its
-  Catalyst preparation plus a ``per_doc`` function handed to that kernel.
+  batched, never row-at-a-time Python UDFs. Every per-document Python
+  stage (the parse-gated ones here, the binary-payload sources, the media
+  codecs, the dedup and fingerprint hashes) is its Catalyst preparation
+  plus a ``per_doc`` function handed to that kernel.
 
 Scale design (north rule):
 * ``bucket_by_size`` range-partitions on html length so a handful of
@@ -92,18 +94,19 @@ def _values(col: pa.Array) -> list:
 def doc_stage(prepared: DataFrame, in_cols: Sequence[str],
               per_doc: Callable[..., Sequence[tuple]],
               out_schema: T.StructType) -> DataFrame:
-    """The per-document Arrow kernel behind every parse-gated stage.
+    """The Arrow kernel behind every per-document Python stage.
 
-    Projects ``doc_id`` plus ``in_cols`` from ``prepared`` and runs one
-    ``mapInArrow``. For each document, ``per_doc(*values)`` (one value per
-    ``in_cols`` entry) returns its output rows as tuples matching
-    ``out_schema`` without the leading ``doc_id``: one row for 1:1 stages,
-    any number for 1:N stages. Each input batch becomes one RecordBatch:
-    its rows convert in one ``pa.array`` against the Arrow form of
-    ``out_schema`` (Arrow's builders fill the flat child buffers and
-    offsets of nested columns), and ``doc_id`` is one Arrow take on the
-    rows' source index, so a batch with no output rows is still a typed
-    result."""
+    The first field of ``out_schema`` is the key (``doc_id`` for most
+    stages). The kernel projects the key plus ``in_cols`` from
+    ``prepared`` and runs one ``mapInArrow``. For each document,
+    ``per_doc(*values)`` (one value per ``in_cols`` entry) returns its
+    output rows as tuples matching ``out_schema`` without the leading
+    key: one row for 1:1 stages, any number for 1:N stages.
+    Each input batch becomes one RecordBatch: its rows convert in one
+    ``pa.array`` against the Arrow form of ``out_schema`` (Arrow's
+    builders fill the flat child buffers and offsets of nested columns),
+    and the key is one Arrow take on the rows' source index, so a batch
+    with no output rows is still a typed result."""
     arrow_schema = to_arrow_schema(out_schema)
     row_type = pa.struct(list(arrow_schema)[1:])
 
@@ -116,13 +119,13 @@ def doc_stage(prepared: DataFrame, in_cols: Sequence[str],
                 rows += out
                 src += [i] * len(out)
             # from_arrays casts each array to its schema type, e.g. a long
-            # doc_id to the declared string
+            # key to the declared string
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0).take(pa.array(src, pa.int32()))]
                 + pa.array(rows, row_type).flatten(),
                 schema=arrow_schema)
 
-    return prepared.select("doc_id", *in_cols).mapInArrow(
+    return prepared.select(out_schema.names[0], *in_cols).mapInArrow(
         run, schema=out_schema)
 
 

@@ -9,7 +9,9 @@ dup ratios, fingerprinting uses md5 (identical hex output across engines).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
+
+from .pipeline import doc_stage
 
 # shared word lists (mirrored verbatim in __spark_entry__ oracle SQL)
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
@@ -139,93 +141,71 @@ def fingerprint_rolling(documents: DataFrame, k: int = 8,
     r9: the O(n*k) per-window hashing moved from interpreted Catalyst
     higher-order functions (a fresh substring + split + per-char lambda
     per WINDOW — by far the slowest operator of the r8 tree at 8.5 s /
-    5k docs under a noop sink) into one vectorized numpy pass per Arrow
-    batch (guide §4.2): k shifted multiply-adds over the code-point
+    5k docs under a noop sink) into one vectorized numpy pass per
+    document on the Arrow kernel (guide §4.2): k shifted multiply-adds over the code-point
     array with modular powers, ~40x less interpreter work. Same math
     mod M, bit-identical outputs; _fingerprint_rolling_catalyst keeps
     the old formulation as the differential pin (tests/test_scrub.py).
     Map-only, zero exchanges, unchanged schema and oracle."""
-    import pyarrow as pa
+    import numpy as np
+    B, M = ROLL_B, ROLL_M
+    # powers of B mod M, grown on demand to the longest doc seen
+    pows = np.ones(1, dtype=np.int64)
+    wpow = np.array([pow(B, k - 1 - j, M) for j in range(k)],
+                    dtype=np.int64)
 
-    out_schema = pa.schema([
-        ("doc_id", pa.int64()), ("rolling_hash", pa.int64()),
-        ("n_sketch", pa.int32()), ("sketch_min", pa.int64()),
-        ("sketch_sum", pa.int64())])
-
-    def run(batches):
-        import numpy as np
-        B, M = ROLL_B, ROLL_M
-        # powers of B mod M, grown on demand to the longest doc seen
-        pows = np.ones(1, dtype=np.int64)
-        wpow = np.array([pow(B, k - 1 - j, M) for j in range(k)],
-                        dtype=np.int64)
-        for batch in batches:
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            ids = batch.column(idx["doc_id"]).to_pylist()
-            texts = batch.column(idx["text"]).to_pylist()
-            n_rows = len(ids)
-            # NULL text null-propagates to rolling_hash (sketch fields
-            # take the empty-sample defaults) — Catalyst-probed parity
-            roll = [None if t is None else 0 for t in texts]
-            n_sk = [0] * n_rows
-            sk_min = [-1] * n_rows
-            sk_sum = [0] * n_rows
-            max_n = max((len(t) for t in texts if t is not None),
-                        default=0)
-            if max_n + 1 > len(pows):
-                old = len(pows)
-                grown = np.empty(max_n + 1, dtype=np.int64)
-                grown[:old] = pows
-                prev = int(pows[old - 1])
-                for i in range(old, max_n + 1):
-                    prev = prev * B % M
-                    grown[i] = prev
-                pows = grown
-            for r, text in enumerate(texts):
-                # split('') on '' yields [''] and ascii('') is 0, so the
-                # empty doc hashes the single code 0 -> 0; NULL stays
-                # NULL (both probed vs the Catalyst formulation)
-                if not text:
-                    continue
-                codes = np.frombuffer(
-                    text.encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.int64)
-                n = len(codes)
-                # rolling_hash = sum codes[j] * B^(n-1-j) mod M; chunked
-                # partial sums keep every intermediate inside int64
-                # (term <= 0x10FFFF * (M-1) ~ 1.1e15; 4096 terms < 2^62)
-                terms = codes * pows[n - 1::-1]
-                acc = 0
-                for s in range(0, n, 4096):
-                    acc = (acc + int(terms[s:s + 4096].sum())) % M
-                roll[r] = acc
-                if n >= k:
-                    # window hashes: k shifted multiply-adds, mod once
-                    # (stepwise-mod and final-mod agree in [0, M))
-                    w = codes[:n - k + 1] * wpow[0]
-                    for j in range(1, k):
-                        w += codes[j:n - k + 1 + j] * wpow[j]
-                        if j % 64 == 0:  # int64 headroom for large k
-                            w %= M
+    def per_doc(text):
+        """-> [(rolling_hash, n_sketch, sketch_min, sketch_sum)]"""
+        nonlocal pows
+        # NULL text null-propagates to rolling_hash and the sketch fields
+        # take the empty-sample defaults. The empty doc hashes to 0: in
+        # the Catalyst formulation split('', '') yields an empty array,
+        # so the aggregate returns its 0 initializer (both probed)
+        if not text:
+            return [(None if text is None else 0, 0, -1, 0)]
+        codes = np.frombuffer(
+            text.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
+        n = len(codes)
+        if n > len(pows):
+            old = len(pows)
+            grown = np.empty(n, dtype=np.int64)
+            grown[:old] = pows
+            prev = int(pows[old - 1])
+            for i in range(old, n):
+                prev = prev * B % M
+                grown[i] = prev
+            pows = grown
+        # rolling_hash = sum codes[j] * B^(n-1-j) mod M; chunked partial
+        # sums keep every intermediate inside int64 (term <= 0x10FFFF *
+        # (M-1) ~ 1.1e15; 4096 terms < 2^62)
+        terms = codes * pows[n - 1::-1]
+        roll = 0
+        for s in range(0, n, 4096):
+            roll = (roll + int(terms[s:s + 4096].sum())) % M
+        if n >= k:
+            # window hashes: k shifted multiply-adds, mod once
+            # (stepwise-mod and final-mod agree in [0, M))
+            w = codes[:n - k + 1] * wpow[0]
+            for j in range(1, k):
+                w += codes[j:n - k + 1 + j] * wpow[j]
+                if j % 64 == 0:  # int64 headroom for large k
                     w %= M
-                    sampled = w[w % p == 0]
-                    if sampled.size:
-                        n_sk[r] = int(sampled.size)
-                        sk_min[r] = int(sampled.min())
-                        sk_sum[r] = int(sampled.sum() % M)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()),
-                 pa.array(roll, pa.int64()),
-                 pa.array(n_sk, pa.int32()),
-                 pa.array(sk_min, pa.int64()),
-                 pa.array(sk_sum, pa.int64())], schema=out_schema)
+            w %= M
+            sampled = w[w % p == 0]
+            if sampled.size:
+                return [(roll, int(sampled.size), int(sampled.min()),
+                         int(sampled.sum() % M))]
+        return [(roll, 0, -1, 0)]
 
-    return documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text",
-    ).mapInArrow(
-        run,
-        schema=("doc_id long, rolling_hash long, n_sketch int, "
-                "sketch_min long, sketch_sum long"))
+    return doc_stage(
+        documents.select(F.col("doc_id").cast("long").alias("doc_id"),
+                         "text"),
+        ["text"], per_doc,
+        T.StructType([T.StructField("doc_id", T.LongType()),
+                      T.StructField("rolling_hash", T.LongType()),
+                      T.StructField("n_sketch", T.IntegerType()),
+                      T.StructField("sketch_min", T.LongType()),
+                      T.StructField("sketch_sum", T.LongType())]))
 
 
 def _fingerprint_rolling_catalyst(documents: DataFrame, k: int = 8,

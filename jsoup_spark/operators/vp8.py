@@ -18,7 +18,7 @@ matrix that libwebp uses, so the full pipeline is byte-identical to
 `WebPDecodeRGB` (tests/test_vp8.py proves both stages against the
 system libwebp via ctypes on wild and round-trip fixtures).
 
-Scale note: this runs inside `mapInPandas` workers per document --
+Scale note: this runs inside the per-document Arrow kernel's workers --
 pure-Python bit twiddling is fine at thumbnail sizes, and the
 decode is embarrassingly parallel across the corpus.
 """

@@ -1388,13 +1388,14 @@ def _merge_attributes(start, dest: Element) -> None:
     if added:
         # merged keys keep RAW case (reference semantics); reclassify so
         # the plain-dict all-lowercase invariant (Element.attr fast
-        # path) survives a mixed-case merge, and a _CiAttrs fold is
+        # path) survives a mixed-case merge, a lowercase key colliding
+        # with a preserved-case one makes a fold, and a _CiAttrs fold is
         # rebuilt rather than left stale (r9)
-        from .nodes import _CiAttrs, make_ci_attrs
+        from .nodes import make_ci_attrs
         t = dest.attrs.__class__
-        if t is _CiAttrs or any(k != k.lower() for k in added):
+        if t is not dict or any(k != k.lower() for k in added):
             dest.attrs = make_ci_attrs(
-                dict(dest.attrs) if t is _CiAttrs else dest.attrs)
+                dest.attrs if t is dict else dict(dest.attrs))
     tok_ranges = getattr(start, "attr_ranges", None)
     if tok_ranges and added:
         # the reference finalizes staged ranges under NORMALIZED names but

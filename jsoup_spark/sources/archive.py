@@ -13,8 +13,9 @@ zip PK\\x03\\x04, tar by the ustar magic at offset 257 or a valid
 header checksum, gzip/bz2/xz transport wrappers around tar.
 
 `archive_stage` lifts it to Spark: (doc_id, payload binary) ->
-(doc_id, member, member_idx, size, text, ok) via mapInPandas —
-one Arrow batch in, one row per member out (the warc_stage idiom).
+(doc_id, member, member_idx, size, text, ok) via the per-document
+Arrow kernel — one Arrow batch in, one row per member out (the
+warc_stage idiom).
 Directories and non-regular members are skipped; a malformed archive
 yields a single ok=false row (per-partition error accounting, the
 north-rule lineage contract).
@@ -100,29 +101,28 @@ def archive_stage(df: "DataFrame") -> "DataFrame":
     """(doc_id, payload binary) -> one row per member with the text
     decoded through the ingest tier (members that are themselves
     gzip/zlib-compressed inflate transparently)."""
-    import pandas as pd
+    from pyspark.sql import types as T
+    from ..operators.pipeline import doc_stage
 
-    def run(batches: Iterator["pd.DataFrame"]) \
-            -> Iterator["pd.DataFrame"]:
-        cols = ("doc_id", "member", "member_idx", "size", "text", "ok")
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    for i, (name, raw) in enumerate(
-                            iter_archive(bytes(payload))):
-                        rows.append((int(doc_id), name, i, len(raw),
-                                     decode_html_bytes(raw), True))
-                except ValueError:
-                    rows.append((int(doc_id), "", -1, 0, "", False))
-            out = pd.DataFrame(rows, columns=cols)
-            out["member_idx"] = out["member_idx"].astype("int32")
-            out["size"] = out["size"].astype("int64")
-            yield out
+    schema = T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("member", T.StringType()),
+        T.StructField("member_idx", T.IntegerType()),
+        T.StructField("size", T.LongType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("ok", T.BooleanType()),
+    ])
 
-    return df.mapInPandas(
-        run, schema=("doc_id long, member string, member_idx int, "
-                     "size long, text string, ok boolean"))
+    def per_doc(payload):
+        rows = []
+        try:
+            for i, (name, raw) in enumerate(iter_archive(payload)):
+                rows.append((name, i, len(raw), decode_html_bytes(raw), True))
+        except ValueError:
+            rows.append(("", -1, 0, "", False))
+        return rows
+
+    return doc_stage(df, ["payload"], per_doc, schema)
 
 
 # --------------------------------------------------------- test encoders

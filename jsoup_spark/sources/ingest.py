@@ -3,16 +3,15 @@
 Mirrors the reference's detection ladder (helper/DataUtil.java:47-50,
 223-320): BOM → caller-supplied charset → `<meta charset>` /
 `<meta http-equiv=content-type>` sniff of the head (first 5KB) →
-`<?xml encoding>` declaration → UTF-8 default. Exposed both as plain
-functions and as a Catalyst/pandas decode stage for `binaryFile` or
-binary-column sources (e.g. WARC payloads landed as bytes).
+`<?xml encoding>` declaration → UTF-8 default. Exposed as plain
+functions, which the binary-payload stages (sources/warc.py,
+sources/archive.py) call per document.
 """
 
 from __future__ import annotations
 
 import codecs
 import re
-from typing import Iterator
 
 FIRST_READ = 5 * 1024  # DataUtil firstReadBufferSize: sniff window
 
@@ -135,33 +134,6 @@ def decode_html_bytes(data: bytes, declared: str | None = None,
             data = data[len(bom):]
             break
     return data.decode(enc, errors="replace")
-
-
-def decode_stage(df, bytes_col: str = "content", out_col: str = "html"):
-    """mapInPandas decode stage for a binary column (e.g. `binaryFile`
-    source): detect + decode per row, Arrow-batched."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    fields = [f for f in df.schema.fields if f.name != bytes_col]
-    schema = T.StructType(fields + [T.StructField(out_col, T.StringType()),
-                                    T.StructField("charset", T.StringType())])
-    names = [f.name for f in fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {n: pdf[n] for n in names}
-            encs, texts = [], []
-            for payload in pdf[bytes_col]:
-                b = _inflate(bytes(payload))
-                enc = detect_charset(b)
-                encs.append(enc)
-                texts.append(decode_html_bytes(b))
-            out[out_col] = texts
-            out["charset"] = encs
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def load_file(path, base_uri: str | None = None, charset: str | None = None):

@@ -16,9 +16,10 @@ container plumbing plus the OOXML/EPUB structure conventions:
   engine's `text()` (whitespace-normalized exactly like the
   reference's Element.text()).
 
-`office_stage` lifts both to Spark (mapInPandas over binary payloads,
-format sniffed by container signature). `build_docx` / `build_epub`
-are zero-fixture test encoders producing spec-shaped containers.
+`office_stage` lifts both to Spark (the per-document Arrow kernel over
+binary payloads, format sniffed by container signature). `build_docx` /
+`build_epub` are zero-fixture test encoders producing spec-shaped
+containers.
 
 Reference parity anchor: extraction semantics (text(), whitespace
 normalization) ARE the reference's (org/jsoup/nodes/Element.java
@@ -29,11 +30,11 @@ from __future__ import annotations
 
 import io
 import zipfile
-from typing import Iterator
 
 from pyspark.sql import DataFrame, types as T
 
 from jsoup_spark import parse as parse_html, parse_xml
+from jsoup_spark.operators.pipeline import doc_stage
 from jsoup_spark.select.selector import select
 
 
@@ -159,39 +160,24 @@ OFFICE_ROWS = T.StructType([
 ])
 
 
-def office_stage(docs: DataFrame, *, id_col: str = "doc_id",
-                 payload_col: str = "payload") -> DataFrame:
+def office_stage(docs: DataFrame) -> DataFrame:
     """(doc_id, payload binary) -> extracted text rows; format sniffed
-    per payload. Arrow-batched mapInPandas, embarrassingly parallel."""
-    import pandas as pd
+    per payload. Runs through the per-document Arrow kernel
+    (operators/pipeline.py doc_stage), embarrassingly parallel."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = {f.name: [] for f in OFFICE_ROWS.fields}
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                b = bytes(payload)
-                fmt = sniff_office(b)
-                title = creator = text = None
-                n = None
-                if fmt == "docx":
-                    d = extract_docx(b)
-                    title, creator = d["title"], d["creator"]
-                    text, n = d["text"], len(d["paragraphs"])
-                elif fmt == "epub":
-                    d = extract_epub(b)
-                    title, creator = d["title"], d["creator"]
-                    text, n = d["text"], len(d["chapters"])
-                rows["doc_id"].append(did)
-                rows["format"].append(fmt)
-                rows["title"].append(title)
-                rows["creator"].append(creator)
-                rows["n_parts"].append(n)
-                rows["text"].append(text)
-            out = pd.DataFrame(rows)
-            out["n_parts"] = out["n_parts"].astype("Int32")
-            yield out
+    def per_doc(payload):
+        fmt = sniff_office(payload)
+        if fmt == "docx":
+            d = extract_docx(payload)
+            return [(fmt, d["title"], d["creator"], len(d["paragraphs"]),
+                     d["text"])]
+        if fmt == "epub":
+            d = extract_epub(payload)
+            return [(fmt, d["title"], d["creator"], len(d["chapters"]),
+                     d["text"])]
+        return [(fmt, None, None, None, None)]
 
-    return docs.mapInPandas(run, schema=OFFICE_ROWS)
+    return doc_stage(docs, ["payload"], per_doc, OFFICE_ROWS)
 
 
 # ---------------------------------------------------- test encoders

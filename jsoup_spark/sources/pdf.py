@@ -41,8 +41,8 @@ stdlib `zlib` for Flate, `base64.a85encode` as the encoding direction
 for our ASCII85 decoder, and operators/tiff.py's libtiff-validated
 LZW encoder for LZWDecode (identical early-change bitstream).
 
-`pdf_stage` lifts extraction to Spark via mapInPandas over binary
-payloads — Arrow-batched, never per-row Python.
+`pdf_stage` lifts extraction to Spark through the per-document Arrow
+kernel over binary payloads — Arrow-batched, never per-row Python.
 
 Reference parity anchor: extraction semantics (whitespace-normalised
 reading order per page) mirror the reference engine's text() contract
@@ -57,7 +57,7 @@ import io
 import re
 import struct
 import zlib
-from typing import Any, Iterator
+from typing import Any
 
 __all__ = [
     "PDFError", "PDFDocument", "extract_pdf", "build_pdf", "pdf_stage",
@@ -1722,11 +1722,12 @@ def extract_pdf(payload: bytes) -> dict:
 
 def pdf_stage(df: "DataFrame") -> "DataFrame":
     """(doc_id, payload binary) -> (doc_id, title, author, n_pages,
-    text, ok). Arrow-batched mapInPandas; malformed payloads yield
+    text, ok), one row per payload through the per-document Arrow
+    kernel (operators/pipeline.py doc_stage); malformed payloads yield
     ok=false rows instead of failing the task (per-partition error
     accounting, the north-rule lineage contract)."""
-    import pandas as pd
     from pyspark.sql import types as T
+    from ..operators.pipeline import doc_stage
 
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
@@ -1737,21 +1738,14 @@ def pdf_stage(df: "DataFrame") -> "DataFrame":
         T.StructField("ok", T.BooleanType()),
     ])
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    r = extract_pdf(bytes(payload))
-                    rows.append((int(doc_id), r["title"], r["author"],
-                                 r["n_pages"], r["text"], True))
-                except Exception:
-                    rows.append((int(doc_id), "", "", 0, "", False))
-            out = pd.DataFrame(rows, columns=[f.name for f in schema])
-            out["n_pages"] = out["n_pages"].astype("int32")
-            yield out
+    def per_doc(payload):
+        try:
+            r = extract_pdf(payload)
+        except Exception:
+            return [("", "", 0, "", False)]
+        return [(r["title"], r["author"], r["n_pages"], r["text"], True)]
 
-    return df.mapInPandas(run, schema)
+    return doc_stage(df, ["payload"], per_doc, schema)
 
 
 # --------------------------------------------------------- test encoder

@@ -12,11 +12,11 @@ run through the ingest tier's transport decodings
 detection — so a WARC record goes to parse-ready text in one call.
 
 `warc_stage` lifts this to Spark: a DataFrame of (archive_id, payload
-binary) explodes into per-record rows inside mapInPandas (Arrow
-batches, no Python UDF per row) — archives are independent, so the
-stage is embarrassingly parallel and the natural 100 TB layout is
-"one task per WARC member range", exactly how Common Crawl ships
-(~1 GB gzip archives).
+binary) explodes into per-record rows inside the per-document Arrow
+kernel (Arrow batches, no Python UDF per row) — archives are
+independent, so the stage is embarrassingly parallel and the natural
+100 TB layout is "one task per WARC member range", exactly how Common
+Crawl ships (~1 GB gzip archives).
 
 `build_warc` is the zero-fixtures test encoder: records -> conformant
 WARC bytes (optionally gzipped member-wise), so the driver oracle can
@@ -31,11 +31,11 @@ from __future__ import annotations
 
 import gzip
 import io
-from typing import Iterator
 
 from pyspark.sql import DataFrame, types as T
 
 from . import ingest
+from ..operators.pipeline import doc_stage
 
 _CRLF = b"\r\n"
 
@@ -165,36 +165,20 @@ WARC_ROWS = T.StructType([
 ])
 
 
-def warc_stage(archives: DataFrame, *, id_col: str = "archive_id",
-               payload_col: str = "payload") -> DataFrame:
+def warc_stage(archives: DataFrame) -> DataFrame:
     """(archive_id, payload binary) -> exploded per-record rows
-    (WARC_ROWS schema). Arrow-batched mapInPandas; archives decode
-    independently (the embarrassingly-parallel 100 TB shape)."""
-    import pandas as pd
+    (WARC_ROWS schema) through the per-document Arrow kernel
+    (operators/pipeline.py doc_stage); archives decode independently
+    (the embarrassingly-parallel 100 TB shape)."""
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = {k.name: [] for k in WARC_ROWS.fields}
-            for aid, payload in zip(pdf[id_col], pdf[payload_col]):
-                for i, rec in enumerate(parse_warc(bytes(payload))):
-                    rows["archive_id"].append(aid)
-                    rows["record_idx"].append(i)
-                    rows["record_type"].append(rec.record_type)
-                    rows["target_uri"].append(rec.target_uri)
-                    rows["warc_date"].append(
-                        rec.header("WARC-Date", ""))
-                    rows["http_status"].append(rec.http_status)
-                    rows["content_type"].append(
-                        rec.header("Content-Type", ""))
-                    rows["body"].append(rec.body)
-                    rows["n_payload_bytes"].append(len(rec.payload))
-            pdf_out = pd.DataFrame(rows)
-            pdf_out["record_idx"] = pdf_out["record_idx"].astype("int32")
-            pdf_out["http_status"] = pdf_out["http_status"].astype(
-                "Int32")
-            yield pdf_out
+    def per_doc(payload):
+        return [(i, rec.record_type, rec.target_uri,
+                 rec.header("WARC-Date", ""), rec.http_status,
+                 rec.header("Content-Type", ""), rec.body,
+                 len(rec.payload))
+                for i, rec in enumerate(parse_warc(payload))]
 
-    return archives.mapInPandas(run, schema=WARC_ROWS)
+    return doc_stage(archives, ["payload"], per_doc, WARC_ROWS)
 
 
 def build_warc(records, *, gzip_members: bool = False) -> bytes:

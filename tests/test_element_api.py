@@ -220,6 +220,19 @@ def test_attr_case_collision_first_wins():
     assert len(select_xpath(svg, "//svg[@viewbox]")) == 0
 
 
+def test_set_attr_lowercase_key_collides_with_preserved_case():
+    # set_attr('viewbox') beside an XML viewBox adds a second attribute
+    # (Attributes.put is case-sensitive); attr('viewbox') then resolves
+    # the FIRST ignore-case match, as getIgnoreCase's ordered scan does
+    from jsoup_spark.parser.xmlbuilder import parse_xml
+    svg = parse_xml('<svg viewBox="0 0 1 1"/>').children[0]
+    svg.set_attr("viewbox", "x")
+    assert list(svg.attrs.items()) == [("viewBox", "0 0 1 1"),
+                                       ("viewbox", "x")]
+    assert svg.attr("viewbox") == "0 0 1 1"
+    assert svg.attr("VIEWBOX") == "0 0 1 1"
+
+
 def test_structural_pseudos_exclude_root():
     # Evaluator.IsFirstChild/IsLastChild/CssNthEvaluator/IsOnlyChild/
     # IsOnlyOfType all require a non-Document parent: the root element

@@ -116,6 +116,19 @@ def test_foreign_attr_dedupe_ignore_case():
     assert any("duplicate" in e for e in doc.errors)
 
 
+def test_merged_lowercase_attr_collides_with_preserved_case():
+    # a second <html> merges its attrs under their RAW keys
+    # (HtmlTreeBuilderState mergeAttributes): viewbox lands beside the
+    # preserved-case viewBox, and attr('viewbox') resolves the first
+    # ignore-case match in order
+    from jsoup_spark.parser.treebuilder import parse, PRESERVE_CASE
+    doc = parse('<html viewBox="a"><body><html viewbox="b">',
+                settings=PRESERVE_CASE)
+    html = doc.children[0]
+    assert dict(html.attrs) == {"viewBox": "a", "viewbox": "b"}
+    assert html.attr("viewbox") == "a"
+
+
 def test_preserve_case_attr_dedupe_sensitive():
     # preserveAttributeCase=true flips dedupe to case-SENSITIVE: ID and
     # id coexist (and attr('id') resolves first-in-order via the

@@ -508,6 +508,73 @@ def _xml(spark):
                    "doc_id string, xml string")
 
 
+def _payloads(spark, rows, key="doc_id", key_type="long"):
+    return _spread(spark, [(k, bytearray(b)) for k, b in rows],
+                   f"{key} {key_type}, payload binary")
+
+
+def _binary_cases():
+    """The binary-payload stages over small encoder-built inputs, each
+    with one malformed or empty payload."""
+    from pyspark.sql import types as T
+    from jsoup_spark.operators import codecs, multimodal as MM
+    from jsoup_spark.sources import archive, officedoc, pdf, warc
+    warc_rec = ({"WARC-Type": "response", "WARC-Target-URI": "http://a/",
+                 "Content-Type": "application/http;msgtype=response"},
+                warc.http_response(b"<p>hi</p>"))
+    img = MM._hash_image("7")
+    media_schema = T.StructType([
+        T.StructField("doc_id", T.StringType(), False),
+        T.StructField("payload", T.BinaryType(), False),
+        T.StructField("meta", MM.MEDIA_META, False)])
+
+    def media(s):
+        return _spread(s, [
+            (str(i), bytearray(b), ("image", "image/x", len(b), None))
+            for i, b in enumerate([codecs.encode_png(img),
+                                   codecs.encode_bmp(img), b"junk"], 1)],
+            media_schema)
+
+    def flat(*fields):
+        return T.StructType([T.StructField(n, t) for n, t in fields])
+
+    extracted = flat(("doc_id", T.LongType()), ("title", T.StringType()),
+                     ("author", T.StringType()),
+                     ("n_pages", T.IntegerType()),
+                     ("text", T.StringType()), ("ok", T.BooleanType()))
+    members = flat(("doc_id", T.LongType()), ("member", T.StringType()),
+                   ("member_idx", T.IntegerType()), ("size", T.LongType()),
+                   ("text", T.StringType()), ("ok", T.BooleanType()))
+    files = [("a.txt", b"a"), ("b.txt", b"b")]
+    return {
+        "pdf": (lambda s: pdf.pdf_stage(_payloads(s, [
+            (1, pdf.build_pdf(["one"], title="T")),
+            (2, pdf.build_pdf(["two"], xref_kind="stream")),
+            (3, b"%PDF-1.7 not really a pdf")])), extracted, 3),
+        "warc": (lambda s: warc.warc_stage(_payloads(s, [
+            ("a", warc.build_warc([warc_rec, warc_rec])),
+            ("b", warc.build_warc([warc_rec], gzip_members=True)),
+            ("c", b"")], "archive_id", "string")), warc.WARC_ROWS, 3),
+        "office": (lambda s: officedoc.office_stage(_payloads(s, [
+            ("1", officedoc.build_docx(["p one", "p two"])),
+            ("2", officedoc.build_epub([("c.xhtml", "<p>hi</p>")])),
+            ("3", b"PK\x03\x04corrupt")], key_type="string")),
+            officedoc.OFFICE_ROWS, 3),
+        "archive": (lambda s: archive.archive_stage(_payloads(s, [
+            (1, archive.build_tar(files, compress="gz")),
+            (2, archive.build_zip(files[:1])),
+            (3, b"garbage")])), members, 4),
+        "media_synth": (lambda s: MM.synthesize_media(_spread(
+            s, [(i,) for i in (5, 6, 7)], "doc_id long"), real=True),
+            media_schema, 3),
+        "media_decode": (lambda s: MM.decode_stage(media(s)), MM.DECODED, 3),
+        "media_resize": (lambda s: MM.resize_stage(media(s), max_side=8),
+                         MM.RESIZED, 3),
+        "media_frames": (lambda s: MM.frame_sample_stage(
+            media(s), n_frames=2), MM.FRAMES, 6),
+    }
+
+
 def _stage_cases():
     from jsoup_spark import schemas
     from jsoup_spark.extract import maincontent, markdown, metadata
@@ -537,15 +604,17 @@ def _stage_cases():
                      schemas.METADATA_OUT, 4),
         "markdown": (lambda s: markdown.markdown_stage(_pages(s)),
                      schemas.MARKDOWN_OUT, 4),
+        **_binary_cases(),
     }
 
 
 @pytest.mark.parametrize("name", sorted(_stage_cases()))
 def test_parse_stage_kernel_plan_and_sparse_batches(spark, name):
-    """Every parse-gated stage runs as exactly one MapInArrow with no
-    pandas, row-at-a-time Python or shuffle; over more partitions than
-    rows (zero-row and zero-match batches) it returns its declared schema
-    and the expected row count."""
+    """Every map-only per-document stage (parse-gated or binary-payload)
+    runs as exactly one MapInArrow with no pandas, row-at-a-time Python
+    or shuffle; over more partitions than rows (zero-row and zero-match
+    batches) it returns its declared schema and the expected row
+    count."""
     build, schema, n_rows = _stage_cases()[name]
     df = build(spark)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -555,6 +624,28 @@ def test_parse_stage_kernel_plan_and_sparse_batches(spark, name):
     assert "Exchange" not in plan
     assert df.schema == schema
     assert len(df.collect()) == n_rows
+
+
+def test_hash_stages_run_on_the_kernel(spark):
+    """The dedup and fingerprint Arrow stages go through the same kernel:
+    one MapInArrow per per-document stage, no pandas, and only the
+    Exchanges their aggregation or joins need."""
+    from jsoup_spark.operators import dedup, textstats
+    docs = _spread(spark, [(1, "a b c d"), (2, "a b c d"), (3, "x y"),
+                           (4, None)], "doc_id long, text string")
+    for fn, n_arrow, n_exchange, n_rows in [
+            (dedup.minhash_lsh_buckets, 1, 1, 2),
+            (dedup._band_keys_arrow, 1, 0, 4),
+            (dedup._shingle_arrays_arrow, 1, 0, 4),
+            # band keys and shingle arrays, each read on both join sides
+            (dedup.ngram_jaccard_pairs, 4, 6, 1),
+            (textstats.fingerprint_rolling, 1, 0, 4)]:
+        df = fn(docs)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == n_arrow, fn.__name__
+        assert "MapInPandas" not in plan, fn.__name__
+        assert plan.count("Exchange") == n_exchange, fn.__name__
+        assert len(df.collect()) == n_rows, fn.__name__
 
 
 def test_entry_queries_all_callables():
