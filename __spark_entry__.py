@@ -19,11 +19,12 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from jsoup_spark.operators import (
     dedup, events, graph, relational, scrub, similarity, textstats)
 from jsoup_spark.operators.pipeline import (
-    clean_stage, css_path_stage, extract_stage, fragment_stage,
+    clean_stage, css_path_stage, doc_stage, extract_stage, fragment_stage,
     positions_stage, select_stage, spans_to_rows, xml_stage,
     xpath_xml_stage,
 )
@@ -509,25 +510,16 @@ def q_ingest_brotli(spark, sf_dir):
     all recomputed symbolically by the DuckDB oracle."""
     from jsoup_spark.operators.brotli import compress_stored, decompress
     from jsoup_spark.sources.corpus import assemble_html
-    import pandas as pd
 
-    html = assemble_html(_corpus(spark, sf_dir)).select("doc_id", "html")
+    html = assemble_html(_corpus(spark, sf_dir))
 
-    def run(batches):
-        for pdf in batches:
-            comp = [compress_stored(h.encode("utf-8"))
-                    for h in pdf["html"]]
-            dec = [decompress(c).decode("utf-8") for c in comp]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_raw": [len(d) for d in dec],
-                "n_br": [len(c) for c in comp],
-                "decoded_ok": [int(d == h) for d, h in
-                               zip(dec, pdf["html"])],
-            })
+    def per_doc(h):
+        comp = compress_stored(h.encode("utf-8"))
+        dec = decompress(comp).decode("utf-8")
+        return [(len(dec), len(comp), int(dec == h))]
 
-    out = html.mapInPandas(
-        run, schema="doc_id string, n_raw int, n_br int, decoded_ok int")
+    out = doc_stage(html, ["html"], per_doc, T.StructType.fromDDL(
+        "doc_id string, n_raw int, n_br int, decoded_ok int"))
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "n_raw", "n_br", "decoded_ok")
@@ -546,36 +538,28 @@ def q_ingest_transport(spark, sf_dir):
     from jsoup_spark.operators.zstd import compress_store
     from jsoup_spark.sources.ingest import decode_html_bytes
     import gzip as gzip_mod
-    import pandas as pd
 
     CODECS = ("gzip", "lz4", "zstd", "snappy")
 
     docs = _spread(spark, _documents(spark, sf_dir)).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text")
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                raw = text.encode("utf-8")
-                kind = CODECS[did % 4]
-                if kind == "gzip":
-                    payload = gzip_mod.compress(raw, mtime=0)
-                elif kind == "lz4":
-                    payload = lz4_frame(raw)
-                elif kind == "zstd":
-                    payload = compress_store(raw)
-                else:
-                    payload = compress_framed(raw)
-                dec = decode_html_bytes(payload)
-                rows.append((did, kind, len(dec),
-                             int(dec == text)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "codec", "n_raw", "ok"])
+    def per_doc(did, text):
+        raw = text.encode("utf-8")
+        kind = CODECS[did % 4]
+        if kind == "gzip":
+            payload = gzip_mod.compress(raw, mtime=0)
+        elif kind == "lz4":
+            payload = lz4_frame(raw)
+        elif kind == "zstd":
+            payload = compress_store(raw)
+        else:
+            payload = compress_framed(raw)
+        dec = decode_html_bytes(payload)
+        return [(kind, len(dec), int(dec == text))]
 
-    return docs.mapInPandas(
-        run, schema="doc_id long, codec string, n_raw int, ok int")
+    return doc_stage(docs, ["doc_id", "text"], per_doc, T.StructType.fromDDL(
+        "doc_id long, codec string, n_raw int, ok int"))
 
 
 def q_zorder_keys(spark, sf_dir):
@@ -602,36 +586,27 @@ def q_office_extract(spark, sf_dir):
     (chunking in SQL, md5 of the extracted text)."""
     from jsoup_spark.sources.officedoc import (
         build_docx, build_epub, office_stage)
-    import pandas as pd
 
     docs = _spread(spark, _documents(spark, sf_dir)).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text", "source")
 
-    def run(batches):
-        for pdf in batches:
-            ids, payloads = [], []
-            for did, text, source in zip(pdf["doc_id"], pdf["text"],
-                                         pdf["source"]):
-                words = text.split(" ")
-                if did % 2 == 0:
-                    paras = [" ".join(words[i:i + 8])
-                             for i in range(0, len(words), 8)]
-                    b = build_docx(paras, title=f"Doc {did}",
-                                   creator=source)
-                else:
-                    h = (len(words) + 1) // 2
-                    b = build_epub(
-                        [("ch0.xhtml",
-                          "<p>" + " ".join(words[:h]) + "</p>"),
-                         ("ch1.xhtml",
-                          "<p>" + " ".join(words[h:]) + "</p>")],
-                        title=f"Doc {did}", creator=source)
-                ids.append(str(did))
-                payloads.append(b)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def per_doc(did, text, source):
+        words = text.split(" ")
+        if did % 2 == 0:
+            paras = [" ".join(words[i:i + 8])
+                     for i in range(0, len(words), 8)]
+            b = build_docx(paras, title=f"Doc {did}", creator=source)
+        else:
+            h = (len(words) + 1) // 2
+            b = build_epub(
+                [("ch0.xhtml", "<p>" + " ".join(words[:h]) + "</p>"),
+                 ("ch1.xhtml", "<p>" + " ".join(words[h:]) + "</p>")],
+                title=f"Doc {did}", creator=source)
+        return [(b,)]
 
-    payloads = docs.mapInPandas(
-        run, schema="doc_id string, payload binary")
+    payloads = doc_stage(docs, ["doc_id", "text", "source"], per_doc,
+                         T.StructType.fromDDL(
+                             "doc_id string, payload binary"))
     rows = office_stage(payloads)
     return rows.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -652,7 +627,6 @@ def q_pdf_extract(spark, sf_dir):
     reconstructs every field symbolically (page count is
     ceil(words/32), text is the 8-word chunks joined by newline)."""
     from jsoup_spark.sources.pdf import build_pdf, pdf_stage
-    import pandas as pd
 
     docs = _spread(spark, _documents(spark, sf_dir)).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text", "source")
@@ -660,33 +634,26 @@ def q_pdf_extract(spark, sf_dir):
     FILTERS = ["flate", "lzw", "ahx", "a85+flate", "rl",
                "flate-pred", "none"]
 
-    def run(batches):
-        for pdf in batches:
-            ids, payloads = [], []
-            for did, text, source in zip(pdf["doc_id"], pdf["text"],
-                                         pdf["source"]):
-                did = int(did)
-                words = text.split(" ")
-                paras = [" ".join(words[i:i + 8])
-                         for i in range(0, len(words), 8)]
-                b = build_pdf(
-                    paras, title=f"Doc {did}", author=source,
-                    filters=FILTERS[did % 7],
-                    xref_kind=["table", "stream"][did % 2],
-                    objstm=(did % 4 == 1),
-                    font=["winansi", "cid"][did % 2],
-                    strings=["literal", "hex"][did % 3 == 0],
-                    kerning=(did % 5 == 0),
-                    columns=2 if did % 6 == 0 else 1,
-                    encrypt=("rc4" if did % 9 == 3 else
-                             "aesv2" if did % 9 == 6 else None),
-                    form=(did % 8 == 1))
-                ids.append(did)
-                payloads.append(b)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def per_doc(did, text, source):
+        words = text.split(" ")
+        paras = [" ".join(words[i:i + 8])
+                 for i in range(0, len(words), 8)]
+        return [(build_pdf(
+            paras, title=f"Doc {did}", author=source,
+            filters=FILTERS[did % 7],
+            xref_kind=["table", "stream"][did % 2],
+            objstm=(did % 4 == 1),
+            font=["winansi", "cid"][did % 2],
+            strings=["literal", "hex"][did % 3 == 0],
+            kerning=(did % 5 == 0),
+            columns=2 if did % 6 == 0 else 1,
+            encrypt=("rc4" if did % 9 == 3 else
+                     "aesv2" if did % 9 == 6 else None),
+            form=(did % 8 == 1)),)]
 
-    payloads = docs.mapInPandas(
-        run, schema="doc_id long, payload binary")
+    payloads = doc_stage(docs, ["doc_id", "text", "source"], per_doc,
+                         T.StructType.fromDDL(
+                             "doc_id long, payload binary"))
     rows = pdf_stage(payloads)
     return rows.select(
         "doc_id", "title",
@@ -709,38 +676,24 @@ def q_pdf_media(spark, sf_dir):
     is a closed-form integer, so the oracle is pure SQL."""
     from jsoup_spark.sources.pdf import (
         PDFDocument, build_pdf, pdf_images)
-    import pandas as pd
 
     docs = _spread(spark, _documents(spark, sf_dir)).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text")
 
-    def run(batches):
-        cols = ("doc_id", "page", "width", "height",
-                "channels", "v0", "v1", "v2")
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = text.split(" ")
-                paras = [" ".join(words[i:i + 8])
-                         for i in range(0, len(words), 8)]
-                b = build_pdf(paras, title=f"Doc {did}", form=True,
-                              links=1, images=("flate", "g4", "jpeg"),
-                              image_seed=did)
-                doc = PDFDocument(b)
-                for rec in pdf_images(doc):
-                    rows.append((did, rec["page"], rec["width"],
-                                 rec["height"], rec["channels"],
-                                 rec["v0"], rec["v1"], rec["v2"]))
-            out = pd.DataFrame(rows, columns=cols)
-            for c in ("page", "width", "height", "channels",
-                      "v0", "v1", "v2"):
-                out[c] = out[c].astype("int32")
-            yield out
+    def per_doc(did, text):
+        words = text.split(" ")
+        paras = [" ".join(words[i:i + 8])
+                 for i in range(0, len(words), 8)]
+        b = build_pdf(paras, title=f"Doc {did}", form=True,
+                      links=1, images=("flate", "g4", "jpeg"),
+                      image_seed=did)
+        return [(rec["page"], rec["width"], rec["height"],
+                 rec["channels"], rec["v0"], rec["v1"], rec["v2"])
+                for rec in pdf_images(PDFDocument(b))]
 
-    return docs.mapInPandas(
-        run, schema=("doc_id long, page int, width int, height int, "
-                     "channels int, v0 int, v1 int, v2 int"))
+    return doc_stage(docs, ["doc_id", "text"], per_doc, T.StructType.fromDDL(
+        "doc_id long, page int, width int, height int, "
+        "channels int, v0 int, v1 int, v2 int"))
 
 
 def q_main_content(spark, sf_dir):
@@ -756,39 +709,31 @@ def q_main_content(spark, sf_dir):
     so the oracle is fully symbolic."""
     from jsoup_spark.extract.maincontent import main_content_stage
     import html as html_mod
-    import pandas as pd
 
     docs = _spread(spark, _documents(spark, sf_dir)).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text")
 
-    def run(batches):
-        for pdf in batches:
-            ids, pages = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = text.split(" ")
-                paras = "".join(
-                    "<p>" + html_mod.escape(" ".join(words[i:i + 8]))
-                    + "</p>"
-                    for i in range(0, len(words), 8))
-                cls = "post-content" if did % 2 == 0 else "cx"
-                page = (
-                    '<html><head><title>t</title></head><body>'
-                    '<div class="topnav"><a href="/">Home</a> '
-                    '<a href="/blog">Blog</a> <a href="/c">About</a>'
-                    '</div>'
-                    f'<div class="{cls}">{paras}</div>'
-                    '<div class="side"><a href="/x">More links</a> '
-                    '<a href="/y">Other reads</a> '
-                    '<a href="/z">Subscribe now</a></div>'
-                    '<div class="pagefoot"><a href="/p">Privacy</a> '
-                    'copyright notice</div>'
-                    '</body></html>')
-                ids.append(did)
-                pages.append(page)
-            yield pd.DataFrame({"doc_id": ids, "html": pages})
+    def per_doc(did, text):
+        words = text.split(" ")
+        paras = "".join(
+            "<p>" + html_mod.escape(" ".join(words[i:i + 8])) + "</p>"
+            for i in range(0, len(words), 8))
+        cls = "post-content" if did % 2 == 0 else "cx"
+        return [(
+            '<html><head><title>t</title></head><body>'
+            '<div class="topnav"><a href="/">Home</a> '
+            '<a href="/blog">Blog</a> <a href="/c">About</a>'
+            '</div>'
+            f'<div class="{cls}">{paras}</div>'
+            '<div class="side"><a href="/x">More links</a> '
+            '<a href="/y">Other reads</a> '
+            '<a href="/z">Subscribe now</a></div>'
+            '<div class="pagefoot"><a href="/p">Privacy</a> '
+            'copyright notice</div>'
+            '</body></html>',)]
 
-    pages = docs.mapInPandas(run, schema="doc_id long, html string")
+    pages = doc_stage(docs, ["doc_id", "text"], per_doc,
+                      T.StructType.fromDDL("doc_id long, html string"))
     rows = main_content_stage(pages)
     return rows.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -811,72 +756,54 @@ def q_metadata_extract(spark, sf_dir):
     from datetime import date, timedelta
     import html as html_mod
     import json
-    import pandas as pd
 
     docs = _spread(spark, _documents(spark, sf_dir)).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "text", "lang", "source")
 
-    def run(batches):
-        for pdf in batches:
-            ids, pages = [], []
-            for did, text, lang, source in zip(
-                    pdf["doc_id"], pdf["text"], pdf["lang"],
-                    pdf["source"]):
-                did = int(did)
-                words = text.split(" ")
-                desc = " ".join(words[:8])
-                title = f"Doc {did}"
-                pub = (date(2020, 1, 1)
-                       + timedelta(days=did % 1000)).isoformat()
-                esc = lambda s: html_mod.escape(s, quote=True)
-                head = ['<meta property="og:site_name" '
-                        'content="Example">',
-                        f'<link rel="canonical" '
-                        f'href="https://ex.com/doc/{did}">']
-                if did % 3 == 0:
-                    head.append(f'<meta property="og:title" '
-                                f'content="{esc(title)}">')
-                    head.append('<meta name="twitter:title" '
-                                'content="decoy tw">')
-                elif did % 3 == 1:
-                    head.append(f"<title>{esc(title)}</title>")
-                else:
-                    head.append("<title>decoy fallback</title>")
-                    ld = {"@context": "https://schema.org",
-                          "@type": "Article",
-                          "headline": title,
-                          "datePublished": pub,
-                          "author": {"@type": "Person",
-                                     "name": source}}
-                    # raw-text element: entities are NOT decoded in
-                    # script data, so the JSON goes in unescaped
-                    head.append(
-                        '<script type="application/ld+json">'
+    def per_doc(did, text, lang, source):
+        words = text.split(" ")
+        desc = " ".join(words[:8])
+        title = f"Doc {did}"
+        pub = (date(2020, 1, 1) + timedelta(days=did % 1000)).isoformat()
+        esc = lambda s: html_mod.escape(s, quote=True)
+        head = ['<meta property="og:site_name" content="Example">',
+                f'<link rel="canonical" href="https://ex.com/doc/{did}">']
+        if did % 3 == 0:
+            head.append(f'<meta property="og:title" '
+                        f'content="{esc(title)}">')
+            head.append('<meta name="twitter:title" content="decoy tw">')
+        elif did % 3 == 1:
+            head.append(f"<title>{esc(title)}</title>")
+        else:
+            head.append("<title>decoy fallback</title>")
+            ld = {"@context": "https://schema.org",
+                  "@type": "Article",
+                  "headline": title,
+                  "datePublished": pub,
+                  "author": {"@type": "Person", "name": source}}
+            # raw-text element: entities are NOT decoded in script data,
+            # so the JSON goes in unescaped
+            head.append('<script type="application/ld+json">'
                         + json.dumps(ld) + "</script>")
-                if did % 2 == 0:
-                    head.append(f'<meta property="og:description" '
-                                f'content="{esc(desc)}">')
-                    head.append(f'<meta name="author" '
-                                f'content="{esc(source)}">')
-                    head.append(f'<meta property='
-                                f'"article:published_time" '
-                                f'content="{pub}">')
-                    body = ""
-                else:
-                    head.append(f'<meta name="description" '
-                                f'content="{esc(desc)}">')
-                    head.append(f'<meta property="article:author" '
-                                f'content="{esc(source)}">')
-                    body = f'<time datetime="{pub}">then</time>'
-                page = (f'<html lang="{esc(lang)}"><head>'
-                        + "".join(head)
-                        + f"</head><body>{body}</body></html>")
-                ids.append(did)
-                pages.append(page)
-            yield pd.DataFrame({"doc_id": ids, "html": pages})
+        if did % 2 == 0:
+            head.append(f'<meta property="og:description" '
+                        f'content="{esc(desc)}">')
+            head.append(f'<meta name="author" content="{esc(source)}">')
+            head.append(f'<meta property="article:published_time" '
+                        f'content="{pub}">')
+            body = ""
+        else:
+            head.append(f'<meta name="description" '
+                        f'content="{esc(desc)}">')
+            head.append(f'<meta property="article:author" '
+                        f'content="{esc(source)}">')
+            body = f'<time datetime="{pub}">then</time>'
+        return [(f'<html lang="{esc(lang)}"><head>' + "".join(head)
+                 + f"</head><body>{body}</body></html>",)]
 
-    pages = docs.mapInPandas(run, schema="doc_id long, html string")
+    pages = doc_stage(docs, ["doc_id", "text", "lang", "source"], per_doc,
+                      T.StructType.fromDDL("doc_id long, html string"))
     rows = metadata_stage(pages)
     return rows.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -895,51 +822,41 @@ def q_feed_extract(spark, sf_dir):
     from jsoup_spark.sources.webfeeds import feed_stage
     from datetime import date, timedelta
     import html as html_mod
-    import pandas as pd
 
     docs = _spread(spark, _documents(spark, sf_dir)).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text")
 
-    def run(batches):
+    def per_doc(did, text):
         esc = lambda s: html_mod.escape(s, quote=True)
-        for pdf in batches:
-            ids, xmls = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = text.split(" ")
-                chunks = [" ".join(words[i:i + 8])
-                          for i in range(0, len(words), 8)]
-                pub = (date(2020, 1, 1)
-                       + timedelta(days=did % 1000)).isoformat()
-                if did % 2 == 0:
-                    items = "".join(
-                        f"<item><title>{esc(c)}</title>"
-                        f"<link>https://ex.com/{did}/{i}</link>"
-                        f"<guid>{did}-{i}</guid>"
-                        f"<pubDate>{pub}</pubDate></item>"
-                        for i, c in enumerate(chunks))
-                    xml = (f'<?xml version="1.0"?><rss version="2.0">'
-                           f"<channel><title>Feed {did}</title>"
-                           f"{items}</channel></rss>")
-                else:
-                    items = "".join(
-                        f"<entry><title>{esc(c)}</title>"
-                        f'<link rel="self" '
-                        f'href="https://ex.com/self"/>'
-                        f'<link rel="alternate" '
-                        f'href="https://ex.com/{did}/{i}"/>'
-                        f"<id>{did}-{i}</id>"
-                        f"<published>{pub}</published></entry>"
-                        for i, c in enumerate(chunks))
-                    xml = (f'<?xml version="1.0"?>'
-                           f'<feed xmlns='
-                           f'"http://www.w3.org/2005/Atom">'
-                           f"<title>Feed {did}</title>{items}</feed>")
-                ids.append(did)
-                xmls.append(xml)
-            yield pd.DataFrame({"doc_id": ids, "xml": xmls})
+        words = text.split(" ")
+        chunks = [" ".join(words[i:i + 8])
+                  for i in range(0, len(words), 8)]
+        pub = (date(2020, 1, 1) + timedelta(days=did % 1000)).isoformat()
+        if did % 2 == 0:
+            items = "".join(
+                f"<item><title>{esc(c)}</title>"
+                f"<link>https://ex.com/{did}/{i}</link>"
+                f"<guid>{did}-{i}</guid>"
+                f"<pubDate>{pub}</pubDate></item>"
+                for i, c in enumerate(chunks))
+            xml = (f'<?xml version="1.0"?><rss version="2.0">'
+                   f"<channel><title>Feed {did}</title>"
+                   f"{items}</channel></rss>")
+        else:
+            items = "".join(
+                f"<entry><title>{esc(c)}</title>"
+                f'<link rel="self" href="https://ex.com/self"/>'
+                f'<link rel="alternate" href="https://ex.com/{did}/{i}"/>'
+                f"<id>{did}-{i}</id>"
+                f"<published>{pub}</published></entry>"
+                for i, c in enumerate(chunks))
+            xml = (f'<?xml version="1.0"?>'
+                   f'<feed xmlns="http://www.w3.org/2005/Atom">'
+                   f"<title>Feed {did}</title>{items}</feed>")
+        return [(xml,)]
 
-    feeds = docs.mapInPandas(run, schema="doc_id long, xml string")
+    feeds = doc_stage(docs, ["doc_id", "text"], per_doc,
+                      T.StructType.fromDDL("doc_id long, xml string"))
     rows = feed_stage(feeds)
     return rows.select(
         "doc_id", "ord", "kind", "feed_title", "item_title", "link",
@@ -954,42 +871,35 @@ def q_sitemap_extract(spark, sf_dir):
     <loc> values must come back trimmed. Fully symbolic oracle."""
     from jsoup_spark.sources.webfeeds import sitemap_stage
     from datetime import date, timedelta
-    import pandas as pd
 
     FREQS = ["daily", "weekly", "monthly"]
 
     docs = _spread(spark, _documents(spark, sf_dir)).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text")
 
-    def run(batches):
-        for pdf in batches:
-            ids, xmls = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                n = (len(text.split(" ")) + 7) // 8
-                pub = (date(2020, 1, 1)
-                       + timedelta(days=did % 1000)).isoformat()
-                if did % 2 == 0:
-                    urls = "".join(
-                        f"<url><loc> https://ex.com/{did}/{i} </loc>"
-                        f"<lastmod>{pub}</lastmod>"
-                        f"<changefreq>{FREQS[i % 3]}</changefreq>"
-                        f"<priority>0.{(i % 9) + 1}</priority></url>"
-                        for i in range(n))
-                    xml = ('<?xml version="1.0"?><urlset xmlns='
-                           '"http://www.sitemaps.org/schemas/'
-                           f'sitemap/0.9">{urls}</urlset>')
-                else:
-                    sms = "".join(
-                        f"<sitemap><loc>https://ex.com/{did}/s{i}.xml"
-                        f"</loc><lastmod>{pub}</lastmod></sitemap>"
-                        for i in range(n))
-                    xml = f"<sitemapindex>{sms}</sitemapindex>"
-                ids.append(did)
-                xmls.append(xml)
-            yield pd.DataFrame({"doc_id": ids, "xml": xmls})
+    def per_doc(did, text):
+        n = (len(text.split(" ")) + 7) // 8
+        pub = (date(2020, 1, 1) + timedelta(days=did % 1000)).isoformat()
+        if did % 2 == 0:
+            urls = "".join(
+                f"<url><loc> https://ex.com/{did}/{i} </loc>"
+                f"<lastmod>{pub}</lastmod>"
+                f"<changefreq>{FREQS[i % 3]}</changefreq>"
+                f"<priority>0.{(i % 9) + 1}</priority></url>"
+                for i in range(n))
+            xml = ('<?xml version="1.0"?><urlset xmlns='
+                   '"http://www.sitemaps.org/schemas/'
+                   f'sitemap/0.9">{urls}</urlset>')
+        else:
+            sms = "".join(
+                f"<sitemap><loc>https://ex.com/{did}/s{i}.xml"
+                f"</loc><lastmod>{pub}</lastmod></sitemap>"
+                for i in range(n))
+            xml = f"<sitemapindex>{sms}</sitemapindex>"
+        return [(xml,)]
 
-    maps = docs.mapInPandas(run, schema="doc_id long, xml string")
+    maps = doc_stage(docs, ["doc_id", "text"], per_doc,
+                     T.StructType.fromDDL("doc_id long, xml string"))
     return sitemap_stage(maps)
 
 
@@ -1002,7 +912,6 @@ def q_robots_check(spark, sf_dir):
     decision as a CASE on doc parity."""
     from jsoup_spark.sources.webfeeds import (
         crawl_delay, parse_robots, robots_allowed)
-    import pandas as pd
 
     docs = _spread(spark, _documents(spark, sf_dir)).select(
         F.col("doc_id").cast("long").alias("doc_id"))
@@ -1010,31 +919,23 @@ def q_robots_check(spark, sf_dir):
     PATHS = ("/private/ok.html", "/private/x", "/public/page",
              "/docs/x.pdf", "/docs/x.pdfx")
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                txt = ""
-                if did % 2 == 0:
-                    txt += "User-agent: gbot\nDisallow: /\n\n"
-                txt += ("User-agent: *\nDisallow: /private/\n"
-                        "Allow: /private/ok\nDisallow: /*.pdf$\n"
-                        f"Crawl-delay: {did % 10}\n"
-                        "Sitemap: https://ex.com/sitemap.xml\n")
-                r = parse_robots(txt)
-                agent = "gbot-news/1.0"
-                rows.append((did, crawl_delay(r, agent),
-                             *(robots_allowed(r, agent, p)
-                               for p in PATHS)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "delay", "allowed_ok", "allowed_x",
-                "allowed_pub", "allowed_pdf", "allowed_pdfx"])
+    def per_doc(did):
+        txt = ""
+        if did % 2 == 0:
+            txt += "User-agent: gbot\nDisallow: /\n\n"
+        txt += ("User-agent: *\nDisallow: /private/\n"
+                "Allow: /private/ok\nDisallow: /*.pdf$\n"
+                f"Crawl-delay: {did % 10}\n"
+                "Sitemap: https://ex.com/sitemap.xml\n")
+        r = parse_robots(txt)
+        agent = "gbot-news/1.0"
+        return [(crawl_delay(r, agent),
+                 *(robots_allowed(r, agent, p) for p in PATHS))]
 
-    return docs.mapInPandas(
-        run, schema=("doc_id long, delay string, allowed_ok boolean, "
-                     "allowed_x boolean, allowed_pub boolean, "
-                     "allowed_pdf boolean, allowed_pdfx boolean"))
+    return doc_stage(docs, ["doc_id"], per_doc, T.StructType.fromDDL(
+        "doc_id long, delay string, allowed_ok boolean, "
+        "allowed_x boolean, allowed_pub boolean, "
+        "allowed_pdf boolean, allowed_pdfx boolean"))
 
 
 def q_archive_extract(spark, sf_dir):
@@ -1046,31 +947,24 @@ def q_archive_extract(spark, sf_dir):
     from jsoup_spark.sources.archive import archive_stage, build_tar, \
         build_zip
     import gzip as gzip_mod
-    import pandas as pd
 
     docs = _spread(spark, _documents(spark, sf_dir)).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text")
 
-    def run(batches):
-        for pdf in batches:
-            ids, payloads = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = text.split(" ")
-                members = []
-                for i in range(0, len(words), 8):
-                    chunk = " ".join(words[i:i + 8]).encode()
-                    if (i // 8) % 3 == 2:
-                        chunk = gzip_mod.compress(chunk, mtime=0)
-                    members.append((f"part{i // 8}.txt", chunk))
-                b = (build_tar(members, compress="gz")
-                     if did % 2 == 0 else build_zip(members))
-                ids.append(did)
-                payloads.append(b)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def per_doc(did, text):
+        words = text.split(" ")
+        members = []
+        for i in range(0, len(words), 8):
+            chunk = " ".join(words[i:i + 8]).encode()
+            if (i // 8) % 3 == 2:
+                chunk = gzip_mod.compress(chunk, mtime=0)
+            members.append((f"part{i // 8}.txt", chunk))
+        return [(build_tar(members, compress="gz")
+                 if did % 2 == 0 else build_zip(members),)]
 
-    payloads = docs.mapInPandas(
-        run, schema="doc_id long, payload binary")
+    payloads = doc_stage(docs, ["doc_id", "text"], per_doc,
+                         T.StructType.fromDDL(
+                             "doc_id long, payload binary"))
     rows = archive_stage(payloads)
     return rows.select("doc_id", "member", "member_idx", "text", "ok")
 
@@ -1084,41 +978,33 @@ def q_html_to_md(spark, sf_dir):
     the oracle rebuilds it symbolically and compares md5. Corpus text
     is alphanumeric+space (verified), so no escaping paths fire."""
     from jsoup_spark.extract.markdown import markdown_stage
-    import pandas as pd
 
     docs = _spread(spark, _documents(spark, sf_dir)).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text")
 
-    def run(batches):
-        for pdf in batches:
-            ids, pages = [], []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                words = text.split(" ")
-                parts = []
-                for k, i in enumerate(range(0, len(words), 8)):
-                    cw = words[i:i + 8]
-                    chunk = " ".join(cw)
-                    kind = k % 4
-                    if kind == 0:
-                        parts.append(f"<h2>{chunk}</h2>")
-                    elif kind == 2 and len(cw) >= 2:
-                        h = (len(cw) + 1) // 2
-                        parts.append(
-                            "<ul><li>" + " ".join(cw[:h])
-                            + "</li><li>" + " ".join(cw[h:])
-                            + "</li></ul>")
-                    elif kind == 3:
-                        parts.append(
-                            f"<blockquote><p>{chunk}</p></blockquote>")
-                    else:
-                        parts.append(f"<p>{chunk}</p>")
-                ids.append(did)
-                pages.append("<html><body>" + "".join(parts)
-                             + "</body></html>")
-            yield pd.DataFrame({"doc_id": ids, "html": pages})
+    def per_doc(text):
+        words = text.split(" ")
+        parts = []
+        for k, i in enumerate(range(0, len(words), 8)):
+            cw = words[i:i + 8]
+            chunk = " ".join(cw)
+            kind = k % 4
+            if kind == 0:
+                parts.append(f"<h2>{chunk}</h2>")
+            elif kind == 2 and len(cw) >= 2:
+                h = (len(cw) + 1) // 2
+                parts.append(
+                    "<ul><li>" + " ".join(cw[:h])
+                    + "</li><li>" + " ".join(cw[h:])
+                    + "</li></ul>")
+            elif kind == 3:
+                parts.append(f"<blockquote><p>{chunk}</p></blockquote>")
+            else:
+                parts.append(f"<p>{chunk}</p>")
+        return [("<html><body>" + "".join(parts) + "</body></html>",)]
 
-    pages = docs.mapInPandas(run, schema="doc_id long, html string")
+    pages = doc_stage(docs, ["text"], per_doc,
+                      T.StructType.fromDDL("doc_id long, html string"))
     rows = markdown_stage(pages)
     return rows.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -1178,7 +1064,6 @@ def q_warc_extract(spark, sf_dir):
     from jsoup_spark.sources.corpus import assemble_html
     from jsoup_spark.sources.warc import (
         build_warc, http_response, warc_stage)
-    import pandas as pd
 
     html = assemble_html(_corpus(spark, sf_dir)).select(
         F.col("doc_id").cast("long").alias("doc_id"), "html")
@@ -1190,28 +1075,20 @@ def q_warc_extract(spark, sf_dir):
     grouped = joined.groupBy("archive_id").agg(
         F.sort_array(F.collect_list("rec")).alias("recs"))
 
-    def run(batches):
-        for pdf in batches:
-            ids, payloads = [], []
-            for aid, recs in zip(pdf["archive_id"], pdf["recs"]):
-                records = []
-                for r in recs:
-                    enc = (None, "gzip", "br")[int(r["doc_id"]) % 3]
-                    records.append((
-                        {"WARC-Type": "response",
-                         "WARC-Target-URI": r["url"],
-                         "WARC-Date": "2026-08-17T00:00:00Z",
-                         "Content-Type":
-                             "application/http;msgtype=response"},
-                        http_response(r["html"].encode("utf-8"),
-                                      encoding=enc)))
-                ids.append(str(aid))
-                payloads.append(build_warc(
-                    records, gzip_members=int(aid) % 2 == 0))
-            yield pd.DataFrame({"archive_id": ids, "payload": payloads})
+    def per_doc(aid, recs):
+        records = [
+            ({"WARC-Type": "response",
+              "WARC-Target-URI": url,
+              "WARC-Date": "2026-08-17T00:00:00Z",
+              "Content-Type": "application/http;msgtype=response"},
+             http_response(html_text.encode("utf-8"),
+                           encoding=(None, "gzip", "br")[did % 3]))
+            for did, url, html_text in recs]
+        return [(build_warc(records, gzip_members=aid % 2 == 0),)]
 
-    archives = grouped.mapInPandas(
-        run, schema="archive_id string, payload binary")
+    archives = doc_stage(grouped, ["archive_id", "recs"], per_doc,
+                         T.StructType.fromDDL(
+                             "archive_id string, payload binary"))
     rows = warc_stage(archives)
     return rows.select(
         F.regexp_extract("target_uri", r"[?&]id=([0-9]+)", 1)
@@ -1302,6 +1179,27 @@ _FEATURE_NAMES = ("r_mean", "g_mean", "b_mean", "all_mean",
                   "r_std", "g_std", "b_std", "all_std")
 
 
+def _decoded_media(spark, sf_dir, codec=None, features=True):
+    """Synthesize one real media payload per doc (``codec`` as in
+    synthesize_media; None is the PNG/BMP mix), decode it with fake=False
+    and project the geometry, plus the eight rounded features when
+    ``features``."""
+    from jsoup_spark.operators.multimodal import (
+        decode_stage, synthesize_media)
+    docs = _spread(spark, _documents(spark, sf_dir)).select(
+        F.col("doc_id").cast("string").alias("doc_id"))
+    dec = decode_stage(synthesize_media(docs, real=True, codec=codec),
+                       fake=False)
+    f = F.col("feature")
+    return dec.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("width").cast("int").alias("width"),
+        F.col("height").cast("int").alias("height"),
+        *[F.round(f[i], 5).alias(n)
+          for i, n in enumerate(_FEATURE_NAMES) if features],
+    )
+
+
 def q_multimodal_features(spark, sf_dir):
     """Real media pipeline end-to-end: synthesize genuine PNG/BMP payloads
     (pixels a deterministic function of sha256(doc_id)) -> binary column ->
@@ -1311,18 +1209,7 @@ def q_multimodal_features(spark, sf_dir):
     a hash match proves the encode -> Spark binary transport -> decode ->
     feature path is pixel-exact. fake=False: any stub-tier fallback
     raises rather than silently passing."""
-    from jsoup_spark.operators.multimodal import (
-        decode_stage, synthesize_media)
-    docs = _spread(spark, _documents(spark, sf_dir)).select(
-        F.col("doc_id").cast("string").alias("doc_id"))
-    dec = decode_stage(synthesize_media(docs, real=True), fake=False)
-    f = F.col("feature")
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("width").cast("int").alias("width"),
-        F.col("height").cast("int").alias("height"),
-        *[F.round(f[i], 5).alias(n) for i, n in enumerate(_FEATURE_NAMES)],
-    )
+    return _decoded_media(spark, sf_dir)
 
 
 def q_multimodal_webp(spark, sf_dir):
@@ -1333,19 +1220,7 @@ def q_multimodal_webp(spark, sf_dir):
     JPEG geometry-only check this query reuses the FULL symbolic feature
     oracle: a hash match proves encode -> binary column -> decode ->
     feature extraction is pixel-exact through the WebP round trip."""
-    from jsoup_spark.operators.multimodal import (
-        decode_stage, synthesize_media)
-    docs = _spread(spark, _documents(spark, sf_dir)).select(
-        F.col("doc_id").cast("string").alias("doc_id"))
-    media = synthesize_media(docs, real=True, codec="webp")
-    dec = decode_stage(media, fake=False)
-    f = F.col("feature")
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("width").cast("int").alias("width"),
-        F.col("height").cast("int").alias("height"),
-        *[F.round(f[i], 5).alias(n) for i, n in enumerate(_FEATURE_NAMES)],
-    )
+    return _decoded_media(spark, sf_dir, codec="webp")
 
 
 def q_multimodal_gif(spark, sf_dir):
@@ -1357,19 +1232,7 @@ def q_multimodal_gif(spark, sf_dir):
     RGB, so like multimodal_webp this reuses the FULL symbolic feature
     oracle: a hash match proves encode -> binary column -> decode ->
     feature extraction is pixel-exact through the GIF round trip."""
-    from jsoup_spark.operators.multimodal import (
-        decode_stage, synthesize_media)
-    docs = _spread(spark, _documents(spark, sf_dir)).select(
-        F.col("doc_id").cast("string").alias("doc_id"))
-    media = synthesize_media(docs, real=True, codec="gif")
-    dec = decode_stage(media, fake=False)
-    f = F.col("feature")
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("width").cast("int").alias("width"),
-        F.col("height").cast("int").alias("height"),
-        *[F.round(f[i], 5).alias(n) for i, n in enumerate(_FEATURE_NAMES)],
-    )
+    return _decoded_media(spark, sf_dir, codec="gif")
 
 
 def q_multimodal_tiff(spark, sf_dir):
@@ -1378,19 +1241,7 @@ def q_multimodal_tiff(spark, sf_dir):
     baseline-TIFF decoder — both validated against the system libtiff in
     BOTH directions in tests/test_tiff.py. Lossless, so like webp/gif
     this reuses the FULL symbolic pixel-exact feature oracle."""
-    from jsoup_spark.operators.multimodal import (
-        decode_stage, synthesize_media)
-    docs = _spread(spark, _documents(spark, sf_dir)).select(
-        F.col("doc_id").cast("string").alias("doc_id"))
-    media = synthesize_media(docs, real=True, codec="tiff")
-    dec = decode_stage(media, fake=False)
-    f = F.col("feature")
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("width").cast("int").alias("width"),
-        F.col("height").cast("int").alias("height"),
-        *[F.round(f[i], 5).alias(n) for i, n in enumerate(_FEATURE_NAMES)],
-    )
+    return _decoded_media(spark, sf_dir, codec="tiff")
 
 
 def q_multimodal_ccitt(spark, sf_dir):
@@ -1400,20 +1251,7 @@ def q_multimodal_ccitt(spark, sf_dir):
     identical to the system libtiff in tests/test_ccitt.py. The
     bilevel pattern (black iff (x+y+h2)%5==0) has a closed-form
     black count, so means and stds are exact SQL expressions."""
-    from jsoup_spark.operators.multimodal import (
-        decode_stage, synthesize_media)
-    docs = _spread(spark, _documents(spark, sf_dir)).select(
-        F.col("doc_id").cast("string").alias("doc_id"))
-    media = synthesize_media(docs, real=True, codec="ccitt")
-    dec = decode_stage(media, fake=False)
-    f = F.col("feature")
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("width").cast("int").alias("width"),
-        F.col("height").cast("int").alias("height"),
-        *[F.round(f[i], 5).alias(n)
-          for i, n in enumerate(_FEATURE_NAMES)],
-    )
+    return _decoded_media(spark, sf_dir, codec="ccitt")
 
 
 def q_multimodal_jpeg_arith(spark, sf_dir):
@@ -1424,17 +1262,7 @@ def q_multimodal_jpeg_arith(spark, sf_dir):
     Lossy like the Huffman path, so the oracle checks the
     decode-invariant geometry; entropy-level fidelity is pinned by the
     lossless-transcode pytest gates."""
-    from jsoup_spark.operators.multimodal import (
-        decode_stage, synthesize_media)
-    docs = _spread(spark, _documents(spark, sf_dir)).select(
-        F.col("doc_id").cast("string").alias("doc_id"))
-    media = synthesize_media(docs, real=True, codec="jpeg_arith")
-    dec = decode_stage(media, fake=False)
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("width").cast("int").alias("width"),
-        F.col("height").cast("int").alias("height"),
-    )
+    return _decoded_media(spark, sf_dir, codec="jpeg_arith", features=False)
 
 
 def q_multimodal_resize(spark, sf_dir):
@@ -1477,17 +1305,7 @@ def q_multimodal_jpeg(spark, sf_dir):
     the native Huffman+IDCT decoder. JPEG is lossy, so the oracle checks
     the decode-invariant geometry; pixel fidelity is bounded by the
     round-trip pytest suite (tests/test_codecs.py)."""
-    from jsoup_spark.operators.multimodal import (
-        decode_stage, synthesize_media)
-    docs = _spread(spark, _documents(spark, sf_dir)).select(
-        F.col("doc_id").cast("string").alias("doc_id"))
-    media = synthesize_media(docs, real=True, codec="jpeg")
-    dec = decode_stage(media, fake=False)
-    return dec.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("width").cast("int").alias("width"),
-        F.col("height").cast("int").alias("height"),
-    )
+    return _decoded_media(spark, sf_dir, codec="jpeg", features=False)
 
 
 # ------------------------------------------------------------ contract
@@ -1498,22 +1316,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Registry order matters: the round driver's correctness harness only
-    # verifies the FIRST 50 entries (observed at CORRECTNESS_r07/r08).
-    # Rotation policy (VERDICT r8 #2): the 28 queries past r8's 50-cap
-    # (last driver-verified at r7 code) lead in r9 so every query gets a
-    # driver row at post-r8 code across the r8+r9 artifacts; the two
-    # events queries follow immediately (inside the window) to prove the
-    # r9 deterministic-ordering fix in the graded artifact; the remaining
-    # window slots go to queries whose engine internals this round
-    # touches: the parse-gated extract/select/clean tier (attr lookup
-    # fast path, text-walk threading, election memo), the rewritten
-    # fingerprint_rolling, and the four multimodal queries whose codecs
-    # gained decode tables (jpeg/webp/gif/tiff) — displacing five
-    # r8-window queries that are both unchanged this round and already
-    # driver-verified at r8 code (token_count, token_count_bpe,
-    # extract_media, extract_metrics, positions_title).
-    # oracle_sql() is keyed by name and is order-insensitive.
+    # Registry order matters: the correctness harness that consumes
+    # queries() verifies only the FIRST 50 entries, so a query outside
+    # that window is never checked there. oracle_sql() is keyed by name
+    # and is order-insensitive.
     return {
         "repetition": q_repetition,
         "pii_scrub": q_pii_scrub,

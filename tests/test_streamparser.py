@@ -5,6 +5,8 @@ import subprocess
 import sys
 import textwrap
 
+from conftest import load_fixture
+
 from jsoup_spark.extract.spans import extract_spans, stream_spans
 from jsoup_spark.parser.streamparser import StreamParser
 from jsoup_spark.parser.treebuilder import parse
@@ -74,12 +76,14 @@ def test_prune_during_stream():
 
 
 def test_stream_spans_equivalence_wild():
-    import glob, gzip
-    for f in sorted(glob.glob(
-            "/root/reference/src/test/resources/htmltests/*.html"))[:6]:
-        h = open(f, "rb").read().decode("utf-8", "replace")
-        assert stream_spans(h, "http://x/") == \
-            extract_spans(parse(h, "http://x/")), f
+    """Streaming and tree span extraction agree on every golden parse-tree
+    input and every golden span case."""
+    spans_fx = load_fixture("golden_spans.json")
+    docs = [(c["html"], "http://x/") for c in load_fixture("golden_tree.json")]
+    docs += [(c["html"], spans_fx["base_uri"]) for c in spans_fx["cases"]]
+    assert len(docs) == 1860
+    for h, base in docs:
+        assert stream_spans(h, base) == extract_spans(parse(h, base)), h[:120]
 
 
 def test_stream_spans_bounded_memory():
