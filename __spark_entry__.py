@@ -488,13 +488,13 @@ def q_embed_neardup_mp(spark, sf_dir):
 
 
 def q_embed_neardup_scale(spark, sf_dir):
-    """The scale="large" profile (SCALE_PROFILES — the 100 TB defaults in
-    one word): corpus-scaled nbits via suggest_nbits (=4 at this sf),
-    2-table OR amplification over disjoint dimension blocks, capped
-    buckets. Oracle: pairs sharing a sign-bucket in EITHER table,
-    union-distinct."""
+    """The 100 TB configuration: corpus-scaled nbits via suggest_nbits
+    (=4 at this sf), 2-table OR amplification over disjoint dimension
+    blocks, capped buckets. Oracle: pairs sharing a sign-bucket in
+    EITHER table, union-distinct."""
     return dedup.embedding_near_dup(_embeddings(spark, sf_dir),
-                                    threshold=-1.0, scale="large")
+                                    threshold=-1.0, nbits=None, n_tables=2,
+                                    max_bucket=4096)
 
 
 def q_ingest_brotli(spark, sf_dir):
@@ -1181,15 +1181,13 @@ _FEATURE_NAMES = ("r_mean", "g_mean", "b_mean", "all_mean",
 
 def _decoded_media(spark, sf_dir, codec=None, features=True):
     """Synthesize one real media payload per doc (``codec`` as in
-    synthesize_media; None is the PNG/BMP mix), decode it with fake=False
-    and project the geometry, plus the eight rounded features when
-    ``features``."""
+    synthesize_media; None is the PNG/BMP mix), decode it and project
+    the geometry, plus the eight rounded features when ``features``."""
     from jsoup_spark.operators.multimodal import (
         decode_stage, synthesize_media)
     docs = _spread(spark, _documents(spark, sf_dir)).select(
         F.col("doc_id").cast("string").alias("doc_id"))
-    dec = decode_stage(synthesize_media(docs, real=True, codec=codec),
-                       fake=False)
+    dec = decode_stage(synthesize_media(docs, codec=codec))
     f = F.col("feature")
     return dec.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -1207,8 +1205,9 @@ def q_multimodal_features(spark, sf_dir):
     per-channel mean/std features. The DuckDB oracle recomputes the same
     stats symbolically from sha256(doc_id) over a generated pixel grid, so
     a hash match proves the encode -> Spark binary transport -> decode ->
-    feature path is pixel-exact. fake=False: any stub-tier fallback
-    raises rather than silently passing."""
+    feature path is pixel-exact. A payload the decoders cannot read
+    comes out with null geometry and features, which the oracle's
+    non-null values catch."""
     return _decoded_media(spark, sf_dir)
 
 
@@ -1277,7 +1276,7 @@ def q_multimodal_resize(spark, sf_dir):
         decode_stage, resize_stage, synthesize_media)
     docs = _spread(spark, _documents(spark, sf_dir)).select(
         F.col("doc_id").cast("string").alias("doc_id"))
-    media = synthesize_media(docs, real=True)
+    media = synthesize_media(docs)
     resized = resize_stage(media, max_side=16)
     # resize_stage emits (doc_id, width, height, payload); decode_stage
     # wants the (doc_id, payload, meta) media shape — rebuild the meta
@@ -1289,7 +1288,7 @@ def q_multimodal_resize(spark, sf_dir):
             F.length("payload").cast("long").alias("n_bytes"),
             F.lit(None).cast("string").alias("source_ref"),
         ).alias("meta"))
-    dec = decode_stage(remedia, fake=False)
+    dec = decode_stage(remedia)
     f = F.col("feature")
     return dec.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -2222,9 +2221,9 @@ def oracle_sql() -> dict[str, str]:
             FROM e a JOIN e b
               ON ((CASE WHEN substr(a.bucket, 1, 1) != substr(b.bucket, 1, 1) THEN 1 ELSE 0 END) + (CASE WHEN substr(a.bucket, 2, 1) != substr(b.bucket, 2, 1) THEN 1 ELSE 0 END) + (CASE WHEN substr(a.bucket, 3, 1) != substr(b.bucket, 3, 1) THEN 1 ELSE 0 END) + (CASE WHEN substr(a.bucket, 4, 1) != substr(b.bucket, 4, 1) THEN 1 ELSE 0 END) + (CASE WHEN substr(a.bucket, 5, 1) != substr(b.bucket, 5, 1) THEN 1 ELSE 0 END) + (CASE WHEN substr(a.bucket, 6, 1) != substr(b.bucket, 6, 1) THEN 1 ELSE 0 END) + (CASE WHEN substr(a.bucket, 7, 1) != substr(b.bucket, 7, 1) THEN 1 ELSE 0 END) + (CASE WHEN substr(a.bucket, 8, 1) != substr(b.bucket, 8, 1) THEN 1 ELSE 0 END)) <= 1
              AND a.vec_id < b.vec_id""",
-        # scale="large" profile at this sf: suggest_nbits(500)=4 (the
-        # SQL pins the profile's small-corpus resolution; a bigger corpus
-        # widens nbits Spark-side by the same documented formula),
+        # nbits=None at this sf: suggest_nbits(500)=4 (the SQL pins the
+        # small-corpus resolution; a bigger corpus widens nbits
+        # Spark-side by the same documented formula),
         # n_tables=2 over disjoint dim blocks [0,4) and [4,8),
         # max_bucket=4096 (uncapped at 500 vectors)
         "embed_neardup_scale": """

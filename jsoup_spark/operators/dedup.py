@@ -22,35 +22,6 @@ from .pipeline import doc_stage
 MINHASH_PERMS = 4          # 4 disjoint 8-hex windows of md5(shingle)
 LSH_BANDS = 2              # 2 bands x 2 rows
 
-# Scale profiles (VERDICT r4 item 5): the historical defaults are exact
-# and small-scale (unbounded buckets, fixed narrow bucket keys) — right
-# for the pinned sf oracles, wrong for a 10^9+-doc corpus where one
-# degenerate bucket turns O(bucket^2). scale="large" flips every knob to
-# the bounded configuration in one word; explicitly-passed knobs always
-# win over the profile. The "large" values: max_bucket caps degenerate
-# buckets via representative pairing (no silent truncation — the
-# *_with_stats variants report every dropped pair), nbits=None grows the
-# bucket-key width with corpus size (similarity.suggest_nbits), and
-# n_tables=2 OR-amplifies recall lost to the wider keys.
-SCALE_PROFILES = {
-    "small": {"max_bucket": None, "nbits": 8, "n_tables": 1},
-    "large": {"max_bucket": 4096, "nbits": None, "n_tables": 2},
-}
-
-_UNSET = object()
-
-
-def _knob(value, scale: str, name: str):
-    """Resolve a knob: explicit value wins, else the profile default."""
-    if value is not _UNSET:
-        return value
-    try:
-        return SCALE_PROFILES[scale][name]
-    except KeyError:
-        raise ValueError(f"unknown scale profile {scale!r}; "
-                         f"expected one of {sorted(SCALE_PROFILES)}")
-
-
 def _shingles(text_col="text"):
     """3-word shingles as a Catalyst expression over space-split words.
 
@@ -150,21 +121,18 @@ def minhash_lsh_buckets(documents: DataFrame) -> DataFrame:
 
 def ngram_jaccard_pairs(documents: DataFrame,
                         threshold: float = 0.0,
-                        max_bucket=_UNSET,
-                        scale: str = "small") -> DataFrame:
-    """Pairwise n-gram Jaccard among LSH candidates (same band-0 key).
-    scale="large" selects the bounded-bucket profile (SCALE_PROFILES);
-    see ngram_jaccard_pairs_with_stats for the scale knobs."""
+                        max_bucket: int | None = None) -> DataFrame:
+    """Pairwise n-gram Jaccard among LSH candidates (same band-0 key);
+    see ngram_jaccard_pairs_with_stats for max_bucket."""
     pairs, _stats = ngram_jaccard_pairs_with_stats(
-        documents, threshold, max_bucket, scale)
+        documents, threshold, max_bucket)
     return pairs
 
 
 def ngram_jaccard_pairs_with_stats(
         documents: DataFrame,
         threshold: float = 0.0,
-        max_bucket=_UNSET,
-        scale: str = "small") -> tuple[DataFrame, DataFrame]:
+        max_bucket: int | None = None) -> tuple[DataFrame, DataFrame]:
     """Pairwise n-gram Jaccard among LSH candidates (same band-0 key),
     plus a capped-bucket report.
 
@@ -182,11 +150,9 @@ def ngram_jaccard_pairs_with_stats(
       this size are cliques in practice, so membership survives; the
       dropped member-member pairs are REPORTED, not silent: the second
       return value lists every capped bucket with its size and
-      dropped-pair count. max_bucket=None (the "small"-profile default)
-      is exact and returns an empty report; scale="large" defaults it to
-      SCALE_PROFILES["large"]["max_bucket"].
+      dropped-pair count. max_bucket=None (the default) is exact and
+      returns an empty report.
     """
-    max_bucket = _knob(max_bucket, scale, "max_bucket")
     # r9: the per-doc shingle+md5 chain moves into TWO cheap Arrow batch
     # stages (guide §4.2 — hashlib's C md5 / plain splits instead of
     # interpreted Catalyst lambdas), shaped so the SCALE story of the
@@ -351,10 +317,9 @@ def simhash(documents: DataFrame, bits: int = 16) -> DataFrame:
 def embedding_near_dup(embeddings: DataFrame,
                        threshold: float = 0.9,
                        probe_hamming: int = 0,
-                       nbits=_UNSET,
-                       n_tables=_UNSET,
-                       max_bucket=_UNSET,
-                       scale: str = "small") -> DataFrame:
+                       nbits: int | None = 8,
+                       n_tables: int = 1,
+                       max_bucket: int | None = None) -> DataFrame:
     """Embedding-cosine near-dup candidates, LSH-bucketed by sign patterns
     of embedding dimensions (random-hyperplane style).
 
@@ -379,14 +344,11 @@ def embedding_near_dup(embeddings: DataFrame,
       (min vec_id), so the bucket yields O(n) rep-member pairs instead of
       all pairs; smaller buckets keep the exact behavior. Use
       embedding_near_dup_with_stats for the capped-bucket report.
-    * scale — one-word profile over the three knobs above: "small" (the
-      historical exact defaults, pinned by the sf oracles) or "large"
-      (SCALE_PROFILES["large"]: capped buckets, corpus-scaled nbits,
-      2-table OR amplification). Explicit knobs win over the profile.
+    The defaults are exact for the pinned sf oracles; at 10^9+ vectors
+    pass nbits=None, n_tables=2, max_bucket=4096 (embed_neardup_scale).
     """
     pairs, _stats = embedding_near_dup_with_stats(
-        embeddings, threshold, probe_hamming, nbits, n_tables, max_bucket,
-        scale)
+        embeddings, threshold, probe_hamming, nbits, n_tables, max_bucket)
     return pairs
 
 
@@ -394,18 +356,14 @@ def embedding_near_dup_with_stats(
         embeddings: DataFrame,
         threshold: float = 0.9,
         probe_hamming: int = 0,
-        nbits=_UNSET,
-        n_tables=_UNSET,
-        max_bucket=_UNSET,
-        scale: str = "small") -> tuple[DataFrame, DataFrame]:
+        nbits: int | None = 8,
+        n_tables: int = 1,
+        max_bucket: int | None = None) -> tuple[DataFrame, DataFrame]:
     """embedding_near_dup plus a report of capped buckets
     (tbl, bucket, n_docs, dropped_pairs) — empty when max_bucket=None
     or nothing exceeded it. No silent truncation."""
     from jsoup_spark.operators.similarity import (
         _dot, _norm, _table_bucket, _probe_set, suggest_nbits)
-    nbits = _knob(nbits, scale, "nbits")
-    n_tables = _knob(n_tables, scale, "n_tables")
-    max_bucket = _knob(max_bucket, scale, "max_bucket")
     if nbits is None:
         nbits = suggest_nbits(embeddings.count())
     # norm precomputed per VECTOR (one pass per row) instead of per
@@ -414,7 +372,7 @@ def embedding_near_dup_with_stats(
     # ONLY on the uncapped path: with max_bucket set, the sizes
     # join-back plan loses its BroadcastExchange reuse when the base
     # projection carries the non-codegen-able norm HOF (paired A/B at
-    # sf0.1: scale="large" 3.0 s inline vs 6.3 s precomputed; the
+    # sf0.1, capped 2-table run: 3.0 s inline vs 6.3 s precomputed; the
     # uncapped multi-probe path is 2.9x FASTER precomputed, 6.5->2.3 s)
     pre_norm = max_bucket is None
     ncols = ["_nrm"] if pre_norm else []

@@ -10,20 +10,19 @@ shapes) is real and tested. Codec work is two-tier:
   — `decode_image`/`decode_audio` sniff magic bytes and decode these
   natively, `resize_stage` really resamples (area average) and
   re-encodes PNG, and `decode_stage` extracts real per-channel
-  mean/std features.
-* STUB for formats that need external codec libraries
-  (lossless-process JPEG, MP3, H.264, ...):
-  NotImplementedError unless `fake=True` produces a deterministic
-  hash-derived decode (for plumbing tests) — per the environment
-  contract (no PIL/opencv/ffmpeg in this container). Progressive JPEG
-  left this tier in r6; WebP left it in r7 — both lossless (VP8L,
-  codecs.py) and lossy (VP8 keyframes, operators/vp8.py) decode
-  natively, byte-identical to libwebp (tests/test_vp8.py); GIF
+  mean/std features. Progressive JPEG and WebP decode natively too —
+  both lossless (VP8L, codecs.py) and lossy (VP8 keyframes,
+  operators/vp8.py), byte-identical to libwebp (tests/test_vp8.py); GIF
   (87a/89a incl. animation, operators/gif.py) decodes natively,
   index-exact vs giflib (tests/test_gif.py); baseline TIFF
   (strips/tiles/planar, None/LZW/Deflate/PackBits, predictor,
   operators/tiff.py) decodes natively, validated both directions vs
   libtiff (tests/test_tiff.py).
+* UNSUPPORTED: formats that need an external codec library
+  (lossless-process JPEG, MP3, H.264, ...; PIL/opencv/ffmpeg are not
+  dependencies). `decode_image`/`decode_audio` raise
+  NotImplementedError, `decode_stage` emits a row with null
+  geometry and feature, and `resize_stage` emits no row.
 """
 
 from __future__ import annotations
@@ -31,7 +30,7 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from . import codecs
 from .pipeline import doc_stage
@@ -56,17 +55,15 @@ DECODED = T.StructType([
 ])
 
 
-def synthesize_media(docs: DataFrame, *, real: bool = False,
+def synthesize_media(docs: DataFrame, *,
                      codec: str | None = None) -> DataFrame:
-    """Attach a deterministic binary payload per doc.
+    """Attach a deterministic, genuinely decodable payload per doc.
 
-    real=False (default): md5-derived opaque bytes, pure Catalyst —
-    stands in for fetched bytes so the pipeline shape is testable.
-    real=True: genuine decodable payloads (alternating PNG / BMP images
-    whose pixels derive from the doc_id hash) built in the per-document
-    Arrow kernel, so the REAL decoders run end-to-end with zero fixtures.
-    codec="jpeg" (with real=True): every payload is a baseline JPEG from
-    the native encoder instead of the lossless PNG/BMP mix.
+    By default: alternating PNG / BMP images whose pixels derive from the
+    doc_id hash, built in the per-document Arrow kernel, so the REAL
+    decoders run end-to-end with zero fixtures.
+    codec="jpeg": every payload is a baseline JPEG from the native
+    encoder instead of the lossless PNG/BMP mix.
     codec="jpeg_arith": arithmetic-coded (SOF9) JPEG from the native QM
     encoder (operators/jpeg_arith.py).
     codec="webp": every payload is a lossless VP8L WebP (predictor +
@@ -76,17 +73,6 @@ def synthesize_media(docs: DataFrame, *, real: bool = False,
     (operators/gif.py encode_gif) — also pixel-exact downstream.
     codec="tiff": LZW+predictor TIFF (operators/tiff.py encode_tiff) —
     also pixel-exact downstream."""
-    if not real:
-        payload = F.to_binary(F.md5(F.col("doc_id")), F.lit("hex"))
-        meta = F.struct(
-            F.lit("image").alias("media_type"),
-            F.lit("image/x-fake").alias("mime"),
-            F.length(payload).cast("long").alias("n_bytes"),
-            F.concat(F.lit("mem://"), F.col("doc_id")).alias("source_ref"),
-        )
-        return docs.select("doc_id", payload.alias("payload"),
-                           meta.alias("meta"))
-
     out_schema = T.StructType([
         T.StructField("doc_id", T.StringType(), False),
         T.StructField("payload", T.BinaryType(), False),
@@ -146,25 +132,19 @@ def _hash_image(doc_id: str) -> "np.ndarray":
     return np.stack([r, g, b], axis=-1).astype(np.uint8)
 
 
-def decode_image(payload: bytes, *, fake: bool = False):
+def decode_image(payload: bytes):
     """Decode an image payload -> (width, height). PNG / uncompressed
     BMP / binary netpbm / baseline+progressive+arithmetic JPEG / WebP
     (lossless VP8L and lossy VP8) / GIF / TIFF decode NATIVELY (operators/codecs.py
     + jpeg_arith.py + vp8.py, stdlib + numpy). Other formats need an
-    external codec library: NotImplementedError, or a deterministic
-    hash-derived fake when `fake=True` (plumbing tests)."""
+    external codec library: NotImplementedError."""
     arr = decode_image_array(payload)
-    if arr is not None:
-        return arr.shape[1], arr.shape[0]
-    if not fake:
+    if arr is None:
         raise NotImplementedError(
             "payload is not PNG/BMP/netpbm/JPEG/WebP/GIF/TIFF; decoding "
             "other image formats requires an imaging library (PIL/opencv) "
             "on the cluster")
-    h = hashlib.sha256(payload).digest()
-    width = 64 + h[0] % 192
-    height = 64 + h[1] % 192
-    return width, height
+    return arr.shape[1], arr.shape[0]
 
 
 def decode_image_array(payload: bytes):
@@ -196,22 +176,20 @@ def decode_image_array(payload: bytes):
     return None
 
 
-def decode_stage(media: DataFrame, *, fake: bool = True) -> DataFrame:
+def decode_stage(media: DataFrame) -> DataFrame:
     """Decode/feature-extract stage on the per-document Arrow kernel.
 
     Natively-decodable payloads yield REAL 8-dim features
     ([mean_r, mean_g, mean_b, mean_all, std_r, std_g, std_b, std_all]
-    / 255, gray broadcast across channels); stub-tier payloads fall back
-    to the deterministic hash feature (fake mode)."""
+    / 255, gray broadcast across channels); any other payload yields a
+    row with null width, height, n_frames and feature."""
 
     def per_doc(payload, media_type):
         arr = decode_image_array(payload)
-        if arr is not None:
-            return [(media_type, arr.shape[1], arr.shape[0], 1,
-                     _image_feature(arr))]
-        w, h = decode_image(payload, fake=fake)
-        digest = hashlib.sha256(payload).digest()
-        return [(media_type, w, h, 1, [x / 255.0 for x in digest[:8]])]
+        if arr is None:
+            return [(media_type, None, None, None, None)]
+        return [(media_type, arr.shape[1], arr.shape[0], 1,
+                 _image_feature(arr))]
 
     return doc_stage(media, ["payload", "meta.media_type"], per_doc,
                      DECODED)
@@ -230,37 +208,21 @@ def _image_feature(arr: "np.ndarray") -> list:
     return [v / 255.0 for v in means + stds]
 
 
-def decode_audio(payload: bytes, *, fake: bool = False):
+def decode_audio(payload: bytes):
     """Decode an audio payload -> (sample_rate, n_samples). PCM WAV
     decodes NATIVELY via the stdlib wave module (operators/codecs.py);
-    compressed formats (MP3/AAC/...) need an external library:
-    NotImplementedError, or deterministic fake when `fake=True`."""
+    compressed formats (MP3/AAC/...) and malformed WAV variants need an
+    external library: NotImplementedError."""
     if codecs.sniff_format(payload) == "wav":
         import wave as _wave
         try:
             rate, n_frames, _samples = codecs.decode_wav(payload)
             return rate, n_frames
         except (ValueError, EOFError, _wave.Error):
-            pass  # malformed/unsupported WAV variant -> stub tier
-    if not fake:
-        raise NotImplementedError(
-            "payload is not PCM WAV; decoding compressed audio requires "
-            "an audio library (soundfile/ffmpeg) on the cluster")
-    h = hashlib.sha256(payload).digest()
-    sample_rate = (8000, 16000, 22050, 44100)[h[2] % 4]
-    n_samples = sample_rate * (1 + h[3] % 30)
-    return sample_rate, n_samples
-
-
-def decode_video(payload: bytes, *, fake: bool = False):
-    """Decode video metadata -> (width, height, n_frames, fps). STUB, as
-    above; deterministic fake for plumbing tests."""
-    if not fake:
-        raise NotImplementedError(
-            "video decoding requires ffmpeg/pyav; install on the cluster "
-            "and replace this stub")
-    h = hashlib.sha256(payload).digest()
-    return 64 + h[0] % 192, 64 + h[1] % 192, 24 * (1 + h[4] % 120), 24
+            pass  # malformed/unsupported WAV variant
+    raise NotImplementedError(
+        "payload is not PCM WAV; decoding compressed audio requires "
+        "an audio library (soundfile/ffmpeg) on the cluster")
 
 
 RESIZED = T.StructType([
@@ -271,49 +233,18 @@ RESIZED = T.StructType([
 ])
 
 
-def resize_stage(media: DataFrame, max_side: int = 128, *,
-                 fake: bool = True) -> DataFrame:
+def resize_stage(media: DataFrame, max_side: int = 128) -> DataFrame:
     """Image resize on the per-document Arrow kernel: aspect-preserving
     clamp of the longer side to `max_side`.
 
     Natively-decodable payloads are REALLY resampled (codecs.resize_area
-    box filter) and re-encoded as PNG. Stub-tier payloads keep the real
-    geometry but a deterministic hash blob for pixels (fake mode)."""
+    box filter) and re-encoded as PNG; any other payload yields no row."""
 
     def per_doc(payload):
         arr = decode_image_array(payload)
-        if arr is not None:
-            small = codecs.resize_area(arr, max_side)
-            return [(small.shape[1], small.shape[0],
-                     codecs.encode_png(small))]
-        w, h = decode_image(payload, fake=fake)
-        scale = min(1.0, max_side / max(w, h))
-        nw, nh = max(1, int(w * scale)), max(1, int(h * scale))
-        blob = hashlib.sha256(payload).digest() * (1 + nw * nh // 32)
-        return [(nw, nh, blob[: max(1, nw * nh // 8)])]
+        if arr is None:
+            return []
+        small = codecs.resize_area(arr, max_side)
+        return [(small.shape[1], small.shape[0], codecs.encode_png(small))]
 
     return doc_stage(media, ["payload"], per_doc, RESIZED)
-
-
-FRAMES = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("frame_idx", T.IntegerType(), False),
-    T.StructField("ts_sec", T.DoubleType(), False),
-    T.StructField("frame", T.BinaryType(), False),
-])
-
-
-def frame_sample_stage(media: DataFrame, n_frames: int = 4, *,
-                       fake: bool = True) -> DataFrame:
-    """Video frame sampling: emit n_frames evenly-spaced frames per
-    payload (one row per frame — the fan-out shape a training pipeline
-    feeds to a vision encoder). Frame decode is the stubbed codec."""
-
-    def per_doc(payload):
-        _w, _h, total, fps = decode_video(payload, fake=fake)
-        step = max(1, total // n_frames)
-        return [(fi, fi / fps,
-                 hashlib.sha256(payload + fi.to_bytes(4, "big")).digest())
-                for fi in range(0, min(n_frames, total) * step, step)]
-
-    return doc_stage(media, ["payload"], per_doc, FRAMES)

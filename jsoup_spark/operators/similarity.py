@@ -15,8 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .dedup import _UNSET
-
 
 # Float64 throughout: bitwise-identical across engines (float32 list ops
 # diverge in the last ulps and break value-hash comparison after
@@ -44,10 +42,6 @@ def _dot(a: str, b: str):
         f"cast(0.0 as double), (acc, x) -> acc + x)")
 
 
-def _cosine(a: str, b: str):
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def brute_force_topk(embeddings: DataFrame, n_queries: int = 5,
                      k: int = 10) -> DataFrame:
     """Top-k cosine neighbors for the first n_queries vectors (by vec_id),
@@ -73,11 +67,6 @@ def brute_force_topk(embeddings: DataFrame, n_queries: int = 5,
         .filter(F.col("rank") <= k)
         .select("q_id", "rank", "vec_id", "cosine")
     )
-
-
-def _bucket_expr(col, nbits: int = 6):
-    return F.concat_ws("", *[
-        (col[i] >= 0).cast("int").cast("string") for i in range(nbits)])
 
 
 def suggest_nbits(n_vectors: int, target_bucket: int = 4096) -> int:
@@ -113,27 +102,9 @@ def _probe_set(bucket_col, nbits: int, probe_hamming: int):
     return F.array(bucket_col, *flips)
 
 
-def _resolve_ivf_knobs(nbits, probe_hamming, n_tables, scale):
-    """Profile resolution for ivf_topk: explicit knobs always win; only
-    _UNSET (omitted) knobs take the profile value."""
-    if scale == "large":
-        profile = {"nbits": None, "probe_hamming": 1, "n_tables": 2}
-    elif scale in (None, "small"):
-        profile = {"nbits": 6, "probe_hamming": 0, "n_tables": 1}
-    else:
-        raise ValueError(f"unknown scale profile {scale!r}")
-    if nbits is _UNSET:
-        nbits = profile["nbits"]
-    if probe_hamming is _UNSET:
-        probe_hamming = profile["probe_hamming"]
-    if n_tables is _UNSET:
-        n_tables = profile["n_tables"]
-    return nbits, probe_hamming, n_tables
-
-
 def ivf_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
-             nbits=_UNSET, probe_hamming=_UNSET,
-             n_tables=_UNSET, scale: str | None = None) -> DataFrame:
+             nbits: int | None = 6, probe_hamming: int = 0,
+             n_tables: int = 1) -> DataFrame:
     """IVF/LSH-bucketed ANN.
 
     Recall knobs (all exact-score the candidate set, so precision is 1 —
@@ -150,15 +121,7 @@ def ivf_topk(embeddings: DataFrame, n_queries: int = 5, k: int = 10,
     Generate, no shuffle), the query side is broadcast with its probe set
     exploded, and the only exchanges are the candidate-dedup/top-k
     shuffles on q_id — never an all-pairs join.
-
-    scale="large" is the one-word recall/scale profile (corpus-scaled
-    nbits, multi-probe, 2 tables); explicit knobs keep their values —
-    an _UNSET sentinel (the dedup.py profile pattern) distinguishes an
-    omitted knob from an explicitly-passed default, so ivf_topk(nbits=6,
-    scale="large") really runs with 6 bits.
     """
-    nbits, probe_hamming, n_tables = _resolve_ivf_knobs(
-        nbits, probe_hamming, n_tables, scale)
     if nbits is None:
         nbits = suggest_nbits(embeddings.count())
     base0 = embeddings.select(

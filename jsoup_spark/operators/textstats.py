@@ -243,18 +243,6 @@ def _fingerprint_rolling_catalyst(documents: DataFrame, k: int = 8,
     )
 
 
-def _word_ngrams(words, n: int):
-    """Array of space-joined word n-grams (empty when size < n)."""
-    size = F.size(words)
-    g = words
-    for i in range(1, n):
-        g = F.zip_with(g, F.slice(words, i + 1, size),
-                       lambda a, b: F.concat_ws(" ", a, b))
-    out = F.slice(g, 1, F.greatest(size - (n - 1), F.lit(0)))
-    return F.when(size >= n, out).otherwise(
-        F.array().cast("array<string>"))
-
-
 def repetition_stats(documents: DataFrame) -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021 §A1.1): the
     occurrence count of the most-frequent word bigram and the characters

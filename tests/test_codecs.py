@@ -144,8 +144,6 @@ def test_decode_image_real_vs_stub():
     assert multimodal.decode_image(codecs.encode_bmp(img)) == (12, 10)
     with pytest.raises(NotImplementedError):
         multimodal.decode_image(b"\xff\xd8\xff\xe0 fake jpeg")
-    w, h = multimodal.decode_image(b"\xff\xd8\xff\xe0 fake jpeg", fake=True)
-    assert 64 <= w < 256 and 64 <= h < 256
 
 
 def test_decode_audio_real_vs_stub():
@@ -163,7 +161,7 @@ def test_real_payload_pipeline(spark):
         _hash_image, decode_stage, resize_stage, synthesize_media)
     docs = spark.createDataFrame(
         [(str(i), "t") for i in range(12)], "doc_id string, text string")
-    media = synthesize_media(docs, real=True)
+    media = synthesize_media(docs)
     rows = {r.doc_id: r for r in decode_stage(media).collect()}
     assert len(rows) == 12
     for doc_id, r in rows.items():
@@ -442,8 +440,8 @@ def test_webp_random_config_fuzz():
 def test_webp_corrupt_vp8_degrades():
     # lossy VP8 decodes natively since r7 (operators/vp8.py); a corrupt
     # chunk must still degrade per contract: decode_webp raises
-    # ValueError, decode_image_array -> None, decode_image -> the
-    # fake=True plumbing path
+    # ValueError, decode_image_array -> None, decode_image ->
+    # NotImplementedError
     body = b"VP8 " + (4).to_bytes(4, "little") + b"\x00\x00\x00\x00"
     payload = (b"RIFF" + (4 + len(body)).to_bytes(4, "little")
                + b"WEBP" + body)
@@ -453,8 +451,6 @@ def test_webp_corrupt_vp8_degrades():
     assert multimodal.decode_image_array(payload) is None
     with pytest.raises(NotImplementedError):
         multimodal.decode_image(payload)
-    w, h = multimodal.decode_image(payload, fake=True)
-    assert w > 0 and h > 0
 
 
 def test_webp_truncation_raises_valueerror():

@@ -115,37 +115,3 @@ def test_embedding_cap(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
     assert s0.count() == 0
 
-
-def test_scale_profile_equivalence(spark):
-    """scale="large" must equal the explicit knob spelling, and explicit
-    knobs must win over the profile (SCALE_PROFILES contract)."""
-    from jsoup_spark.operators import similarity
-    from jsoup_spark.operators.dedup import (
-        SCALE_PROFILES, embedding_near_dup, ngram_jaccard_pairs)
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet") \
-        .filter(F.col("vec_id") < 120)
-    prof = SCALE_PROFILES["large"]
-    a = embedding_near_dup(emb, threshold=-1.0, scale="large")
-    b = embedding_near_dup(emb, threshold=-1.0, nbits=prof["nbits"],
-                           n_tables=prof["n_tables"],
-                           max_bucket=prof["max_bucket"])
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    # explicit knob beats the profile
-    c = embedding_near_dup(emb, threshold=-1.0, nbits=8, scale="large")
-    d = embedding_near_dup(emb, threshold=-1.0, nbits=8,
-                           n_tables=prof["n_tables"],
-                           max_bucket=prof["max_bucket"])
-    assert sorted(map(tuple, c.collect())) == sorted(map(tuple, d.collect()))
-    with pytest.raises(ValueError):
-        embedding_near_dup(emb, scale="galactic").collect()
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .filter(F.col("doc_id") < 80)
-    e = ngram_jaccard_pairs(docs, scale="large")
-    f = ngram_jaccard_pairs(docs, max_bucket=prof["max_bucket"])
-    assert sorted(map(tuple, e.collect())) == sorted(map(tuple, f.collect()))
-
-    g = similarity.ivf_topk(emb, n_queries=2, k=5, scale="large")
-    h = similarity.ivf_topk(emb, n_queries=2, k=5, nbits=None,
-                            probe_hamming=1, n_tables=2)
-    assert sorted(map(tuple, g.collect())) == sorted(map(tuple, h.collect()))

@@ -214,20 +214,6 @@ def test_ivf_multiprobe_recall(spark):
     assert auto.count() <= 10
 
 
-def test_multimodal_plumbing(spark):
-    import pytest
-    from jsoup_spark.operators import multimodal
-    corpus = _corpus(spark).limit(10)
-    media = multimodal.synthesize_media(corpus)
-    decoded = multimodal.decode_stage(media, fake=True).collect()
-    assert len(decoded) == 10
-    for r in decoded:
-        assert 64 <= r["width"] < 256 and 64 <= r["height"] < 256
-        assert len(r["feature"]) == 8
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"x", fake=False)
-
-
 def test_streaming_extraction(spark, tmp_path):
     from jsoup_spark.streaming.stream import read_span_stream, run_to_parquet
     src = str(tmp_path / "src")
@@ -375,31 +361,6 @@ def test_embed_neardup_scaled_recall(spark):
     # precision is exact by construction (candidates are re-scored with
     # the true cosine before thresholding)
     assert got <= truth
-
-
-def test_multimodal_resize_and_frames(spark):
-    import pytest
-    from jsoup_spark.operators import multimodal
-    media = multimodal.synthesize_media(_corpus(spark).limit(6))
-    rs = multimodal.resize_stage(media, max_side=100).collect()
-    assert len(rs) == 6
-    for r in rs:
-        assert max(r["width"], r["height"]) <= 100
-        assert len(r["payload"]) >= 1
-    fr = multimodal.frame_sample_stage(media, n_frames=3).collect()
-    assert len(fr) == 18
-    by_doc = {}
-    for r in fr:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-        assert len(r["frame"]) == 32
-        assert r["ts_sec"] == r["frame_idx"] / 24
-    assert all(len(v) == 3 for v in by_doc.values())
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_audio(b"x", fake=False)
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_video(b"x", fake=False)
-    sr, ns = multimodal.decode_audio(b"x", fake=True)
-    assert sr in (8000, 16000, 22050, 44100) and ns % sr == 0
 
 
 def test_token_count_bpe(spark):
@@ -565,13 +526,11 @@ def _binary_cases():
             (2, archive.build_zip(files[:1])),
             (3, b"garbage")])), members, 4),
         "media_synth": (lambda s: MM.synthesize_media(_spread(
-            s, [(i,) for i in (5, 6, 7)], "doc_id long"), real=True),
-            media_schema, 3),
+            s, [(i,) for i in (5, 6, 7)], "doc_id long")), media_schema, 3),
         "media_decode": (lambda s: MM.decode_stage(media(s)), MM.DECODED, 3),
+        # the undecodable payload yields no resized row
         "media_resize": (lambda s: MM.resize_stage(media(s), max_side=8),
-                         MM.RESIZED, 3),
-        "media_frames": (lambda s: MM.frame_sample_stage(
-            media(s), n_frames=2), MM.FRAMES, 6),
+                         MM.RESIZED, 2),
     }
 
 
@@ -626,6 +585,32 @@ def test_parse_stage_kernel_plan_and_sparse_batches(spark, name):
     assert len(df.collect()) == n_rows
 
 
+def test_media_stages_undecodable_payload(spark):
+    """A payload no native decoder reads gets a decode_stage row with
+    null geometry and feature and no resize_stage row; a decodable one
+    keeps its real geometry and 8 features."""
+    from pyspark.sql import types as T
+    from jsoup_spark.operators import codecs, multimodal as MM
+    img = MM._hash_image("1")
+    media = spark.createDataFrame(
+        [(d, bytearray(b), ("image", "image/x", len(b), None))
+         for d, b in [("png", codecs.encode_png(img)), ("junk", b"junk")]],
+        T.StructType([T.StructField("doc_id", T.StringType(), False),
+                      T.StructField("payload", T.BinaryType(), False),
+                      T.StructField("meta", MM.MEDIA_META, False)]))
+    dec = {r.doc_id: r for r in MM.decode_stage(media).collect()}
+    assert set(dec) == {"png", "junk"}
+    junk = dec["junk"]
+    assert (junk.width, junk.height, junk.n_frames, junk.feature) \
+        == (None, None, None, None)
+    png = dec["png"]
+    assert (png.width, png.height, png.n_frames) \
+        == (img.shape[1], img.shape[0], 1)
+    assert len(png.feature) == 8
+    resized = MM.resize_stage(media, max_side=8).collect()
+    assert [r.doc_id for r in resized] == ["png"]
+
+
 def test_hash_stages_run_on_the_kernel(spark):
     """The dedup and fingerprint Arrow stages go through the same kernel:
     one MapInArrow per per-document stage, no pandas, and only the
@@ -672,20 +657,6 @@ def test_entry_queries_all_callables():
     bad = {k: type(v).__name__ for k, v in q.items() if not callable(v)}
     assert not bad, bad
     assert all(isinstance(v, str) for v in o.values())
-
-
-def test_ivf_knob_sentinel():
-    """ADVICE r5: an explicitly-passed signature default must survive a
-    scale profile (the _UNSET sentinel contract dedup.py uses)."""
-    from jsoup_spark.operators.similarity import _UNSET, _resolve_ivf_knobs
-    # omitted knobs take the large profile
-    assert _resolve_ivf_knobs(_UNSET, _UNSET, _UNSET, "large") == (None, 1, 2)
-    # explicit values win even when equal to the signature defaults
-    assert _resolve_ivf_knobs(6, 0, 1, "large") == (6, 0, 1)
-    assert _resolve_ivf_knobs(_UNSET, _UNSET, _UNSET, None) == (6, 0, 1)
-    import pytest
-    with pytest.raises(ValueError):
-        _resolve_ivf_knobs(_UNSET, _UNSET, _UNSET, "huge")
 
 
 def test_events_fixed_point_sum(spark):
