@@ -195,7 +195,10 @@ def decode_png(payload: bytes) -> np.ndarray:
         raise ValueError("PNG empty image")
     ch = _PNG_CHANNELS[color_type]
     bpp = max(1, ch * bit_depth // 8)
-    raw = zlib.decompress(bytes(idat))
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error as ex:
+        raise ValueError(f"PNG corrupt IDAT stream: {ex}") from None
 
     samples = np.zeros((height, width, ch), np.int32)
     passes = [(0, 1, 0, 1, width, height)] if not interlace else [
@@ -364,6 +367,8 @@ def decode_bmp(payload: bytes) -> np.ndarray:
     order, handling bottom-up (positive height) and top-down rows."""
     if not payload.startswith(b"BM"):
         raise ValueError("not a BMP")
+    if len(payload) < 54:
+        raise ValueError("BMP truncated header")
     data_off = struct.unpack("<I", payload[10:14])[0]
     hdr_size = struct.unpack("<I", payload[14:18])[0]
     if hdr_size < 40:

@@ -8,15 +8,17 @@ Scale notes (100TB design):
 * all hashes are md5-hex (identical across Spark and DuckDB) so every
   operator has an exact SQL oracle;
 * pairwise verification joins (jaccard / cosine) run only on LSH-bucketed
-  candidates, never the full cross product.
+  candidates (blocking.candidates), never the full cross product.
 """
 
 from __future__ import annotations
 
+from functools import partial
 from hashlib import md5
 
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
+from .blocking import candidates
 from .pipeline import doc_stage
 
 MINHASH_PERMS = 4          # 4 disjoint 8-hex windows of md5(shingle)
@@ -122,36 +124,14 @@ def minhash_lsh_buckets(documents: DataFrame) -> DataFrame:
 def ngram_jaccard_pairs(documents: DataFrame,
                         threshold: float = 0.0,
                         max_bucket: int | None = None) -> DataFrame:
-    """Pairwise n-gram Jaccard among LSH candidates (same band-0 key);
-    see ngram_jaccard_pairs_with_stats for max_bucket."""
-    pairs, _stats = ngram_jaccard_pairs_with_stats(
-        documents, threshold, max_bucket)
-    return pairs
+    """Pairwise n-gram Jaccard among LSH candidates (same band-0 key).
 
-
-def ngram_jaccard_pairs_with_stats(
-        documents: DataFrame,
-        threshold: float = 0.0,
-        max_bucket: int | None = None) -> tuple[DataFrame, DataFrame]:
-    """Pairwise n-gram Jaccard among LSH candidates (same band-0 key),
-    plus a capped-bucket report.
-
-    Scale shape (100 TB):
-    * Candidates form from (doc_id, band_key) ONLY — the self-join that
-      used to shuffle full shingle arrays on both sides now shuffles two
-      8-byte/32-byte columns; the arrays are fetched afterwards for just
-      the candidate pairs via two doc_id-keyed joins, and dropped in the
-      same projection that computes the jaccard.
-    * max_bucket caps the O(bucket^2) blowup on skewed band keys (web
-      boilerplate: million-doc identical-band clusters). Buckets with
-      n_docs <= max_bucket keep the exact all-pairs behavior; oversized
-      buckets switch to representative pairing — every member pairs with
-      the bucket's min doc_id only, O(bucket) pairs. Near-dup clusters
-      this size are cliques in practice, so membership survives; the
-      dropped member-member pairs are REPORTED, not silent: the second
-      return value lists every capped bucket with its size and
-      dropped-pair count. max_bucket=None (the default) is exact and
-      returns an empty report.
+    Candidates form from (doc_id, band_key) ONLY; the shingle arrays are
+    fetched afterwards for just the candidate pairs via two doc_id-keyed
+    joins. max_bucket caps the O(bucket^2) blowup on skewed band keys
+    (web boilerplate: million-doc identical-band clusters) with
+    blocking.candidates' representative pairing; purge_report over
+    _ngram_keys lists the capped buckets. None (the default) is exact.
     """
     # r9: the per-doc shingle+md5 chain moves into TWO cheap Arrow batch
     # stages (guide §4.2 — hashlib's C md5 / plain splits instead of
@@ -165,62 +145,21 @@ def ngram_jaccard_pairs_with_stats(
     # split keeps each branch paying only for what it reads. Band key
     # oracle-pinned: min over raw-stream md5 windows == min over the
     # distinct set.
-    compact = _band_keys_arrow(documents)
-    if max_bucket is None:
-        a, b = compact.alias("a"), compact.alias("b")
-        cand = a.join(b, (F.col("a.band_key") == F.col("b.band_key"))
-                      & (F.col("a.doc_id") < F.col("b.doc_id"))) \
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-        stats = (compact.groupBy("band_key")
-                 .agg(F.count("*").alias("n_docs"))
-                 .filter(F.lit(False))
-                 .select("band_key", "n_docs",
-                         F.lit(0).cast("long").alias("dropped_pairs")))
-    else:
-        # bucket size + representative via ONE window over the compact
-        # (doc_id, band_key) rows — r9: the groupBy-sizes + join-back
-        # formulation paid two exchanges of the same small rows; a window
-        # partitioned by band_key needs one (guide §2.4: operations keyed
-        # the same way share one exchange). Rows here are ~40 bytes, so
-        # shuffling them once under the window is strictly cheaper.
-        wb = Window.partitionBy("band_key")
-        member = compact.select(
-            "doc_id", "band_key",
-            F.count("*").over(wb).alias("n_docs"),
-            F.min("doc_id").over(wb).alias("rep_doc_id"))
-        small = member.filter(F.col("n_docs") <= max_bucket) \
-            .select("doc_id", "band_key")
-        a, b = small.alias("a"), small.alias("b")
-        cand_small = a.join(b, (F.col("a.band_key") == F.col("b.band_key"))
-                            & (F.col("a.doc_id") < F.col("b.doc_id"))) \
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-        cand_big = (member.filter((F.col("n_docs") > max_bucket)
-                                  & (F.col("doc_id") != F.col("rep_doc_id")))
-                    .select(F.col("rep_doc_id").alias("doc_a"),
-                            F.col("doc_id").alias("doc_b")))
-        cand = cand_small.unionByName(cand_big)
-        n = F.col("n_docs").cast("long")
-        stats = (member.filter((F.col("n_docs") > max_bucket)
-                               & (F.col("doc_id") == F.col("rep_doc_id")))
-                 .select("band_key", "n_docs",
-                         (n * (n - 1) / 2 - (n - 1)).cast("long")
-                         .alias("dropped_pairs")))
+    cand = candidates(_ngram_keys(documents), max_bucket)
     arrays = _shingle_arrays_arrow(documents)
     pairs = (cand
-             .join(arrays.select(F.col("doc_id").alias("doc_a"),
-                                 F.col("sh").alias("sh_a")), "doc_a")
-             .join(arrays.select(F.col("doc_id").alias("doc_b"),
-                                 F.col("sh").alias("sh_b")), "doc_b"))
+             .join(arrays.select(F.col("doc_id").alias("a"),
+                                 F.col("sh").alias("sh_a")), "a")
+             .join(arrays.select(F.col("doc_id").alias("b"),
+                                 F.col("sh").alias("sh_b")), "b"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b")))
     jac = F.round(inter.cast("double") / union, 6)
-    out = (
-        pairs.select("doc_a", "doc_b", jac.alias("jaccard"))
+    return (
+        pairs.select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"),
+                     jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    return out, stats
 
 
 # band key of a NULL text: every md5-window min is NULL, concat_ws skips
@@ -267,6 +206,13 @@ def _band_keys_arrow(documents: DataFrame) -> DataFrame:
         lambda text: [(k,) for k in _band_keys(text, 1)],
         T.StructType([T.StructField("doc_id", T.LongType()),
                       T.StructField("band_key", T.StringType())]))
+
+
+def _ngram_keys(documents: DataFrame) -> DataFrame:
+    """(id, tbl, key) blocks of ngram_jaccard_pairs: band-0 LSH keys."""
+    return _band_keys_arrow(documents).select(
+        F.col("doc_id").alias("id"), F.lit(0).alias("tbl"),
+        F.col("band_key").alias("key"))
 
 
 def _shingle_arrays_arrow(documents: DataFrame) -> DataFrame:
@@ -339,112 +285,38 @@ def embedding_near_dup(embeddings: DataFrame,
       only, nbits+1 small rows per vector), the other keeps one row; true
       near-dups have cosine ~1 so almost all lie within Hamming distance 1.
     * max_bucket caps O(bucket^2) on degenerate buckets (e.g. a zero
-      vector repeated millions of times): in a (tbl, bucket) with
-      n > max_bucket the probe side keeps only the bucket representative
-      (min vec_id), so the bucket yields O(n) rep-member pairs instead of
-      all pairs; smaller buckets keep the exact behavior. Use
-      embedding_near_dup_with_stats for the capped-bucket report.
+      vector repeated millions of times) with blocking.candidates'
+      representative pairing, O(n) pairs per oversized (tbl, bucket);
+      purge_report over similarity._table_keys lists those buckets.
     The defaults are exact for the pinned sf oracles; at 10^9+ vectors
     pass nbits=None, n_tables=2, max_bucket=4096 (embed_neardup_scale).
+    Candidates form from (vec_id, tbl, bucket) ONLY; embeddings and their
+    norms (one per VECTOR) are attached to just the candidate pairs.
     """
-    pairs, _stats = embedding_near_dup_with_stats(
-        embeddings, threshold, probe_hamming, nbits, n_tables, max_bucket)
-    return pairs
-
-
-def embedding_near_dup_with_stats(
-        embeddings: DataFrame,
-        threshold: float = 0.9,
-        probe_hamming: int = 0,
-        nbits: int | None = 8,
-        n_tables: int = 1,
-        max_bucket: int | None = None) -> tuple[DataFrame, DataFrame]:
-    """embedding_near_dup plus a report of capped buckets
-    (tbl, bucket, n_docs, dropped_pairs) — empty when max_bucket=None
-    or nothing exceeded it. No silent truncation."""
     from jsoup_spark.operators.similarity import (
-        _dot, _norm, _table_bucket, _probe_set, suggest_nbits)
+        _dot, _norm, _probe_set, _table_keys, suggest_nbits)
     if nbits is None:
         nbits = suggest_nbits(embeddings.count())
-    # norm precomputed per VECTOR (one pass per row) instead of per
-    # candidate pair — similarity._norm is the identical float64 left
-    # fold, so the rounded cosine is bit-identical (r9, guide §2.3).
-    # ONLY on the uncapped path: with max_bucket set, the sizes
-    # join-back plan loses its BroadcastExchange reuse when the base
-    # projection carries the non-codegen-able norm HOF (paired A/B at
-    # sf0.1, capped 2-table run: 3.0 s inline vs 6.3 s precomputed; the
-    # uncapped multi-probe path is 2.9x FASTER precomputed, 6.5->2.3 s)
-    pre_norm = max_bucket is None
-    ncols = ["_nrm"] if pre_norm else []
-    base = embeddings.select(
-        F.col("vec_id").cast("long").alias("vec_id"),
-        F.col("embedding"),
-        *([_norm("embedding").alias("_nrm")] if pre_norm else []))
-    # one scan explodes each vector into its (table, bucket) pairs; with
-    # the default single table this Generate is a 1-element explode
-    e = base.select(
-        "vec_id", "embedding", *ncols,
-        F.explode(F.array(*[
-            F.struct(F.lit(t).alias("tbl"),
-                     _table_bucket(F.col("embedding"), t, nbits)
-                     .alias("bucket"))
-            for t in range(n_tables)])).alias("tb"),
-    ).select("vec_id", "embedding", *ncols,
-             F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"))
-    b = e.alias("b")
-    if max_bucket is not None:
-        sizes = e.groupBy("tbl", "bucket").agg(
-            F.count("*").alias("n_docs"),
-            F.min("vec_id").alias("rep_vec_id"))
-        # oversized buckets: only the representative probes (O(n) pairs,
-        # since b keeps every member); small buckets stay exact
-        a_src = (e.join(sizes, ["tbl", "bucket"])
-                 .filter((F.col("n_docs") <= max_bucket)
-                         | (F.col("vec_id") == F.col("rep_vec_id")))
-                 .select("vec_id", "embedding", *ncols, "tbl", "bucket"))
-        n = F.col("n_docs").cast("long")
-        stats = (sizes.filter(F.col("n_docs") > max_bucket)
-                 .select("tbl", "bucket", "n_docs",
-                         (n * (n - 1) / 2 - (n - 1)).cast("long")
-                         .alias("dropped_pairs")))
-    else:
-        a_src = e
-        stats = (e.groupBy("tbl", "bucket")
-                 .agg(F.count("*").alias("n_docs"))
-                 .filter(F.lit(False))
-                 .select("tbl", "bucket", "n_docs",
-                         F.lit(0).cast("long").alias("dropped_pairs")))
-    if probe_hamming >= 1:
-        a = a_src.select(
-            "vec_id", "embedding", *ncols, "tbl",
-            F.explode(_probe_set(F.col("bucket"), nbits, probe_hamming))
-            .alias("bucket")).alias("a")
-    else:
-        a = a_src.alias("a")
-    pairs = a.join(b, (F.col("a.tbl") == F.col("b.tbl"))
-                   & (F.col("a.bucket") == F.col("b.bucket"))
-                   & (F.col("a.vec_id") < F.col("b.vec_id")))
-    if pre_norm:
-        cos = F.round(_dot("a.embedding", "b.embedding")
-                      / (F.col("a._nrm") * F.col("b._nrm")), 6)
-    else:
-        # capped path: the original per-pair inline fold (identical ops,
-        # identical rounded value — see pre_norm note above)
-        cos = F.round(_dot("a.embedding", "b.embedding")
-                      / (_norm("a.embedding")
-                         * _norm("b.embedding")), 6)
-    out = (
-        pairs.select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            cos.alias("cosine"),
-        ).filter(F.col("cosine") >= threshold)
+    probe = (partial(_probe_set, nbits=nbits, probe_hamming=probe_hamming)
+             if probe_hamming >= 1 else None)
+    cand = candidates(_table_keys(embeddings, nbits, n_tables),
+                      max_bucket, probe)
+    if n_tables > 1:  # candidates repeat a pair once per shared table
+        cand = cand.distinct()
+    vec = embeddings.select(F.col("vec_id").cast("long").alias("vec_id"),
+                            "embedding", _norm("embedding").alias("nrm"))
+    pairs = cand
+    for s in ("a", "b"):
+        pairs = pairs.join(vec.select(F.col("vec_id").alias(s),
+                                      F.col("embedding").alias("emb_" + s),
+                                      F.col("nrm").alias("nrm_" + s)), s)
+    cos = F.round(_dot("emb_a", "emb_b")
+                  / (F.col("nrm_a") * F.col("nrm_b")), 6)
+    return (
+        pairs.select(F.col("a").alias("vec_a"), F.col("b").alias("vec_b"),
+                     cos.alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
     )
-    if n_tables > 1:
-        # a pair colliding in several tables appears once per table; cosine
-        # is deterministic so the duplicate rows are identical
-        out = out.distinct()
-    return out, stats
 
 
 def contamination(documents: DataFrame, n_eval: int = 10) -> DataFrame:

@@ -94,6 +94,29 @@ def test_bmp_roundtrip_and_padding():
         assert np.array_equal(codecs.decode_bmp(p), img)
 
 
+def test_png_corrupt_idat_raises_valueerror():
+    """A flipped byte in the deflate stream fails the decode contract
+    cleanly: ValueError, not zlib.error, so decode_image_array yields
+    None instead of failing the whole Spark task."""
+    rng = np.random.RandomState(4)
+    p = bytearray(codecs.encode_png(
+        rng.randint(0, 256, (16, 16, 3), dtype=np.uint8)))
+    idat = p.index(b"IDAT") + 4
+    p[idat + 10] ^= 0xFF
+    with pytest.raises(ValueError):
+        codecs.decode_png(bytes(p))
+    assert multimodal.decode_image_array(bytes(p)) is None
+
+
+def test_bmp_truncated_header_raises_valueerror():
+    """A BMP cut inside its 54-byte header raises ValueError, not
+    struct.error."""
+    p = codecs.encode_bmp(np.zeros((4, 4, 3), np.uint8))[:20]
+    with pytest.raises(ValueError):
+        codecs.decode_bmp(p)
+    assert multimodal.decode_image_array(p) is None
+
+
 def test_ppm_roundtrip():
     rng = np.random.RandomState(3)
     img = rng.randint(0, 256, (9, 13, 3), dtype=np.uint8)
