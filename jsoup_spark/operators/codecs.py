@@ -6,12 +6,14 @@ Real decoders for the formats that need no external codec library:
          8-bit gray/gray+alpha/RGB/RGBA, non-interlaced.
 * BMP  — uncompressed 24/32-bit BI_RGB, bottom-up or top-down.
 * PPM/PGM — binary netpbm (P5/P6), maxval <= 255.
-* JPEG — baseline sequential DCT (SOF0): Huffman entropy decode,
-         dequantize, float IDCT, 4:4:4/4:2:2/4:4:0/4:2:0 sampling with
-         nearest chroma upsampling, restart markers; progressive (SOF2)
-         via the multi-scan decoder below; arithmetic-coded SOF9/SOF10
-         via operators/jpeg_arith.py (ITU T.81 QM coder, validated
-         byte-exactly against libjpeg in tests/test_jpeg_arith.py).
+* JPEG — one marker reader for sequential (SOF0/1) and progressive
+         (SOF2) Huffman and arithmetic-coded SOF9/SOF10 streams: each
+         scan goes to the Huffman scan decoder below or the QM one in
+         operators/jpeg_arith.py (validated byte-exactly against libjpeg
+         in tests/test_jpeg_arith.py); both walk blocks through one
+         generator, and one dequantize + float IDCT reconstructs, with
+         4:4:4/4:2:2/4:4:0/4:2:0 sampling, nearest chroma upsampling and
+         restart markers.
 * WebP — lossless VP8L: all four transforms, meta prefix groups, color
          cache, LZ77 with the 2D distance mapping (decode_webp below);
          lossy VP8 keyframes incl. the ALPH alpha plane via
@@ -19,11 +21,10 @@ Real decoders for the formats that need no external codec library:
          (tests/test_vp8.py).
 * WAV  — stdlib `wave` (PCM 8/16/32-bit), samples as float32 in [-1, 1].
 
-Formats that require external codecs (lossless-process JPEG, MP3,
-H.264, ...) remain stubbed in
-operators/multimodal.py per the environment contract — decode raises
-ValueError / `sniff_format` returns None and the caller decides
-(fake-decode for plumbing tests, NotImplementedError otherwise).
+Formats that need external codecs (lossless-process JPEG, MP3,
+H.264, ...) are not decoded: decode raises ValueError or `sniff_format`
+returns None, and operators/multimodal.py turns either into a None
+array (decode_image_array) or NotImplementedError (decode_image).
 
 Encoders for the same formats (PNG filter-0, BMP 24-bit, P6, baseline
 JPEG 4:4:4 or 4:2:0 with Annex K tables, PCM16 WAV) exist so tests and
@@ -707,52 +708,200 @@ def _extend(v: int, n: int) -> int:
 
 
 def decode_jpeg(payload: bytes) -> np.ndarray:
-    """JPEG -> uint8 (H, W, 3|1): baseline (SOF0/1), progressive (SOF2)
-    and arithmetic-coded (SOF9/SOF10, operators/jpeg_arith.py). Raises
-    ValueError on lossless/12-bit, unsupported sampling, OR truncated /
-    corrupt input.
+    """JPEG -> uint8 (H, W, 3|1): sequential (SOF0/1) and progressive
+    (SOF2) Huffman, and sequential/progressive arithmetic (SOF9/SOF10,
+    operators/jpeg_arith.py), all through the one marker reader below.
+    Raises ValueError on lossless/hierarchical/12-bit, unsupported
+    sampling, OR truncated / corrupt input.
 
     The ValueError contract matters for the pipeline: sniff_format routes
     every \\xff\\xd8 payload here and decode_image_array catches only
-    ValueError before falling to the stub tier — a raw IndexError /
+    ValueError, returning None for that one document — a raw IndexError /
     struct.error from a malformed wild JPEG would kill the whole Spark
-    task instead of degrading that one document (ADVICE r5)."""
+    task instead (ADVICE r5)."""
     try:
         return _decode_jpeg_impl(payload)
     except (IndexError, struct.error) as ex:
         raise ValueError(f"JPEG truncated or corrupt: {ex}") from ex
 
 
-def _finish_jpeg_planes(planes, comps, h, w, hmax, vmax) -> np.ndarray:
-    """Upsample component planes to full resolution (nearest), crop,
-    YCbCr->RGB (BT.601), clip to uint8 — shared baseline/progressive
-    reconstruction tail."""
-    full = []
-    for (cid, hs, vs, tq), plane in zip(comps, planes):
-        if hs != hmax or vs != vmax:
-            plane = np.repeat(np.repeat(plane, vmax // vs, axis=0),
-                              hmax // hs, axis=1)
-        full.append(plane[:h, :w])
-    if len(full) == 1:
-        out = np.clip(np.rint(full[0]), 0, 255).astype(np.uint8)
-        return out[:, :, None]
-    y, cb, cr = full
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    rgb = np.stack([r, g, b], axis=-1)
-    return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
+def _decode_jpeg_impl(payload: bytes) -> np.ndarray:
+    """The one marker reader: DQT, DHT/DAC, SOF, DRI and SOS segments in
+    stream order; each scan goes to the frame's entropy decoder (Huffman
+    _huff_scan or QM jpeg_arith.arith_scan), which accumulates quantized
+    coefficients; one dequantize + IDCT reconstructs at the end.
+    Malformed-input policy follows libjpeg: a DC Huffman symbol > 15 or a
+    frame without a scan raises; a scan that no marker follows ends the
+    image there (best effort, like a missing EOI)."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG")
+    pos = 2
+    n = len(payload)
+    quant = {}
+    tables = {}        # ("dc"|"ac", id) -> Huffman table / DAC conditioning
+    frame = coefs = scan_decoder = None
+    restart_interval = 0
+    scans = 0
+    while pos + 4 <= n:
+        if payload[pos] != 0xFF:
+            raise ValueError("JPEG marker sync lost")
+        while payload[pos + 1] == 0xFF:    # fill bytes
+            pos += 1
+        marker = payload[pos + 1]
+        pos += 2
+        if marker == 0xD9:      # EOI
+            break
+        if 0xD0 <= marker <= 0xD7 or marker == 0x01:
+            continue            # standalone markers
+        seglen = struct.unpack(">H", payload[pos:pos + 2])[0]
+        seg = payload[pos + 2:pos + seglen]
+        pos += seglen
+        if marker == 0xDB:      # DQT
+            p = 0
+            while p < len(seg):
+                pq, tq = seg[p] >> 4, seg[p] & 0xF
+                p += 1
+                if pq != 0:
+                    raise ValueError("16-bit JPEG quant table")
+                tbl = np.zeros(64, np.int32)
+                tbl[_ZIGZAG] = np.frombuffer(seg[p:p + 64], np.uint8)
+                quant[tq] = tbl.reshape(8, 8)
+                p += 64
+        elif marker == 0xC4:    # DHT (tables may arrive per scan)
+            p = 0
+            while p < len(seg):
+                tc, th = seg[p] >> 4, seg[p] & 0xF
+                bits = list(seg[p + 1:p + 17])
+                cnt = sum(bits)
+                vals = list(seg[p + 17:p + 17 + cnt])
+                if tc == 0 and any(v > 15 for v in vals):
+                    raise ValueError("JPEG DC Huffman symbol > 15")
+                tables[("dc" if tc == 0 else "ac", th)] = \
+                    _huff_decode_table(bits, vals)
+                p += 17 + cnt
+        elif marker == 0xCC:    # DAC: arithmetic conditioning
+            for p in range(0, len(seg) - 1, 2):
+                tb, cs = seg[p] & 0xF, seg[p + 1]
+                if seg[p] >> 4 == 0:
+                    tables[("dc", tb)] = (cs & 0xF, cs >> 4)    # (L, U)
+                else:
+                    tables[("ac", tb)] = cs                     # Kx
+        elif marker in (0xC0, 0xC1, 0xC2, 0xC9, 0xCA):
+            if frame is not None:
+                raise ValueError("JPEG with more than one frame")
+            frame, coefs = _jpeg_frame(seg, marker in (0xC2, 0xCA))
+            if marker >= 0xC9:
+                from .jpeg_arith import arith_scan as scan_decoder
+            else:
+                scan_decoder = _huff_scan
+        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xCB, 0xCD, 0xCE, 0xCF):
+            raise ValueError("lossless/hierarchical JPEG unsupported")
+        elif marker == 0xDD:    # DRI
+            restart_interval = struct.unpack(">H", seg[:2])[0]
+        elif marker == 0xDA:    # SOS
+            if frame is None:
+                raise ValueError("JPEG scan before SOF")
+            scan = _jpeg_scan_header(seg, frame)
+            end = scan_decoder(payload, pos, frame, coefs, scan, tables,
+                               restart_interval)
+            pos = _resync_marker(payload, end)
+            scans += 1
+        # APPn / COM / others: skipped
+    if not scans:
+        raise ValueError("JPEG missing SOF/scan data")
+    return _jpeg_reconstruct(frame, coefs, quant)
+
+
+def _jpeg_frame(seg: bytes, progressive: bool):
+    """SOF segment -> (frame, coefs): frame is (h, w, [(comp_id, hs, vs,
+    tq)], hmax, vmax, mcus_x, mcus_y, progressive); coefs holds one
+    MCU-padded (blocks_y, blocks_x, 64) int64 grid per component, in
+    natural (not zigzag) coefficient order."""
+    prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
+    if prec != 8:
+        raise ValueError("non-8-bit JPEG")
+    comps = []
+    for i in range(nc):
+        cid, hv, tq = seg[6 + 3 * i:9 + 3 * i]
+        comps.append((cid, hv >> 4, hv & 0xF, tq))
+    if len(comps) not in (1, 3):
+        raise ValueError("unsupported JPEG component layout")
+    hmax = max(c[1] for c in comps)
+    vmax = max(c[2] for c in comps)
+    if hmax > 2 or vmax > 2 or any(c[1] < 1 or c[2] < 1 for c in comps):
+        raise ValueError("unsupported JPEG sampling factors")
+    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
+    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
+    coefs = [np.zeros((mcus_y * vs, mcus_x * hs, 64), np.int64)
+             for _cid, hs, vs, _tq in comps]
+    return (h, w, comps, hmax, vmax, mcus_x, mcus_y, progressive), coefs
+
+
+def _jpeg_scan_header(seg: bytes, frame):
+    """SOS segment -> ([(frame component index, td, ta)], Ss, Se, Ah, Al).
+    A sequential scan always codes the whole band (libjpeg ignores its
+    Ss/Se/Ah/Al); a progressive scan is DC-only or a one-component AC
+    band."""
+    comps, progressive = frame[2], frame[7]
+    ids = [c[0] for c in comps]
+    ns = seg[0]
+    if not 1 <= ns <= 4:
+        raise ValueError("bad JPEG scan component count")
+    scomps = []
+    for i in range(ns):
+        cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
+        if cs not in ids:
+            raise ValueError("JPEG scan references unknown component")
+        scomps.append((ids.index(cs), tdta >> 4, tdta & 0xF))
+    Ss, Se, AhAl = seg[1 + 2 * ns:4 + 2 * ns]
+    if not progressive:
+        return scomps, 0, 63, 0, 0
+    if Ss == 0 and Se != 0:
+        raise ValueError("JPEG progressive scan mixes DC/AC")
+    if Ss and (ns != 1 or not Ss <= Se <= 63):
+        raise ValueError("bad JPEG progressive AC scan")
+    return scomps, Ss, Se, AhAl >> 4, AhAl & 0xF
+
+
+def _jpeg_blocks(frame, coefs, scomps, restart_interval, restart):
+    """Yield (scan component index, coefficient block) in T.81 A.2 order:
+    MCU-interleaved over the frame when the scan has several components;
+    with one, the component's own block grid (its sample size / 8,
+    rounded up, not padded to whole MCUs), one block per MCU. Calls
+    restart() before every restart_interval-th MCU."""
+    h, w, comps, hmax, vmax, mcus_x, mcus_y, _prog = frame
+    if len(scomps) == 1:
+        ci = scomps[0][0]
+        _cid, hs, vs, _tq = comps[ci]
+        rows = (h * vs + 8 * vmax - 1) // (8 * vmax)
+        cols = (w * hs + 8 * hmax - 1) // (8 * hmax)
+        layout = [(0, coefs[ci], 1, 1)]
+    else:
+        rows, cols = mcus_y, mcus_x
+        layout = [(si, coefs[ci], comps[ci][1], comps[ci][2])
+                  for si, (ci, _td, _ta) in enumerate(scomps)]
+    n = 0
+    for my in range(rows):
+        for mx in range(cols):
+            if restart_interval and n and n % restart_interval == 0:
+                restart()
+            n += 1
+            for si, grid, hs, vs in layout:
+                for by in range(vs):
+                    for bx in range(hs):
+                        yield si, grid[my * vs + by, mx * hs + bx]
 
 
 def _resync_marker(payload: bytes, pos: int) -> int:
     """Advance to the next real (non-stuffed, non-RST-consumed) marker
-    0xFF byte after an entropy-coded segment."""
+    0xFF byte after an entropy-coded segment; len(payload) when none
+    follows, which ends the image after that scan."""
     n = len(payload)
     while pos < n:
         if payload[pos] == 0xFF and pos + 1 < n and payload[pos + 1] != 0x00:
             return pos
         pos += 1
-    raise ValueError("JPEG truncated: no marker after scan")
+    return n
 
 
 def _ac_refine_block(coef, br, ac_table, Ss, Se, Al, eobrun):
@@ -804,371 +953,82 @@ def _ac_refine_block(coef, br, ac_table, Ss, Se, Al, eobrun):
     return eobrun
 
 
-def _decode_jpeg_progressive(payload: bytes) -> np.ndarray:
-    """Progressive (SOF2) JPEG decode: multi-scan spectral selection +
-    successive approximation per ITU T.81 Annex G. Coefficients
-    accumulate across scans in per-component MCU-padded block grids;
-    dequantize + IDCT once at EOI. Restart markers reset DC predictors
-    and the EOB run. Validated against javax.imageio via the Spark image
-    source on wild progressive files (tests/test_codecs.py)."""
-    pos = 2
-    n = len(payload)
-    quant = {}
-    huff_dc = {}
-    huff_ac = {}
-    frame = None
-    restart_interval = 0
-    coefs = None       # per-comp (blocks_y, blocks_x, 64) int32
-    pred = None
-    while pos + 4 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker sync lost")
-        while payload[pos + 1] == 0xFF:
-            pos += 1
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:      # EOI
-            break
-        if 0xD0 <= marker <= 0xD7 or marker == 0x01:
-            continue
-        seglen = struct.unpack(">H", payload[pos:pos + 2])[0]
-        seg = payload[pos + 2:pos + seglen]
-        pos += seglen
-        if marker == 0xDB:      # DQT
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0xF
-                p += 1
-                if pq != 0:
-                    raise ValueError("16-bit JPEG quant table")
-                tbl = np.zeros(64, np.int32)
-                tbl[_ZIGZAG] = np.frombuffer(seg[p:p + 64], np.uint8)
-                quant[tq] = tbl.reshape(8, 8)
-                p += 64
-        elif marker == 0xC4:    # DHT (tables may arrive per scan)
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 0xF
-                bits = list(seg[p + 1:p + 17])
-                cnt = sum(bits)
-                vals = list(seg[p + 17:p + 17 + cnt])
-                tbl = _huff_decode_table(bits, vals)
-                (huff_dc if tc == 0 else huff_ac)[th] = tbl
-                p += 17 + cnt
-        elif marker == 0xC2:    # SOF2
-            prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
-            if prec != 8:
-                raise ValueError("non-8-bit JPEG")
-            comps = []
-            for i in range(nc):
-                cid, hv, tq = seg[6 + 3 * i:9 + 3 * i]
-                comps.append((cid, hv >> 4, hv & 0xF, tq))
-            if len(comps) not in (1, 3):
-                raise ValueError("unsupported JPEG component layout")
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            if hmax > 2 or vmax > 2 or any(c[1] < 1 or c[2] < 1
-                                           for c in comps):
-                raise ValueError("unsupported JPEG sampling factors")
-            mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-            frame = (h, w, comps, hmax, vmax, mcus_x, mcus_y)
-            coefs = {}
-            pred = {}
-            for cid, hs, vs, tq in comps:
-                coefs[cid] = np.zeros((mcus_y * vs, mcus_x * hs, 64),
-                                      np.int32)
-                pred[cid] = 0
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("unexpected frame marker in progressive JPEG")
-        elif marker == 0xDD:    # DRI
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:    # SOS: one progressive scan
-            if frame is None:
-                raise ValueError("JPEG scan before SOF")
-            h, w, comps, hmax, vmax, mcus_x, mcus_y = frame
-            ns = seg[0]
-            scomps = []
-            for i in range(ns):
-                cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
-                scomps.append((cs, tdta >> 4, tdta & 0xF))
-            Ss, Se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            AhAl = seg[3 + 2 * ns]
-            Ah, Al = AhAl >> 4, AhAl & 0xF
-            by_cid = {cid: (hs, vs, tq) for cid, hs, vs, tq in comps}
-            for cs, _td, _ta in scomps:
-                if cs not in by_cid:
-                    raise ValueError("JPEG scan references unknown component")
-            br = _BitReader(payload, pos)
-            mcu_count = 0
-            eobrun = 0
-            if Ss == 0:
-                # DC scan: interleaved over all scan components
-                if Se != 0:
-                    raise ValueError("JPEG progressive scan mixes DC/AC")
-                if Ah == 0:
-                    for cs, td, _ta in scomps:
-                        if td not in huff_dc:
-                            raise ValueError("JPEG missing Huffman table")
-                        pred[cs] = 0
-                # MCU geometry: full-frame interleave when ns>1, the
-                # component's own block grid when ns==1
-                if ns > 1:
-                    units = [(my, mx) for my in range(mcus_y)
-                             for mx in range(mcus_x)]
-                    for my, mx in units:
-                        if restart_interval and mcu_count and \
-                                mcu_count % restart_interval == 0:
-                            br.align_restart()
-                            for cs, _td, _ta in scomps:
-                                pred[cs] = 0
-                        mcu_count += 1
-                        for cs, td, _ta in scomps:
-                            hs, vs, tq = by_cid[cs]
-                            for by in range(vs):
-                                for bx in range(hs):
-                                    blk = coefs[cs][my * vs + by,
-                                                    mx * hs + bx]
-                                    if Ah == 0:
-                                        t = br.huff(huff_dc[td])
-                                        diff = _extend(br.read(t), t) \
-                                            if t else 0
-                                        pred[cs] += diff
-                                        blk[0] = pred[cs] << Al
-                                    else:
-                                        if br.read(1):
-                                            blk[0] |= 1 << Al
-                else:
-                    cs, td, _ta = scomps[0]
-                    hs, vs, tq = by_cid[cs]
-                    cw = (w * hs + 8 * hmax - 1) // (8 * hmax)
-                    ch = (h * vs + 8 * vmax - 1) // (8 * vmax)
-                    for byy in range(ch):
-                        for bxx in range(cw):
-                            if restart_interval and mcu_count and \
-                                    mcu_count % restart_interval == 0:
-                                br.align_restart()
-                                pred[cs] = 0
-                            mcu_count += 1
-                            blk = coefs[cs][byy, bxx]
-                            if Ah == 0:
-                                t = br.huff(huff_dc[td])
-                                diff = _extend(br.read(t), t) if t else 0
-                                pred[cs] += diff
-                                blk[0] = pred[cs] << Al
-                            else:
-                                if br.read(1):
-                                    blk[0] |= 1 << Al
+def _huff_scan(payload, pos, frame, coefs, scan, tables, restart_interval):
+    """Decode one Huffman-coded scan into `coefs` (T.81 F.2.2, G.1.2):
+    sequential DC+AC, progressive DC first/refinement, AC first with EOB
+    runs, AC refinement. Returns the position where the entropy-coded
+    segment stopped."""
+    scomps, Ss, Se, Ah, Al = scan
+    dc = [tables.get(("dc", td)) for _ci, td, _ta in scomps]
+    ac = [tables.get(("ac", ta)) for _ci, _td, ta in scomps]
+    used = (dc if Ss == 0 and Ah == 0 else []) + (ac if Se else [])
+    if not all(isinstance(t, _HuffTable) for t in used):
+        raise ValueError("JPEG missing Huffman table")
+    br = _BitReader(payload, pos)
+    pred = [0] * len(scomps)
+    eobrun = 0
+
+    def restart():
+        nonlocal eobrun
+        br.align_restart()
+        pred[:] = [0] * len(scomps)
+        eobrun = 0
+
+    for si, blk in _jpeg_blocks(frame, coefs, scomps, restart_interval,
+                                restart):
+        if Ss == 0:
+            if Ah:
+                if br.read(1):
+                    blk[0] |= 1 << Al
             else:
-                # AC scan: always non-interleaved (single component)
-                if ns != 1:
-                    raise ValueError("JPEG interleaved AC progressive scan")
-                cs, _td, ta = scomps[0]
-                if ta not in huff_ac:
-                    raise ValueError("JPEG missing Huffman table")
-                ac_table = huff_ac[ta]
-                hs, vs, tq = by_cid[cs]
-                cw = (w * hs + 8 * hmax - 1) // (8 * hmax)
-                ch = (h * vs + 8 * vmax - 1) // (8 * vmax)
-                for byy in range(ch):
-                    for bxx in range(cw):
-                        if restart_interval and mcu_count and \
-                                mcu_count % restart_interval == 0:
-                            br.align_restart()
-                            eobrun = 0
-                        mcu_count += 1
-                        blk = coefs[cs][byy, bxx]
-                        if Ah == 0:
-                            # first AC scan for this band
-                            if eobrun > 0:
-                                eobrun -= 1
-                                continue
-                            k = Ss
-                            while k <= Se:
-                                rs = br.huff(ac_table)
-                                r, s = rs >> 4, rs & 0xF
-                                if s == 0:
-                                    if r != 15:
-                                        eobrun = (1 << r) - 1
-                                        if r:
-                                            eobrun += br.read(r)
-                                        break
-                                    k += 16
-                                    continue
-                                k += r
-                                if k > 63:
-                                    raise ValueError("JPEG AC overflow")
-                                blk[_ZIGZAG[k]] = \
-                                    _extend(br.read(s), s) << Al
-                                k += 1
-                        else:
-                            eobrun = _ac_refine_block(
-                                blk, br, ac_table, Ss, Se, Al, eobrun)
-            pos = _resync_marker(payload, br.pos)
-        # APPn / COM: skipped
-    if frame is None or coefs is None:
-        raise ValueError("JPEG missing SOF/scan data")
-    h, w, comps, hmax, vmax, mcus_x, mcus_y = frame
-    # reconstruct: dequantize + batched IDCT per component
-    A = _DCT_A
-    planes = []
-    for cid, hs, vs, tq in comps:
+                t = br.huff(dc[si])
+                if t:
+                    pred[si] += _extend(br.read(t), t)
+                blk[0] = pred[si] << Al
+            if Se == 0:
+                continue
+        if Ah:
+            eobrun = _ac_refine_block(blk, br, ac[si], Ss, Se, Al, eobrun)
+            continue
+        if eobrun:
+            eobrun -= 1
+            continue
+        table = ac[si]
+        k = Ss or 1
+        while k <= Se:
+            rs = br.huff(table)
+            r, s = rs >> 4, rs & 0xF
+            if s == 0:
+                if r != 15:
+                    if Ss and r:        # EOBn: progressive only
+                        eobrun = (1 << r) - 1 + br.read(r)
+                    break
+                k += 16
+                continue
+            k += r
+            if k > 63:
+                raise ValueError("JPEG AC index overflow")
+            blk[_ZIGZAG[k]] = _extend(br.read(s), s) << Al
+            k += 1
+    return br.pos
+
+
+def _jpeg_reconstruct(frame, coefs, quant) -> np.ndarray:
+    """Dequantize + batched IDCT (`A.T @ blocks @ A` over (n, 8, 8), the
+    same summation order as a per-block matmul; not einsum, whose
+    contraction order can flip exact-.5 ties), upsample component planes
+    to full resolution (nearest), crop, YCbCr->RGB (BT.601), clip to
+    uint8."""
+    h, w, comps, hmax, vmax, _mx, _my, _prog = frame
+    full = []
+    for (cid, hs, vs, tq), grid in zip(comps, coefs):
         if tq not in quant:
             raise ValueError("JPEG missing quant table")
-        grid = coefs[cid]
         by, bx = grid.shape[0], grid.shape[1]
-        blocks = grid.reshape(by * bx, 8, 8).astype(np.float64) \
-            * quant[tq][None, :, :]
-        px = np.einsum("ij,njk,kl->nil", A.T, blocks, A) + 128.0
+        blocks = grid.reshape(by * bx, 8, 8).astype(np.float64) * quant[tq]
+        px = _DCT_A.T @ blocks @ _DCT_A + 128.0
         plane = px.reshape(by, bx, 8, 8).transpose(0, 2, 1, 3) \
             .reshape(by * 8, bx * 8)
-        planes.append(plane)
-    return _finish_jpeg_planes(planes, comps, h, w, hmax, vmax)
-
-
-def _decode_jpeg_impl(payload: bytes) -> np.ndarray:
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    n = len(payload)
-    quant = {}
-    huff_dc = {}
-    huff_ac = {}
-    frame = None       # (h, w, [(comp_id, hs, vs, tq)])
-    restart_interval = 0
-    scan = None
-    while pos + 4 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker sync lost")
-        while payload[pos + 1] == 0xFF:    # fill bytes
-            pos += 1
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:      # EOI
-            break
-        if 0xD0 <= marker <= 0xD7 or marker == 0x01:
-            continue            # standalone markers
-        seglen = struct.unpack(">H", payload[pos:pos + 2])[0]
-        seg = payload[pos + 2:pos + seglen]
-        pos += seglen
-        if marker == 0xDB:      # DQT
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0xF
-                p += 1
-                if pq != 0:
-                    raise ValueError("16-bit JPEG quant table")
-                tbl = np.zeros(64, np.int32)
-                tbl[_ZIGZAG] = np.frombuffer(seg[p:p + 64], np.uint8)
-                quant[tq] = tbl.reshape(8, 8)
-                p += 64
-        elif marker == 0xC4:    # DHT
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 0xF
-                bits = list(seg[p + 1:p + 17])
-                cnt = sum(bits)
-                vals = list(seg[p + 17:p + 17 + cnt])
-                tbl = _huff_decode_table(bits, vals)
-                (huff_dc if tc == 0 else huff_ac)[th] = tbl
-                p += 17 + cnt
-        elif marker == 0xC0 or marker == 0xC1:   # SOF0/1 (baseline)
-            prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
-            if prec != 8:
-                raise ValueError("non-8-bit JPEG")
-            comps = []
-            for i in range(nc):
-                cid, hv, tq = seg[6 + 3 * i:9 + 3 * i]
-                comps.append((cid, hv >> 4, hv & 0xF, tq))
-            frame = (h, w, comps)
-        elif marker == 0xC2:    # SOF2: progressive, own multi-scan path
-            return _decode_jpeg_progressive(payload)
-        elif marker in (0xC9, 0xCA):    # arithmetic (sequential/progressive)
-            from .jpeg_arith import decode_jpeg_arith
-            return decode_jpeg_arith(payload)
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("lossless/hierarchical JPEG unsupported")
-        elif marker == 0xDD:    # DRI
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:    # SOS
-            ns = seg[0]
-            scomps = []
-            for i in range(ns):
-                cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
-                scomps.append((cs, tdta >> 4, tdta & 0xF))
-            scan = (scomps, pos)
-            break
-        # APPn / COM / others: skipped
-    if frame is None or scan is None:
-        raise ValueError("JPEG missing SOF/SOS")
-    h, w, comps = frame
-    scomps, ecs_pos = scan
-    if len(comps) not in (1, 3) or len(scomps) != len(comps):
-        raise ValueError("unsupported JPEG component layout")
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if hmax > 2 or vmax > 2 or any(c[1] < 1 or c[2] < 1 for c in comps):
-        raise ValueError("unsupported JPEG sampling factors")
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mcus_x = (w + mcu_w - 1) // mcu_w
-    mcus_y = (h + mcu_h - 1) // mcu_h
-    # per-component pixel planes at component resolution
-    planes = []
-    for cid, hs, vs, tq in comps:
-        planes.append(np.zeros((mcus_y * vs * 8, mcus_x * hs * 8),
-                               np.float64))
-    dc_tab = {}
-    ac_tab = {}
-    for (cs, td, ta), (cid, hs, vs, tq) in zip(scomps, comps):
-        if cs != cid:
-            raise ValueError("JPEG scan/frame component order mismatch")
-        dc_tab[cid] = huff_dc.get(td)
-        ac_tab[cid] = huff_ac.get(ta)
-        if dc_tab[cid] is None or ac_tab[cid] is None or tq not in quant:
-            raise ValueError("JPEG missing Huffman/quant table")
-    br = _BitReader(payload, ecs_pos)
-    pred = {cid: 0 for cid, _, _, _ in comps}
-    A = _DCT_A
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and \
-                    mcu_count % restart_interval == 0:
-                br.align_restart()
-                pred = {cid: 0 for cid, _, _, _ in comps}
-            mcu_count += 1
-            for ci, (cid, hs, vs, tq) in enumerate(comps):
-                for by in range(vs):
-                    for bx in range(hs):
-                        t = br.huff(dc_tab[cid])
-                        diff = _extend(br.read(t), t) if t else 0
-                        pred[cid] += diff
-                        coeffs = np.zeros(64, np.float64)
-                        coeffs[0] = pred[cid]
-                        k = 1
-                        while k < 64:
-                            rs = br.huff(ac_tab[cid])
-                            r, ssss = rs >> 4, rs & 0xF
-                            if ssss == 0:
-                                if r == 15:
-                                    k += 16
-                                    continue
-                                break       # EOB
-                            k += r
-                            if k > 63:
-                                raise ValueError("JPEG AC index overflow")
-                            coeffs[_ZIGZAG[k]] = _extend(br.read(ssss), ssss)
-                            k += 1
-                        # note: coeffs[0] set pre-zigzag (index 0 == DC)
-                        block = (coeffs.reshape(8, 8) * quant[tq])
-                        px = A.T @ block @ A + 128.0
-                        y0 = (my * vs + by) * 8
-                        x0 = (mx * hs + bx) * 8
-                        planes[ci][y0:y0 + 8, x0:x0 + 8] = px
-    # upsample to full resolution (nearest) + crop
-    full = []
-    for (cid, hs, vs, tq), plane in zip(comps, planes):
         if hs != hmax or vs != vmax:
             plane = np.repeat(np.repeat(plane, vmax // vs, axis=0),
                               hmax // hs, axis=1)

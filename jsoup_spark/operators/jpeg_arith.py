@@ -3,11 +3,14 @@
 Implements the ITU-T T.81 QM arithmetic coder (Annex D) and the DC/AC
 statistical models of Annex F.1.4 / G (conditioning contexts, magnitude
 categories, successive-approximation refinement) from the public spec —
-no external codec library.  Shares the coefficient-grid representation,
-zigzag table, IDCT and reconstruction tail with operators/codecs.py, so
-a LOSSLESS entropy transcode (Huffman <-> arithmetic, e.g. via jpegtran
-or libjpeg's jpeg_write_coefficients) decodes byte-identically through
-either entropy path — that equality is the test gate
+no external codec library.  Decoding has no reader of its own:
+codecs.decode_jpeg's one marker reader hands each scan of a SOF9/SOF10
+frame to `arith_scan` here, which walks blocks through the same
+codecs._jpeg_blocks generator as the Huffman scan decoder and fills the
+same coefficient grids; one dequantize + IDCT then reconstructs either.
+So a LOSSLESS entropy transcode (Huffman <-> arithmetic, e.g. via
+jpegtran or libjpeg's jpeg_write_coefficients) decodes byte-identically
+through either entropy path — that equality is the test gate
 (tests/test_jpeg_arith.py, oracle shim tests/jpeg_ref.c).
 
 Reference parity anchor (semantic, not a port): the reference engine
@@ -28,7 +31,7 @@ import struct
 import numpy as np
 
 from .codecs import (_ZIGZAG, _DCT_A, _QUANT_CHROMA, _QUANT_LUMA,
-                     _box_down2, _finish_jpeg_planes, _scaled_quant)
+                     _box_down2, _jpeg_blocks, _scaled_quant)
 
 # ITU-T T.81 Table D.3: Qe values and probability-estimation state
 # machine — (Qe, Next_Index_LPS, Next_Index_MPS, Switch_MPS) per state.
@@ -283,241 +286,57 @@ def _dec_ac_refine(dec, stats, fixed, block, Ss, Se, Al):
         k += 1
 
 
-def decode_jpeg_arith(payload: bytes) -> np.ndarray:
-    """SOF9/SOF10 JPEG -> uint8 (H, W, 3|1).  Same envelope and
-    reconstruction tail as the Huffman decoders in codecs.py."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    n = len(payload)
-    quant = {}
-    dc_cond = {}        # table id -> (L, U)
-    ac_cond = {}        # table id -> Kx
-    frame = None
-    progressive = False
-    restart_interval = 0
-    coefs = None
-    last_dc = None
-    dc_ctx = None
-    while pos + 4 <= n:
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker sync lost")
-        while payload[pos + 1] == 0xFF:
-            pos += 1
-        marker = payload[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if 0xD0 <= marker <= 0xD7 or marker == 0x01:
-            continue
-        seglen = struct.unpack(">H", payload[pos:pos + 2])[0]
-        seg = payload[pos + 2:pos + seglen]
-        pos += seglen
-        if marker == 0xDB:          # DQT
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0xF
-                p += 1
-                if pq != 0:
-                    raise ValueError("16-bit JPEG quant table")
-                tbl = np.zeros(64, np.int32)
-                tbl[_ZIGZAG] = np.frombuffer(seg[p:p + 64], np.uint8)
-                quant[tq] = tbl.reshape(8, 8)
-                p += 64
-        elif marker == 0xCC:        # DAC: conditioning parameters
-            p = 0
-            while p + 1 < len(seg):
-                tc, tb = seg[p] >> 4, seg[p] & 0xF
-                cs = seg[p + 1]
-                if tc == 0:
-                    dc_cond[tb] = (cs & 0xF, cs >> 4)
-                else:
-                    ac_cond[tb] = cs
-                p += 2
-        elif marker in (0xC9, 0xCA):    # SOF9 / SOF10
-            progressive = marker == 0xCA
-            prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
-            if prec != 8:
-                raise ValueError("non-8-bit JPEG")
-            comps = []
-            for i in range(nc):
-                cid, hv, tq = seg[6 + 3 * i:9 + 3 * i]
-                comps.append((cid, hv >> 4, hv & 0xF, tq))
-            if len(comps) not in (1, 3):
-                raise ValueError("unsupported JPEG component layout")
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            if hmax > 2 or vmax > 2 or any(c[1] < 1 or c[2] < 1
-                                           for c in comps):
-                raise ValueError("unsupported JPEG sampling factors")
-            mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-            frame = (h, w, comps, hmax, vmax, mcus_x, mcus_y)
-            coefs = {}
-            last_dc = {}
-            for cid, hs, vs, tq in comps:
-                coefs[cid] = np.zeros((mcus_y * vs, mcus_x * hs, 64),
-                                      np.int64)
-                last_dc[cid] = 0
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise ValueError("unexpected frame marker in arithmetic JPEG")
-        elif marker == 0xDD:        # DRI
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:        # SOS
-            if frame is None:
-                raise ValueError("JPEG scan before SOF")
-            pos = _decode_arith_scan(
-                payload, pos, seg, frame, coefs, last_dc, dc_cond,
-                ac_cond, restart_interval, progressive)
-        # APPn / COM: skipped
-    if frame is None or coefs is None:
-        raise ValueError("JPEG missing SOF/scan data")
-    h, w, comps, hmax, vmax, mcus_x, mcus_y = frame
-    A = _DCT_A
-    planes = []
-    for cid, hs, vs, tq in comps:
-        if tq not in quant:
-            raise ValueError("JPEG missing quant table")
-        grid = coefs[cid]
-        by, bx = grid.shape[0], grid.shape[1]
-        blocks = grid.reshape(by * bx, 8, 8).astype(np.float64) \
-            * quant[tq][None, :, :]
-        px = np.einsum("ij,njk,kl->nil", A.T, blocks, A) + 128.0
-        plane = px.reshape(by, bx, 8, 8).transpose(0, 2, 1, 3) \
-            .reshape(by * 8, bx * 8)
-        planes.append(plane)
-    return _finish_jpeg_planes(planes, comps, h, w, hmax, vmax)
-
-
-def _decode_arith_scan(payload, pos, seg, frame, coefs, last_dc, dc_cond,
-                       ac_cond, restart_interval, progressive):
-    """Decode one SOS entropy-coded segment; returns the position just
-    past it.  Statistics areas are (re)initialized per scan and per
-    restart interval (T.81 F.1.4.4 / D.2.7)."""
-    h, w, comps, hmax, vmax, mcus_x, mcus_y = frame
-    ns = seg[0]
-    scomps = []
-    for i in range(ns):
-        cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
-        scomps.append((cs, tdta >> 4, tdta & 0xF))
-    Ss, Se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-    AhAl = seg[3 + 2 * ns]
-    Ah, Al = AhAl >> 4, AhAl & 0xF
-    if not progressive:
-        if Ss != 0 or Se != 63 or Ah != 0:
-            raise ValueError("bad sequential arithmetic scan header")
-    by_cid = {cid: (hs, vs, tq) for cid, hs, vs, tq in comps}
-    for cs, _td, _ta in scomps:
-        if cs not in by_cid:
-            raise ValueError("JPEG scan references unknown component")
-    dc_stats = {td: bytearray(_DC_STAT_BINS)
-                for _cs, td, _ta in scomps}
-    ac_stats = {ta: bytearray(_AC_STAT_BINS)
-                for _cs, _td, ta in scomps}
+def arith_scan(payload, pos, frame, coefs, scan, tables, restart_interval):
+    """Decode one QM-coded scan into `coefs` for codecs' marker reader:
+    sequential DC+AC, progressive DC first/refinement, AC first and AC
+    refinement.  Statistics areas are (re)initialized per scan and per
+    restart interval (T.81 F.1.4.4 / D.2.7); DAC conditioning defaults
+    to L=0, U=1, Kx=5.  Returns the position where the entropy-coded
+    segment stopped."""
+    scomps, Ss, Se, Ah, Al = scan
+    dc_cond = []
+    kx = []
+    for _ci, td, ta in scomps:
+        c, k = tables.get(("dc", td)), tables.get(("ac", ta))
+        dc_cond.append(c if isinstance(c, tuple) else (0, 1))
+        kx.append(k if isinstance(k, int) else 5)
+    dc_stats = {td: bytearray(_DC_STAT_BINS) for _ci, td, _ta in scomps}
+    ac_stats = {ta: bytearray(_AC_STAT_BINS) for _ci, _td, ta in scomps}
     fixed = bytearray((_FIXED,))
-    dc_ctx = {cs: 0 for cs, _td, _ta in scomps}
+    dc_ctx = [0] * len(scomps)
+    last_dc = [0] * len(scomps)
+    dec = _ArithDecoder(payload, pos)
 
-    def reset_stats():
+    def restart():
         for st in dc_stats.values():
             st[:] = bytes(_DC_STAT_BINS)
         for st in ac_stats.values():
             st[:] = bytes(_AC_STAT_BINS)
         fixed[0] = _FIXED
-        for cs in dc_ctx:
-            dc_ctx[cs] = 0
-            last_dc[cs] = 0
+        dc_ctx[:] = last_dc[:] = [0] * len(scomps)
+        dec.align_restart()
 
-    for cs, _td, _ta in scomps:
-        if Ss == 0 and Ah == 0:
-            last_dc[cs] = 0
-    dec = _ArithDecoder(payload, pos)
-    mcu_count = 0
-
-    def maybe_restart():
-        nonlocal mcu_count
-        if restart_interval and mcu_count and \
-                mcu_count % restart_interval == 0:
-            reset_stats()
-            dec.align_restart()
-        mcu_count += 1
-
-    seq = not progressive
-    if seq or Ss == 0:
-        # DC (or full sequential) scan: MCU-interleaved when ns > 1
-        if progressive and Se != 0:
-            raise ValueError("JPEG progressive scan mixes DC/AC")
-        if ns > 1:
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    maybe_restart()
-                    for cs, td, ta in scomps:
-                        hs, vs, _tq = by_cid[cs]
-                        for by in range(vs):
-                            for bx in range(hs):
-                                blk = coefs[cs][my * vs + by,
-                                                mx * hs + bx]
-                                _dec_block_dc(dec, dc_stats[td], fixed,
-                                              blk, cs, td, dc_ctx,
-                                              last_dc, dc_cond, Ah, Al)
-                                if seq:
-                                    _dec_ac_band(
-                                        dec, ac_stats[ta], fixed, blk,
-                                        1, 63, 0, ac_cond.get(ta, 5))
+    for si, blk in _jpeg_blocks(frame, coefs, scomps, restart_interval,
+                                restart):
+        _ci, td, ta = scomps[si]
+        if Ss == 0:
+            if Ah:
+                if dec.decode(fixed, 0):
+                    blk[0] |= 1 << Al
+            else:
+                L, U = dc_cond[si]
+                diff, dc_ctx[si] = _dec_dc_diff(dec, dc_stats[td],
+                                                dc_ctx[si], L, U)
+                last_dc[si] += diff
+                blk[0] = last_dc[si] << Al
+            if Se == 0:
+                continue
+        if Ah:
+            _dec_ac_refine(dec, ac_stats[ta], fixed, blk, Ss, Se, Al)
         else:
-            cs, td, ta = scomps[0]
-            hs, vs, _tq = by_cid[cs]
-            cw = (w * hs + 8 * hmax - 1) // (8 * hmax)
-            ch = (h * vs + 8 * vmax - 1) // (8 * vmax)
-            for byy in range(ch):
-                for bxx in range(cw):
-                    maybe_restart()
-                    blk = coefs[cs][byy, bxx]
-                    _dec_block_dc(dec, dc_stats[td], fixed, blk, cs, td,
-                                  dc_ctx, last_dc, dc_cond, Ah, Al)
-                    if seq:
-                        _dec_ac_band(dec, ac_stats[ta], fixed, blk,
-                                     1, 63, 0, ac_cond.get(ta, 5))
-    else:
-        # progressive AC scan: single component
-        if ns != 1:
-            raise ValueError("JPEG interleaved AC progressive scan")
-        cs, _td, ta = scomps[0]
-        hs, vs, _tq = by_cid[cs]
-        cw = (w * hs + 8 * hmax - 1) // (8 * hmax)
-        ch = (h * vs + 8 * vmax - 1) // (8 * vmax)
-        stats = ac_stats[ta]
-        Kx = ac_cond.get(ta, 5)
-        for byy in range(ch):
-            for bxx in range(cw):
-                maybe_restart()
-                blk = coefs[cs][byy, bxx]
-                if Ah == 0:
-                    _dec_ac_band(dec, stats, fixed, blk, Ss, Se, Al, Kx)
-                else:
-                    _dec_ac_refine(dec, stats, fixed, blk, Ss, Se, Al)
-    # skip to the next marker after the entropy segment
-    d = payload
-    p = dec.pos
-    n = len(d)
-    while p < n:
-        if d[p] == 0xFF and p + 1 < n and d[p + 1] != 0x00:
-            return p
-        p += 1
-    raise ValueError("JPEG truncated: no marker after arithmetic scan")
-
-
-def _dec_block_dc(dec, stats, fixed, blk, cs, td, dc_ctx, last_dc,
-                  dc_cond, Ah, Al):
-    if Ah == 0:
-        L, U = dc_cond.get(td, (0, 1))
-        diff, new_ctx = _dec_dc_diff(dec, stats, dc_ctx[cs], L, U)
-        dc_ctx[cs] = new_ctx
-        last_dc[cs] += diff
-        blk[0] = last_dc[cs] << Al
-    else:
-        if dec.decode(fixed, 0):
-            blk[0] |= 1 << Al
+            _dec_ac_band(dec, ac_stats[ta], fixed, blk, Ss or 1, Se, Al,
+                         kx[si])
+    return dec.pos
 
 
 # ------------------------------------------------------------ encoder
@@ -899,6 +718,10 @@ def encode_jpeg_arith(img: np.ndarray, quality: int = 90,
             scans.append(("ac_refine", [c], 1, 63, 1, 0))
     else:
         scans = [("seq", list(range(ch)), 0, 63, 0, 0)]
+    # the decoder's frame tuple, so both walk blocks via _jpeg_blocks
+    frame = (h, w, [(i + 1, hs, vs, ntab[i]) for i, (hs, vs)
+                    in enumerate(samp)], hmax, vmax, mcus_x, mcus_y,
+             progressive)
     for kind, sel, Ss, Se, Ah, Al in scans:
         sos = bytes([len(sel)])
         for c in sel:
@@ -907,52 +730,43 @@ def encode_jpeg_arith(img: np.ndarray, quality: int = 90,
         sos += bytes([Ss, Se, (Ah << 4) | Al])
         out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
         out += _encode_arith_scan(
-            grids, samp, kind, sel, Ss, Se, Ah, Al, ntab,
-            mcus_x, mcus_y, w, h, hmax, vmax, restart_interval)
+            frame, grids, [(c, ntab[c], ntab[c]) for c in sel], kind,
+            Ss, Se, Ah, Al, restart_interval)
     out += b"\xff\xd9"
     return bytes(out)
 
 
-def _encode_arith_scan(grids, samp, kind, sel, Ss, Se, Ah, Al, ntab,
-                       mcus_x, mcus_y, w, h, hmax, vmax,
+def _encode_arith_scan(frame, grids, scomps, kind, Ss, Se, Ah, Al,
                        restart_interval):
     enc = _ArithEncoder()
-    dc_stats = {ntab[c]: bytearray(_DC_STAT_BINS) for c in sel}
-    ac_stats = {ntab[c]: bytearray(_AC_STAT_BINS) for c in sel}
+    dc_stats = {td: bytearray(_DC_STAT_BINS) for _c, td, _ta in scomps}
+    ac_stats = {ta: bytearray(_AC_STAT_BINS) for _c, _td, ta in scomps}
     fixed = bytearray((_FIXED,))
-    dc_ctx = {c: 0 for c in sel}
-    last_dc = {c: 0 for c in sel}
+    dc_ctx = [0] * len(scomps)
+    last_dc = [0] * len(scomps)
     Kx = 5
     L, U = 0, 1
-    mcu_count = 0
     rst_num = 0
 
-    def reset_stats():
+    def restart():
+        nonlocal rst_num
+        enc.restart(rst_num)
+        rst_num = (rst_num + 1) & 7
         for st in dc_stats.values():
             st[:] = bytes(_DC_STAT_BINS)
         for st in ac_stats.values():
             st[:] = bytes(_AC_STAT_BINS)
         fixed[0] = _FIXED
-        for c in sel:
-            dc_ctx[c] = 0
-            last_dc[c] = 0
+        dc_ctx[:] = last_dc[:] = [0] * len(scomps)
 
-    def maybe_restart():
-        nonlocal mcu_count, rst_num
-        if restart_interval and mcu_count and \
-                mcu_count % restart_interval == 0:
-            enc.restart(rst_num)
-            rst_num = (rst_num + 1) & 7
-            reset_stats()
-        mcu_count += 1
-
-    def do_block(c, blk):
-        t = ntab[c]
+    for si, blk in _jpeg_blocks(frame, grids, scomps, restart_interval,
+                                restart):
+        t = scomps[si][1]
         if kind in ("seq", "dc_first"):
-            diff = int(blk[0] >> Al) - last_dc[c]
-            last_dc[c] = int(blk[0] >> Al)
-            dc_ctx[c] = _enc_dc_diff(enc, dc_stats[t], dc_ctx[c],
-                                     diff, L, U)
+            diff = int(blk[0] >> Al) - last_dc[si]
+            last_dc[si] = int(blk[0] >> Al)
+            dc_ctx[si] = _enc_dc_diff(enc, dc_stats[t], dc_ctx[si],
+                                      diff, L, U)
             if kind == "seq":
                 _enc_ac_band(enc, ac_stats[t], fixed, blk, 1, 63, 0, Kx)
         elif kind == "dc_refine":
@@ -961,26 +775,5 @@ def _encode_arith_scan(grids, samp, kind, sel, Ss, Se, Ah, Al, ntab,
             _enc_ac_band(enc, ac_stats[t], fixed, blk, Ss, Se, Al, Kx)
         else:
             _enc_ac_refine(enc, ac_stats[t], fixed, blk, Ss, Se, Ah, Al)
-
-    interleaved = len(sel) > 1
-    if interleaved:
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                maybe_restart()
-                for c in sel:
-                    hs, vs = samp[c]
-                    for by in range(vs):
-                        for bx in range(hs):
-                            do_block(c, grids[c][my * vs + by,
-                                                 mx * hs + bx])
-    else:
-        c = sel[0]
-        hs, vs = samp[c]
-        cw = (w * hs + 8 * hmax - 1) // (8 * hmax)
-        chh = (h * vs + 8 * vmax - 1) // (8 * vmax)
-        for byy in range(chh):
-            for bxx in range(cw):
-                maybe_restart()
-                do_block(c, grids[c][byy, bxx])
     enc.flush()
     return bytes(enc.out)

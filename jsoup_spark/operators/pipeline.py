@@ -11,10 +11,12 @@ Spark-first layering:
   plus a ``per_doc`` function handed to that kernel.
 
 Scale design (north rule):
-* ``bucket_by_size`` range-partitions on html length so a handful of
-  100MB documents can't straggle one partition (heavy-tail skew);
-* Arrow batch size is the backstop for memory (one batch of giant docs
-  stays bounded via spark.sql.execution.arrow.maxRecordsPerBatch);
+* ``bucket_by_size`` hash-partitions on (log2 html length, salt) so each
+  size class of a heavy tail spreads over many partitions instead of
+  straggling one;
+* spark.sql.execution.arrow.maxRecordsPerBatch bounds the rows, not the
+  bytes, of an Arrow batch: a batch of giant docs is not memory-bounded
+  (a byte budget is ROADMAP direction 6);
 * every batch also yields per-partition metric counters (docs, bytes,
   parse errors) that the caller can aggregate and checkpoint for lineage;
 * resume is an anti-join of input doc_ids against the checkpointed output
@@ -50,11 +52,12 @@ from ..sources.corpus import BASE_URI, assemble_html, span_html
 
 
 def bucket_by_size(df: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Range-partition docs by html length so giant docs spread evenly.
+    """Hash-partition docs on (size_class, salt) so giant docs spread.
 
-    At 100TB this is the skew lever: the shuffle key is (size_class, salt),
-    keeping each partition's total bytes comparable instead of its row
-    count (SURVEY §4.3)."""
+    At 100TB this is the skew lever: size_class is ceil(log2(html_len)),
+    and the salt spreads each class over up to 64 partitions, so the
+    docs of one heavy size class do not all land in one partition
+    (SURVEY §4.3)."""
     if partitions is None:
         partitions = df.sparkSession.sparkContext.defaultParallelism
     salted = df.withColumn(

@@ -3,12 +3,13 @@ pipeline.
 
 Decoder — classic TIFF 6.0, both byte orders: IFD walk with all the
 baseline tags, strip AND tile organization, chunky and planar sample
-layout, compressions None / PackBits / LZW (the TIFF variant: MSB-first
-bit packing, 256/257 clear/EOI, early code-width change) / Deflate
+layout, compressions None / PackBits / LZW (MSB-first bit packing,
+256/257 clear/EOI, early code-width change; sources/pdf.py's LZWDecode
+uses the same decoder) / Deflate
 (both 8 and the old 32946), the horizontal-differencing predictor,
 photometric WhiteIsZero / BlackIsZero / RGB / Palette, 1/2/4/8/16-bit
 samples, associated alpha via ExtraSamples.  16-bit samples scale to
-8 with correct rounding (matching codecs._scale16); palette ColorMap
+8 with correct rounding (codecs._scale16); palette ColorMap
 entries are 16-bit and scale the same way.
 
 Encoder — spec-conformant test encoder in the encode_png_ex /
@@ -30,6 +31,8 @@ import struct
 import zlib
 
 import numpy as np
+
+from .codecs import _scale16
 
 # baseline tags
 _W, _H = 256, 257
@@ -100,9 +103,13 @@ def _unpackbits(data: bytes, expected: int) -> bytes:
     return bytes(out[:expected])
 
 
-def _lzw_decode_tiff(data: bytes, expected: int) -> bytes:
-    """TIFF-variant LZW: MSB-first bits, clear=256, EOI=257, code width
-    increases one code EARLY (at 511/1023/2047 table fill)."""
+def _lzw_decode_tiff(data: bytes, expected: int | None = None,
+                     early: int = 1) -> bytes:
+    """MSB-first LZW as TIFF and PDF LZWDecode write it: clear=256,
+    EOI=257, and the code width grows `early` codes before the table
+    would overflow (TIFF: always 1, at 511/1023/2047 table fill; PDF:
+    its EarlyChange parameter). Decodes `expected` bytes (a short stream
+    raises), or with expected=None until EOI or the end of data."""
     CLEAR, EOI = 256, 257
     # plain lists, not numpy arrays: per-code scalar indexing in the
     # expand loop was the decode hot spot (numpy scalar boxing, r9)
@@ -125,10 +132,12 @@ def _lzw_decode_tiff(data: bytes, expected: int) -> bytes:
         chunk.reverse()
         return chunk
 
-    while len(out) < expected:
+    while expected is None or len(out) < expected:
         while nbits < width:
             if pos >= n:
-                raise ValueError("TIFF truncated LZW stream")
+                if expected is None:
+                    return bytes(out)           # implicit EOI at EOF
+                raise ValueError("truncated LZW stream")
             acc = (acc << 8) | data[pos]
             pos += 1
             nbits += 8
@@ -143,18 +152,18 @@ def _lzw_decode_tiff(data: bytes, expected: int) -> bytes:
             break
         if prev < 0:
             if code >= 256:
-                raise ValueError("TIFF bad first LZW code")
+                raise ValueError("bad first LZW code")
             out.append(code)
             first_char = code
             prev = code
         else:
-            if code < next_free and code not in (CLEAR, EOI):
+            if code < next_free:
                 chunk = expand(code) if code >= 258 else bytearray([code])
             elif code == next_free:
                 chunk = (expand(prev) if prev >= 258
                          else bytearray([prev])) + bytes([first_char])
             else:
-                raise ValueError("TIFF LZW code out of range")
+                raise ValueError("LZW code out of range")
             first_char = chunk[0]
             out += chunk
             if next_free < 4096:
@@ -164,7 +173,7 @@ def _lzw_decode_tiff(data: bytes, expected: int) -> bytes:
             prev = code
         # early change: the code that WOULD overflow the width is
         # already sent wider
-        if next_free == (1 << width) - 1 and width < 12:
+        if next_free == (1 << width) - early and width < 12:
             width += 1
     return bytes(out[:expected])
 
@@ -217,10 +226,6 @@ def _bytes_to_samples(rows: bytes, h: int, w: int, spp: int,
     weights = (1 << np.arange(depth - 1, -1, -1)).astype(np.int32)
     vals = bits.reshape(h, w * spp, depth).astype(np.int32) @ weights
     return vals.reshape(h, w, spp)
-
-
-def _scale16(v: np.ndarray) -> np.ndarray:
-    return (v * 255 + 32767) // 65535
 
 
 def decode_tiff(payload: bytes) -> np.ndarray:

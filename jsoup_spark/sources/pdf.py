@@ -16,8 +16,9 @@ the content-stream language a text extractor needs:
 * object streams (/Type/ObjStm compressed objects);
 * stream filters with chaining and /DecodeParms: FlateDecode (zlib)
   with PNG predictors 10-15 and TIFF predictor 2, LZWDecode
-  (MSB-first, early change, same bitstream family as the
-  libtiff-validated operators/tiff.py codec), ASCIIHexDecode,
+  (MSB-first, early change: decoded by the libtiff-validated
+  operators/tiff.py LZW decoder with the EarlyChange parameter),
+  ASCIIHexDecode,
   ASCII85Decode, RunLengthDecode;
 * page tree walk with attribute inheritance (/Resources via /Parent);
 * content-stream interpreter for the text object machine: BT/ET,
@@ -404,68 +405,6 @@ def _tiff_predict(data: bytes, colors: int, bpc: int, columns: int) -> bytes:
     return bytes(out)
 
 
-def _lzw_decode(data: bytes, early: int = 1) -> bytes:
-    """PDF LZWDecode: MSB-first, clear=256, EOD=257, width bumps
-    `early` codes before the table would overflow (default 1 — the
-    same bitstream family as operators/tiff._lzw_decode_tiff, which
-    is validated against libtiff; cross-tested in tests/test_pdf.py)."""
-    CLEAR, EOD = 256, 257
-    prefix = [0] * 4096
-    suffix = bytearray(4096)
-    out = bytearray()
-    acc = nbits = 0
-    pos, n = 0, len(data)
-    width, next_free, prev = 9, 258, -1
-    first_char = 0
-
-    def expand(code: int) -> bytearray:
-        chunk = bytearray()
-        while code >= 258:
-            chunk.append(suffix[code])
-            code = prefix[code]
-        chunk.append(code)
-        chunk.reverse()
-        return chunk
-
-    while True:
-        while nbits < width:
-            if pos >= n:
-                return bytes(out)                # implicit EOD at EOF
-            acc = (acc << 8) | data[pos]
-            pos += 1
-            nbits += 8
-        code = (acc >> (nbits - width)) & ((1 << width) - 1)
-        nbits -= width
-        if code == CLEAR:
-            width, next_free, prev = 9, 258, -1
-            continue
-        if code == EOD:
-            return bytes(out)
-        if prev < 0:
-            if code >= 256:
-                raise PDFError("LZW: bad first code")
-            out.append(code)
-            first_char = code
-            prev = code
-        else:
-            if code < next_free:
-                chunk = expand(code) if code >= 258 else bytearray([code])
-            elif code == next_free:
-                chunk = (expand(prev) if prev >= 258
-                         else bytearray([prev])) + bytes([first_char])
-            else:
-                raise PDFError("LZW: code out of range")
-            first_char = chunk[0]
-            out += chunk
-            if next_free < 4096:
-                prefix[next_free] = prev
-                suffix[next_free] = first_char
-                next_free += 1
-            prev = code
-        if next_free == (1 << width) - early and width < 12:
-            width += 1
-
-
 def _a85_decode(data: bytes) -> bytes:
     """ASCII85Decode (with z shorthand and ~> EOD). The ENCODE
     direction in tests is stdlib base64.a85encode — an independent
@@ -557,7 +496,12 @@ def _apply_one_filter(data: bytes, name: str, parms: dict | None,
         except zlib.error:
             data = zlib.decompressobj().decompress(data)
     elif name in ("LZWDecode", "LZW"):
-        data = _lzw_decode(data, early=int(parms.get("EarlyChange", 1)))
+        from ..operators.tiff import _lzw_decode_tiff
+        early = int(parms.get("EarlyChange", 1))
+        try:
+            data = _lzw_decode_tiff(data, early=early)
+        except ValueError as ex:
+            raise PDFError(f"LZW: {ex}") from ex
     elif name in ("ASCIIHexDecode", "AHx"):
         h = bytes(c for c in data.split(b">")[0] if c not in _WS)
         if len(h) % 2:

@@ -24,9 +24,8 @@ import ctypes
 import numpy as np
 import pytest
 
-from jsoup_spark.operators import codecs
-from jsoup_spark.operators.jpeg_arith import (_QM, decode_jpeg_arith,
-                                              encode_jpeg_arith)
+from jsoup_spark.operators import codecs, multimodal
+from jsoup_spark.operators.jpeg_arith import _QM, encode_jpeg_arith
 
 try:
     import libjpeg_ref as jr
@@ -81,9 +80,8 @@ def test_encoder_cross_and_self_gates(sub, prog):
     mine = encode_jpeg_arith(img, 80, sub, progressive=prog)
     # libjpeg decodes our stream to the same pixels as our huff stream
     assert (jr.decode(mine) == jr.decode(huff)).all()
-    # our decoder agrees with our huffman path
-    assert (decode_jpeg_arith(mine) == codecs.decode_jpeg(huff)).all()
-    # dispatch: codecs.decode_jpeg routes SOF9/SOF10 natively
+    # our decoder (codecs.decode_jpeg reads SOF9/SOF10 natively) agrees
+    # with our huffman path
     assert (codecs.decode_jpeg(mine) == codecs.decode_jpeg(huff)).all()
 
 
@@ -98,15 +96,21 @@ def test_progressive_transcode_gate():
 
 def test_grayscale_both_directions():
     rng = np.random.default_rng(123)
-    img = rng.integers(0, 256, (33, 41)).astype(np.uint8)
-    huff = codecs.encode_jpeg(img, 80)
-    arith = jr.transcode(huff, arith=True)
-    assert (codecs.decode_jpeg(arith) == codecs.decode_jpeg(huff)).all()
-    mine = encode_jpeg_arith(img, 80)
-    assert (jr.decode(mine)[:, :, 0] == jr.decode(huff)[:, :, 0]).all()
-    minep = encode_jpeg_arith(img, 80, progressive=True)
-    assert (decode_jpeg_arith(minep)
-            == codecs.decode_jpeg(huff)).all()
+    noise = rng.integers(0, 256, (33, 41)).astype(np.uint8)
+    # integer-valued ramp whose IDCT hits exact-.5 ties: einsum and
+    # matmul reconstructions of the same coefficients disagree on it
+    yy, xx = np.mgrid[0:16, 0:59]
+    ramp = ((2 * xx + 2 * yy + 247) % 256).astype(np.uint8)
+    for img, q in ((noise, 80), (ramp, 73)):
+        huff = codecs.encode_jpeg(img, q)
+        arith = jr.transcode(huff, arith=True)
+        assert (codecs.decode_jpeg(arith) == codecs.decode_jpeg(huff)).all()
+        mine = encode_jpeg_arith(img, q)
+        assert (jr.decode(mine)[:, :, 0] == jr.decode(huff)[:, :, 0]).all()
+        assert (codecs.decode_jpeg(mine) == codecs.decode_jpeg(huff)).all()
+        minep = encode_jpeg_arith(img, q, progressive=True)
+        assert (codecs.decode_jpeg(minep)
+                == codecs.decode_jpeg(huff)).all()
 
 
 @pytest.mark.parametrize("ri,prog", [(1, False), (3, True), (7, False)])
@@ -118,7 +122,7 @@ def test_restart_intervals_both_engines(ri, prog):
                              restart_interval=ri)
     assert b"\xff\xdd" in ours[:300]
     # our restart stream: identical pixels through both decoders
-    assert (decode_jpeg_arith(ours) == decode_jpeg_arith(base)).all()
+    assert (codecs.decode_jpeg(ours) == codecs.decode_jpeg(base)).all()
     assert (jr.decode(ours) == jr.decode(base)).all()
     # libjpeg-origin restart stream through our decoder (coefficient-
     # exact via the lossless huffman transcode of the same stream)
@@ -139,15 +143,45 @@ def test_libjpeg_native_arith_encode_decodes():
         assert (codecs.decode_jpeg(lb) == codecs.decode_jpeg(hb)).all()
 
 
+def _poison_dc_tables(data):
+    """Set every symbol of every DC Huffman table to 100 (libjpeg
+    rejects DC symbols > 15). Entropy-coded data never holds 0xFF 0xC4,
+    so every such pair starts a DHT segment."""
+    b = bytearray(data)
+    pos = b.find(b"\xff\xc4")
+    while pos >= 0:
+        end = pos + 2 + (b[pos + 2] << 8 | b[pos + 3])
+        p = pos + 4
+        while p < end:
+            cnt = sum(b[p + 1:p + 17])
+            if b[p] >> 4 == 0:
+                b[p + 17:p + 17 + cnt] = bytes([100]) * cnt
+            p += 17 + cnt
+        pos = b.find(b"\xff\xc4", end)
+    return bytes(b)
+
+
 def test_truncation_and_corruption_contract():
     """decode_jpeg degrades to ValueError (or a best-effort decode for
-    mid-entropy corruption), never a raw IndexError/KeyError — the
-    one-bad-document-must-not-kill-the-task pipeline contract."""
+    mid-entropy corruption), never a raw IndexError/KeyError/
+    OverflowError — the one-bad-document-must-not-kill-the-task pipeline
+    contract."""
     rng = np.random.default_rng(11)
     img = _img(rng, 40, 52, "noise")
+    # DC Huffman symbols > 15 are rejected when the DHT is read
+    poisoned = _poison_dc_tables(jr.encode(img, 80, progressive=True))
+    with pytest.raises(ValueError):
+        codecs.decode_jpeg(poisoned)
+    assert multimodal.decode_image_array(poisoned) is None
+    # a frame without any scan is an error, not a flat gray image
+    arith = encode_jpeg_arith(img)
+    with pytest.raises(ValueError):
+        codecs.decode_jpeg(arith[:arith.index(b"\xff\xda")])
     streams = [encode_jpeg_arith(img, 75),
                encode_jpeg_arith(img, 75, "420", progressive=True),
-               encode_jpeg_arith(img, 75, restart_interval=3)]
+               encode_jpeg_arith(img, 75, restart_interval=3),
+               codecs.encode_jpeg(img, 75),
+               jr.encode(img, 75, progressive=True, restart_interval=2)]
     for s in streams:
         for cut in range(2, len(s), 53):
             try:
@@ -171,5 +205,5 @@ def test_tiny_and_extreme_quality():
             mine = encode_jpeg_arith(img, q)
             huff = codecs.encode_jpeg(img, q)
             assert (jr.decode(mine) == jr.decode(huff)).all()
-            assert (decode_jpeg_arith(mine)
+            assert (codecs.decode_jpeg(mine)
                     == codecs.decode_jpeg(huff)).all()

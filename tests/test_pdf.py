@@ -15,11 +15,11 @@ import zlib
 import pytest
 
 from jsoup_spark.sources.pdf import (
-    PDFDocument, Ref, Stream, _Lexer, _a85_decode, _lzw_decode,
-    _parse_tounicode, _png_predict, _rl_decode, _rl_encode,
+    PDFDocument, Ref, Stream, _Lexer, _a85_decode, _parse_tounicode,
+    _png_predict, _rl_decode, _rl_encode,
     _SimpleFont, build_pdf, decode_stream, extract_pdf, pdf_stage,
 )
-from jsoup_spark.operators.tiff import _lzw_encode_tiff
+from jsoup_spark.operators.tiff import _lzw_decode_tiff, _lzw_encode_tiff
 
 
 # ------------------------------------------------------------- filters
@@ -40,7 +40,8 @@ def test_a85_z_shorthand_and_ws():
 
 
 def test_lzw_vs_libtiff_validated_encoder():
-    """PDF LZWDecode (EarlyChange=1) consumes the exact bitstream the
+    """The shared LZW decoder, run as PDF LZWDecode runs it
+    (EarlyChange=1, until EOD), consumes the exact bitstream the
     libtiff-validated TIFF LZW encoder emits — including table-growth
     width switches and the KwKwK self-referencing case."""
     rng = random.Random(11)
@@ -53,7 +54,7 @@ def test_lzw_vs_libtiff_validated_encoder():
         b"ABABABABAB" * 3,                               # KwKwK
     ]
     for data in cases:
-        assert _lzw_decode(_lzw_encode_tiff(data)) == data
+        assert _lzw_decode_tiff(_lzw_encode_tiff(data)) == data
 
 
 def test_runlength_roundtrip_and_spec():
