@@ -2,7 +2,7 @@
 
 Brotli is the second web content-encoding (`Content-Encoding: br`)
 after gzip; this decoder extends the ingest tier
-(sources/ingest.maybe_inflate handles gzip/zlib) to .br payloads with
+(sources/ingest._inflate handles gzip/zlib) to .br payloads with
 no external codec dependency at runtime.
 
 Complete static-format coverage: stream header (window bits),

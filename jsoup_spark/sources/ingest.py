@@ -70,12 +70,14 @@ def _inflate(data: bytes) -> bytes:
     before charset detection (reference: DataUtil.openStream sniffs
     0x1f 0x8b on .gz/.z files and wraps in GZIPInputStream,
     helper/DataUtil.java:153-165; WARC-style sources land payloads
-    gzipped). Non-compressed or truncated payloads pass through."""
+    gzipped). Non-compressed, truncated or corrupt payloads pass
+    through."""
     if len(data) >= 2 and data[0] == 0x1F and data[1] == 0x8B:
         import gzip
+        import zlib
         try:
             return gzip.decompress(data)
-        except (OSError, EOFError):
+        except (OSError, EOFError, zlib.error):
             return data
     # zlib stream: 0x78 CMF with a valid FCHECK byte (0x9c most common)
     if len(data) >= 2 and data[0] == 0x78 and (data[0] * 256 + data[1]) % 31 == 0:

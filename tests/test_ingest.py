@@ -1,11 +1,39 @@
-"""Charset detection / raw-bytes ingest tests, incl. the reference's
-meta-charset fixture files."""
+"""Charset detection / raw-bytes ingest tests.
+
+Every test runs on in-repo bytes: literals, the `golden_tree.json`
+inputs and the meta-charset pages of `_charset_pages`. The gzip and
+meta-charset tests also replay the reference's own `htmltests/` files
+wherever a reference checkout exists at `/root/reference`.
+"""
 
 import glob
 import gzip
 
+from conftest import load_fixture
+
 from jsoup_spark.parser.treebuilder import parse
 from jsoup_spark.sources.ingest import decode_html_bytes, detect_charset
+
+REF_HTMLTESTS = "/root/reference/src/test/resources/htmltests"
+
+KOREAN = "가각갂갃간갅"
+
+
+def _charset_pages():
+    """(bytes, body text) pairs: non-UTF-8 pages whose charset is only
+    declared by a meta tag, so a UTF-8 default would mis-decode them."""
+    pages = [
+        ('<meta charset="euc-kr">', KOREAN, "euc-kr"),
+        ('<meta http-equiv=Content-Type content="text/html; charset=EUC-KR">',
+         KOREAN, "euc-kr"),
+        ("<meta charset='ISO-8859-1'>", "Café crème, à la française",
+         "iso-8859-1"),
+        ('<meta http-equiv="Content-Type" '
+         'content="text/html; charset=Shift_JIS">', "日本語のテキスト",
+         "shift_jis"),
+    ]
+    return [(f"<html><head>{meta}</head><body>{text}</body></html>"
+             .encode(enc), text) for meta, text, enc in pages]
 
 
 def test_bom_detection():
@@ -34,14 +62,18 @@ def test_xml_decl_and_default():
 def test_gzip_inflation():
     """Gzipped payloads must decode byte-identically to their plain form
     (DataUtil.openStream magic-byte sniff, helper/DataUtil.java:153-165),
-    including a gzipped non-UTF-8 page whose charset is sniffed AFTER
-    inflation."""
+    including gzipped non-UTF-8 pages whose charset is sniffed AFTER
+    inflation. Inputs: the `golden_tree.json` pages as UTF-8 and the
+    meta-charset pages of `_charset_pages`, plus the first three
+    reference `htmltests/` files where a reference checkout exists."""
     import zlib
-    wild = sorted(glob.glob(
-        "/root/reference/src/test/resources/htmltests/*.html"))[:3]
-    assert wild
-    for f in wild:
-        plain = open(f, "rb").read()
+    wild = [open(f, "rb").read()
+            for f in sorted(glob.glob(REF_HTMLTESTS + "/*.html"))[:3]]
+    inputs = wild + [case["html"].encode("utf-8")
+                     for case in load_fixture("golden_tree.json")]
+    inputs += [data for data, _ in _charset_pages()]
+    assert inputs
+    for plain in inputs:
         assert decode_html_bytes(gzip.compress(plain)) == \
             decode_html_bytes(plain)
         assert decode_html_bytes(zlib.compress(plain)) == \
@@ -52,20 +84,31 @@ def test_gzip_inflation():
     assert decode_html_bytes(b"\x1f<p>x</p>") == "\x1f<p>x</p>"
     # truncated gzip: passthrough (decoded with replacement), no raise
     decode_html_bytes(gzip.compress(b"<p>hello</p>")[:6])
+    # valid gzip header, corrupt deflate body (0b11 = reserved block
+    # type): passthrough, no raise
+    bad = bytearray(gzip.compress(b"<p>hello</p>"))
+    bad[10] |= 0x06
+    decode_html_bytes(bytes(bad))
 
 
 def test_reference_charset_fixtures():
-    """The reference's meta-charset test files must decode to parseable
-    documents with non-empty text."""
-    files = sorted(
-        glob.glob("/root/reference/src/test/resources/htmltests/meta-charset-*.html"))
-    assert files
-    for f in files:
-        data = open(f, "rb").read()
+    """Meta-charset pages must decode to parseable documents with
+    non-empty text: the in-repo pages of `_charset_pages` (EUC-KR by
+    `<meta charset>` and by `http-equiv`, ISO-8859-1, Shift_JIS) always,
+    and the reference's `meta-charset-*.html` files where a reference
+    checkout exists. The in-repo pages must decode to exactly the text
+    they were encoded from."""
+    files = sorted(glob.glob(REF_HTMLTESTS + "/meta-charset-*.html"))
+    pages = [(open(f, "rb").read(), None) for f in files]
+    pages += _charset_pages()
+    assert pages
+    for data, expected in pages:
         text = decode_html_bytes(data)
         doc = parse(text)
         assert doc.body is not None
         assert "가각갂갃간갅" in doc.body.text() or doc.body.text()
+        if expected is not None:
+            assert doc.body.text() == expected
 
 
 def test_load_file_and_stream(tmp_path):

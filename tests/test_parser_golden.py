@@ -8,11 +8,15 @@ inside doctype names; we treat them as single codepoints.
 
 import gzip
 import hashlib
+import os
 
+import pytest
 from conftest import load_fixture
 
 from jsoup_spark.extract.canonical import canonical
 from jsoup_spark.parser.treebuilder import parse, parse_fragment
+
+REF_RESOURCES = "/root/reference/src/test/resources"
 
 
 def test_tree_golden():
@@ -33,7 +37,14 @@ def test_fragment_golden():
         assert mine == case["tree"], (case, mine)
 
 
+@pytest.mark.skipif(not os.path.isdir(REF_RESOURCES + "/htmltests"),
+                    reason=REF_RESOURCES + "/htmltests is missing: the wild "
+                    "corpus hashed in golden_wild.json is not here")
 def test_wild_corpus_hashes():
+    """The reference's wild-HTML corpus must parse to the canonical-tree
+    and body-text SHA-256s in `golden_wild.json`. Skipped where the
+    reference checkout (`htmltests/`) is missing; where it exists, a
+    file missing from it fails the test."""
     from jsoup_spark.parser.nodes import Document
     cases = load_fixture("golden_wild.json")
     for case in cases:
@@ -61,13 +72,16 @@ def test_xml_golden():
     assert bad == 0, f"{bad} xml tree mismatches"
 
 
+@pytest.mark.skipif(not os.path.isdir(REF_RESOURCES + "/fuzztests"),
+                    reason=REF_RESOURCES + "/fuzztests is missing: the "
+                    "reference's OSS-Fuzz regression corpus is not here")
 def test_fuzz_corpus_no_crash():
     """The reference's OSS-Fuzz regression corpus must parse without
-    exceptions or pathological slowdown (ParserSoakIT-style bound)."""
+    exceptions or pathological slowdown (ParserSoakIT-style bound).
+    Skipped where the reference checkout (`fuzztests/`) is missing."""
     import glob
     import time
-    files = sorted(glob.glob(
-        "/root/reference/src/test/resources/fuzztests/*.gz"))
+    files = sorted(glob.glob(REF_RESOURCES + "/fuzztests/*.gz"))
     assert files
     for f in files:
         data = gzip.open(f, "rb").read().decode("utf-8", errors="replace")
