@@ -10,7 +10,6 @@ normalize/trim options (nodes/Entities.java:186-300). UTF-8 output charset
 
 from __future__ import annotations
 
-import os
 import re
 
 from ..parser import tags
@@ -63,21 +62,17 @@ DEFAULT = OutputSettings()
 # Optional C pretty-printer (same strict-subset/bail design as the parser
 # accelerators; the Python printer below remains the source of truth and
 # the fallback for every non-dominant configuration).
-_CSER = None
-if not os.environ.get("JSOUP_FASTSER_DISABLE"):
-    try:
-        from .._native import jsoup_fastser as _mod
-
-        if hasattr(_mod, "serialize_pretty"):
-            _mod.configure(
-                Element, PseudoTextElement, Document, TextNode, CDataNode,
-                DataNode, CommentNode, DoctypeNode, XmlDeclNode,
-                tags._HTML_FLAGS, tags.TAG_FLAGS, NS_HTML, BOOLEAN_ATTRS,
-                tags.KNOWN, tags.VOID, tags.BLOCK, tags.INLINE_CONTAINER,
-                tags.SELF_CLOSE, tags.SEEN_SELF_CLOSE, tags.PRESERVE_WS)
-            _CSER = _mod
-    except ImportError:  # pragma: no cover - extension not built
-        _CSER = None
+try:
+    from .._native import jsoup_fastser as _CSER
+except ImportError:  # pragma: no cover - extension not built
+    _CSER = None
+else:
+    _CSER.configure(
+        Element, PseudoTextElement, Document, TextNode, CDataNode,
+        DataNode, CommentNode, DoctypeNode, XmlDeclNode,
+        tags._HTML_FLAGS, tags.TAG_FLAGS, NS_HTML, BOOLEAN_ATTRS,
+        tags.KNOWN, tags.VOID, tags.BLOCK, tags.INLINE_CONTAINER,
+        tags.SELF_CLOSE, tags.SEEN_SELF_CLOSE, tags.PRESERVE_WS)
 
 
 def _c_eligible(settings: OutputSettings) -> bool:

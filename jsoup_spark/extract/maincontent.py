@@ -36,6 +36,7 @@ Element.java); the scoring layer is public readability knowledge.
 from __future__ import annotations
 
 import re
+from operator import itemgetter
 
 from ..parser import tags as _tags
 from ..parser.nodes import (
@@ -232,4 +233,6 @@ def main_content_stage(docs: "DataFrame") -> "DataFrame":
     score_e3, text). Map-only stage (operators.pipeline.page_stage)."""
     from .. import schemas
     from ..operators.pipeline import page_stage
-    return page_stage(docs, extract_main, schemas.MAIN_CONTENT_OUT)
+    row = itemgetter(*schemas.MAIN_CONTENT_OUT.names[1:])
+    return page_stage(docs, lambda doc: [row(extract_main(doc))],
+                      schemas.MAIN_CONTENT_OUT)

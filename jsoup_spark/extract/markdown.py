@@ -255,5 +255,5 @@ def markdown_stage(docs: "DataFrame") -> "DataFrame":
     (operators.pipeline.page_stage)."""
     from .. import schemas
     from ..operators.pipeline import page_stage
-    return page_stage(docs, lambda doc: {"markdown": to_markdown(doc)},
+    return page_stage(docs, lambda doc: [(to_markdown(doc),)],
                       schemas.MARKDOWN_OUT)

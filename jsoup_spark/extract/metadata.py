@@ -44,6 +44,7 @@ canonical); the vocabularies are public standards.
 from __future__ import annotations
 
 import json
+from operator import itemgetter
 from typing import Any
 
 from ..parser.nodes import Document, Element
@@ -203,4 +204,6 @@ def metadata_stage(docs: "DataFrame") -> "DataFrame":
     stage (operators.pipeline.page_stage)."""
     from .. import schemas
     from ..operators.pipeline import page_stage
-    return page_stage(docs, extract_metadata, schemas.METADATA_OUT)
+    row = itemgetter(*schemas.METADATA_OUT.names[1:])
+    return page_stage(docs, lambda doc: [row(extract_metadata(doc))],
+                      schemas.METADATA_OUT)

@@ -33,18 +33,15 @@ DATA_SPAN_TAGS = frozenset(("script", "style"))
 # accelerators; _walk below remains the source of truth and fallback)
 try:
     from .._native import jsoup_fasttree as _CW
-
-    if hasattr(_CW, "walk_spans"):
-        from ..parser.nodes import (
-            CDataNode as _CD, CommentNode as _CM, DataNode as _DN,
-            resolve_url as _resolve)
-        _CW.configure_walk(MEDIA_TAGS, DATA_SPAN_TAGS, _resolve,
-                           _CD, _DN, _CM,
-                           tags.BLOCK, tags.TEXT_BOUNDARY, tags.PRESERVE_WS)
-    else:  # pragma: no cover - stale .so without the walker
-        _CW = None
 except ImportError:  # pragma: no cover - extension not built
     _CW = None
+else:
+    from ..parser.nodes import (
+        CDataNode as _CD, CommentNode as _CM, DataNode as _DN,
+        resolve_url as _resolve)
+    _CW.configure_walk(MEDIA_TAGS, DATA_SPAN_TAGS, _resolve,
+                       _CD, _DN, _CM,
+                       tags.BLOCK, tags.TEXT_BOUNDARY, tags.PRESERVE_WS)
 
 
 def extract_spans(doc: Document) -> list[tuple[str, str, str, int]]:
@@ -53,7 +50,7 @@ def extract_spans(doc: Document) -> list[tuple[str, str, str, int]]:
     # C fast path for the common title shape (leaf text children only);
     # NotImplemented -> the Python Document.title() source of truth
     title = NotImplemented
-    if _CW is not None and hasattr(_CW, "title_text"):
+    if _CW is not None:
         title = _CW.title_text(doc)
     if title is NotImplemented:
         title = doc.title()

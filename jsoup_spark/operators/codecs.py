@@ -847,6 +847,8 @@ def _jpeg_scan_header(seg: bytes, frame):
     ns = seg[0]
     if not 1 <= ns <= 4:
         raise ValueError("bad JPEG scan component count")
+    if len(seg) != 4 + 2 * ns:  # T.81 B.2.3: Ls = 6 + 2 * Ns
+        raise ValueError("bad JPEG scan header length")
     scomps = []
     for i in range(ns):
         cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]

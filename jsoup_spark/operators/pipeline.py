@@ -1,19 +1,20 @@
 """The extraction pipeline: tokenize → tree-build → extract → spans.
 
 Spark-first layering:
-* plan-level stages (reassembly, bucketing, joins, aggregation) are pure
-  Catalyst expressions;
+* plan-level stages (reassembly, joins, aggregation) are pure Catalyst
+  expressions;
 * the per-document algorithms (WHATWG parse, selector eval, cleaning) run
   inside one ``mapInArrow`` kernel, ``doc_stage``, over Arrow batches —
   batched, never row-at-a-time Python UDFs. Every per-document Python
   stage (the parse-gated ones here, the binary-payload sources, the media
   codecs, the dedup and fingerprint hashes) is its Catalyst preparation
-  plus a ``per_doc`` function handed to that kernel.
+  plus a ``per_doc`` function handed to that kernel. Every stage that
+  parses one HTML page and walks it (select, css_path, clean, main
+  content, metadata, markdown) is one emitter handed to ``page_stage``.
 
 Scale design (north rule):
-* ``bucket_by_size`` hash-partitions on (log2 html length, salt) so each
-  size class of a heavy tail spreads over many partitions instead of
-  straggling one;
+* ``extract_stage``'s ``stream_threshold`` is the giant-document
+  backstop: a document past it is parsed and extracted in chunks;
 * spark.sql.execution.arrow.maxRecordsPerBatch bounds the rows, not the
   bytes, of an Arrow batch: a batch of giant docs is not memory-bounded
   (a byte budget is ROADMAP direction 6);
@@ -40,7 +41,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from .. import schemas
 from ..clean import safelist as safelist_mod
 from ..clean.cleaner import clean_document
-from ..clean.serializer import DEFAULT, OutputSettings, inner_html
+from ..clean.serializer import inner_html
 from ..extract.spans import extract_spans, stream_spans
 from ..parser.nodes import Element
 from ..parser.treebuilder import HtmlTreeBuilder, parse
@@ -52,12 +53,10 @@ from ..sources.corpus import BASE_URI, assemble_html, span_html
 
 
 def bucket_by_size(df: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Hash-partition docs on (size_class, salt) so giant docs spread.
-
-    At 100TB this is the skew lever: size_class is ceil(log2(html_len)),
-    and the salt spreads each class over up to 64 partitions, so the
-    docs of one heavy size class do not all land in one partition
-    (SURVEY §4.3)."""
+    """Hash-partition an ``assemble_html`` frame on (size_class, salt):
+    size_class is ceil(log2(html_len)) and the salt spreads each class
+    over up to 64 partitions. No stage calls it; it is kept as the plan
+    that perfbench's ``operators.partition_bytes_skew`` probe measures."""
     if partitions is None:
         partitions = df.sparkSession.sparkContext.defaultParallelism
     salted = df.withColumn(
@@ -132,17 +131,17 @@ def doc_stage(prepared: DataFrame, in_cols: Sequence[str],
         run, schema=out_schema)
 
 
-def page_stage(docs: DataFrame, per_page: Callable[..., dict],
+def page_stage(docs: DataFrame, emit: Callable[..., Sequence[tuple]],
                out_schema: T.StructType) -> DataFrame:
-    """(doc_id, html[, base_uri]) -> one row per page: the ``out_schema``
-    fields of the dict ``per_page`` returns for the parsed page. A null
-    html or base_uri reads as ""."""
-    fields = out_schema.names[1:]
+    """(doc_id, html[, base_uri]) -> the rows ``emit(doc)`` returns for
+    each parsed page, as tuples of the ``out_schema`` fields after the
+    key: one row for a 1:1 stage, any number for a 1:N stage. The base
+    URI comes from the ``base_uri`` column when there is one; a null html
+    or base_uri reads as ""."""
     in_cols = ["html"] + (["base_uri"] if "base_uri" in docs.columns else [])
 
     def per_doc(html, base_uri=""):
-        r = per_page(parse(html or "", base_uri or ""))
-        return [tuple(r[f] for f in fields)]
+        return emit(parse(html or "", base_uri or ""))
 
     return doc_stage(docs, in_cols, per_doc, out_schema)
 
@@ -163,24 +162,18 @@ def _compiled(language: str, query: str):
 
 # ---------------------------------------------------------------- extract
 
-def extract_stage(docs: DataFrame, *, bucket: bool = False,
+def extract_stage(docs: DataFrame, *,
                   stream_threshold: int = 8 << 20) -> DataFrame:
     """Interleaved span table -> extracted span table (+ per-doc metrics).
 
     Input: (doc_id, spans) per schemas.DOC_IN. Output: schemas.EXTRACT_OUT.
-
-    ``bucket=True`` adds the size-class/salt shuffle for corpora with a
-    heavy giant-document tail. Default off: for byte-balanced inputs
-    (e.g. size-partitioned Iceberg writes or uniform scrapes) the shuffle
-    of the full html payload costs more than the skew it prevents; turn it
-    on when a partition can end up owning multiple 100MB documents.
 
     ``stream_threshold``: docs whose html exceeds this many chars take the
     progressive StreamParser path (extract.spans.stream_spans) — completed
     top-level chunks are extracted and pruned as the parse advances, so a
     100MB document never holds its full DOM in worker memory (the
     giant-doc backstop; output is identical to the full-parse path).
-    Set 0 to force streaming, or a negative value to disable.
+    Set 0 to force streaming.
     """
     # html + input media spans in ONE projection — a join here would shuffle
     # the whole corpus against itself. Media spans sort on offset-first
@@ -190,23 +183,16 @@ def extract_stage(docs: DataFrame, *, bucket: bool = False,
         lambda s: F.struct(s["offset"].alias("offset"),
                            s["text"].alias("text"),
                            s["media_ref"].alias("media_ref"))))
-    # column-pruning audit (r8): base_uri is a corpus-level constant and
-    # html_len is only the bucketing key — neither belongs in the Arrow
-    # transfer. BASE_URI rides the closure; html_len exists only on the
-    # bucketed plan and is dropped again before the exchange output is
-    # serialized to Python.
+    # column-pruning audit (r8): base_uri is a corpus-level constant, so it
+    # rides the closure instead of the Arrow transfer
     prepared = docs.select(
         "doc_id",
         span_html().alias("html"),
         media_in.alias("_media_in"),
     )
-    if bucket:
-        prepared = bucket_by_size(
-            prepared.withColumn("html_len", F.length("html"))
-        ).drop("html_len")
 
     def per_doc(html, media):
-        if 0 <= stream_threshold < len(html):
+        if len(html) > stream_threshold:
             errors: list = []
             spans = stream_spans(html, BASE_URI, errors_out=errors)
         else:
@@ -238,8 +224,8 @@ def partition_metrics(extracted: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------- select
 
-def select_stage(docs: DataFrame, query: str, *, bucket: bool = False,
-                 first_only: bool = False, language: str = "css") -> DataFrame:
+def select_stage(docs: DataFrame, query: str, *,
+                 language: str = "css") -> DataFrame:
     """CSS- or XPath-select over each document; one output row per match.
 
     The query is compiled once per worker process (cost-ordered evaluator
@@ -255,21 +241,14 @@ def select_stage(docs: DataFrame, query: str, *, bucket: bool = False,
         evaluate = select
     else:
         from ..select.xpath import select_xpath as evaluate
-    prepared = assemble_html(docs)
-    if bucket:
-        prepared = bucket_by_size(prepared)
 
-    def per_doc(html):
-        matches = evaluate(parse(html, BASE_URI), _compiled(language, query))
-        if first_only:
-            matches = matches[:1]
+    def emit(doc):
         return [(i, el.name, el.attr("id"), el.own_text(), el.text(),
                  [(k, "" if v is None else v) for k, v in el.attrs.items()])
-                for i, el in enumerate(matches)]
+                for i, el in enumerate(
+                    evaluate(doc, _compiled(language, query)))]
 
-    # doc_stage prunes the Arrow transfer to (doc_id, html): base_uri is a
-    # corpus constant (closure) and html_len only keys the bucket shuffle
-    return doc_stage(prepared, ["html"], per_doc, schemas.SELECT_OUT)
+    return page_stage(assemble_html(docs), emit, schemas.SELECT_OUT)
 
 
 def positions_stage(docs: DataFrame, query: str) -> DataFrame:
@@ -295,8 +274,7 @@ def positions_stage(docs: DataFrame, query: str) -> DataFrame:
 
 # ------------------------------------------------------- fragment / xml
 
-def fragment_stage(docs: DataFrame, context: str,
-                   fragment_col: str = "fragment_html") -> DataFrame:
+def fragment_stage(docs: DataFrame, context: str) -> DataFrame:
     """Fragment parse in a context element (Parser.parseFragment,
     reference HtmlTreeBuilder.java:88-143): one output row per top-level
     parsed node that is an element — (doc_id, node_idx, tag, text).
@@ -309,10 +287,10 @@ def fragment_stage(docs: DataFrame, context: str,
                if isinstance(n, Element)]
         return [(i, el.name, el.text()) for i, el in enumerate(els)]
 
-    return doc_stage(docs, [fragment_col], per_doc, schemas.FRAGMENT_OUT)
+    return doc_stage(docs, ["fragment_html"], per_doc, schemas.FRAGMENT_OUT)
 
 
-def xml_stage(docs: DataFrame, xml_col: str = "xml") -> DataFrame:
+def xml_stage(docs: DataFrame) -> DataFrame:
     """XML parse (Parser.xmlParser semantics, reference parser/
     XmlTreeBuilder.java): one output row per element in document order —
     (doc_id, el_idx, tag, own_text). CDATA sections contribute to text."""
@@ -327,29 +305,25 @@ def xml_stage(docs: DataFrame, xml_col: str = "xml") -> DataFrame:
                 stack.extend(reversed(n.children))
         return rows
 
-    return doc_stage(docs, [xml_col], per_doc, schemas.XML_OUT)
+    return doc_stage(docs, ["xml"], per_doc, schemas.XML_OUT)
 
 
 # ---------------------------------------------------------------- clean
 
-def clean_stage(docs: DataFrame, safelist_name: str = "basic",
-                pretty: bool = True) -> DataFrame:
+def clean_stage(docs: DataFrame, safelist_name: str = "basic") -> DataFrame:
     """Safelist-clean each document; emits cleaned html + text + counters."""
     if safelist_name not in safelist_mod.PRESETS:
         raise ValueError(f"unknown safelist {safelist_name!r}")
     sl = safelist_mod.PRESETS[safelist_name]()
-    settings = DEFAULT if pretty else OutputSettings(pretty=False)
 
-    def per_doc(html):
-        result = clean_document(parse(html, BASE_URI), sl)
+    def emit(doc):
+        result = clean_document(doc, sl)
         body = result.doc.body
         if body is None:
             return [("", "", result.num_discarded)]
-        return [(inner_html(body, settings), body.text(),
-                 result.num_discarded)]
+        return [(inner_html(body), body.text(), result.num_discarded)]
 
-    return doc_stage(assemble_html(docs), ["html"], per_doc,
-                     schemas.CLEAN_OUT)
+    return page_stage(assemble_html(docs), emit, schemas.CLEAN_OUT)
 
 
 # ---------------------------------------------------------------- helpers
@@ -377,17 +351,14 @@ def css_path_stage(docs: DataFrame, query: str) -> DataFrame:
     from ..extract.functions import css_selector
     _compiled("css", query)
 
-    def per_doc(html):
-        doc = parse(html, BASE_URI)
+    def emit(doc):
         return [(i, css_selector(el))
                 for i, el in enumerate(select(doc, _compiled("css", query)))]
 
-    return doc_stage(assemble_html(docs), ["html"], per_doc,
-                     schemas.CSS_PATH_OUT)
+    return page_stage(assemble_html(docs), emit, schemas.CSS_PATH_OUT)
 
 
-def xpath_xml_stage(docs: DataFrame, query: str,
-                    xml_col: str = "xml") -> DataFrame:
+def xpath_xml_stage(docs: DataFrame, query: str) -> DataFrame:
     """XPath select over XML-PARSED documents (the reference's
     Element.selectXpath over Parser.xmlParser output — preserved tag
     case, prefix rules, PI/doctype invisibility; select/xpath.py,
@@ -402,4 +373,4 @@ def xpath_xml_stage(docs: DataFrame, query: str,
         return [(i, el.tag_name_case or el.name, el.own_text())
                 for i, el in enumerate(matches)]
 
-    return doc_stage(docs, [xml_col], per_doc, schemas.XPATH_XML_OUT)
+    return doc_stage(docs, ["xml"], per_doc, schemas.XPATH_XML_OUT)

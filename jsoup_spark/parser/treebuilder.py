@@ -179,9 +179,6 @@ def _build_fasttree_actions() -> dict:
         "listing", "optgroup", "option", "rb", "rtc", "rp", "rt",
     }
 
-    import os as _os
-    _disable = set(_os.environ.get("JSOUP_FT_DISABLE", "").split(","))
-
     def sact(name):
         fl = tags.flags(name)
         if name in C_P_CLOSERS:
@@ -191,21 +188,21 @@ def _build_fasttree_actions() -> dict:
         if name in C_SIMPLE_VOIDS:
             return SA_VOID_RECON
         if name == "a":
-            return SA_BAIL if "a" in _disable else SA_A
+            return SA_A
         if name in C_HEADINGS:
-            return SA_BAIL if "heading" in _disable else SA_HEADING
+            return SA_HEADING
         if name == "input":
-            return SA_BAIL if "input" in _disable else SA_INPUT
+            return SA_INPUT
         if name in ("link", "meta", "basefont", "bgsound"):
             # in-body -> in-head rules -> plain empty insert ("base" keeps
             # bailing: it carries the maybe_set_base rebase side-effect)
-            return SA_BAIL if "tohead" in _disable else SA_TO_HEAD_EMPTY
+            return SA_TO_HEAD_EMPTY
         if name == "button":
-            return SA_BAIL if "button" in _disable else SA_BUTTON
+            return SA_BUTTON
         if name in ("title", "script", "style", "noframes"):
             # in-body -> in-head rules -> _handle_text_state (tokenizer
             # switch + TEXT mode with original_state = IN_BODY)
-            return SA_BAIL if "textswitch" in _disable else SA_TEXT_SWITCH
+            return SA_TEXT_SWITCH
         if name == "span":
             return SA_PLAIN_RECON
         if name == "li":
@@ -226,15 +223,15 @@ def _build_fasttree_actions() -> dict:
         if name in C_END_CLOSERS:
             return EA_CLOSER
         if name in C_ADOPTION_FORMATTERS:
-            return EA_BAIL if "fmt" in _disable else EA_FMT
+            return EA_FMT
         if name == "body":
-            return EA_BAIL if "endgame" in _disable else EA_BODY
+            return EA_BODY
         if name == "html":
-            return EA_BAIL if "endgame" in _disable else EA_HTML
+            return EA_HTML
         if name in ("template", "form", "br"):
             return EA_BAIL
         if name in C_HEADINGS:
-            return EA_BAIL if "heading" in _disable else EA_HEADING
+            return EA_HEADING
         if name in C_APPLETS:
             return EA_BAIL
         if name == "li":
@@ -2895,49 +2892,39 @@ if _FT is not None:
          "no matching element", "cannot close through special element",
          "nested heading", "no heading in scope"),
         IN_BODY, tags.DATA, _CommentNode)
-    if hasattr(_FT, "configure_head"):
-        from .nodes import CDataNode as _CDataNode, DataNode as _DataNode
-        from .nodes import resolve_url as _resolve_url
+    from .nodes import CDataNode as _CDataNode, DataNode as _DataNode
+    from .nodes import resolve_url as _resolve_url
 
-        _FT.configure_head(
-            C_IN_HEAD_EMPTY, _resolve_url, _DataNode, _CDataNode,
-            BEFORE_HEAD, IN_HEAD, AFTER_HEAD, TEXT,
-            tz.RCDATA, tz.RAWTEXT, tz.SCRIPT_DATA)
-        #: insertion modes the C applier may enter with
-        _FT_STATES = frozenset(
-            (IN_BODY, BEFORE_HEAD, IN_HEAD, AFTER_HEAD, TEXT))
-        if hasattr(_FT, "configure_tokens"):
-            from . import tokenizer as _tz_mod
-            if _tz_mod._C is not None:
-                _FT.configure_tokens(_tz_mod._C.FastToken)
-        if hasattr(_FT, "configure_pump"):
-            # C-side queue refill (pump-lite): one apply() call usually
-            # covers a whole document instead of one per tokenizer batch
-            _FT.configure_pump(tz._STATES, tz.Character)
-        if hasattr(_FT, "configure_scan"):
-            # full pump: apply() runs the Data-state scanner itself
-            # (struct tokens, no FastToken/deque round trip); same
-            # grammar + stop set as jsoup_fastscan, which remains the
-            # source of truth for the non-pump path
-            _FT.configure_scan(tz._BATCH_STOP, tz._decode_attr_value,
-                               tz.DATA)
-        if hasattr(_FT, "configure_prelude"):
-            _FT.configure_prelude(
-                C_END_OTHER_ERRORS,
-                # after-head start bails: real rules exist for these
-                # (frameset switch, misplaced head content, head error)
-                frozenset({"html", "head", "frameset"}) | C_TO_HEAD,
-                C_BEFORE_HTML_TO_HEAD,
-                # in-head start bails: html (InBody rules), noscript
-                # (noscript island), head (error+ignore), template
-                frozenset({"html", "noscript", "head", "template"}),
-                INITIAL, BEFORE_HTML, AFTER_BODY, AFTER_AFTER_BODY,
-                ("body not in scope", "no body open",
-                 "unexpected end tag", "unexpected end tag in head"))
-            _FT_STATES = _FT_STATES | frozenset(
-                (INITIAL, BEFORE_HTML, AFTER_BODY, AFTER_AFTER_BODY))
-    else:  # pragma: no cover - stale .so
-        _FT_STATES = frozenset((IN_BODY,))
+    _FT.configure_head(
+        C_IN_HEAD_EMPTY, _resolve_url, _DataNode, _CDataNode,
+        BEFORE_HEAD, IN_HEAD, AFTER_HEAD, TEXT,
+        tz.RCDATA, tz.RAWTEXT, tz.SCRIPT_DATA)
+    if tz._C is not None:
+        _FT.configure_tokens(tz._C.FastToken)
+    # C-side queue refill (pump-lite): one apply() call usually covers a
+    # whole document instead of one per tokenizer batch
+    _FT.configure_pump(tz._STATES, tz.Character)
+    # full pump: apply() runs the Data-state scanner itself (struct
+    # tokens, no FastToken/deque round trip); same grammar + stop set as
+    # jsoup_fastscan, which remains the source of truth for the non-pump
+    # path
+    _FT.configure_scan(tz._BATCH_STOP, tz._decode_attr_value, tz.DATA)
+    _FT.configure_prelude(
+        C_END_OTHER_ERRORS,
+        # after-head start bails: real rules exist for these (frameset
+        # switch, misplaced head content, head error)
+        frozenset({"html", "head", "frameset"}) | C_TO_HEAD,
+        C_BEFORE_HTML_TO_HEAD,
+        # in-head start bails: html (InBody rules), noscript (noscript
+        # island), head (error+ignore), template
+        frozenset({"html", "noscript", "head", "template"}),
+        INITIAL, BEFORE_HTML, AFTER_BODY, AFTER_AFTER_BODY,
+        ("body not in scope", "no body open",
+         "unexpected end tag", "unexpected end tag in head"))
+    #: insertion modes the C applier may enter with
+    _FT_STATES = frozenset(
+        (IN_BODY, BEFORE_HEAD, IN_HEAD, AFTER_HEAD, TEXT,
+         INITIAL, BEFORE_HTML, AFTER_BODY, AFTER_AFTER_BODY))
 else:
     _FT_STATES = frozenset()
 

@@ -97,7 +97,7 @@ def span_html():
     )
 
 
-def assemble_html(docs: DataFrame, base_uri_lit: str = BASE_URI) -> DataFrame:
+def assemble_html(docs: DataFrame) -> DataFrame:
     """Reconstruct raw HTML per doc (``span_html``) next to its length and
     the corpus base URI."""
     html = span_html()
@@ -105,5 +105,5 @@ def assemble_html(docs: DataFrame, base_uri_lit: str = BASE_URI) -> DataFrame:
         "doc_id",
         html.alias("html"),
         F.length(html).alias("html_len"),
-        F.lit(base_uri_lit).alias("base_uri"),
+        F.lit(BASE_URI).alias("base_uri"),
     )

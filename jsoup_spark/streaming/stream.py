@@ -31,10 +31,9 @@ def read_span_stream(spark: SparkSession, path: str,
 
 
 def extract_stream(docs_stream: DataFrame) -> DataFrame:
-    """Streaming extraction: same stage as batch, minus size bucketing
-    (repartitionByRange is not stream-safe; the file source's trigger size
-    bounds batch skew instead)."""
-    return extract_stage(docs_stream, bucket=False)
+    """Streaming extraction: the batch extract stage over a stream (the
+    file source's trigger size bounds batch skew)."""
+    return extract_stage(docs_stream)
 
 
 def run_to_parquet(docs_stream: DataFrame, out_path: str,

@@ -95,15 +95,15 @@ def test_c_serializer_differential():
 
 
 def test_c_serializer_disabled_fallback():
-    """JSOUP_FASTSER_DISABLE must leave the pure-Python printer standing
+    """Without the C printer extension the pure-Python printer stands
     alone with identical golden output (import-blocked fallback)."""
-    import json
     import os
     import subprocess
     import sys
 
     code = (
-        "import json\n"
+        "import json, sys\n"
+        "sys.modules['jsoup_spark._native.jsoup_fastser'] = None\n"
         "from jsoup_spark.clean import serializer as ser\n"
         "assert ser._CSER is None\n"
         "from jsoup_spark.parser.treebuilder import parse\n"
@@ -114,9 +114,8 @@ def test_c_serializer_disabled_fallback():
         "    bad += mine != case['out']\n"
         "print('BAD', bad)\n"
     )
-    env = dict(os.environ, JSOUP_FASTSER_DISABLE="1")
     r = subprocess.run([sys.executable, "-c", code], capture_output=True,
-                       text=True, env=env, cwd=os.path.dirname(
+                       text=True, cwd=os.path.dirname(
                            os.path.dirname(os.path.abspath(__file__))))
     assert r.returncode == 0, r.stderr
     assert "BAD 0" in r.stdout

@@ -307,6 +307,32 @@ def test_decode_jpeg_truncated_raises_valueerror():
             pass  # clean rejection is fine; silent best-effort decode too
 
 
+def test_jpeg_sos_length_must_match_component_count():
+    """T.81 B.2.3: an SOS segment is 6 + 2*Ns bytes long. A stream whose
+    SOS states a longer length hides entropy-coded bytes inside the
+    header; libjpeg rejects it (JERR_BAD_LENGTH), and so must decode_jpeg.
+    Without the length check each of these six streams decodes to an
+    image."""
+    from jsoup_spark.operators.jpeg_arith import encode_jpeg_arith
+    try:
+        import libjpeg_ref as jr
+    except ImportError:
+        from tests import libjpeg_ref as jr
+    img = np.random.default_rng(1).integers(
+        0, 256, (16, 16, 3)).astype(np.uint8)
+    for good in (codecs.encode_jpeg(img), encode_jpeg_arith(img)):
+        assert codecs.decode_jpeg(good).shape == (16, 16, 3)
+        sos = good.index(b"\xff\xda")
+        assert good[sos + 2:sos + 4] == struct.pack(">H", 12)
+        for ls in (14, 22, 228):
+            bad = good[:sos + 2] + struct.pack(">H", ls) + good[sos + 4:]
+            with pytest.raises(ValueError):
+                codecs.decode_jpeg(bad)
+            if jr.available():
+                with pytest.raises(ValueError):
+                    jr.decode(bad)
+
+
 # Wild progressive/baseline JPEGs that ship in this environment (outside
 # the repo, existence-gated). javax.imageio via the Spark image source is
 # the independent reference decoder.

@@ -37,6 +37,38 @@ def test_fragment_golden():
         assert mine == case["tree"], (case, mine)
 
 
+def test_c_accelerators_match_python_paths(monkeypatch):
+    """The pure-Python tokeniser, tree builder and span walker are the
+    source of truth for the C tokeniser (tokenizer._C), tree-builder
+    applier (treebuilder._FT) and span walker (spans._CW). On every
+    golden input, each configuration with some of them switched off
+    gives the canonical tree, parse errors and spans of the all-C run."""
+    from jsoup_spark.extract import spans
+    from jsoup_spark.parser import tokenizer, treebuilder
+
+    htmls = [c["html"] for c in load_fixture("golden_tree.json")]
+    htmls += [c["html"] for c in load_fixture("golden_bodyhtml.json")]
+
+    def run():
+        out = []
+        for html in htmls:
+            doc = parse(html)
+            out.append((canonical(doc), list(doc.errors),
+                        spans.extract_spans(doc)))
+        return out
+
+    assert None not in (treebuilder._FT, tokenizer._C, spans._CW)
+    all_c = run()
+    for off in [[(treebuilder, "_FT")], [(tokenizer, "_C")],
+                [(treebuilder, "_FT"), (tokenizer, "_C"), (spans, "_CW")]]:
+        with monkeypatch.context() as m:
+            for mod, name in off:
+                m.setattr(mod, name, None)
+            got = run()
+        bad = [h for h, a, b in zip(htmls, all_c, got) if a != b]
+        assert not bad, ([n for _, n in off], len(bad), bad[0][:200])
+
+
 @pytest.mark.skipif(not os.path.isdir(REF_RESOURCES + "/htmltests"),
                     reason=REF_RESOURCES + "/htmltests is missing: the wild "
                     "corpus hashed in golden_wild.json is not here")
