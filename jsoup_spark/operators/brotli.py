@@ -16,7 +16,10 @@ table), context maps (RLE zeros + inverse move-to-front), NPOSTFIX /
 NDIRECT distance decomposition, the 16 distance short codes over the
 ring buffer, and STATIC DICTIONARY references with all 121 word
 transforms (OmitFirst/OmitLast/UppercaseFirst/UppercaseAll with the
-UTF-8 ferment rule).
+UTF-8 ferment rule). Bits and prefix codes go through the shared
+LSB-first reader and table-driven PrefixCode of operators/bits.py. A
+command whose copy runs past the meta-block length fails the stream,
+as it does in libbrotlidec (BROTLI_DECODER_ERROR_FORMAT_BLOCK_LENGTH_2).
 
 The normative static tables (the 122,784-byte dictionary, the
 transform triplets + prefix/suffix pool, the context lookup table —
@@ -39,6 +42,8 @@ import os
 
 import numpy as np
 
+from .bits import LsbReader, LsbWriter, PrefixCode
+
 _T = None
 
 
@@ -50,110 +55,14 @@ def _tables():
         _T = {k: z[k] for k in z.files}
         _T["dict_bytes"] = _T["dict_data"].tobytes()
         _T["pool"] = _T["prefix_suffix"].tobytes()
+        _T["context_lut"] = _T["context_lut"].tolist()
     return _T
 
 
-class _Bits:
-    """LSB-first bit reader."""
-
-    __slots__ = ("data", "pos", "acc", "nbits")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def read(self, n: int) -> int:
-        while self.nbits < n:
-            if self.pos >= len(self.data):
-                raise ValueError("brotli: truncated stream")
-            self.acc |= self.data[self.pos] << self.nbits
-            self.pos += 1
-            self.nbits += 8
-        v = self.acc & ((1 << n) - 1)
-        self.acc >>= n
-        self.nbits -= n
-        return v
-
-    def align(self):
-        if self.acc & ((1 << (self.nbits % 8)) - 1):
-            raise ValueError("brotli: non-zero padding bits")
-        self.acc >>= self.nbits % 8
-        self.nbits -= self.nbits % 8
-
-    def read_bytes(self, n: int) -> bytes:
-        assert self.nbits % 8 == 0
-        out = bytearray()
-        while self.nbits and n:
-            out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-            n -= 1
-        if n:
-            if self.pos + n > len(self.data):
-                raise ValueError("brotli: truncated uncompressed block")
-            out += self.data[self.pos:self.pos + n]
-            self.pos += n
-        return bytes(out)
-
-
-class _Code:
-    """Canonical prefix code (MSB-first code bits, as in DEFLATE)."""
-
-    __slots__ = ("counts", "firsts", "syms_at", "single")
-
-    def __init__(self, lengths, symbols=None):
-        # lengths[i] applies to symbols[i] (or symbol i)
-        if symbols is None:
-            symbols = range(len(lengths))
-        pairs = sorted((l, s) for l, s in zip(lengths, symbols) if l)
-        if len(pairs) == 1:
-            self.single = pairs[0][1]
-            return
-        self.single = None
-        maxlen = pairs[-1][0]
-        counts = [0] * (maxlen + 1)
-        for l, _ in pairs:
-            counts[l] += 1
-        firsts = [0] * (maxlen + 2)
-        code = 0
-        syms_at = [[] for _ in range(maxlen + 1)]
-        for l, s in pairs:
-            syms_at[l].append(s)
-        for l in range(1, maxlen + 1):
-            code = (code + counts[l - 1]) << 1
-            firsts[l] = code
-        self.counts = counts
-        self.firsts = firsts
-        self.syms_at = syms_at
-
-    def decode(self, br: _Bits) -> int:
-        if self.single is not None:
-            return self.single
-        code = 0
-        for l in range(1, len(self.counts)):
-            code = (code << 1) | br.read(1)
-            idx = code - self.firsts[l]
-            if 0 <= idx < self.counts[l]:
-                return self.syms_at[l][idx]
-        raise ValueError("brotli: bad prefix code")
-
-
-# static code for the code-length code lengths: symbol -> (bits, length)
-# 0:'00' 3:'01' 4:'10' 2:'110' 1:'1110' 5:'1111'
-def _read_cl_len(br: _Bits) -> int:
-    v = br.read(2)                  # LSB-first: first stream bit = MSB
-    if v == 0:                      # '00' -> 0
-        return 0
-    if v == 1:                      # '10' -> 4
-        return 4
-    if v == 2:                      # '01' -> 3
-        return 3
-    if br.read(1) == 0:             # '110' -> 2
-        return 2
-    return 1 if br.read(1) == 0 else 5   # '1110' / '1111'
-
+# the code-length code's code lengths, a fixed code (RFC 7932 3.5)
+_CL_LEN = PrefixCode.from_codewords(
+    [(0, 0b00, 2), (3, 0b01, 2), (4, 0b10, 2), (2, 0b110, 3),
+     (1, 0b1110, 4), (5, 0b1111, 4)])
 
 _CL_ORDER = (1, 2, 3, 4, 0, 5, 17, 6, 16, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
@@ -162,7 +71,7 @@ def _alphabet_bits(size: int) -> int:
     return max(1, (size - 1).bit_length())
 
 
-def _read_prefix_code(br: _Bits, alphabet: int) -> _Code:
+def _read_prefix_code(br: LsbReader, alphabet: int) -> PrefixCode:
     hskip = br.read(2)
     if hskip == 1:                          # simple code
         nsym = br.read(2) + 1
@@ -173,30 +82,19 @@ def _read_prefix_code(br: _Bits, alphabet: int) -> _Code:
             if s >= alphabet or s in syms:
                 raise ValueError("brotli: bad simple code symbol")
             syms.append(s)
-        if nsym == 1:
-            return _Code([1], syms)         # 0-bit single (via .single)
-        if nsym == 2:
-            syms.sort()
-            return _Code([1, 1], syms)
-        if nsym == 3:
-            a, b, c = syms
-            if b > c:
-                b, c = c, b
-            return _Code([1, 2, 2], [a, b, c])
+        # symbols of equal length take codes in symbol order
+        if nsym < 4:
+            return PrefixCode(((1,), (1, 1), (1, 2, 2))[nsym - 1], syms)
         if br.read(1) == 0:                 # tree-select
-            syms.sort()
-            return _Code([2, 2, 2, 2], syms)
-        a, b, c, d = syms
-        if c > d:
-            c, d = d, c
-        return _Code([1, 2, 3, 3], [a, b, c, d])
+            return PrefixCode((2, 2, 2, 2), syms)
+        return PrefixCode((1, 2, 3, 3), syms)
 
     # complex code: read the code-length code
     cl_lengths = [0] * 18
     space = 32
     num_codes = 0
     for i in range(hskip, 18):
-        ln = _read_cl_len(br)
+        ln = br.decode(_CL_LEN)
         cl_lengths[_CL_ORDER[i]] = ln
         if ln:
             space -= 32 >> ln
@@ -205,7 +103,7 @@ def _read_prefix_code(br: _Bits, alphabet: int) -> _Code:
                 break
     if num_codes != 1 and space != 0:
         raise ValueError("brotli: code-length code over/under-subscribed")
-    cl_code = _Code(cl_lengths)
+    cl_code = PrefixCode(cl_lengths)
 
     lengths = [0] * alphabet
     symbol = 0
@@ -214,7 +112,7 @@ def _read_prefix_code(br: _Bits, alphabet: int) -> _Code:
     repeat = 0
     repeat_len = 0
     while symbol < alphabet and space > 0:
-        cl = cl_code.decode(br)
+        cl = br.decode(cl_code)
         if cl < 16:
             lengths[symbol] = cl
             symbol += 1
@@ -243,10 +141,10 @@ def _read_prefix_code(br: _Bits, alphabet: int) -> _Code:
     nz = sum(1 for x in lengths if x)
     if nz != 1 and space != 0:
         raise ValueError("brotli: prefix code over/under-subscribed")
-    return _Code(lengths)
+    return PrefixCode(lengths)
 
 
-def _read_count(br: _Bits) -> int:
+def _read_count(br: LsbReader) -> int:
     """NBLTYPES / NTREES variable-length count (1..256)."""
     if br.read(1) == 0:
         return 1
@@ -281,7 +179,7 @@ _SHORT_IDX = (3, 2, 1, 0, 3, 3, 3, 3, 3, 3, 2, 2, 2, 2, 2, 2)
 _SHORT_OFF = (0, 0, 0, 0, -1, 1, -2, 2, -3, 3, -1, 1, -2, 2, -3, 3)
 
 
-def _read_wbits(br: _Bits) -> int:
+def _read_wbits(br: LsbReader) -> int:
     if br.read(1) == 0:
         return 16
     n = br.read(3)
@@ -295,21 +193,26 @@ def _read_wbits(br: _Bits) -> int:
     return 17
 
 
-def _read_block_len(br: _Bits, code: _Code) -> int:
-    sym = code.decode(br)
+def _align(br: LsbReader) -> None:
+    if br.align():
+        raise ValueError("brotli: non-zero padding bits")
+
+
+def _read_block_len(br: LsbReader, code: PrefixCode) -> int:
+    sym = br.decode(code)
     base, extra = _BLOCK_LEN[sym]
     return base + br.read(extra)
 
 
-def _read_context_map(br: _Bits, n_trees: int, size: int) -> np.ndarray:
-    cmap = np.zeros(size, np.uint8)
+def _read_context_map(br: LsbReader, n_trees: int, size: int) -> list:
+    cmap = [0] * size
     if n_trees == 1:
         return cmap
     rlemax = (br.read(4) + 1) if br.read(1) else 0
     code = _read_prefix_code(br, n_trees + rlemax)
     i = 0
     while i < size:
-        sym = code.decode(br)
+        sym = br.decode(code)
         if sym == 0:
             cmap[i] = 0
             i += 1
@@ -403,7 +306,7 @@ class _Category:
             self.left = 1 << 60
 
     def switch(self, br):
-        sym = self.types.decode(br)
+        sym = br.decode(self.types)
         if sym == 0:
             nt = self.prev
         elif sym == 1:
@@ -423,7 +326,7 @@ def decompress(data: bytes, max_output: int = 1 << 31) -> bytes:
     """Brotli stream -> bytes. Raises ValueError on malformed input."""
     t = _tables()
     ctx_lut = t["context_lut"]
-    br = _Bits(data)
+    br = LsbReader(data)
     wbits = _read_wbits(br)
     window = (1 << wbits) - 16
     out = bytearray()
@@ -449,7 +352,7 @@ def decompress(data: bytes, max_output: int = 1 << 31) -> bytes:
                     raise ValueError("brotli: zero metadata length byte")
                 skip |= b << (8 * i)
             skip = skip + 1 if skip_bytes else 0
-            br.align()
+            _align(br)
             br.read_bytes(skip)
             if islast:
                 break
@@ -460,7 +363,7 @@ def decompress(data: bytes, max_output: int = 1 << 31) -> bytes:
         if len(out) + mlen > max_output:
             raise ValueError("brotli: output limit exceeded")
         if not islast and br.read(1):       # ISUNCOMPRESSED
-            br.align()
+            _align(br)
             out += br.read_bytes(mlen)
             continue
 
@@ -484,27 +387,29 @@ def decompress(data: bytes, max_output: int = 1 << 31) -> bytes:
         produced = 0
         while produced < mlen:
             cat_i.tick(br)
-            cmd = trees_i[cat_i.cur].decode(br)
+            cmd = br.decode(trees_i[cat_i.cur])
             r = cmd >> 6
             implicit0 = r < 2
             r = r if r < 2 else r - 2
             ins_code = _INS_RANGE[r] + ((cmd >> 3) & 7)
             cpy_code = _CPY_RANGE[r] + (cmd & 7)
             base, extra = _INSERT[ins_code]
-            insert_len = base + br.read(extra)
+            insert_len = base + br.read(extra) if extra else base
             base, extra = _COPY[cpy_code]
-            copy_len = base + br.read(extra)
+            copy_len = base + br.read(extra) if extra else base
 
             if insert_len > mlen - produced:
                 raise ValueError("brotli: insert past block end")
             for _ in range(insert_len):
-                cat_l.tick(br)
+                if cat_l.left == 0:
+                    cat_l.switch(br)
+                cat_l.left -= 1
                 p1 = out[-1] if out else 0
                 p2 = out[-2] if len(out) >= 2 else 0
                 lut = modes[cat_l.cur] << 9
                 ctx = ctx_lut[lut + p1] | ctx_lut[lut + 256 + p2]
                 tree = trees_l[cmap_l[(cat_l.cur << 6) + ctx]]
-                out.append(tree.decode(br))
+                out.append(br.decode(tree))
                 produced += 1
             if produced == mlen:
                 break                       # copy part skipped
@@ -517,7 +422,7 @@ def decompress(data: bytes, max_output: int = 1 << 31) -> bytes:
                 cat_d.tick(br)
                 dctx = min(copy_len - 2, 3)
                 tree = trees_d[cmap_d[(cat_d.cur << 2) + dctx]]
-                dist_code = tree.decode(br)
+                dist_code = br.decode(tree)
                 if dist_code < 16:
                     distance = dist_rb[(rb_idx + _SHORT_IDX[dist_code])
                                        & 3] + _SHORT_OFF[dist_code]
@@ -534,31 +439,33 @@ def decompress(data: bytes, max_output: int = 1 << 31) -> bytes:
                     distance = ((offset + br.read(nbits)) << npostfix) \
                         + lcode + ndirect + 1
 
-            # the last command's copy may overrun MLEN; output is
-            # truncated at the meta-block boundary (both copy kinds)
+            # a copy past MLEN fails the stream, as in libbrotlidec
+            # (BROTLI_DECODER_ERROR_FORMAT_BLOCK_LENGTH_2)
             if distance > max_dist:
                 word = _dict_word(copy_len, distance - max_dist - 1)
-                word = word[:mlen - produced]
+                if len(word) > mlen - produced:
+                    raise ValueError("brotli: copy past meta-block end")
                 out += word
                 produced += len(word)
             else:
                 if distance > len(out):
                     raise ValueError("brotli: distance too far back")
-                n = min(copy_len, mlen - produced)
-                if distance >= n:
-                    out += out[-distance:len(out) - distance + n]
+                if copy_len > mlen - produced:
+                    raise ValueError("brotli: copy past meta-block end")
+                if distance >= copy_len:
+                    out += out[-distance:len(out) - distance + copy_len]
                 else:
-                    for _ in range(n):
+                    for _ in range(copy_len):
                         out.append(out[-distance])
-                produced += n
+                produced += copy_len
                 if dist_code != 0:
                     dist_rb[rb_idx & 3] = distance
                     rb_idx = (rb_idx + 1) & 3
         if islast:
             break
     # trailing padding must be zero bits then end of stream
-    br.align()
-    if br.pos != len(br.data):
+    _align(br)
+    if br.tell() != 8 * len(br.data):
         raise ValueError("brotli: trailing garbage")
     return bytes(out)
 
@@ -571,25 +478,8 @@ def compress_stored(data: bytes, wbits: int = 22) -> bytes:
     (the encode_png_ex / encode_gif zero-fixtures tradition). Real
     compression belongs to the transport layer that produced the
     payload; this engine only needs to READ brotli."""
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def put(v, n):
-        nonlocal acc, nbits
-        acc |= v << nbits
-        nbits += n
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    def align():
-        nonlocal acc, nbits
-        if nbits:
-            out.append(acc & 0xFF)
-            acc = 0
-            nbits = 0
+    bw = LsbWriter()
+    put = bw.write
 
     if wbits == 16:
         put(0, 1)
@@ -611,8 +501,7 @@ def compress_stored(data: bytes, wbits: int = 22) -> bytes:
     if n == 0:
         put(1, 1)               # ISLAST
         put(1, 1)               # ISLASTEMPTY
-        align()
-        return bytes(out)
+        return bw.finish()
     while pos < n:
         chunk = min(n - pos, 1 << 24)
         last_chunk = pos + chunk == n
@@ -622,11 +511,10 @@ def compress_stored(data: bytes, wbits: int = 22) -> bytes:
         put(nibbles - 4, 2)
         put(chunk - 1, nibbles * 4)
         put(1, 1)               # ISUNCOMPRESSED
-        align()
-        out += data[pos:pos + chunk]
+        bw.align()
+        bw.out += data[pos:pos + chunk]
         pos += chunk
         if last_chunk:
             put(1, 1)           # ISLAST
             put(1, 1)           # ISLASTEMPTY
-            align()
-    return bytes(out)
+    return bw.finish()

@@ -21,6 +21,11 @@ Real decoders for the formats that need no external codec library:
          (tests/test_vp8.py).
 * WAV  — stdlib `wave` (PCM 8/16/32-bit), samples as float32 in [-1, 1].
 
+Bits and prefix codes go through operators/bits.py: VP8L uses its
+LSB-first reader and writer, JPEG its MSB-first ones (the reader
+subclassed to unstuff 0xFF00 and to pad at markers), and both decode
+Huffman codes as bits.PrefixCode.
+
 Formats that need external codecs (lossless-process JPEG, MP3,
 H.264, ...) are not decoded: decode raises ValueError or `sniff_format`
 returns None, and operators/multimodal.py turns either into a None
@@ -40,6 +45,9 @@ import wave
 import zlib
 
 import numpy as np
+
+from .bits import LsbReader, LsbWriter, MsbReader, MsbWriter, PrefixCode, \
+    canonical_codes, reverse_bits
 
 # ------------------------------------------------------------------ sniff
 
@@ -570,34 +578,28 @@ _DCT_A = np.array([[
     for x in range(8)] for u in range(8)])
 
 
-class _HuffTable(dict):
-    """(length, code) -> value dict plus an 8-bit MSB-first root table:
-    root[next8bits] = (value, length) for codes of length <= 8 (the
-    common case for the Annex K tables), None for longer codes — the
-    per-bit decode loop stays as the exact fallback (r9)."""
-
-    __slots__ = ("root",)
-
-
-def _huff_decode_table(bits, values):
-    """Canonical Huffman: (code, length) -> value lookup dict."""
-    table = _HuffTable()
-    root = [None] * 256
+def _huff_decode_table(bits, values) -> PrefixCode:
+    """Canonical JPEG Huffman code (T.81 Annex C): codes in HUFFVAL order
+    within each length. An over-subscribed length of <= 8 bits raises;
+    a code past the end of a longer length can never match and is left
+    out (libjpeg rejects both; this decoder keeps its established
+    accept/reject outcomes)."""
+    if len(values) < sum(bits):
+        raise ValueError("JPEG Huffman table truncated")
+    words = []
     code = 0
     k = 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
-            table[(length, code)] = values[k]
-            if length <= 8:
-                base = code << (8 - length)
-                entry = (values[k], length)
-                for suffix in range(1 << (8 - length)):
-                    root[base | suffix] = entry
+            if code >> length:
+                if length <= 8:
+                    raise ValueError("JPEG Huffman table over-subscribed")
+            else:
+                words.append((values[k], code, length))
             code += 1
             k += 1
         code <<= 1
-    table.root = root
-    return table
+    return PrefixCode.from_codewords(words, msb=True)
 
 
 def _huff_encode_table(bits, values):
@@ -613,81 +615,40 @@ def _huff_encode_table(bits, values):
     return table
 
 
-class _BitReader:
-    """Entropy-coded-segment bit reader with 0xFF00 unstuffing; stops at
-    any non-RST marker (handing control back to the marker parser)."""
+class _JpegReader(MsbReader):
+    """Entropy-coded-segment reader: unstuffs 0xFF00, and at any other
+    marker feeds zero bits without consuming it, so the marker parser
+    sees it next."""
 
-    __slots__ = ("data", "pos", "acc", "nbits")
+    __slots__ = ()
 
     def __init__(self, data: bytes, pos: int):
-        self.data = data
+        super().__init__(data)
         self.pos = pos
-        self.acc = 0
-        self.nbits = 0
 
-    def read(self, n: int) -> int:
-        while self.nbits < n:
-            if self.pos >= len(self.data):
-                raise ValueError("JPEG entropy data truncated")
-            b = self.data[self.pos]
-            self.pos += 1
+    def _fill(self, n: int) -> None:
+        data, p, nbits = self.data, self.pos, self.nbits
+        acc = self.acc & ((1 << nbits) - 1)
+        while nbits < n:
+            chunk = data[p:p + 4]
+            if len(chunk) == 4 and 0xFF not in chunk:
+                acc = (acc << 32) | int.from_bytes(chunk, "big")
+                p += 4
+                nbits += 32
+                continue
+            if p >= len(data):
+                break
+            b = data[p]
+            p += 1
             if b == 0xFF:
-                nxt = self.data[self.pos] if self.pos < len(self.data) else 0
-                if nxt == 0x00:
-                    self.pos += 1          # stuffed 0xFF
+                if p >= len(data) or data[p] == 0x00:
+                    p += 1                  # stuffed 0xFF
                 else:
-                    # marker inside ECS (EOI / next scan): pad with zeros,
-                    # rewind so the caller's parser sees the marker
-                    self.pos -= 1
-                    self.acc = (self.acc << 8) & 0xFFFFFFFFFFFF
-                    self.nbits += 8
-                    continue
-            self.acc = ((self.acc << 8) | b) & 0xFFFFFFFFFFFF
-            self.nbits += 8
-        v = (self.acc >> (self.nbits - n)) & ((1 << n) - 1)
-        self.nbits -= n
-        return v
-
-    def huff(self, table) -> int:
-        # fast path: refill to >= 8 buffered bits with the SAME
-        # unstuffing/marker-padding rules as read(), then resolve short
-        # codes in one root-table lookup (r9; covers the common Annex K
-        # symbols). Peek-only — a miss falls through to the exact
-        # per-bit loop with nothing consumed.
-        root = getattr(table, "root", None)
-        if root is not None:
-            while self.nbits < 8:
-                if self.pos >= len(self.data):
-                    break  # near EOF: the slow loop raises identically
-                b = self.data[self.pos]
-                self.pos += 1
-                if b == 0xFF:
-                    nxt = (self.data[self.pos]
-                           if self.pos < len(self.data) else 0)
-                    if nxt == 0x00:
-                        self.pos += 1
-                    else:
-                        self.pos -= 1
-                        self.acc = (self.acc << 8) & 0xFFFFFFFFFFFF
-                        self.nbits += 8
-                        continue
-                self.acc = ((self.acc << 8) | b) & 0xFFFFFFFFFFFF
-                self.nbits += 8
-            if self.nbits >= 8:
-                e = root[(self.acc >> (self.nbits - 8)) & 0xFF]
-                if e is not None:
-                    v, l = e
-                    self.nbits -= l
-                    return v
-        length = 0
-        code = 0
-        while length < 16:
-            code = (code << 1) | self.read(1)
-            length += 1
-            v = table.get((length, code))
-            if v is not None:
-                return v
-        raise ValueError("bad JPEG Huffman code")
+                    p -= 1                  # marker: pad with zeros
+                    b = 0
+            acc = (acc << 8) | b
+            nbits += 8
+        self.pos, self.acc, self.nbits = p, acc, nbits
 
     def align_restart(self):
         """Skip to and consume an RSTn marker (after byte alignment)."""
@@ -914,7 +875,7 @@ def _ac_refine_block(coef, br, ac_table, Ss, Se, Al, eobrun):
     k = Ss
     if eobrun == 0:
         while k <= Se:
-            rs = br.huff(ac_table)
+            rs = br.decode(ac_table)
             r, s = rs >> 4, rs & 0xF
             val = 0
             if s == 0:
@@ -964,9 +925,9 @@ def _huff_scan(payload, pos, frame, coefs, scan, tables, restart_interval):
     dc = [tables.get(("dc", td)) for _ci, td, _ta in scomps]
     ac = [tables.get(("ac", ta)) for _ci, _td, ta in scomps]
     used = (dc if Ss == 0 and Ah == 0 else []) + (ac if Se else [])
-    if not all(isinstance(t, _HuffTable) for t in used):
+    if not all(isinstance(t, PrefixCode) for t in used):
         raise ValueError("JPEG missing Huffman table")
-    br = _BitReader(payload, pos)
+    br = _JpegReader(payload, pos)
     pred = [0] * len(scomps)
     eobrun = 0
 
@@ -983,7 +944,7 @@ def _huff_scan(payload, pos, frame, coefs, scan, tables, restart_interval):
                 if br.read(1):
                     blk[0] |= 1 << Al
             else:
-                t = br.huff(dc[si])
+                t = br.decode(dc[si])
                 if t:
                     pred[si] += _extend(br.read(t), t)
                 blk[0] = pred[si] << Al
@@ -998,7 +959,7 @@ def _huff_scan(payload, pos, frame, coefs, scan, tables, restart_interval):
         table = ac[si]
         k = Ss or 1
         while k <= Se:
-            rs = br.huff(table)
+            rs = br.decode(table)
             r, s = rs >> 4, rs & 0xF
             if s == 0:
                 if r != 15:
@@ -1044,31 +1005,6 @@ def _jpeg_reconstruct(frame, coefs, quant) -> np.ndarray:
     b = y + 1.772 * (cb - 128.0)
     rgb = np.stack([r, g, b], axis=-1)
     return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
-
-
-class _BitWriter:
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int):
-        self.acc = (self.acc << length) | code
-        self.nbits += length
-        while self.nbits >= 8:
-            b = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)      # byte stuffing
-            self.nbits -= 8
-        self.acc &= (1 << self.nbits) - 1
-
-    def flush(self):
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)   # 1-fill to byte boundary
 
 
 def _scaled_quant(base: np.ndarray, quality: int) -> np.ndarray:
@@ -1197,7 +1133,7 @@ def encode_jpeg(img: np.ndarray, quality: int = 90,
               _huff_encode_table(*_DC_CHROMA_SPEC)]
     enc_ac = [_huff_encode_table(*_AC_LUMA_SPEC),
               _huff_encode_table(*_AC_CHROMA_SPEC)]
-    bw = _BitWriter()
+    bw = MsbWriter()
     mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
     mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
     pred = [0] * nc
@@ -1223,8 +1159,9 @@ def encode_jpeg(img: np.ndarray, quality: int = 90,
                         pred[ci] = _encode_block(
                             bw, block, qt_l if ci == 0 else qt_c,
                             enc_dc[t], enc_ac[t], pred[ci])
-    bw.flush()
-    out += bw.out
+    pad = -bw.nbits & 7
+    bw.write((1 << pad) - 1, pad)                     # 1-fill the last byte
+    out += bw.finish().replace(b"\xff", b"\xff\x00")  # byte stuffing
     out += b"\xff\xd9"                                # EOI
     return bytes(out)
 
@@ -1274,155 +1211,34 @@ def resize_area(img: np.ndarray, max_side: int) -> np.ndarray:
 # strategy as encode_png/encode_jpeg above.
 
 
-class _LsbBitReader:
-    """VP8L bit reader: bytes are consumed in order, bits LSB-first."""
-
-    __slots__ = ("data", "pos", "bit")
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        v = 0
-        data, pos, bit = self.data, self.pos, self.bit
-        for i in range(n):
-            if pos >= len(data):
-                raise ValueError("VP8L: truncated bitstream")
-            v |= ((data[pos] >> bit) & 1) << i
-            bit += 1
-            if bit == 8:
-                bit = 0
-                pos += 1
-        self.pos, self.bit = pos, bit
-        return v
-
-    def read1(self) -> int:
-        if self.pos >= len(self.data):
-            raise ValueError("VP8L: truncated bitstream")
-        v = (self.data[self.pos] >> self.bit) & 1
-        self.bit += 1
-        if self.bit == 8:
-            self.bit = 0
-            self.pos += 1
-        return v
-
-
-class _Canonical:
-    """Canonical prefix code from code lengths (DEFLATE-style canonical
-    assignment; stream bits arrive with the MSB of each code first)."""
-
-    __slots__ = ("single", "maxlen", "count", "base", "syms", "table",
-                 "tmask")
-
-    def __init__(self, lengths):
-        used = [(l, s) for s, l in enumerate(lengths) if l > 0]
-        if not used:
-            raise ValueError("VP8L: empty prefix code")
-        if len(used) == 1:
-            self.single = used[0][1]
-            return
-        self.single = None
-        self.maxlen = max(l for l, _ in used)
-        self.count = [0] * (self.maxlen + 1)
-        for l, _ in used:
-            self.count[l] += 1
-        kraft = sum(c << (self.maxlen - l)
-                    for l, c in enumerate(self.count) if l)
-        if kraft > (1 << self.maxlen):
-            raise ValueError("VP8L: over-subscribed prefix code")
-        self.base = [0] * (self.maxlen + 1)
-        code = 0
-        for l in range(1, self.maxlen + 1):
-            code = (code + self.count[l - 1]) << 1
-            self.base[l] = code
-        used.sort()
-        self.syms = [[] for _ in range(self.maxlen + 1)]
-        for l, s in used:
-            self.syms[l].append(s)
-        # one-shot lookup table over maxlen peeked bits (r9: the per-bit
-        # decode loop was the decoder's hottest path). Index = the next
-        # maxlen stream bits in arrival order; entries cover every
-        # pattern whose prefix is a codeword. Bounded to maxlen <= 11 so
-        # a hostile 15-bit code can't force a 32k-entry build per code.
-        self.table = None
-        if self.maxlen <= 11:
-            tbl = [None] * (1 << self.maxlen)
-            code = 0
-            for l in range(1, self.maxlen + 1):
-                code = (code + self.count[l - 1]) << 1
-                for i, s in enumerate(self.syms[l]):
-                    c = code + i
-                    rev = 0
-                    cc = c
-                    for _ in range(l):
-                        rev = (rev << 1) | (cc & 1)
-                        cc >>= 1
-                    for hi in range(1 << (self.maxlen - l)):
-                        tbl[(hi << l) | rev] = (s, l)
-            self.table = tbl
-            self.tmask = (1 << self.maxlen) - 1
-
-    def decode(self, br: _LsbBitReader) -> int:
-        if self.single is not None:
-            return self.single
-        table = self.table
-        if table is not None:
-            data, pos, bit = br.data, br.pos, br.bit
-            if (len(data) - pos) * 8 - bit >= self.maxlen:
-                chunk = int.from_bytes(data[pos:pos + 3], "little") >> bit
-                e = table[chunk & self.tmask]
-                if e is not None:
-                    s, l = e
-                    bit += l
-                    br.pos = pos + (bit >> 3)
-                    br.bit = bit & 7
-                    return s
-            # table miss (invalid word) or near end-of-stream: fall back
-            # to the exact per-bit loop for identical error behavior
-        acc = 0
-        for l in range(1, self.maxlen + 1):
-            acc = (acc << 1) | br.read1()
-            idx = acc - self.base[l]
-            if 0 <= idx < self.count[l]:
-                return self.syms[l][idx]
-        raise ValueError("VP8L: invalid prefix code word")
-
-
 #: code-length alphabet transmission order (spec 3.7.2.2)
 # kCodeLengthCodeOrder (spec 3.7.2.2): 16 sits between 5 and 6
 _VP8L_CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7,
                   8, 9, 10, 11, 12, 13, 14, 15)
 
 
-def _vp8l_read_code(br: _LsbBitReader, alphabet: int) -> _Canonical:
+def _vp8l_read_code(br: LsbReader, alphabet: int) -> PrefixCode:
     """Read one prefix code (spec 3.7.2: simple length or normal)."""
-    if br.read1():  # simple
-        num = br.read1() + 1
-        first_8bit = br.read1()
+    if br.read(1):  # simple
+        num = br.read(1) + 1
+        first_8bit = br.read(1)
         s0 = br.read(8 if first_8bit else 1)
-        lengths = [0] * alphabet
         if num == 1:
             if s0 >= alphabet:
                 raise ValueError("VP8L: simple-code symbol out of range")
-            lengths[s0] = 1
-            c = _Canonical(lengths)
-            c.single = s0  # 1-symbol code consumes no bits
-            return c
+            return PrefixCode([1], [s0])  # consumes no bits
         s1 = br.read(8)
         if s0 >= alphabet or s1 >= alphabet or s0 == s1:
             raise ValueError("VP8L: bad simple code symbols")
-        lengths[s0] = lengths[s1] = 1
-        return _Canonical(lengths)
+        return PrefixCode([1, 1], [s0, s1])
     ncodes = br.read(4) + 4
     if ncodes > len(_VP8L_CL_ORDER):
         raise ValueError("VP8L: bad code-length count")
     cl_lengths = [0] * 19
     for i in range(ncodes):
         cl_lengths[_VP8L_CL_ORDER[i]] = br.read(3)
-    cl = _Canonical(cl_lengths)
-    if br.read1():  # explicit max symbol count
+    cl = PrefixCode(cl_lengths)
+    if br.read(1):  # explicit max symbol count
         len_nbits = 2 + 2 * br.read(3)
         max_symbol = 2 + br.read(len_nbits)
     else:
@@ -1434,7 +1250,7 @@ def _vp8l_read_code(br: _LsbBitReader, alphabet: int) -> _Canonical:
         if max_symbol == 0:
             break
         max_symbol -= 1
-        c = cl.decode(br)
+        c = br.decode(cl)
         if c < 16:
             lengths[sym] = c
             sym += 1
@@ -1453,10 +1269,10 @@ def _vp8l_read_code(br: _LsbBitReader, alphabet: int) -> _Canonical:
             sym += 11 + br.read(7)
         if sym > alphabet:
             raise ValueError("VP8L: code-length repeat overflow")
-    return _Canonical(lengths)
+    return PrefixCode(lengths)
 
 
-def _vp8l_prefix_value(code: int, br: _LsbBitReader) -> int:
+def _vp8l_prefix_value(code: int, br: LsbReader) -> int:
     """LZ77 length/distance prefix decoding (spec 3.6.2.2)."""
     if code < 4:
         return code + 1
@@ -1481,7 +1297,7 @@ assert _VP8L_DIST[:12] == [(0, 1), (1, 0), (1, 1), (-1, 1), (0, 2), (2, 0),
                            (1, 2), (-1, 2), (2, 1), (-2, 1), (2, 2), (-2, 2)]
 
 
-def _vp8l_decode_image(br: _LsbBitReader, w: int, h: int,
+def _vp8l_decode_image(br: LsbReader, w: int, h: int,
                        is_main: bool) -> np.ndarray:
     """Decode one (possibly entropy-sub-) image to uint32 ARGB pixels of
     shape (h, w). Transforms are read/applied only for the main image."""
@@ -1489,7 +1305,7 @@ def _vp8l_decode_image(br: _LsbBitReader, w: int, h: int,
     xsize = w
     if is_main:
         seen = set()
-        while br.read1():
+        while br.read(1):
             ttype = br.read(2)
             if ttype in seen or len(transforms) == 4:
                 raise ValueError("VP8L: duplicate transform")
@@ -1522,14 +1338,14 @@ def _vp8l_decode_image(br: _LsbBitReader, w: int, h: int,
                     xsize = (xsize + (1 << wbits) - 1) >> wbits
 
     # ---- entropy-coded pixels (spec 3.7) ----
-    cache_bits = br.read(4) if br.read1() else 0
+    cache_bits = br.read(4) if br.read(1) else 0
     if cache_bits and not 1 <= cache_bits <= 11:
         raise ValueError("VP8L: bad color-cache size")
     cache = [0] * (1 << cache_bits) if cache_bits else None
     hbits = 0
     entropy_img = None
     ngroups = 1
-    if is_main and br.read1():
+    if is_main and br.read(1):
         hbits = br.read(3) + 2
         ew = (xsize + (1 << hbits) - 1) >> hbits
         eh = (h + (1 << hbits) - 1) >> hbits
@@ -1557,11 +1373,11 @@ def _vp8l_decode_image(br: _LsbBitReader, w: int, h: int,
             m = int(entropy_img[y >> hbits, x >> hbits])
             group = groups[(m >> 8) & 0xFFFF]
         g_code, r_code, b_code, a_code, d_code = group
-        s = g_code.decode(br)
+        s = br.decode(g_code)
         if s < 256:  # literal
-            r = r_code.decode(br)
-            b = b_code.decode(br)
-            a = a_code.decode(br)
+            r = br.decode(r_code)
+            b = br.decode(b_code)
+            a = br.decode(a_code)
             p = (a << 24) | (r << 16) | (s << 8) | b
             pix[pos] = p
             pos += 1
@@ -1569,7 +1385,7 @@ def _vp8l_decode_image(br: _LsbBitReader, w: int, h: int,
                 cache[(0x1E35A7BD * p & 0xFFFFFFFF) >> (32 - cache_bits)] = p
         elif s < 280:  # LZ77 backward reference
             length = _vp8l_prefix_value(s - 256, br)
-            dcode = _vp8l_prefix_value(d_code.decode(br), br)
+            dcode = _vp8l_prefix_value(br.decode(d_code), br)
             if dcode > 120:
                 dist = dcode - 120
             else:
@@ -1749,7 +1565,7 @@ def _decode_webp_alpha(body: bytes, w: int, h: int) -> np.ndarray:
         raw = np.frombuffer(body, dtype=np.uint8, count=w * h, offset=1)
         alpha = raw.reshape(h, w).astype(np.int32)
     elif compression == 1:
-        br = _LsbBitReader(bytes(body), 1)
+        br = LsbReader(body[1:])
         argb = _vp8l_decode_image(br, w, h, True)
         alpha = ((argb >> 8) & 0xFF).astype(np.int32)
     else:
@@ -1824,10 +1640,10 @@ def decode_webp(payload: bytes) -> np.ndarray:
         raise ValueError("WebP: no VP8L or VP8 chunk")
     if not vp8l or vp8l[0] != 0x2F:
         raise ValueError("VP8L: bad signature byte")
-    br = _LsbBitReader(bytes(vp8l), 1)
+    br = LsbReader(vp8l[1:])
     w = br.read(14) + 1
     h = br.read(14) + 1
-    br.read1()              # alpha-used hint
+    br.read(1)              # alpha-used hint
     if br.read(3) != 0:
         raise ValueError("VP8L: unsupported version")
     argb = _vp8l_decode_image(br, w, h, True)
@@ -1838,32 +1654,6 @@ def decode_webp(payload: bytes) -> np.ndarray:
     if (a == 255).all():
         return rgb
     return np.concatenate([rgb, a[:, :, None]], axis=-1)
-
-
-class _LsbBitWriter:
-    """VP8L bit writer: LSB-first within bytes (mirror of _LsbBitReader)."""
-
-    __slots__ = ("out", "acc", "nbits")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, v: int, n: int) -> None:
-        self.acc |= (v & ((1 << n) - 1)) << self.nbits
-        self.nbits += n
-        while self.nbits >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def finish(self) -> bytes:
-        if self.nbits:
-            self.out.append(self.acc & 0xFF)
-            self.acc = 0
-            self.nbits = 0
-        return bytes(self.out)
 
 
 def _vp8l_flat_lengths(used):
@@ -1881,36 +1671,15 @@ def _vp8l_flat_lengths(used):
 
 
 def _vp8l_codewords(lengths: dict):
-    """Canonical codewords (DEFLATE assignment) for {symbol: length},
-    stored BIT-REVERSED so the LSB-first writer can emit a whole
-    codeword in one write() call (r9: the per-bit emit loop was the
-    encoder's hottest path — 60%+ of encode wall). The canonical
-    MSB-first codeword bit sequence b_{l-1}..b_0 is exactly one
-    LSB-first write of its reversal."""
-    items = sorted((l, s) for s, l in lengths.items() if l > 0)
-    code = 0
-    prev_len = 0
-    words = {}
-    for l, s in items:
-        code <<= (l - prev_len)
-        rev = 0
-        c = code
-        for _ in range(l):
-            rev = (rev << 1) | (c & 1)
-            c >>= 1
-        words[s] = (rev, l)
-        code += 1
-        prev_len = l
-    return words
+    """Canonical codewords for {symbol: length}, stored BIT-REVERSED so
+    the LSB-first writer emits a whole codeword in one write() call
+    (r9: the per-bit emit loop was the encoder's hottest path)."""
+    return {s: (reverse_bits(c, l), l)
+            for s, c, l in canonical_codes(list(lengths.values()),
+                                           list(lengths))}
 
 
-def _vp8l_write_word(bw: _LsbBitWriter, code: int, length: int) -> None:
-    # `code` is pre-reversed by _vp8l_codewords (or a <=1-bit palindrome
-    # from the simple representation): one packed write
-    bw.write(code, length)
-
-
-def _vp8l_write_code(bw: _LsbBitWriter, lengths: dict, alphabet: int):
+def _vp8l_write_code(bw: LsbWriter, lengths: dict, alphabet: int):
     """Write one prefix code; returns its codeword table. Uses the simple
     representation for <=2 symbols (when they fit 8 bits), else the
     code-length-coded normal representation."""
@@ -1958,7 +1727,7 @@ def _vp8l_write_code(bw: _LsbBitWriter, lengths: dict, alphabet: int):
     bw.write(0, 1)                           # no explicit max symbol
     for s in range(alphabet):
         c, l = cl_words[lens[s]]
-        _vp8l_write_word(bw, c, l)
+        bw.write(c, l)
     return _vp8l_codewords(lens)
 
 
@@ -2041,20 +1810,20 @@ def _vp8l_emit_literals(bw, pixels, *, cache_bits=0, groups=None,
         t = tables[group_of(pos) if group_of else 0]
         if kind == "lit":
             p = payload
-            _vp8l_write_word(bw, *t["g"][(p >> 8) & 0xFF])
-            _vp8l_write_word(bw, *t["r"][(p >> 16) & 0xFF])
-            _vp8l_write_word(bw, *t["b"][p & 0xFF])
-            _vp8l_write_word(bw, *t["a"][(p >> 24) & 0xFF])
+            bw.write(*t["g"][(p >> 8) & 0xFF])
+            bw.write(*t["r"][(p >> 16) & 0xFF])
+            bw.write(*t["b"][p & 0xFF])
+            bw.write(*t["a"][(p >> 24) & 0xFF])
         elif kind == "copy":
             length, dist_value = payload
             lc, leb, lev = _vp8l_prefix_encode(length)
-            _vp8l_write_word(bw, *t["g"][256 + lc])
+            bw.write(*t["g"][256 + lc])
             bw.write(lev, leb)
             dc, deb, dev = _vp8l_prefix_encode(dist_value)
-            _vp8l_write_word(bw, *t["d"][dc])
+            bw.write(*t["d"][dc])
             bw.write(dev, deb)
         else:
-            _vp8l_write_word(bw, *t["g"][280 + payload])
+            bw.write(*t["g"][280 + payload])
 
 
 def _vp8l_encode_subimage(bw, pixels) -> None:
@@ -2085,7 +1854,7 @@ def encode_webp_lossless(img: np.ndarray, *, subtract_green=False,
             | (img[:, :, 1].astype(np.uint32) << 8)
             | img[:, :, 2].astype(np.uint32))
 
-    bw = _LsbBitWriter()
+    bw = LsbWriter()
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
     bw.write(1 if has_alpha else 0, 1)

@@ -32,6 +32,7 @@ import zlib
 
 import numpy as np
 
+from .bits import MsbWriter
 from .codecs import _scale16
 
 # baseline tags
@@ -369,17 +370,8 @@ def decode_tiff(payload: bytes) -> np.ndarray:
 
 def _lzw_encode_tiff(data: bytes) -> bytes:
     CLEAR, EOI = 256, 257
-    out = bytearray()
-    acc = nbits = 0
-
-    def put(code, width):
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            out.append((acc >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-
+    bw = MsbWriter()
+    put = bw.write
     width = 9
     table: dict[tuple[int, int], int] = {}
     next_free = 258
@@ -409,9 +401,7 @@ def _lzw_encode_tiff(data: bytes) -> bytes:
     if prev >= 0:
         put(prev, width)
     put(EOI, width)
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
+    return bw.finish()
 
 
 def _packbits_encode(data: bytes) -> bytes:

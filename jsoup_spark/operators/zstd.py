@@ -31,6 +31,8 @@ reference-free by design.
 
 from __future__ import annotations
 
+from .bits import LsbReader
+
 
 # ------------------------------------------------------------- xxh64
 
@@ -91,34 +93,8 @@ def xxh64(data: bytes, seed: int = 0) -> int:
 
 
 # -------------------------------------------------- bit stream readers
-
-class _Fwd:
-    """Forward LSB-first reader (FSE normalized-count headers)."""
-
-    __slots__ = ("data", "pos", "acc", "nbits")
-
-    def __init__(self, data):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def peek(self, n):
-        while self.nbits < n:
-            b = self.data[self.pos] if self.pos < len(self.data) else 0
-            self.acc |= b << self.nbits
-            self.pos += 1
-            self.nbits += 8
-        return self.acc & ((1 << n) - 1)
-
-    def skip(self, n):
-        self.peek(n)
-        self.acc >>= n
-        self.nbits -= n
-
-    def bytes_consumed(self):
-        return self.pos - (self.nbits // 8)
-
+# FSE headers read forward through bits.LsbReader, whose peek/skip see
+# zeros past the end as the format's forward reader does
 
 class _Back:
     """Backward reader over a forward-written LSB-first stream: the
@@ -149,7 +125,7 @@ class _Back:
 
 # ------------------------------------------------------------- FSE
 
-def _read_fse_table(fw: _Fwd, max_log: int, max_symbol: int):
+def _read_fse_table(fw: LsbReader, max_log: int, max_symbol: int):
     """FSE normalized-count header -> (accuracy_log, probs list)."""
     accuracy_log = fw.peek(4) + 5
     fw.skip(4)
@@ -325,10 +301,10 @@ def _read_huf_table(data: bytes):
     if 1 + csize > len(data):
         raise ValueError("zstd: truncated huffman FSE weights")
     sub = data[1:1 + csize]
-    fw = _Fwd(sub)
+    fw = LsbReader(sub)
     log, probs = _read_fse_table(fw, 6, 255)
     table = _FseTable(log, probs)
-    bs = _Back(sub[fw.bytes_consumed():])
+    bs = _Back(sub[(fw.tell() + 7) >> 3:])
     a = _FseState(table, bs)
     b = _FseState(table, bs)
     weights = []
@@ -505,15 +481,17 @@ def _decode_block(block: bytes, ctx: _Ctx, out: bytearray,
     def table_for(mode, kind):
         nonlocal cursor
         if mode == 1:
+            if cursor >= len(stream) or stream[cursor] > _MAX_SYM[kind]:
+                raise ValueError("zstd: bad RLE sequence symbol")
             t = _FseTable.rle(stream[cursor])
             ctx.tables[kind] = t
             cursor += 1
             return t
         if mode == 2:
-            f = _Fwd(stream[cursor:])
+            f = LsbReader(stream[cursor:])
             log, probs = _read_fse_table(f, _MAX_LOG[kind],
                                          _MAX_SYM[kind])
-            cursor += f.bytes_consumed()
+            cursor += (f.tell() + 7) >> 3
             t = _FseTable(log, probs)
             ctx.tables[kind] = t
             return t

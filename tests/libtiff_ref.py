@@ -23,6 +23,12 @@ import tempfile
 import numpy as np
 
 _LIB = None
+_ERRORS = []
+
+
+@ctypes.CFUNCTYPE(None, ctypes.c_char_p, ctypes.c_char_p, ctypes.c_void_p)
+def _on_error(module, fmt, args):
+    _ERRORS.append(fmt)
 
 
 def libtiff():
@@ -37,13 +43,12 @@ def libtiff():
         lib.TIFFReadRGBAImageOriented.argtypes = [
             ctypes.c_void_p, ctypes.c_uint32, ctypes.c_uint32,
             ctypes.c_void_p, ctypes.c_int, ctypes.c_int]
-        # silence warning spam (unknown tags etc.)
-        handler = ctypes.CFUNCTYPE(
-            None, ctypes.c_char_p, ctypes.c_char_p, ctypes.c_void_p)
-        lib.TIFFSetWarningHandler.restype = ctypes.c_void_p
-        lib.TIFFSetWarningHandler(None)
-        lib.TIFFSetErrorHandler.restype = ctypes.c_void_p
-        lib.TIFFSetErrorHandler(None)
+        # record errors and warnings instead of printing them: libtiff
+        # reports a corrupt CCITT row even where it recovers from it
+        for name in ("TIFFSetWarningHandler", "TIFFSetErrorHandler"):
+            getattr(lib, name).restype = ctypes.c_void_p
+            getattr(lib, name).argtypes = [ctypes.c_void_p]
+            getattr(lib, name)(ctypes.cast(_on_error, ctypes.c_void_p))
         _LIB = lib
     return _LIB
 
@@ -111,8 +116,11 @@ def encode(img: np.ndarray, *, compression: int = 1,
 
 def decode_rgba(data: bytes) -> np.ndarray:
     """Decode via TIFFReadRGBAImageOriented (ORIENTATION_TOPLEFT) ->
-    uint8 (H, W, 4). Raises ValueError on libtiff errors."""
+    uint8 (H, W, 4). Raises ValueError where libtiff fails or reports
+    any error or warning, also one it recovers from (it fills in a
+    corrupt CCITT row, goes on and returns success)."""
     lib = libtiff()
+    del _ERRORS[:]
     fd, path = tempfile.mkstemp(suffix=".tif")
     try:
         with os.fdopen(fd, "wb") as f:
@@ -133,7 +141,7 @@ def decode_rgba(data: bytes) -> np.ndarray:
             buf = (ctypes.c_uint32 * (w.value * h.value))()
             ok = lib.TIFFReadRGBAImageOriented(
                 tif, w.value, h.value, buf, 1, 0)  # 1 = TOPLEFT
-            if not ok:
+            if not ok or _ERRORS:
                 raise ValueError("libtiff RGBA read failed")
             raw = np.frombuffer(bytes(buf), np.uint32).reshape(
                 h.value, w.value)

@@ -29,3 +29,16 @@ def test_package_zip_imports_standalone(tmp_path):
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     subprocess.run([sys.executable, "-c", _PROBE, zpath], cwd=tmp_path,
                    env=env, check=True)
+
+
+def test_every_module_imports_in_as_form():
+    """`import a.b.c as m` resolves `c` as an attribute of `a.b`, so a
+    facade name bound on the package over a subpackage breaks it."""
+    import pkgutil
+
+    import jsoup_spark
+    names = [m.name for m in pkgutil.walk_packages(jsoup_spark.__path__,
+                                                   "jsoup_spark.")]
+    assert "jsoup_spark.clean.serializer" in names
+    for name in names:
+        exec(f"import {name} as _m")

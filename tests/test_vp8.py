@@ -13,6 +13,8 @@ images; this codec tier backs the multimodal pipeline operators
 (SURVEY.md LLM-pipeline section), reference-free by design.
 """
 
+import random
+
 import numpy as np
 import pytest
 
@@ -54,6 +56,21 @@ SHAPES = [(1, 1), (3, 5), (16, 16), (17, 31), (64, 48), (7, 120), (120, 7)]
 KINDS = ["noise", "grad", "flat", "pal", "photo"]
 
 
+def _mutants(data: bytes, seed: int, n: int) -> list:
+    """Seeded corruptions: 40% cut short, 60% with 1-3 bits flipped."""
+    r = random.Random(seed)
+    out = []
+    for _ in range(n):
+        if r.random() < 0.4:
+            out.append(data[:r.randrange(len(data))])
+            continue
+        m = bytearray(data)
+        for _ in range(r.randint(1, 3)):
+            m[r.randrange(len(m))] ^= 1 << r.randrange(8)
+        out.append(bytes(m))
+    return out
+
+
 @pytest.mark.parametrize("shape", SHAPES)
 def test_lossless_vs_libwebp(shape):
     h, w = shape
@@ -66,6 +83,23 @@ def test_lossless_vs_libwebp(shape):
             ("lossless", shape, kind)
         # lossless RGB must also equal the source exactly
         assert np.array_equal(mine, img)
+        # corrupt input raises nothing but ValueError, and where both
+        # decoders accept it they agree. Accept/reject may differ:
+        # libwebp checks the RIFF size and reads zero bits past the end
+        for m in _mutants(data, (h * 1000 + w) * 10 + KINDS.index(kind), 6):
+            try:
+                theirs = ref.decode_rgba(m)
+            except ValueError:
+                theirs = None
+            try:
+                mine = codecs.decode_webp(m)
+            except ValueError:
+                continue
+            if theirs is not None:
+                if mine.shape[2] == 3:
+                    mine = np.dstack([mine, np.full(mine.shape[:2], 255,
+                                                    np.uint8)])
+                assert np.array_equal(mine, theirs), m.hex()
 
 
 @pytest.mark.parametrize("shape", SHAPES)

@@ -96,9 +96,17 @@ def test_truncation_raises():
 def test_corruption_never_hangs():
     src = _mk("text", 5000)
     data = bytearray(ref.compress(src, 9))
+    # a mutated libzstd stream whose RLE-mode literal-length symbol
+    # (70) lies past that alphabet's end (35)
+    streams = [bytes.fromhex(
+        "28b52ffd20897d03006286161960770e15acccf9ffd7dc4b037103595f9364d0"
+        "ef0380e141017b169aca26811c23a4380ab340c3a7d55553994d750f708c3f2f"
+        "2f572d5997dc4b6036d547000704f23c9a7b7be370afa0e6d695210c989a2dfb"
+        "c32fd9d8f5680640460511cc1a94b3a768e1510320b34906")]
     for i in range(0, len(data), 5):
-        mutated = bytes(data[:i]) + bytes([data[i] ^ 0x5A]) \
-            + bytes(data[i + 1:])
+        streams.append(bytes(data[:i]) + bytes([data[i] ^ 0x5A])
+                       + bytes(data[i + 1:]))
+    for mutated in streams:
         try:
             out = decompress(mutated, max_output=1 << 22)
             assert len(out) <= 1 << 22
