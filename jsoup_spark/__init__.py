@@ -22,14 +22,11 @@ from .clean.safelist import Safelist  # noqa: F401
 from .select.selector import (  # noqa: F401
     compile_query, elements_not, filter_out, select_first, select_multi,
 )
-# not bound as `select`: that would shadow the `jsoup_spark.select`
-# subpackage and break `import jsoup_spark.select.xpath as m`
-from .select.selector import select as select_all  # noqa: F401
 
 __all__ = [
     "parse", "parse_fragment", "parse_body_fragment", "parse_xml",
     "ParseSettings", "HTML_DEFAULT", "PRESERVE_CASE",
     "StreamParser", "Tag", "TagSet", "W3CDom", "load_file", "load_stream",
-    "clean_html", "Safelist", "select_all", "select_first", "select_multi",
+    "clean_html", "Safelist", "select_first", "select_multi",
     "filter_out", "elements_not", "compile_query",
 ]

@@ -226,24 +226,36 @@ class MsbWriter:
         return bytes(self.out)
 
 
+# _REV[c] is the 11-bit value c with its bits in reverse order
+_REV = [int(format(c, "011b")[::-1], 2) for c in range(1 << TABLE_BITS)]
+
+
 def reverse_bits(c: int, n: int) -> int:
     """The low `n` bits of `c` in reverse order."""
-    return int(format(c, "0%db" % n)[::-1], 2) if n else 0
+    if n <= TABLE_BITS:
+        return _REV[c] >> (TABLE_BITS - n)
+    return int(format(c, "0%db" % n)[::-1], 2)
 
 
 def canonical_codes(lengths, symbols=None) -> list:
     """DEFLATE-style canonical assignment: `(symbol, code, length)` for
     every non-zero length, shorter codes first and ties by symbol value.
     `lengths[i]` belongs to `symbols[i]` (default: symbol i). Codes are
-    integers whose most significant bit is sent first."""
+    integers whose most significant bit is sent first; a code that does
+    not fit in its length means the lengths are over-subscribed."""
     if symbols is None:
         symbols = range(len(lengths))
+    by_len = {}
+    for l, s in zip(lengths, symbols):
+        if l:
+            by_len.setdefault(l, []).append(s)
     out = []
     code = prev = 0
-    for l, s in sorted((l, s) for l, s in zip(lengths, symbols) if l):
+    for l in sorted(by_len):
         code <<= l - prev
-        out.append((s, code, l))
-        code += 1
+        for s in sorted(by_len[l]):
+            out.append((s, code, l))
+            code += 1
         prev = l
     return out
 
@@ -262,8 +274,7 @@ class PrefixCode:
         words = canonical_codes(lengths, symbols)
         if not words:
             raise ValueError("empty prefix code")
-        maxlen = words[-1][2]
-        if sum(1 << (maxlen - l) for _, _, l in words) > 1 << maxlen:
+        if words[-1][1] >> words[-1][2]:
             raise ValueError("over-subscribed prefix code")
         if len(words) == 1:
             words = [(words[0][0], 0, 0)]     # consumes no bits

@@ -401,9 +401,7 @@ def decompress(data: bytes, max_output: int = 1 << 31) -> bytes:
             if insert_len > mlen - produced:
                 raise ValueError("brotli: insert past block end")
             for _ in range(insert_len):
-                if cat_l.left == 0:
-                    cat_l.switch(br)
-                cat_l.left -= 1
+                cat_l.tick(br)
                 p1 = out[-1] if out else 0
                 p2 = out[-2] if len(out) >= 2 else 0
                 lut = modes[cat_l.cur] << 9

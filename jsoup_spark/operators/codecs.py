@@ -578,12 +578,13 @@ _DCT_A = np.array([[
     for x in range(8)] for u in range(8)])
 
 
-def _huff_decode_table(bits, values) -> PrefixCode:
+def _huff_decode_table(bits, values):
     """Canonical JPEG Huffman code (T.81 Annex C): codes in HUFFVAL order
     within each length. An over-subscribed length of <= 8 bits raises;
     a code past the end of a longer length can never match and is left
     out (libjpeg rejects both; this decoder keeps its established
-    accept/reject outcomes)."""
+    accept/reject outcomes). A table with no codes is None, so only a
+    scan that uses it fails ("missing Huffman table"), as in libjpeg."""
     if len(values) < sum(bits):
         raise ValueError("JPEG Huffman table truncated")
     words = []
@@ -599,7 +600,7 @@ def _huff_decode_table(bits, values) -> PrefixCode:
             code += 1
             k += 1
         code <<= 1
-    return PrefixCode.from_codewords(words, msb=True)
+    return PrefixCode.from_codewords(words, msb=True) if words else None
 
 
 def _huff_encode_table(bits, values):

@@ -23,12 +23,15 @@ import tempfile
 import numpy as np
 
 _LIB = None
-_ERRORS = []
+#: format strings of the errors and warnings libtiff reported during the
+#: last decode_rgba call, also ones it recovered from (it fills in a
+#: corrupt CCITT row, goes on and returns success)
+reported = []
 
 
 @ctypes.CFUNCTYPE(None, ctypes.c_char_p, ctypes.c_char_p, ctypes.c_void_p)
 def _on_error(module, fmt, args):
-    _ERRORS.append(fmt)
+    reported.append(fmt)
 
 
 def libtiff():
@@ -43,8 +46,7 @@ def libtiff():
         lib.TIFFReadRGBAImageOriented.argtypes = [
             ctypes.c_void_p, ctypes.c_uint32, ctypes.c_uint32,
             ctypes.c_void_p, ctypes.c_int, ctypes.c_int]
-        # record errors and warnings instead of printing them: libtiff
-        # reports a corrupt CCITT row even where it recovers from it
+        # record errors and warnings in `reported` instead of printing
         for name in ("TIFFSetWarningHandler", "TIFFSetErrorHandler"):
             getattr(lib, name).restype = ctypes.c_void_p
             getattr(lib, name).argtypes = [ctypes.c_void_p]
@@ -116,11 +118,9 @@ def encode(img: np.ndarray, *, compression: int = 1,
 
 def decode_rgba(data: bytes) -> np.ndarray:
     """Decode via TIFFReadRGBAImageOriented (ORIENTATION_TOPLEFT) ->
-    uint8 (H, W, 4). Raises ValueError where libtiff fails or reports
-    any error or warning, also one it recovers from (it fills in a
-    corrupt CCITT row, goes on and returns success)."""
+    uint8 (H, W, 4). Raises ValueError on libtiff errors."""
     lib = libtiff()
-    del _ERRORS[:]
+    del reported[:]
     fd, path = tempfile.mkstemp(suffix=".tif")
     try:
         with os.fdopen(fd, "wb") as f:
@@ -141,7 +141,7 @@ def decode_rgba(data: bytes) -> np.ndarray:
             buf = (ctypes.c_uint32 * (w.value * h.value))()
             ok = lib.TIFFReadRGBAImageOriented(
                 tif, w.value, h.value, buf, 1, 0)  # 1 = TOPLEFT
-            if not ok or _ERRORS:
+            if not ok:
                 raise ValueError("libtiff RGBA read failed")
             raw = np.frombuffer(bytes(buf), np.uint32).reshape(
                 h.value, w.value)

@@ -333,6 +333,32 @@ def test_jpeg_sos_length_must_match_component_count():
                     jr.decode(bad)
 
 
+def test_jpeg_empty_huffman_table_fails_only_the_scan_that_uses_it():
+    """A DHT table whose 16 BITS counts are all zero defines no codes. It
+    is legal until a scan uses it: libjpeg decodes a stream that only
+    defines one, and so must decode_jpeg; a scan that uses it fails."""
+    try:
+        import libjpeg_ref as jr
+    except ImportError:
+        from tests import libjpeg_ref as jr
+    img = np.random.default_rng(2).integers(
+        0, 256, (16, 16, 3)).astype(np.uint8)
+    good = codecs.encode_jpeg(img)
+    sos = good.index(b"\xff\xda")
+    for tc_th in (0x03, 0x13):              # unused DC 3, unused AC 3
+        dht = b"\xff\xc4" + struct.pack(">HB", 19, tc_th) + bytes(16)
+        extra = good[:sos] + dht + good[sos:]
+        assert np.array_equal(codecs.decode_jpeg(extra),
+                              codecs.decode_jpeg(good))
+        if jr.available():
+            assert np.array_equal(jr.decode(extra), jr.decode(good))
+    # the same empty table in place of the AC table the scan uses
+    used = good[:sos] + b"\xff\xc4" + struct.pack(">HB", 19, 0x10) \
+        + bytes(16) + good[sos:]
+    with pytest.raises(ValueError):
+        codecs.decode_jpeg(used)
+
+
 # Wild progressive/baseline JPEGs that ship in this environment (outside
 # the repo, existence-gated). javax.imageio via the Spark image source is
 # the independent reference decoder.
