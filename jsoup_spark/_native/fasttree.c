@@ -3634,8 +3634,7 @@ error_pre:
 /* ====================== span walker (extract.spans._walk) ==============
  * walk_spans(body, base_uri) -> list[(kind, text, ref)] or None to bail.
  * Strict subset of extract/spans.py _walk + _flush: bails (per document)
- * on unknown node classes, Element subclasses, TEXT_BOUNDARY elements
- * with children (has_text would be needed), or depth > 512. Semantics —
+ * where the text walker t_walk below does. Semantics —
  * normalization, java_trim, separators, media/data barriers — mirror the
  * Python source of truth and are gated by the same golden/fuzz suites. */
 
@@ -3651,34 +3650,55 @@ static PyObject *s_src = NULL, *s_alt = NULL, *s_kind_text = NULL,
 static PyObject *
 configure_walk(PyObject *self, PyObject *args)
 {
-    PyObject *media, *data, *resolve, *cdata_t, *datanode_t, *comment_t;
-    long f_block, f_boundary, f_preserve;
-    if (!PyArg_ParseTuple(args, "OOOOOOlll", &media, &data, &resolve,
-                          &cdata_t, &datanode_t, &comment_t,
-                          &f_block, &f_boundary, &f_preserve))
+    PyObject *media, *data, *resolve, *datanode_t, *comment_t;
+    if (!PyArg_ParseTuple(args, "OOOOO", &media, &data, &resolve,
+                          &datanode_t, &comment_t))
         return NULL;
 #define SETW(g, v) Py_XDECREF(g); Py_INCREF(v); g = v
     SETW(g_w_media, media);
     SETW(g_w_data, data);
     SETW(g_w_resolve, resolve);
-    SETW(g_cdata_t, cdata_t);
     SETW(g_datanode_t, datanode_t);
     SETW(g_comment_t, comment_t);
 #undef SETW
-    g_f_block = f_block;
-    g_f_boundary = f_boundary;
-    g_f_preserve = f_preserve;
     if (s_src == NULL) {
         s_src = PyUnicode_InternFromString("src");
         s_alt = PyUnicode_InternFromString("alt");
         s_kind_text = PyUnicode_InternFromString("text");
         s_kind_media = PyUnicode_InternFromString("media");
         s_kind_data = PyUnicode_InternFromString("data");
+        if (s_kind_data == NULL)
+            return NULL;
+    }
+    Py_RETURN_NONE;
+}
+
+/* configure_text(Element, TextNode, CDataNode, BLOCK, TEXT_BOUNDARY,
+ * PRESERVE_WS): the node classes and tag flags every text walk reads
+ * (parser/nodes.py configures this at import) */
+static PyObject *
+configure_text(PyObject *self, PyObject *args)
+{
+    PyObject *element, *textnode, *cdata_t;
+    long f_block, f_boundary, f_preserve;
+    if (!PyArg_ParseTuple(args, "OOOlll", &element, &textnode, &cdata_t,
+                          &f_block, &f_boundary, &f_preserve))
+        return NULL;
+#define SETW(g, v) Py_XDECREF(g); Py_INCREF(v); g = v
+    SETW(g_element, element);
+    SETW(g_textnode, textnode);
+    SETW(g_cdata_t, cdata_t);
+#undef SETW
+    g_f_block = f_block;
+    g_f_boundary = f_boundary;
+    g_f_preserve = f_preserve;
+    if (s_br == NULL) {
         s_empty = PyUnicode_InternFromString("");
         s_br = PyUnicode_InternFromString("br");
         if (s_br == NULL)
             return NULL;
     }
+    resolve_slots();
     Py_RETURN_NONE;
 }
 
@@ -3713,16 +3733,17 @@ is_norm_ws(Py_UCS4 c)
            c == 0xA0;
 }
 
-/* StringUtil.appendNormalisedWhitespace (strip-leading from accum tail) */
+/* StringUtil.appendNormalisedWhitespace; strip_leading drops a leading
+ * whitespace run (the caller's lastCharIsWhitespace) */
 static int
-acc_append_normalised(Accum *a, PyObject *text)
+acc_append_normalised(Accum *a, PyObject *text, int strip_leading)
 {
     Py_ssize_t n = PyUnicode_GET_LENGTH(text);
     if (acc_reserve(a, n) < 0)
         return -1;
     int kind = PyUnicode_KIND(text);
     const void *data = PyUnicode_DATA(text);
-    int last_ws = a->len > 0 && a->buf[a->len - 1] == ' ';
+    int last_ws = strip_leading;
     for (Py_ssize_t i = 0; i < n; i++) {
         Py_UCS4 c = PyUnicode_READ(kind, data, i);
         if (is_norm_ws(c)) {
@@ -3753,12 +3774,6 @@ acc_append_raw(Accum *a, PyObject *text)
     return 0;
 }
 
-static inline int
-acc_ends_space(Accum *a)
-{
-    return a->len > 0 && a->buf[a->len - 1] == ' ';
-}
-
 static int
 emit_tuple(PyObject *out, PyObject *kind, PyObject *text, PyObject *ref)
 {
@@ -3770,31 +3785,11 @@ emit_tuple(PyObject *out, PyObject *kind, PyObject *text, PyObject *ref)
     return rc;
 }
 
-/* java_trim + emit + reset; returns -1 on error */
+/* nodes._pre_distance: steps from node to its nearest PRESERVE_WS
+ * ancestor-or-self within the 6-element window, else 6; a text node is
+ * whitespace-preserved iff its parent's distance is <= 5. -1 on error. */
 static int
-acc_flush(Accum *a, PyObject *out)
-{
-    Py_ssize_t start = 0, end = a->len;
-    while (start < end && a->buf[start] <= 0x20)
-        start++;
-    while (end > start && a->buf[end - 1] <= 0x20)
-        end--;
-    a->len = 0;
-    if (end > start) {
-        PyObject *txt = PyUnicode_FromKindAndData(
-            PyUnicode_4BYTE_KIND, a->buf + start, end - start);
-        if (txt == NULL)
-            return -1;
-        int rc = emit_tuple(out, s_kind_text, txt, s_empty);
-        Py_DECREF(txt);
-        return rc;
-    }
-    return 0;
-}
-
-/* preserve_whitespace: 6 ancestor levels (Element instances only) */
-static int
-w_preserve_ws(PyObject *node)
+w_pre_distance(PyObject *node)
 {
     PyObject *n = node;
     Py_INCREF(n);
@@ -3810,7 +3805,7 @@ w_preserve_ws(PyObject *node)
         Py_DECREF(fl);
         if (v & g_f_preserve) {
             Py_DECREF(n);
-            return 1;
+            return i;
         }
         PyObject *p = node_get(n, s_parent);
         Py_DECREF(n);
@@ -3821,7 +3816,7 @@ w_preserve_ws(PyObject *node)
             break;
     }
     Py_DECREF(n);
-    return 0;
+    return 6;
 }
 
 /* Element.data(): preorder descendants collecting Data/CData/Comment */
@@ -3978,49 +3973,181 @@ w_flags(PyObject *el)
     return v;
 }
 
-/* tail separator logic (spans._tail_sep) */
+/* ---- text runs shared by the span and text walkers ----
+ * TAcc tracks Python's *fragment* state (nodes._append_normalised and
+ * the separator tests read accum[-1]), not the last buffered char: an
+ * empty raw fragment (an empty TextNode under <pre>) leaves accum[-1] ==
+ * "", so the next separator or strip-leading test sees no trailing
+ * space. */
+
+#define W_BAIL 2
+#define TEXT_MAX_DEPTH 512
+
+typedef struct {
+    Accum a;
+    int sp;   /* accum[-1].endswith(" ") — false while accum is empty */
+    int any;  /* bool(accum) */
+} TAcc;
+
 static int
-w_tail_sep(Accum *a, PyObject *el, PyObject *nxt)
+t_raw(TAcc *t, PyObject *v)
 {
-    long flags = w_flags(el);
-    if (flags < 0)
+    if (acc_append_raw(&t->a, v) < 0)
         return -1;
-    int need = w_needs_trailing(el, flags);
-    if (need <= 0)
-        return need;
-    if (nxt == NULL || nxt == Py_None)
-        return 0;
-    int ok = 0;
-    if (PyObject_TypeCheck(nxt, (PyTypeObject *)g_textnode)) {
-        ok = 1;
-    } else if (PyObject_TypeCheck(nxt, (PyTypeObject *)g_element)) {
-        long nf = w_flags(nxt);
-        if (nf < 0)
-            return -1;
-        ok = !(nf & g_f_block);
-    }
-    if (ok && !acc_ends_space(a) && a->len > 0) {
-        if (acc_reserve(a, 1) < 0)
-            return -1;
-        a->buf[a->len++] = ' ';
-    } else if (ok && a->len == 0) {
-        /* python appends even to empty accum (leading space trimmed at
-         * flush) — harmless either way; mirror exactly: append */
-        if (acc_reserve(a, 1) < 0)
-            return -1;
-        a->buf[a->len++] = ' ';
+    Py_ssize_t n = PyUnicode_GET_LENGTH(v);
+    t->sp = n > 0 && PyUnicode_READ_CHAR(v, n - 1) == ' ';
+    t->any = 1;
+    return 0;
+}
+
+static int
+t_norm(TAcc *t, PyObject *v)
+{
+    Py_ssize_t before = t->a.len;
+    if (acc_append_normalised(&t->a, v, t->sp) < 0)
+        return -1;
+    if (t->a.len > before) {
+        t->sp = t->a.buf[t->a.len - 1] == ' ';
+        t->any = 1;
     }
     return 0;
 }
 
-#define W_BAIL 2
+static int
+t_space(TAcc *t)
+{
+    if (acc_reserve(&t->a, 1) < 0)
+        return -1;
+    t->a.buf[t->a.len++] = ' ';
+    t->sp = t->any = 1;
+    return 0;
+}
+
+/* a TextNode/CDataNode child: 1 appended, 0 not one, W_BAIL, -1 error */
+static int
+t_text_child(TAcc *t, PyObject *child, int preserve)
+{
+    PyTypeObject *tp = Py_TYPE(child);
+    if (tp != (PyTypeObject *)g_textnode && tp != (PyTypeObject *)g_cdata_t)
+        return 0;
+    PyObject *v = node_get(child, s_value);
+    if (v == NULL)
+        return -1;
+    int rc = W_BAIL;
+    if (PyUnicode_Check(v))
+        rc = (preserve || tp == (PyTypeObject *)g_cdata_t)
+            ? t_raw(t, v) : t_norm(t, v);
+    Py_DECREF(v);
+    return rc == 0 ? 1 : rc;
+}
+
+static int
+t_is_br(PyObject *el)
+{
+    PyObject *nm = node_get(el, s_name);
+    if (nm == NULL)
+        return -1;
+    int r = PyUnicode_Check(nm) && PyUnicode_Compare(nm, s_br) == 0;
+    Py_DECREF(nm);
+    return r;
+}
+
+/* nodes._needs_leading_sep */
+static int
+t_needs_leading(PyObject *el, long flags, Py_ssize_t nkids)
+{
+    if (flags & g_f_block)
+        return 1;
+    int br = t_is_br(el);
+    if (br != 0)
+        return br;
+    if ((flags & g_f_boundary) && nkids > 0)
+        return w_has_text(el);
+    return 0;
+}
+
+/* nodes._tail: a space after an element that is followed by text or an
+ * inline element */
+static int
+t_tail(TAcc *t, PyObject *el, PyObject *nxt)
+{
+    if (t->sp || nxt == NULL)
+        return 0;
+    if (!PyObject_TypeCheck(nxt, (PyTypeObject *)g_textnode)) {
+        if (!PyObject_TypeCheck(nxt, (PyTypeObject *)g_element))
+            return 0;
+        long nf = w_flags(nxt);
+        if (nf < 0)
+            return -1;
+        if (nf & g_f_block)
+            return 0;
+    }
+    long flags = w_flags(el);
+    int need = flags < 0 ? -1 : w_needs_trailing(el, flags);
+    if (need <= 0)
+        return need;
+    return t_space(t);
+}
+
+/* java_trim(''.join(accum)) */
+static PyObject *
+t_result(TAcc *t)
+{
+    Py_ssize_t start = 0, end = t->a.len;
+    while (start < end && t->a.buf[start] <= 0x20)
+        start++;
+    while (end > start && t->a.buf[end - 1] <= 0x20)
+        end--;
+    if (end == start)
+        return PyUnicode_New(0, 0);
+    return PyUnicode_FromKindAndData(PyUnicode_4BYTE_KIND,
+                                     t->a.buf + start, end - start);
+}
+
+/* spans._flush: emit the trimmed run, if any, and clear the accumulator */
+static int
+t_flush(TAcc *t, PyObject *out)
+{
+    PyObject *txt = t_result(t);
+    t->a.len = 0;
+    t->sp = t->any = 0;
+    if (txt == NULL)
+        return -1;
+    int rc = PyUnicode_GET_LENGTH(txt) > 0
+        ? emit_tuple(out, s_kind_text, txt, s_empty) : 0;
+    Py_DECREF(txt);
+    return rc;
+}
 
 typedef struct {
-    PyObject *node;   /* borrowed from parent's children (kept alive by tree) */
     PyObject *children; /* owned */
     Py_ssize_t idx;
-    PyObject *nxt;    /* borrowed or NULL */
-} WFrame;
+    PyObject *node;     /* borrowed (kept alive by the parent's list) */
+    PyObject *nxt;      /* borrowed or NULL */
+    int dist;           /* w_pre_distance(node), counting on past 6 */
+} TFrame;
+
+/* first frame of a walk over root's children; -1 error, W_BAIL */
+static int
+t_root_frame(TFrame *f, PyObject *root)
+{
+    f->children = node_get(root, s_children);
+    if (f->children == NULL)
+        return -1;
+    if (!PyList_Check(f->children)) {
+        Py_DECREF(f->children);
+        return W_BAIL;
+    }
+    f->idx = 0;
+    f->node = root;
+    f->nxt = NULL;
+    f->dist = w_pre_distance(root);
+    if (f->dist < 0) {
+        Py_DECREF(f->children);
+        return -1;
+    }
+    return 0;
+}
 
 /* Document.title() fast path (nodes.py Document.title / reference
  * Document.java:198-202): first <title> inside the doc's html>head,
@@ -4129,39 +4256,208 @@ title_text(PyObject *self, PyObject *args)
         PyErr_Clear();
         Py_RETURN_NOTIMPLEMENTED;
     }
-    Accum acc = {NULL, 0, 0};
+    TAcc t = {{NULL, 0, 0}, 0, 0};
     for (Py_ssize_t i = 0; i < PyList_GET_SIZE(tch); i++) {
         PyObject *c = PyList_GET_ITEM(tch, i);
         if (!PyObject_TypeCheck(c, (PyTypeObject *)g_textnode)) {
             Py_DECREF(tch);
-            PyMem_Free(acc.buf);
+            PyMem_Free(t.a.buf);
             Py_RETURN_NOTIMPLEMENTED;
         }
         PyObject *v = node_get(c, s_value);
-        if (v == NULL) { Py_DECREF(tch); PyMem_Free(acc.buf); return NULL; }
+        if (v == NULL) { Py_DECREF(tch); PyMem_Free(t.a.buf); return NULL; }
         if (!PyUnicode_Check(v)) {
-            Py_DECREF(v); Py_DECREF(tch); PyMem_Free(acc.buf);
+            Py_DECREF(v); Py_DECREF(tch); PyMem_Free(t.a.buf);
             Py_RETURN_NOTIMPLEMENTED;
         }
-        int rc = acc_append_normalised(&acc, v);
+        int rc = t_norm(&t, v);
         Py_DECREF(v);
-        if (rc < 0) { Py_DECREF(tch); PyMem_Free(acc.buf); return NULL; }
+        if (rc < 0) { Py_DECREF(tch); PyMem_Free(t.a.buf); return NULL; }
     }
     Py_DECREF(tch);
-    /* java_trim: strip chars <= U+0020 from both ends */
-    if (acc.buf == NULL)
-        return PyUnicode_FromString("");
-    {
-        Py_ssize_t a = 0, b = acc.len;
-        while (a < b && acc.buf[a] <= 0x20)
-            a++;
-        while (b > a && acc.buf[b - 1] <= 0x20)
-            b--;
-        PyObject *out = PyUnicode_FromKindAndData(
-            PyUnicode_4BYTE_KIND, acc.buf + a, b - a);
-        PyMem_Free(acc.buf);
-        return out;
+    PyObject *out = t_result(&t);
+    PyMem_Free(t.a.buf);
+    return out;
+}
+
+/* spans' barrier test for an element: 1 media, 2 data, 0 neither, -1 */
+static int
+w_barrier(PyObject *el)
+{
+    PyObject *cns = node_get(el, s_ns);
+    if (cns == NULL)
+        return -1;
+    int html_ns = (cns == g_ns_html) ||
+        (PyUnicode_Compare(cns, g_ns_html) == 0);
+    Py_DECREF(cns);
+    PyErr_Clear();
+    if (!html_ns)
+        return 0;
+    PyObject *nm = node_get(el, s_name);
+    if (nm == NULL)
+        return -1;
+    int r = PySet_Contains(g_w_media, nm);
+    if (r == 0) {
+        r = PySet_Contains(g_w_data, nm);
+        if (r > 0)
+            r = 2;
     }
+    Py_DECREF(nm);
+    return r;
+}
+
+/* spans._emit_barrier: flush the text run, then emit ("media", trimmed
+ * alt, absolute src or raw src) or ("data", el.data(), "") */
+static int
+w_emit_barrier(TAcc *t, PyObject *el, int is_media, PyObject *out,
+               PyObject *base)
+{
+    if (t_flush(t, out) < 0)
+        return -1;
+    if (!is_media) {
+        PyObject *d = w_element_data(el);
+        if (d == NULL)
+            return -1;
+        int rc = emit_tuple(out, s_kind_data, d, s_empty);
+        Py_DECREF(d);
+        return rc;
+    }
+    PyObject *attrs = node_get(el, s_attrs);
+    if (attrs == NULL)
+        return -1;
+    PyObject *ref = NULL, *alt = NULL;
+    int rc = -1;
+    PyObject *srcv = PyDict_GetItemWithError(attrs, s_src);
+    if (srcv == NULL && PyErr_Occurred())
+        goto done;
+    if (srcv == NULL) {
+        Py_INCREF(s_empty);
+        ref = s_empty;
+    } else {
+        PyObject *rel = (srcv == Py_None) ? s_empty : srcv;
+        ref = PyObject_CallFunctionObjArgs(g_w_resolve, base, rel, NULL);
+        if (ref == NULL)
+            goto done;
+        if (PyUnicode_GET_LENGTH(ref) == 0) {
+            Py_DECREF(ref);
+            Py_INCREF(rel);
+            ref = rel;
+        }
+    }
+    PyObject *altv = PyDict_GetItemWithError(attrs, s_alt);
+    if (altv == NULL && PyErr_Occurred())
+        goto done;
+    if (altv == NULL || altv == Py_None) {
+        Py_INCREF(s_empty);
+        alt = s_empty;
+    } else {
+        /* java_trim(alt) */
+        Py_ssize_t st = 0, en = PyUnicode_GET_LENGTH(altv);
+        int kind = PyUnicode_KIND(altv);
+        const void *data = PyUnicode_DATA(altv);
+        while (st < en && PyUnicode_READ(kind, data, st) <= 0x20)
+            st++;
+        while (en > st && PyUnicode_READ(kind, data, en - 1) <= 0x20)
+            en--;
+        alt = PyUnicode_Substring(altv, st, en);
+        if (alt == NULL)
+            goto done;
+    }
+    /* python emits ["media", alt, ref]: (kind, text, ref) */
+    rc = emit_tuple(out, s_kind_media, alt, ref);
+done:
+    Py_XDECREF(alt);
+    Py_XDECREF(ref);
+    Py_DECREF(attrs);
+    return rc;
+}
+
+/* The head/tail walk over root's descendants (nodes._text_accumulate),
+ * shared by Element.text() (out == NULL) and the span emitter (out a
+ * list; spans._walk): there, media and data elements flush the run and
+ * emit a span. Returns 0, W_BAIL or -1. */
+static int
+t_walk(TAcc *t, PyObject *root, PyObject *out, PyObject *base)
+{
+    TFrame frames[TEXT_MAX_DEPTH];
+    int depth = 0;
+    int rc = t_root_frame(&frames[0], root);
+    if (rc != 0)
+        return rc;
+    while (rc == 0 && depth >= 0) {
+        TFrame *f = &frames[depth];
+        Py_ssize_t n = PyList_GET_SIZE(f->children);
+        if (f->idx >= n) {
+            /* the root's tail is a no-op: it has no next sibling here */
+            if (depth > 0)
+                rc = t_tail(t, f->node, f->nxt);
+            Py_DECREF(f->children);
+            depth--;
+            continue;
+        }
+        PyObject *child = PyList_GET_ITEM(f->children, f->idx);
+        PyObject *nxt = f->idx + 1 < n
+            ? PyList_GET_ITEM(f->children, f->idx + 1) : NULL;
+        f->idx++;
+        rc = t_text_child(t, child, f->dist <= 5);
+        if (rc != 0) {
+            if (rc == 1)
+                rc = 0;
+            continue;
+        }
+        if (!PyObject_TypeCheck(child, (PyTypeObject *)g_element)) {
+            /* spans._walk appends a TextNode subclass; text() skips it */
+            if (out != NULL &&
+                PyObject_TypeCheck(child, (PyTypeObject *)g_textnode))
+                rc = W_BAIL;
+            continue;
+        }
+        long flags = w_flags(child);
+        int barrier = flags < 0 ? -1 : 0;
+        if (out != NULL && barrier == 0)
+            barrier = w_barrier(child);
+        if (barrier > 0 &&
+            w_emit_barrier(t, child, barrier == 1, out, base) < 0)
+            barrier = -1;
+        PyObject *ch = barrier < 0 ? NULL : node_get(child, s_children);
+        if (ch == NULL) {
+            rc = -1;
+            continue;
+        }
+        if (!PyList_Check(ch)) {
+            Py_DECREF(ch);
+            rc = W_BAIL;
+            continue;
+        }
+        Py_ssize_t nkids = PyList_GET_SIZE(ch);
+        if (!barrier && t->any && !t->sp) {
+            int lead = t_needs_leading(child, flags, nkids);
+            if (lead > 0)
+                lead = t_space(t);
+            if (lead < 0) {
+                Py_DECREF(ch);
+                rc = -1;
+                continue;
+            }
+        }
+        if (nkids == 0) {
+            Py_DECREF(ch);
+            rc = t_tail(t, child, nxt);
+        } else if (depth + 1 >= TEXT_MAX_DEPTH) {
+            Py_DECREF(ch);
+            rc = W_BAIL;
+        } else {
+            TFrame *c = &frames[++depth];
+            c->children = ch;
+            c->idx = 0;
+            c->node = child;
+            c->nxt = nxt;
+            c->dist = (flags & g_f_preserve) ? 0 : f->dist + 1;
+        }
+    }
+    for (; depth >= 0; depth--)
+        Py_DECREF(frames[depth].children);
+    return rc;
 }
 
 static PyObject *
@@ -4170,214 +4466,94 @@ walk_spans(PyObject *self, PyObject *args)
     PyObject *root, *base;
     if (!PyArg_ParseTuple(args, "OO", &root, &base))
         return NULL;
-    if (g_w_media == NULL || g_element == NULL) {
+    if (g_w_media == NULL || s_br == NULL || g_ns_html == NULL) {
         PyErr_SetString(PyExc_RuntimeError, "walker not configured");
         return NULL;
     }
     PyObject *out = PyList_New(0);
     if (out == NULL)
         return NULL;
-    Accum acc = {NULL, 0, 0};
-    WFrame frames[512];
-    int depth = 0;
-    int rc = 0;
+    TAcc t = {{NULL, 0, 0}, 0, 0};
+    int rc = t_walk(&t, root, out, base);
+    if (rc == 0)
+        rc = t_flush(&t, out);
+    PyMem_Free(t.a.buf);
+    if (rc == 0)
+        return out;
+    Py_DECREF(out);
+    if (rc == W_BAIL)
+        Py_RETURN_NONE;
+    return NULL;
+}
 
-    PyObject *rootch = node_get(root, s_children);
-    if (rootch == NULL || !PyList_Check(rootch)) {
-        Py_XDECREF(rootch);
-        Py_DECREF(out);
+/* ================ Element.text() / own_text() (parser/nodes.py) ========
+ * element_text(el) / element_own_text(el) -> str, or None to bail to the
+ * Python source of truth (nodes._text_accumulate and Element.own_text).
+ * Bails on a non-list children or non-str text value, and past
+ * TEXT_MAX_DEPTH open elements. */
+
+static PyObject *
+element_text(PyObject *self, PyObject *root)
+{
+    if (s_br == NULL)
+        Py_RETURN_NONE;
+    TAcc t = {{NULL, 0, 0}, 0, 0};
+    int rc = t_walk(&t, root, NULL, NULL);
+    PyObject *out = rc == 0 ? t_result(&t) : NULL;
+    PyMem_Free(t.a.buf);
+    if (rc == W_BAIL)
+        Py_RETURN_NONE;
+    return out;
+}
+
+static PyObject *
+element_own_text(PyObject *self, PyObject *el)
+{
+    if (s_br == NULL)
+        Py_RETURN_NONE;
+    PyObject *ch = node_get(el, s_children);
+    if (ch == NULL)
         return NULL;
-    }
-    frames[0].node = root;
-    frames[0].children = rootch;
-    frames[0].idx = 0;
-    frames[0].nxt = NULL;
-
-    while (depth >= 0) {
-        WFrame *f = &frames[depth];
-        if (f->idx < PyList_GET_SIZE(f->children)) {
-            PyObject *child = PyList_GET_ITEM(f->children, f->idx);
-            PyObject *nxt = (f->idx + 1 < PyList_GET_SIZE(f->children))
-                ? PyList_GET_ITEM(f->children, f->idx + 1) : NULL;
-            f->idx++;
-            PyTypeObject *tp = Py_TYPE(child);
-            if (tp == (PyTypeObject *)g_textnode ||
-                tp == (PyTypeObject *)g_cdata_t) {
-                PyObject *v = node_get(child, s_value);
-                if (v == NULL) { rc = -1; break; }
-                int pres = (tp == (PyTypeObject *)g_cdata_t)
-                    ? 1 : w_preserve_ws(f->node);
-                if (pres < 0) { Py_DECREF(v); rc = -1; break; }
-                rc = pres ? acc_append_raw(&acc, v)
-                          : acc_append_normalised(&acc, v);
-                Py_DECREF(v);
-                if (rc < 0) break;
-                continue;
-            }
-            if (tp == (PyTypeObject *)g_datanode_t ||
-                tp == (PyTypeObject *)g_comment_t)
-                continue;   /* skipped leaf kinds */
-            if (tp != (PyTypeObject *)g_element) {
-                /* subclasses (PseudoTextElement), doctype/decl leaves,
-                 * anything unexpected: python path */
-                if (PyObject_TypeCheck(child, (PyTypeObject *)g_element) ||
-                    PyObject_TypeCheck(child, (PyTypeObject *)g_textnode)) {
-                    rc = W_BAIL; break;
-                }
-                continue;   /* other leaf kinds are skipped in python too */
-            }
-            long flags = w_flags(child);
-            if (flags < 0) { rc = -1; break; }
-            PyObject *nm = node_get(child, s_name);
-            if (nm == NULL) { rc = -1; break; }
-            PyObject *cns = node_get(child, s_ns);
-            if (cns == NULL) { Py_DECREF(nm); rc = -1; break; }
-            int html_ns = (cns == g_ns_html) ||
-                (PyUnicode_Compare(cns, g_ns_html) == 0);
-            Py_DECREF(cns);
-            PyErr_Clear();
-            int is_media = 0, is_data = 0;
-            if (html_ns) {
-                is_media = PySet_Contains(g_w_media, nm);
-                if (is_media < 0) { Py_DECREF(nm); rc = -1; break; }
-                if (!is_media) {
-                    is_data = PySet_Contains(g_w_data, nm);
-                    if (is_data < 0) { Py_DECREF(nm); rc = -1; break; }
-                }
-            }
-            if (is_media || is_data) {
-                if (acc_flush(&acc, out) < 0) { Py_DECREF(nm); rc = -1; break; }
-                if (is_media) {
-                    PyObject *attrs = node_get(child, s_attrs);
-                    if (attrs == NULL) { Py_DECREF(nm); rc = -1; break; }
-                    PyObject *ref = NULL, *alt = NULL;
-                    PyObject *srcv = PyDict_GetItemWithError(attrs, s_src);
-                    if (srcv == NULL && PyErr_Occurred()) {
-                        Py_DECREF(attrs); Py_DECREF(nm); rc = -1; break;
-                    }
-                    if (srcv == NULL) {
-                        Py_INCREF(s_empty); ref = s_empty;
-                    } else {
-                        PyObject *rel = (srcv == Py_None) ? s_empty : srcv;
-                        ref = PyObject_CallFunctionObjArgs(
-                            g_w_resolve, base, rel, NULL);
-                        if (ref == NULL) {
-                            Py_DECREF(attrs); Py_DECREF(nm); rc = -1; break;
-                        }
-                        if (PyUnicode_GET_LENGTH(ref) == 0) {
-                            Py_DECREF(ref);
-                            Py_INCREF(rel); ref = rel;
-                        }
-                    }
-                    PyObject *altv = PyDict_GetItemWithError(attrs, s_alt);
-                    if (altv == NULL && PyErr_Occurred()) {
-                        Py_DECREF(ref); Py_DECREF(attrs); Py_DECREF(nm);
-                        rc = -1; break;
-                    }
-                    if (altv == NULL || altv == Py_None) {
-                        Py_INCREF(s_empty); alt = s_empty;
-                    } else {
-                        /* java_trim(alt) */
-                        Py_ssize_t n2 = PyUnicode_GET_LENGTH(altv);
-                        Py_ssize_t st = 0, en = n2;
-                        int k2 = PyUnicode_KIND(altv);
-                        const void *d2 = PyUnicode_DATA(altv);
-                        while (st < en && PyUnicode_READ(k2, d2, st) <= 0x20)
-                            st++;
-                        while (en > st && PyUnicode_READ(k2, d2, en - 1) <= 0x20)
-                            en--;
-                        alt = PyUnicode_Substring(altv, st, en);
-                        if (alt == NULL) {
-                            Py_DECREF(ref); Py_DECREF(attrs); Py_DECREF(nm);
-                            rc = -1; break;
-                        }
-                    }
-                    int erc = emit_tuple(out, s_kind_media, alt, ref);
-                    Py_DECREF(alt); Py_DECREF(ref); Py_DECREF(attrs);
-                    if (erc < 0) { Py_DECREF(nm); rc = -1; break; }
-                    /* NOTE: python emits ["media", alt, ref] — order is
-                     * (kind, text=alt, media_ref=ref); matches */
-                } else {
-                    PyObject *d = w_element_data(child);
-                    if (d == NULL) { Py_DECREF(nm); rc = -1; break; }
-                    int erc = emit_tuple(out, s_kind_data, d, s_empty);
-                    Py_DECREF(d);
-                    if (erc < 0) { Py_DECREF(nm); rc = -1; break; }
-                }
-            } else {
-                /* leading separator (_needs_leading_sep: BLOCK, br, or
-                 * TEXT_BOUNDARY with children and non-blank subtree text) */
-                if (acc.len > 0) {
-                    int lead = 0;
-                    if (flags & g_f_block) {
-                        lead = 1;
-                    } else if (PyUnicode_Compare(nm, s_br) == 0) {
-                        lead = 1;
-                    } else if (flags & g_f_boundary) {
-                        PyObject *ch = node_get(child, s_children);
-                        if (ch == NULL) { Py_DECREF(nm); rc = -1; break; }
-                        int has_kids = PyList_GET_SIZE(ch) > 0;
-                        Py_DECREF(ch);
-                        if (has_kids) {
-                            int ht = w_has_text(child);
-                            if (ht < 0) { Py_DECREF(nm); rc = -1; break; }
-                            lead = ht;
-                        }
-                    }
-                    if (lead && !acc_ends_space(&acc)) {
-                        if (acc_reserve(&acc, 1) < 0) {
-                            Py_DECREF(nm); rc = -1; break;
-                        }
-                        acc.buf[acc.len++] = ' ';
-                    }
-                }
-            }
-            Py_DECREF(nm);
-            /* descend or tail-sep */
-            PyObject *ch = node_get(child, s_children);
-            if (ch == NULL || !PyList_Check(ch)) {
-                Py_XDECREF(ch); rc = -1; break;
-            }
-            if (PyList_GET_SIZE(ch) > 0) {
-                if (depth + 1 >= 512) { Py_DECREF(ch); rc = W_BAIL; break; }
-                depth++;
-                frames[depth].node = child;
-                frames[depth].children = ch;
-                frames[depth].idx = 0;
-                frames[depth].nxt = nxt;
-            } else {
-                Py_DECREF(ch);
-                rc = w_tail_sep(&acc, child, nxt);
-                if (rc != 0) break;
-            }
-        } else {
-            Py_DECREF(f->children);
-            PyObject *node = f->node;
-            PyObject *nxt = f->nxt;
-            depth--;
-            if (depth >= 0) {
-                rc = w_tail_sep(&acc, node, nxt);
-                if (rc != 0) break;
-            }
-        }
-    }
-    /* release remaining frames on abnormal exit */
-    while (rc != 0 && depth >= 0) {
-        Py_DECREF(frames[depth].children);
-        depth--;
-    }
-    if (rc == 0) {
-        rc = acc_flush(&acc, out);
-    }
-    PyMem_Free(acc.buf);
-    if (rc == W_BAIL) {
-        Py_DECREF(out);
+    if (!PyList_Check(ch)) {
+        Py_DECREF(ch);
         Py_RETURN_NONE;
     }
-    if (rc < 0) {
-        Py_DECREF(out);
-        return NULL;
+    TAcc t = {{NULL, 0, 0}, 0, 0};
+    int preserve = -1, rc = 0;  /* computed at the first text child */
+    for (Py_ssize_t i = 0; rc == 0 && i < PyList_GET_SIZE(ch); i++) {
+        PyObject *c = PyList_GET_ITEM(ch, i);
+        PyTypeObject *tp = Py_TYPE(c);
+        if (tp == (PyTypeObject *)g_textnode && preserve < 0) {
+            int d = w_pre_distance(el);
+            if (d < 0) {
+                rc = -1;
+                break;
+            }
+            preserve = d <= 5;
+        }
+        rc = t_text_child(&t, c, preserve > 0);
+        if (rc != 0) {
+            if (rc == 1)
+                rc = 0;
+            continue;
+        }
+        if (PyObject_TypeCheck(c, (PyTypeObject *)g_textnode))
+            rc = W_BAIL;   /* a TextNode subclass: Python's isinstance */
+        else if (PyObject_TypeCheck(c, (PyTypeObject *)g_element) && !t.sp) {
+            rc = t_is_br(c);
+            if (rc > 0)
+                rc = t_space(&t);
+        }
     }
+    Py_DECREF(ch);
+    PyObject *out = NULL;
+    if (rc == 0)
+        out = t_result(&t);
+    else if (rc == W_BAIL) {
+        Py_INCREF(Py_None);
+        out = Py_None;
+    }
+    PyMem_Free(t.a.buf);
     return out;
 }
 
@@ -4400,7 +4576,13 @@ static PyMethodDef methods[] = {
     {"configure_head", configure_head, METH_VARARGS,
      "configure_head(head_empty_set, resolve, DataNode, CData, before_head, in_head, after_head, text, rcdata, rawtext, scriptdata)"},
     {"configure_walk", configure_walk, METH_VARARGS,
-     "configure_walk(media_set, data_set, resolve, CData, DataNode, Comment, BLOCK, TEXT_BOUNDARY, PRESERVE_WS)"},
+     "configure_walk(media_set, data_set, resolve, DataNode, Comment)"},
+    {"configure_text", configure_text, METH_VARARGS,
+     "configure_text(Element, TextNode, CData, BLOCK, TEXT_BOUNDARY, PRESERVE_WS)"},
+    {"element_text", element_text, METH_O,
+     "element_text(el) -> Element.text() str or None (bail)"},
+    {"element_own_text", element_own_text, METH_O,
+     "element_own_text(el) -> Element.own_text() str or None (bail)"},
     {"title_text", title_text, METH_VARARGS,
      "title_text(doc) -> normalized title str or NotImplemented"},
     {"walk_spans", walk_spans, METH_VARARGS,

@@ -13,7 +13,7 @@ from __future__ import annotations
 from urllib.parse import urlparse
 
 from ..parser.nodes import (
-    DataNode, Document, Element, TextNode, make_ci_attrs,
+    DataNode, Document, Element, TextNode, make_ci_attrs, resolve_url,
 )
 from ..parser.treebuilder import parse_body_fragment
 from .safelist import Safelist
@@ -39,7 +39,7 @@ def clean_document(dirty: Document, safelist: Safelist) -> CleanResult:
     num = 0
     body = dirty.body
     if body is not None:
-        num = _copy_safe_nodes(body, body_el, safelist)
+        num = _copy_safe_nodes(body, body_el, safelist, _AbsUrls(dirty.base))
     return CleanResult(clean, num)
 
 
@@ -56,13 +56,31 @@ def is_valid_body_html(body_html: str, safelist: Safelist) -> bool:
     return clean_document(dirty, safelist).num_discarded == 0
 
 
+class _AbsUrls(dict):
+    """One document's Node.absUrl results, keyed by the attribute value:
+    each distinct URL is resolved against the document base once, and
+    the base host is parsed once. Lives for one clean_document call."""
+
+    def __init__(self, base: str):
+        super().__init__()
+        self.base = base
+        self.base_host = _host(base)
+
+    def __missing__(self, rel: str) -> str:
+        out = self[rel] = resolve_url(self.base, rel)
+        return out
+
+    def abs_url(self, el: Element, key: str) -> str:
+        """el.abs_url(key) for an element of this document."""
+        return self[el.attr(key)] if el.has_attr(key) else ""
+
+
 def _copy_safe_nodes(source_root: Element, dest_root: Element,
-                     safelist: Safelist) -> int:
+                     safelist: Safelist, urls: _AbsUrls) -> int:
     num_discarded = 0
     # iterative head/tail walk with destination cursor
     dest = dest_root
     stack: list[list] = [[source_root, 0]]
-    entered: dict[int, bool] = {}
     while stack:
         top = stack[-1]
         node, idx = top[0], top[1]
@@ -71,7 +89,8 @@ def _copy_safe_nodes(source_root: Element, dest_root: Element,
             child = node.children[idx]
             if isinstance(child, Element):
                 if safelist.is_safe_tag(child.name):
-                    new_el, discarded = _create_safe_element(child, safelist)
+                    new_el, discarded = _create_safe_element(
+                        child, safelist, urls)
                     dest.append(new_el)
                     num_discarded += discarded
                     dest = new_el
@@ -93,33 +112,29 @@ def _copy_safe_nodes(source_root: Element, dest_root: Element,
     return num_discarded
 
 
-def _create_safe_element(source: Element, safelist: Safelist):
+def _create_safe_element(source: Element, safelist: Safelist,
+                         urls: _AbsUrls):
     tag = source.name
     dest = Element(source.name, source.ns)
     dest.tag_name_case = source.tag_name_case
     num_discarded = 0
     for key, value in source.attrs.items():
         sval = value if value is not None else ""
-        if safelist.is_safe_attribute(tag, source, key, sval):
+        if safelist.is_safe_attribute(tag, source, key, sval, urls.abs_url):
             out_val = sval
-            if safelist.should_abs_url(tag, key):
-                abs_val = source.abs_url(key)
-                out_val = abs_val if abs_val else sval
+            if value is not None and safelist.should_abs_url(tag, key):
+                out_val = urls.abs_url(source, key) or sval
             dest.attrs[key] = out_val if value is not None else value
-            if value is not None:
-                dest.attrs[key] = out_val
         else:
             num_discarded += 1
 
     enforced = safelist.enforced_for(tag)
     # rel=nofollow same-host exemption (Cleaner.java:213-226)
     if tag == "a" and enforced.get("rel") == "nofollow":
-        href = source.abs_url("href")
-        if href:
-            base_host = _host(source.base_uri())
-            link_host = _host(href)
-            if base_host and base_host.lower() == (link_host or "").lower():
-                enforced.pop("rel", None)
+        base_host = urls.base_host
+        href = urls.abs_url(source, "href") if base_host else ""
+        if href and base_host.lower() == (_host(href) or "").lower():
+            enforced.pop("rel", None)
     for k, v in enforced.items():
         # case-insensitive removal of any preserved-case duplicate
         for existing in [e for e in dest.attrs if e.lower() == k]:

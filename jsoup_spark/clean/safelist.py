@@ -84,7 +84,10 @@ class Safelist:
     def is_safe_tag(self, name: str) -> bool:
         return name in self.tag_names
 
-    def is_safe_attribute(self, tag: str, el, key: str, value: str) -> bool:
+    def is_safe_attribute(self, tag: str, el, key: str, value: str,
+                          abs_url) -> bool:
+        """abs_url(el, key) resolves a protocol-checked attribute
+        (Node.absUrl)."""
         ok = self.attributes.get(tag)
         if ok is not None and key in ok:
             prots_for_tag = self.protocols.get(tag)
@@ -93,17 +96,13 @@ class Safelist:
                 if prots is None:
                     return True
                 return self._is_safe_protocol(
-                    self._protocol_value(el, key, value), prots)
+                    abs_url(el, key) or value, prots)
             return True
         enforced = self.enforced.get(tag)
         if enforced is not None and key in enforced:
             return enforced[key] == value
-        return tag != ALL and self.is_safe_attribute(ALL, el, key, value)
-
-    @staticmethod
-    def _protocol_value(el, key: str, value: str) -> str:
-        abs_val = el.abs_url(key)
-        return abs_val if abs_val else value
+        return tag != ALL and self.is_safe_attribute(
+            ALL, el, key, value, abs_url)
 
     @staticmethod
     def _is_safe_protocol(value: str, prots: set[str]) -> bool:

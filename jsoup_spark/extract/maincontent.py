@@ -38,10 +38,7 @@ from __future__ import annotations
 import re
 from operator import itemgetter
 
-from ..parser import tags as _tags
-from ..parser.nodes import (
-    CDataNode, Document, Element, TextNode, _append_normalised,
-    _needs_leading_sep, _pre_distance, _tail, java_trim)
+from ..parser.nodes import Document, Element
 
 __all__ = ["score_document", "extract_main", "main_content_stage"]
 
@@ -79,54 +76,6 @@ def _class_weight(el: Element) -> float:
     if POSITIVE_RE.search(hint):
         w += 25.0
     return w
-
-
-def _text_and_anchors(root: Element) -> tuple[str, list[Element]]:
-    """root.text() and the descendant <a> elements from ONE traversal.
-
-    Exactly Element.text()'s normalization (the nodes._head/_tail
-    machinery, i.e. the same output byte for byte) — the election used
-    to pay a full text walk PLUS a separate elements() enumeration per
-    candidate (VERDICT r8 perf note: election was 5x the parse cost)."""
-    _P = _tags.PRESERVE_WS
-    _TN, _CD = TextNode, CDataNode
-    accum: list[str] = []
-    anchors: list[Element] = []
-    stack: list[list] = [[root, 0, None, _pre_distance(root)]]
-    while stack:
-        top = stack[-1]
-        node, idx = top[0], top[1]
-        children = node.children
-        if idx < len(children):
-            top[1] = idx + 1
-            child = children[idx]
-            cls = child.__class__
-            if cls is _TN:
-                if top[3] <= 5:
-                    accum.append(child.value)
-                else:
-                    _append_normalised(accum, child.value)
-                continue
-            if cls is _CD:
-                accum.append(child.value)
-                continue
-            if not isinstance(child, Element):
-                continue
-            nxt = children[idx + 1] if idx + 1 < len(children) else None
-            if accum and _needs_leading_sep(child) \
-                    and not accum[-1].endswith(" "):
-                accum.append(" ")
-            if child.name == "a":
-                anchors.append(child)
-            if child.children:
-                stack.append([child, 0, nxt,
-                              0 if child.flags & _P else top[3] + 1])
-            else:
-                _tail(child, accum, nxt)
-        else:
-            stack.pop()
-            _tail(node, accum, top[2])
-    return java_trim("".join(accum)), anchors
 
 
 def _memo_text(el: Element, memo: dict[int, str]) -> str:
@@ -181,19 +130,15 @@ def _score_document(doc: Document,
     for key, el in cands.items():
         if el.name not in _CANDIDATE_TAGS:
             continue
-        text = memo.get(key)
-        if text is None:
-            text, anchors = _text_and_anchors(el)
-            memo[key] = text
-        else:  # already walked as an inner candidate: re-list anchors only
-            anchors = [d for d in el.elements() if d.name == "a"]
+        text = _memo_text(el, memo)
         total = len(text)
         if total == 0:
             density = 0.0
         else:
             linked = 0
-            for d in anchors:
-                linked += len(_memo_text(d, memo))
+            for d in el.elements():
+                if d.name == "a":
+                    linked += len(_memo_text(d, memo))
             density = min(1.0, linked / total)
         out.append((el, scores[key] * (1.0 - density), order[key]))
     out.sort(key=lambda t: t[2])

@@ -18,11 +18,10 @@ span-sequence equality — the per-row invariant from BASELINE.json.
 
 from __future__ import annotations
 
-from ..parser import tags
 from ..parser.tags import NS_HTML as _NS_HTML
 from ..parser.nodes import (
     Document, Element, TextNode, _append_normalised_text,
-    _last_char_is_ws, _needs_leading_sep, _needs_trailing_sep, java_trim,
+    _last_char_is_ws, _needs_leading_sep, _tail, java_trim,
 )
 
 MEDIA_TAGS = frozenset(("img", "video", "audio", "source", "embed",
@@ -37,11 +36,8 @@ except ImportError:  # pragma: no cover - extension not built
     _CW = None
 else:
     from ..parser.nodes import (
-        CDataNode as _CD, CommentNode as _CM, DataNode as _DN,
-        resolve_url as _resolve)
-    _CW.configure_walk(MEDIA_TAGS, DATA_SPAN_TAGS, _resolve,
-                       _CD, _DN, _CM,
-                       tags.BLOCK, tags.TEXT_BOUNDARY, tags.PRESERVE_WS)
+        CommentNode as _CM, DataNode as _DN, resolve_url as _resolve)
+    _CW.configure_walk(MEDIA_TAGS, DATA_SPAN_TAGS, _resolve, _DN, _CM)
 
 
 def extract_spans(doc: Document) -> list[tuple[str, str, str, int]]:
@@ -93,8 +89,9 @@ def _emit_barrier(el: Element, out: list, accum: list[str]) -> None:
 
 
 def _walk(root: Element, out: list, accum: list[str]) -> None:
-    # head/tail traversal identical to nodes._text_accumulate, with
-    # barrier emission for media/data elements
+    # Element.text()'s head/tail traversal (nodes._text_accumulate) with
+    # barrier emission for media/data elements; _native/fasttree.c
+    # walk_spans is its C twin
     stack: list[list] = [[root, 0, None]]
     _TN, _EL = TextNode, Element
     while stack:
@@ -121,19 +118,11 @@ def _walk(root: Element, out: list, accum: list[str]) -> None:
             if child.children:
                 stack.append([child, 0, nxt])
             else:
-                _tail_sep(child, nxt, accum)
+                _tail(child, accum, nxt)
         else:
             stack.pop()
             if node is not root:
-                _tail_sep(node, top[2], accum)
-
-
-def _tail_sep(el: Element, nxt, accum: list[str]) -> None:
-    if (_needs_trailing_sep(el)
-            and (isinstance(nxt, TextNode)
-                 or (isinstance(nxt, Element) and nxt.is_inline))
-            and not _last_char_is_ws(accum)):
-        accum.append(" ")
+                _tail(node, accum, top[2])
 
 
 # ------------------------------------------------------------ streaming
@@ -181,7 +170,7 @@ def stream_spans(html: str, base_uri: str = "",
         if nxt is _DEFER:
             pending_tail = child
         else:
-            _tail_sep(child, nxt, accum)
+            _tail(child, accum, nxt)
 
     def drain(upto_el, at_eof):
         nonlocal pending_tail
@@ -197,7 +186,7 @@ def stream_spans(html: str, base_uri: str = "",
             if any(id(n) in open_ids for n in batch):
                 return
         if pending_tail is not None:
-            _tail_sep(pending_tail, batch[0] if batch else None, accum)
+            _tail(pending_tail, accum, batch[0] if batch else None)
             pending_tail = None
         for i, node in enumerate(batch):
             nxt = batch[i + 1] if i + 1 < len(batch) else (

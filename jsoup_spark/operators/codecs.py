@@ -1223,15 +1223,16 @@ def _vp8l_read_code(br: LsbReader, alphabet: int) -> PrefixCode:
     if br.read(1):  # simple
         num = br.read(1) + 1
         first_8bit = br.read(1)
-        s0 = br.read(8 if first_8bit else 1)
-        if num == 1:
-            if s0 >= alphabet:
-                raise ValueError("VP8L: simple-code symbol out of range")
-            return PrefixCode([1], [s0])  # consumes no bits
-        s1 = br.read(8)
-        if s0 >= alphabet or s1 >= alphabet or s0 == s1:
-            raise ValueError("VP8L: bad simple code symbols")
-        return PrefixCode([1, 1], [s0, s1])
+        syms = [br.read(8 if first_8bit else 1)]
+        if num == 2:
+            syms.append(br.read(8))
+        # libwebp gives each symbol length 1 and builds the code from the
+        # lengths inside the alphabet: a repeated or out-of-range symbol
+        # leaves a one-symbol code, which consumes no bits
+        syms = sorted({s for s in syms if s < alphabet})
+        if not syms:
+            raise ValueError("VP8L: simple-code symbol out of range")
+        return PrefixCode([1] * len(syms), syms)
     ncodes = br.read(4) + 4
     if ncodes > len(_VP8L_CL_ORDER):
         raise ValueError("VP8L: bad code-length count")
@@ -1471,10 +1472,12 @@ def _vp8l_avg2(a: int, b: int) -> int:
 
 def _vp8l_inv_predictor(img: np.ndarray, sub: np.ndarray, sbits: int):
     """Inverse predictor transform (spec 3.5.1): 14 modes, per-channel
-    modular addition of the residual to the prediction."""
+    modular addition of the residual to the prediction. The mode is the
+    low 4 bits of the subimage's green; libwebp decodes the unassigned
+    modes 14 and 15 as mode 0."""
     h, w = img.shape
     out = img.copy()
-    modes = ((sub >> 8) & 0xFF).astype(np.int32)
+    modes = ((sub >> 8) & 0xF).astype(np.int32)
     for y in range(h):
         row_modes = modes[y >> sbits]
         for x in range(w):
@@ -1493,7 +1496,7 @@ def _vp8l_inv_predictor(img: np.ndarray, sub: np.ndarray, sbits: int):
                 # one past the top row's end is the CURRENT row's first
                 # (already-decoded) pixel
                 TR = int(out[y - 1, x + 1]) if x + 1 < w else int(out[y, 0])
-                if m == 0:
+                if m == 0 or m >= 14:
                     pred = 0xFF000000
                 elif m == 1:
                     pred = L
@@ -1541,8 +1544,6 @@ def _vp8l_inv_predictor(img: np.ndarray, sub: np.ndarray, sbits: int):
                         # C truncating division by 2 (toward zero)
                         half = d // 2 if d >= 0 else -((-d) // 2)
                         pred |= max(0, min(255, a + half)) << sh
-                else:
-                    raise ValueError("VP8L: bad predictor mode")
             p = int(out[y, x])
             out[y, x] = ((((p >> 24) + (pred >> 24)) & 0xFF) << 24
                          | (((p >> 16) + (pred >> 16)) & 0xFF) << 16
@@ -1606,6 +1607,11 @@ def decode_webp(payload: bytes) -> np.ndarray:
     if len(payload) < 20 or payload[:4] != b"RIFF" \
             or payload[8:12] != b"WEBP":
         raise ValueError("not a WebP file")
+    # libwebp's RIFF checks: the RIFF payload holds at least one chunk
+    # header and fits the data, and the image chunk fits the RIFF payload
+    riff_size = int.from_bytes(payload[4:8], "little")
+    if not 12 <= riff_size <= len(payload) - 8:
+        raise ValueError("WebP: bad RIFF size")
     pos = 12
     vp8l = None
     vp8 = None
@@ -1614,6 +1620,9 @@ def decode_webp(payload: bytes) -> np.ndarray:
         tag = payload[pos:pos + 4]
         size = int.from_bytes(payload[pos + 4:pos + 8], "little")
         body = payload[pos + 8:pos + 8 + size]
+        if tag in (b"VP8L", b"VP8 ") and size > riff_size - 12:
+            raise ValueError("WebP: %s chunk exceeds the RIFF size"
+                             % tag.decode())
         if tag in (b"VP8L", b"VP8 ", b"ALPH") and len(body) < size:
             # the lossy boolean decoder reads past-the-end bytes as
             # zeros by spec, so truncation must be caught at the

@@ -453,6 +453,10 @@ class Element(Node):
 
     # --- text (reference semantics; Element.java:1551-1705) ---
     def text(self) -> str:
+        if _FT is not None:
+            t = _FT.element_text(self)
+            if t is not None:
+                return t
         ch = self.children
         if len(ch) == 1 and ch[0].__class__ is TextNode:
             # leaf fast path (p/a/li/title with one text child): the
@@ -467,6 +471,10 @@ class Element(Node):
         return java_trim("".join(accum))
 
     def own_text(self) -> str:
+        if _FT is not None:
+            t = _FT.element_own_text(self)
+            if t is not None:
+                return t
         accum: list[str] = []
         pre = None  # preserve_whitespace(self), computed on first text
         for child in self.children:
@@ -690,9 +698,8 @@ def _text_accumulate(root: Element, accum: list[str]) -> None:
     re-walk up to 6 ancestors for EVERY text node — a constant-factor
     tax on every text()/clean/select call).
 
-    PARITY WARNING: extract/maincontent._text_and_anchors mirrors this
-    traversal (plus anchor collection) and is pinned byte-identical by
-    fuzz; any semantic change here must be mirrored there."""
+    The C walker (_native/fasttree.c element_text) implements this same
+    traversal; test_parser_golden pins the two equal."""
     _P = tags.PRESERVE_WS
     _TN, _CD, _EL = TextNode, CDataNode, Element
     # stack entries: [element, child_index, next_sibling, pre_distance]
@@ -730,14 +737,6 @@ def _text_accumulate(root: Element, accum: list[str]) -> None:
         else:
             stack.pop()
             _tail(node, accum, top[2])
-
-
-def _head(node: Node, accum: list[str]) -> None:
-    if isinstance(node, TextNode):
-        _append_normalised_text(accum, node)
-    elif isinstance(node, Element):
-        if accum and _needs_leading_sep(node) and not _last_char_is_ws(accum):
-            accum.append(" ")
 
 
 def _tail(node: Node, accum: list[str], nxt: Node | None) -> None:
@@ -974,3 +973,14 @@ def resolve_url(base: str, rel: str) -> str:
         if not has_scheme:
             return ""
     return out
+
+
+# optional C text walker (Element.text / own_text); the Python methods
+# above stay the source of truth and run whenever it returns None
+try:
+    from .._native import jsoup_fasttree as _FT
+except ImportError:  # pragma: no cover - extension not built
+    _FT = None
+else:
+    _FT.configure_text(Element, TextNode, CDataNode, tags.BLOCK,
+                       tags.TEXT_BOUNDARY, tags.PRESERVE_WS)

@@ -537,6 +537,110 @@ def test_webp_truncation_raises_valueerror():
             codecs.decode_webp(data[:cut])
 
 
+def _vp8l_riff(vp8l: bytes) -> bytes:
+    chunk = b"VP8L" + len(vp8l).to_bytes(4, "little") + vp8l \
+        + b"\0" * (len(vp8l) & 1)
+    return b"RIFF" + (4 + len(chunk)).to_bytes(4, "little") + b"WEBP" + chunk
+
+
+def _vp8l_simple(bw, *syms):
+    """A simple prefix code of one or two symbols (8-bit form)."""
+    bw.write(1, 1)
+    bw.write(len(syms) - 1, 1)
+    bw.write(1, 1)
+    for s in syms:
+        bw.write(s, 8)
+
+
+def _vp8l_flat(w, h, codes, pred_mode=None):
+    """A w x h VP8L stream whose five prefix codes are simple codes, so
+    no pixel bits follow; `pred_mode` adds a predictor transform whose
+    one-block subimage holds that mode in its green."""
+    from jsoup_spark.operators.bits import LsbWriter
+    bw = LsbWriter()
+    bw.write(0x2F, 8)
+    bw.write(w - 1, 14)
+    bw.write(h - 1, 14)
+    bw.write(1, 1)   # alpha hint
+    bw.write(0, 3)   # version
+    if pred_mode is not None:
+        bw.write(1, 1)   # a transform:
+        bw.write(0, 2)   # predictor,
+        bw.write(3, 3)   # 32-pixel blocks (one block)
+        bw.write(0, 1)   # no color cache in the subimage
+        for s in (pred_mode, 0, 0, 0, 0):
+            _vp8l_simple(bw, s)
+    bw.write(0, 1)   # no (more) transforms
+    bw.write(0, 1)   # no color cache
+    bw.write(0, 1)   # no meta prefix codes
+    for syms in codes:
+        _vp8l_simple(bw, *syms)
+    return _vp8l_riff(bw.finish())
+
+
+def test_webp_vp8l_mutated_streams_follow_libwebp():
+    """VP8L streams on which this decoder once disagreed with libwebp:
+    (a) a RIFF size that does not match the data, (c) a simple prefix
+    code whose two symbols are equal or out of the alphabet, (d)
+    predictor modes 14 and 15, and greens above 15, of which libwebp
+    reads the low 4 bits. Where libwebp is present, both decoders give
+    the same pixels or both reject."""
+    rng = np.random.RandomState(21)
+    base = codecs.encode_webp_lossless(
+        rng.randint(0, 256, (5, 7, 3), np.uint8), predictor=True)
+    riff = int.from_bytes(base[4:8], "little")
+    vp8l_size = int.from_bytes(base[16:20], "little")
+    cases = []
+    for bit in range(32):
+        data = bytearray(base)
+        data[4 + bit // 8] ^= 1 << bit % 8
+        new = riff ^ (1 << bit)
+        fits = 12 <= new <= len(data) - 8 and vp8l_size <= new - 12
+        cases.append((bytes(data), None if fits else ValueError))
+    # (c): repeated symbols, and a distance symbol past its 40-symbol
+    # alphabet, leave a one-symbol code
+    expect = np.full((3, 4, 3), (100, 7, 200), np.uint8)
+    for codes in ([(7, 7), (100,), (200,), (255,), (0,)],
+                  [(7,), (100, 100), (200,), (255, 255), (3, 3)],
+                  [(7,), (100,), (200,), (255,), (45, 3)]):
+        cases.append((_vp8l_flat(4, 3, codes), expect))
+    cases.append((_vp8l_flat(4, 3, [(7,), (100,), (200,), (255,), (45, 41)]),
+                  ValueError))
+    # (d): the mode is green & 15, and modes 14 and 15 predict as mode 0
+    codes = [(3,), (50,), (9,), (1,), (0,)]
+    for mode, same_as in ((14, 0), (15, 0), (0x1E, 0), (0x2F, 0),
+                          (0x11, 1), (0xFD, 13)):
+        want = codecs.decode_webp(_vp8l_flat(9, 5, codes, same_as))
+        cases.append((_vp8l_flat(9, 5, codes, mode), want))
+    try:
+        import libwebp_ref as ref
+        lib = ref.available()
+    except ImportError:
+        lib = False
+    for data, want in cases:
+        try:
+            got = codecs.decode_webp(data)
+        except ValueError:
+            got = ValueError
+        if want is None:
+            assert got is not ValueError
+        elif want is ValueError:
+            assert got is ValueError
+        else:
+            assert got is not ValueError and (got == want).all()
+        if lib:
+            try:
+                theirs = ref.decode_rgba(data)
+            except ValueError:
+                assert got is ValueError
+                continue
+            assert got is not ValueError
+            if got.shape[2] == 3:
+                assert (theirs[:, :, 3] == 255).all()
+                theirs = theirs[:, :, :3]
+            assert (got == theirs).all()
+
+
 def test_webp_in_multimodal_pipeline():
     # decode_image_array dispatch: a webp payload produces real pixels
     rng = np.random.RandomState(17)

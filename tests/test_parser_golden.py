@@ -69,6 +69,110 @@ def test_c_accelerators_match_python_paths(monkeypatch):
         assert not bad, ([n for _, n in off], len(bad), bad[0][:200])
 
 
+def _edge_text_trees():
+    """Hand-built trees for the text walker's edge cases."""
+    from jsoup_spark.parser.nodes import (
+        CDataNode, Element, PseudoTextElement, TextNode)
+
+    def el(name, *kids):
+        e = Element(name)
+        for k in kids:
+            e.append(TextNode(k) if isinstance(k, str) else k)
+        return e
+
+    def chain(top, depth, leaf):
+        # `top` > div x depth > text(leaf): the text's parent is `depth`
+        # elements below `top`
+        inner = el("div", leaf)
+        for _ in range(depth - 1):
+            inner = el("div", inner)
+        return el(top, inner)
+
+    trees = [
+        # an empty raw fragment: accum[-1] == "" hides the trailing space
+        el("div", "a ", el("pre", ""), " b"),
+        el("div", "a ", el("pre", "", el("span", "x")), el("i", " y")),
+        el("pre", "a ", "", el("br"), "b"),
+        el("div", el("pre", ""), el("p", "x")),
+        el("p", "a", CDataNode("  c\n d "), el("br"), CDataNode(""), " e"),
+        el("div", el("pre", CDataNode("")), "z"),
+        el("div", PseudoTextElement("p"), " x ",
+           el("b", PseudoTextElement("span")), "y"),
+        el("div", "a\xa0\xa0 \u200b b\xad\xad c \u200b\u200b",
+           el("span", "\u200b"), " \xad d", el("br"), "\xa0e\t\n"),
+        el("td", "\u200b ", el("b", " \xad"), el("br"), el("br"), " f "),
+        el("div", el("span", el("b")), el("br"), "g", el("img"), el("p"),
+           el("span", " h "), el("p", "i"), "j"),
+    ]
+    trees[6].children[0].append(TextNode(" pseudo  text "))
+    trees[6].children[2].children[0].append(TextNode("q"))
+    for depth in (4, 5, 6, 7):
+        trees.append(chain("pre", depth, "  ws \n kept?  "))
+        trees.append(el("p", "x", chain("textarea", depth, " a  b ")))
+    # nesting past the C walker's frame limit: it bails to Python
+    deep = el("span", "end")
+    for i in range(700):
+        deep = el("div" if i % 3 else "b", deep, " t%d " % i)
+    trees.append(el("body", deep))
+    return trees
+
+
+def test_c_text_walker_matches_python(monkeypatch):
+    """Element.text() and own_text() from the C walker
+    (_native/fasttree.c element_text / element_own_text) equal the Python
+    source of truth (nodes._text_accumulate, Element.own_text) on every
+    element of every golden input and of the hand-built edge trees."""
+    from jsoup_spark.parser import nodes
+    from jsoup_spark.parser.xmlbuilder import parse_xml
+    from jsoup_spark.select.selector import select
+
+    htmls = [c["html"] for c in load_fixture("golden_tree.json")]
+    htmls += [c["html"] for c in load_fixture("golden_bodyhtml.json")]
+    text_fx = load_fixture("golden_text.json")
+    for key in ("text", "wholetext", "title"):
+        htmls += [c["html"] for c in text_fx[key]]
+    select_fx = load_fixture("golden_select.json")
+    htmls += sorted({c["doc"] for c in select_fx["fuzz"]})
+    roots = [parse(h) for h in htmls]
+    # :matchText wraps text runs in PseudoTextElements
+    pseudo = parse(select_fx["doc"])
+    select(pseudo, "p:matchText, div:matchText, li:matchText")
+    assert any(isinstance(e, nodes.PseudoTextElement)
+               for e in pseudo.elements())
+    roots.append(pseudo)
+    roots += [parse_xml(c["xml"]) for c in load_fixture("golden_xml.json")]
+    roots += _edge_text_trees()
+
+    def texts():
+        return [(e.text(), e.own_text())
+                for r in roots for e in [r, *r.elements()]]
+
+    assert nodes._FT is not None
+    assert nodes._FT.element_text(roots[-1]) is None  # past the limit
+    c_out = texts()
+    monkeypatch.setattr(nodes, "_FT", None)
+    py_out = texts()
+    els = [e for r in roots for e in [r, *r.elements()]]
+    bad = [(e.name, a, b) for e, a, b in zip(els, c_out, py_out) if a != b]
+    assert not bad, (len(bad), len(els), bad[0])
+    assert c_out[-702][0].startswith("end t0 t1 ")
+
+
+def test_c_span_walker_matches_python_on_edge_trees():
+    """The C span walker (spans._CW.walk_spans) shares the text walker's
+    fragment state: on the hand-built edge trees it emits the Python
+    walker's spans, or bails."""
+    from jsoup_spark.extract import spans
+
+    for tree in _edge_text_trees():
+        out, accum = [], []
+        spans._walk(tree, out, accum)
+        spans._flush(out, accum)
+        got = spans._CW.walk_spans(tree, "")
+        if got is not None:
+            assert got == [tuple(o) for o in out]
+
+
 @pytest.mark.skipif(not os.path.isdir(REF_RESOURCES + "/htmltests"),
                     reason=REF_RESOURCES + "/htmltests is missing: the wild "
                     "corpus hashed in golden_wild.json is not here")
