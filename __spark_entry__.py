@@ -189,8 +189,8 @@ def q_select_xpath(spark, sf_dir):
 
 
 def q_select_xpath_adv(spark, sf_dir):
-    """Round-8 XPath surface (select/xpath.py, differentially fuzzed vs
-    the reference's selectXpath via tools/fuzz_xpath.py): filter
+    """Round-8 XPath surface (select/xpath.py, fuzzed against the
+    compiled reference's selectXpath in round 8): filter
     expression with trailing path, following-sibling axis, and an
     arithmetic positional predicate. On the synthetic corpus the ul
     holds [source, lang] items, so the first li's next sibling at
@@ -208,8 +208,8 @@ def q_select_xpath_adv(spark, sf_dir):
 
 def q_select_css_path(spark, sf_dir):
     """Unique-selector generation (Element.cssSelector,
-    nodes/Element.java:1113-1151; fuzzed per-element via
-    tools/fuzz_selectxml.py cssel): paths hang from the nearest
+    nodes/Element.java:1113-1151; fuzzed per element against the
+    compiled reference in round 8): paths hang from the nearest
     document-unique #id ancestor and disambiguate with :nth-child from
     the parent-context child select. On the corpus, #main is unique and
     its ul holds two lis, so the paths are closed-form constants."""
@@ -223,8 +223,8 @@ def q_select_css_path(spark, sf_dir):
 
 def q_select_xpath_xml(spark, sf_dir):
     """XPath over XML-PARSED documents (Element.selectXpath over
-    Parser.xmlParser output — select/xpath.py, fuzzed via
-    tools/fuzz_xpath.py xpathxml mode): tag case is PRESERVED and name
+    Parser.xmlParser output — select/xpath.py, fuzzed against the
+    compiled reference in round 8): tag case is PRESERVED and name
     tests are case-sensitive, so //Item matches the mixed-case element
     only, never the lowercase <item> sibling."""
     d = _documents(spark, sf_dir).select(

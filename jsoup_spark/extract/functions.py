@@ -61,12 +61,6 @@ def elements_text(els: list[Element]) -> str:
     return " ".join(t for t in (el.text() for el in els) if t)
 
 
-def elements_html(els: list[Element]) -> str:
-    """Elements.html(): newline-joined inner HTML."""
-    from ..clean.serializer import inner_html
-    return "\n".join(inner_html(el) for el in els)
-
-
 def _unique_id_selector(el: Element, doc) -> str:
     """Element.uniqueIdSelector (Element.java:1090-1102): '#id' iff the id
     resolves to exactly this element document-wide ('' otherwise; an

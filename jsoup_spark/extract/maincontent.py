@@ -111,7 +111,10 @@ def _score_document(doc: Document,
             order[key] = pos
             cands[key] = el
 
+    anchors = []
     for pos, el in enumerate(body.elements()):
+        if el.name == "a":
+            anchors.append(el)
         if el.name not in _PARA_TAGS:
             continue
         text = _memo_text(el, memo)
@@ -126,20 +129,24 @@ def _score_document(doc: Document,
             if isinstance(grand, Element):
                 init(grand, pos)
                 scores[id(grand)] += delta / 2.0
+    # linked chars per candidate: each anchor's text length, added to
+    # every candidate among its ancestors
+    linked = {key: 0 for key, el in cands.items()
+              if el.name in _CANDIDATE_TAGS}
+    for a in anchors:
+        n = None
+        up = a.parent
+        while isinstance(up, Element):
+            if id(up) in linked:
+                if n is None:
+                    n = len(_memo_text(a, memo))
+                linked[id(up)] += n
+            up = up.parent
     out = []
-    for key, el in cands.items():
-        if el.name not in _CANDIDATE_TAGS:
-            continue
-        text = _memo_text(el, memo)
-        total = len(text)
-        if total == 0:
-            density = 0.0
-        else:
-            linked = 0
-            for d in el.elements():
-                if d.name == "a":
-                    linked += len(_memo_text(d, memo))
-            density = min(1.0, linked / total)
+    for key in linked:
+        el = cands[key]
+        total = len(_memo_text(el, memo))
+        density = min(1.0, linked[key] / total) if total else 0.0
         out.append((el, scores[key] * (1.0 - density), order[key]))
     out.sort(key=lambda t: t[2])
     return [(el, s) for el, s, _ in out]

@@ -89,46 +89,46 @@ _ADAM7 = ((0, 8, 0, 8), (4, 8, 0, 8), (0, 4, 4, 8), (2, 4, 0, 4),
           (0, 2, 2, 4), (1, 2, 0, 2), (0, 1, 1, 2))
 
 
-def _png_unfilter(raw: np.ndarray, row_bytes: int, bpp: int) -> np.ndarray:
-    """(h, 1 + row_bytes) filtered scanlines -> (h, row_bytes) uint8.
-    `bpp` is the filter byte offset (bytes per complete pixel, min 1)."""
-    height = raw.shape[0]
-    filters = raw[:, 0]
-    lines = raw[:, 1:].astype(np.int32)  # headroom for the filter math
-    out = np.empty((height, row_bytes), np.int32)
-    prev = np.zeros(row_bytes, np.int32)
-    for y in range(height):
-        f = filters[y]
-        line = lines[y]
-        if f == 0:                      # None
-            cur = line.copy()
-        elif f == 1:                    # Sub (serial in x: per-pixel loop
-            cur = line.copy()           #  over pixels, vector over channels)
-            for x in range(bpp, row_bytes):
-                cur[x] = (cur[x] + cur[x - bpp]) & 0xFF
-        elif f == 2:                    # Up
-            cur = (line + prev) & 0xFF
-        elif f == 3:                    # Average
-            cur = line.copy()
-            for x in range(row_bytes):
-                a = cur[x - bpp] if x >= bpp else 0
-                cur[x] = (cur[x] + ((a + prev[x]) >> 1)) & 0xFF
-        elif f == 4:                    # Paeth
-            cur = line.copy()
-            for x in range(row_bytes):
-                a = cur[x - bpp] if x >= bpp else 0
-                b = prev[x]
-                c = prev[x - bpp] if x >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (
-                    b if pb <= pc else c)
-                cur[x] = (cur[x] + pred) & 0xFF
-        else:
+def _png_unfilter(data, row_bytes: int, bpp: int) -> bytearray:
+    """Undo PNG row filters: whole rows of one filter byte and
+    `row_bytes` filtered bytes -> the unfiltered rows, concatenated.
+    `bpp` is the filter byte offset (bytes per complete pixel, min 1).
+    Raises ValueError on a filter byte above 4."""
+    out = bytearray()
+    prev = bytearray(row_bytes)
+    # Up adds two rows bytewise: one carry-free big-int add per row
+    low7 = int.from_bytes(b"\x7f" * row_bytes, "little")
+    high = int.from_bytes(b"\x80" * row_bytes, "little")
+    for pos in range(0, len(data), 1 + row_bytes):
+        f = data[pos]
+        row = bytearray(data[pos + 1:pos + 1 + row_bytes])
+        if f == 1:                               # Sub
+            for i in range(bpp, row_bytes):
+                row[i] = (row[i] + row[i - bpp]) & 0xFF
+        elif f == 2:                             # Up
+            x = int.from_bytes(row, "little")
+            y = int.from_bytes(prev, "little")
+            row = bytearray((((x & low7) + (y & low7)) ^ ((x ^ y) & high))
+                            .to_bytes(row_bytes, "little"))
+        elif f == 3:                             # Average
+            for i in range(min(bpp, row_bytes)):
+                row[i] = (row[i] + (prev[i] >> 1)) & 0xFF
+            for i in range(bpp, row_bytes):
+                row[i] = (row[i] + ((row[i - bpp] + prev[i]) >> 1)) & 0xFF
+        elif f == 4:                             # Paeth (first pixel: Up)
+            for i in range(min(bpp, row_bytes)):
+                row[i] = (row[i] + prev[i]) & 0xFF
+            for i in range(bpp, row_bytes):
+                a, b, c = row[i - bpp], prev[i], prev[i - bpp]
+                # distances of p = a + b - c to a, b and c
+                pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - c - c)
+                row[i] = (row[i] + (a if pa <= pb and pa <= pc else
+                                    b if pb <= pc else c)) & 0xFF
+        elif f:
             raise ValueError(f"bad PNG filter {f}")
-        out[y] = cur
-        prev = cur
-    return out.astype(np.uint8)
+        out += row
+        prev = row
+    return out
 
 
 def _png_rows_to_samples(rows: np.ndarray, width: int, ch: int,
@@ -224,11 +224,10 @@ def decode_png(payload: bytes) -> np.ndarray:
         if not pw or not ph:
             continue
         row_bytes = (pw * ch * bit_depth + 7) // 8
-        block = np.frombuffer(raw, np.uint8,
-                              count=ph * (1 + row_bytes),
-                              offset=off).reshape(ph, 1 + row_bytes)
-        off += ph * (1 + row_bytes)
-        rows = _png_unfilter(block, row_bytes, bpp)
+        end = off + ph * (1 + row_bytes)
+        rows = np.frombuffer(_png_unfilter(raw[off:end], row_bytes, bpp),
+                             np.uint8).reshape(ph, row_bytes)
+        off = end
         vals = _png_rows_to_samples(rows, pw, ch, bit_depth)
         samples[ys::yt, xs::xt] = vals.reshape(ph, pw, ch)
 
@@ -1218,6 +1217,15 @@ _VP8L_CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7,
                   8, 9, 10, 11, 12, 13, 14, 15)
 
 
+def _vp8l_code(lengths: list[int]) -> PrefixCode:
+    """A normal prefix code from its code lengths. As in libwebp, a code
+    with more than one symbol must be complete (Kraft sum exactly 1)."""
+    used = [n for n in lengths if n]
+    if len(used) > 1 and sum(1 << (15 - n) for n in used) < 1 << 15:
+        raise ValueError("VP8L: incomplete prefix code")
+    return PrefixCode(lengths)
+
+
 def _vp8l_read_code(br: LsbReader, alphabet: int) -> PrefixCode:
     """Read one prefix code (spec 3.7.2: simple length or normal)."""
     if br.read(1):  # simple
@@ -1239,7 +1247,7 @@ def _vp8l_read_code(br: LsbReader, alphabet: int) -> PrefixCode:
     cl_lengths = [0] * 19
     for i in range(ncodes):
         cl_lengths[_VP8L_CL_ORDER[i]] = br.read(3)
-    cl = PrefixCode(cl_lengths)
+    cl = _vp8l_code(cl_lengths)
     if br.read(1):  # explicit max symbol count
         len_nbits = 2 + 2 * br.read(3)
         max_symbol = 2 + br.read(len_nbits)
@@ -1271,7 +1279,7 @@ def _vp8l_read_code(br: LsbReader, alphabet: int) -> PrefixCode:
             sym += 11 + br.read(7)
         if sym > alphabet:
             raise ValueError("VP8L: code-length repeat overflow")
-    return PrefixCode(lengths)
+    return _vp8l_code(lengths)
 
 
 def _vp8l_prefix_value(code: int, br: LsbReader) -> int:

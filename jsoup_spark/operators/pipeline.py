@@ -346,8 +346,8 @@ def css_path_stage(docs: DataFrame, query: str) -> DataFrame:
     """Unique-selector generation (Element.cssSelector,
     nodes/Element.java:1113-1151) for every element matched by a CSS
     query — one row (doc_id, match_idx, css_path) per match. The
-    generator is differentially fuzzed per-element against the compiled
-    reference (tools/fuzz_selectxml.py cssel block)."""
+    generator was differentially fuzzed per element against the
+    compiled reference in round 8."""
     from ..extract.functions import css_selector
     _compiled("css", query)
 
@@ -362,7 +362,7 @@ def xpath_xml_stage(docs: DataFrame, query: str) -> DataFrame:
     """XPath select over XML-PARSED documents (the reference's
     Element.selectXpath over Parser.xmlParser output — preserved tag
     case, prefix rules, PI/doctype invisibility; select/xpath.py,
-    differentially fuzzed via tools/fuzz_xpath.py xpathxml mode). One row
+    fuzzed against the compiled reference in round 8). One row
     per matched element: (doc_id, match_idx, tag, own_text). `tag` is the
     PRESERVED-case tag name (el.tagName())."""
     from ..select.xpath import select_xpath

@@ -229,6 +229,12 @@ def _bytes_to_samples(rows: bytes, h: int, w: int, spp: int,
     return vals.reshape(h, w, spp)
 
 
+def _undo_horizontal(vals: np.ndarray, depth: int) -> np.ndarray:
+    """Predictor 2: (rows, width, spp) differences -> samples, a running
+    sum along each row per channel, modulo 2**depth."""
+    return np.cumsum(vals.astype(np.int64), axis=1) % (1 << depth)
+
+
 def decode_tiff(payload: bytes) -> np.ndarray:
     """TIFF -> uint8 (H, W, C): first IFD only (the baseline reader
     contract; multi-page files decode their first page)."""
@@ -295,8 +301,7 @@ def decode_tiff(payload: bytes) -> np.ndarray:
                     vals = _bytes_to_samples(raw, th, tw, spp_chunk,
                                              depth, bo)
                     if predictor == 2:
-                        vals = np.cumsum(vals.astype(np.int64),
-                                         axis=1) % (1 << depth)
+                        vals = _undo_horizontal(vals, depth)
                     y0, x0 = ty * th, tx * tw
                     cy = min(th, h - y0)
                     cx = min(tw, w - x0)
@@ -327,8 +332,7 @@ def decode_tiff(payload: bytes) -> np.ndarray:
                 vals = _bytes_to_samples(raw, nrows, w, spp_chunk,
                                          depth, bo)
                 if predictor == 2:
-                    vals = np.cumsum(vals.astype(np.int64),
-                                     axis=1) % (1 << depth)
+                    vals = _undo_horizontal(vals, depth)
                 if planar == 2:
                     samples[y0:y0 + nrows, :, plane] = vals[:, :, 0]
                 else:

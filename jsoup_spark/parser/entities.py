@@ -169,9 +169,6 @@ def unescape(s: str, in_attribute: bool = False) -> str:
 
 # --- escaping (for the HTML serializer; Entities.escape, Entities.java:160-230) ---
 
-_XHTML_ESC = {"<": "&lt;", ">": "&gt;", "&": "&amp;", '"': "&quot;"}
-
-
 def escape(text: str, *, in_attribute: bool = False, syntax: str = "html") -> str:
     """Escape text for HTML output (base escape mode, UTF-8 charset).
 

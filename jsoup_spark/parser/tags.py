@@ -122,10 +122,6 @@ def is_block(name: str, ns: str = NS_HTML) -> bool:
     return bool(flags(name, ns) & BLOCK)
 
 
-def is_void(name: str) -> bool:
-    return name in VOID_TAGS
-
-
 def is_known(name: str, ns: str = NS_HTML) -> bool:
     if ns == NS_HTML:
         return name in _HTML_FLAGS
@@ -271,46 +267,3 @@ class TagSet:
     def is_known(self, name: str, ns: str = NS_HTML) -> bool:
         return self.value_of(name, ns).is_known()
 
-
-# --- SVG / MathML case normalization (tree-construction spec data) ---
-
-# Adjusted SVG tag names: lowercase -> canonical camelCase
-SVG_TAG_ADJUST = {
-    t.lower(): t
-    for t in """
-    altGlyph altGlyphDef altGlyphItem animateColor animateMotion
-    animateTransform clipPath feBlend feColorMatrix feComponentTransfer
-    feComposite feConvolveMatrix feDiffuseLighting feDisplacementMap
-    feDistantLight feDropShadow feFlood feFuncA feFuncB feFuncG feFuncR
-    feGaussianBlur feImage feMerge feMergeNode feMorphology feOffset
-    fePointLight feSpecularLighting feSpotLight feTile feTurbulence
-    foreignObject glyphRef linearGradient radialGradient textPath
-""".split()
-}
-
-# Adjusted SVG attribute names
-SVG_ATTR_ADJUST = {
-    a.lower(): a
-    for a in """
-    attributeName attributeType baseFrequency baseProfile calcMode
-    clipPathUnits contentScriptType contentStyleType diffuseConstant
-    edgeMode externalResourcesRequired filterUnits glyphRef
-    gradientTransform gradientUnits kernelMatrix kernelUnitLength
-    keyPoints keySplines keyTimes lengthAdjust limitingConeAngle
-    markerHeight markerUnits markerWidth maskContentUnits maskUnits
-    numOctaves pathLength patternContentUnits patternTransform
-    patternUnits pointsAtX pointsAtY pointsAtZ preserveAlpha
-    preserveAspectRatio primitiveUnits refX refY repeatCount repeatDur
-    requiredExtensions requiredFeatures specularConstant specularExponent
-    spreadMethod startOffset stdDeviation stitchTiles surfaceScale
-    systemLanguage tableValues targetX targetY textLength viewBox
-    viewTarget xChannelSelector yChannelSelector zoomAndPan
-""".split()
-}
-
-# MathML adjusted attribute
-MATHML_ATTR_ADJUST = {"definitionurl": "definitionURL"}
-
-# Foreign (xlink/xml/xmlns) attribute adjustments kept as plain names — we do
-# not track per-attribute namespaces (matches the reference's behavior of
-# keeping the prefixed attribute name).

@@ -32,8 +32,7 @@ from .tags import NS_HTML, NS_MATHML, NS_SVG
     IN_TABLE, IN_TABLE_TEXT, IN_CAPTION, IN_COLUMN_GROUP, IN_TABLE_BODY,
     IN_ROW, IN_CELL, IN_SELECT, IN_SELECT_IN_TABLE, IN_TEMPLATE, AFTER_BODY,
     IN_FRAMESET, AFTER_FRAMESET, AFTER_AFTER_BODY, AFTER_AFTER_FRAMESET,
-    FOREIGN,
-) = range(23)
+) = range(22)
 
 _WS_STRICT = frozenset(" \t\n\r\f")
 
@@ -285,8 +284,6 @@ C_FOREIGN_TO_HTML = frozenset("""
 """.split())
 C_MATHML_TEXT = frozenset(("mi", "mo", "mn", "ms", "mtext"))
 C_SVG_HTML_INTEGRATION = frozenset(("foreignObject", "desc", "title"))
-C_FORM_LISTED = frozenset(("button", "fieldset", "input", "keygen", "object",
-                           "output", "select", "textarea"))
 C_MAX_STACK_SCAN = 24  # dd/dt scan cap
 
 
@@ -2878,7 +2875,7 @@ _MODES = [
     _text, _in_table, _in_table_text, _in_caption, _in_column_group,
     _in_table_body, _in_row, _in_cell, _in_select, _in_select_in_table,
     _in_template, _after_body, _in_frameset, _after_frameset,
-    _after_after_body, _after_after_frameset, _foreign_content,
+    _after_after_body, _after_after_frameset,
 ]
 
 

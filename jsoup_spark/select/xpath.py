@@ -33,11 +33,11 @@ reference's test suite exercises (select/XpathTest.java):
 * results in document order, deduplicated
 
 Differentially fuzzed against the compiled reference's selectXpath
-(javax.xml.xpath over W3CDom) via tools/fuzz_xpath.py (harness op
-"xpath"); the pinned boundary vs full XPath 1.0: no namespace-prefixed
-name tests (the reference's HTML conversion is not namespace aware
-either), no namespace axis, no processing-instruction() test (HTML
-parsing never produces PIs — bogus-comment state).
+(javax.xml.xpath over W3CDom) in round 8; the pinned boundary vs full
+XPath 1.0: no namespace-prefixed name tests (the reference's HTML
+conversion is not namespace aware either), no namespace axis, no
+processing-instruction() test (HTML parsing never produces PIs —
+bogus-comment state).
 
 Raises SelectorParseError with the reference's message shape
 ("Could not evaluate XPath query [q]: ...", XpathTest.java:66-80).
@@ -104,8 +104,6 @@ _AXES = {
     "preceding",
     "attribute",
 }
-
-_REVERSE_AXES = {"ancestor", "ancestor-or-self", "preceding-sibling", "preceding"}
 
 
 # ---------------------------------------------------------------------------
@@ -1044,7 +1042,7 @@ def _eval_expr(expr, ctx: _Ctx):
         # resolver (Xalan NPEs at resolution), but ours accepts a bindings
         # dict through select_xpath(..., variables=...). Unbound variables
         # keep the reference's LAZY failure timing: the error fires only
-        # when the reference actually resolves (fuzz_xpath error-parity).
+        # when the reference actually resolves (round-8 error parity).
         if ctx.vars is not None and expr.name in ctx.vars:
             v = ctx.vars[expr.name]
             if isinstance(v, bool):

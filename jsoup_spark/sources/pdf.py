@@ -353,56 +353,32 @@ class _Lexer:
 # -------------------------------------------------------------- filters
 
 def _png_predict(data: bytes, colors: int, bpc: int, columns: int) -> bytes:
-    """Undo PNG row filters (predictor 10-15): per-row filter byte."""
-    bpp = max(1, (colors * bpc + 7) // 8)
+    """Undo PNG row filters (predictor 10-15): per-row filter byte. A
+    short final row reads as if padded with zeros."""
+    from ..operators.codecs import _png_unfilter
     rowlen = (colors * bpc * columns + 7) // 8
-    out = bytearray()
-    prev = bytearray(rowlen)
-    pos = 0
-    while pos + 1 + rowlen <= len(data) or (pos < len(data)):
-        f = data[pos]
-        row = bytearray(data[pos + 1:pos + 1 + rowlen])
-        if len(row) < rowlen:
-            row.extend(b"\0" * (rowlen - len(row)))
-        pos += 1 + rowlen
-        if f == 1:                               # Sub
-            for i in range(bpp, rowlen):
-                row[i] = (row[i] + row[i - bpp]) & 0xFF
-        elif f == 2:                             # Up
-            for i in range(rowlen):
-                row[i] = (row[i] + prev[i]) & 0xFF
-        elif f == 3:                             # Average
-            for i in range(rowlen):
-                a = row[i - bpp] if i >= bpp else 0
-                row[i] = (row[i] + ((a + prev[i]) >> 1)) & 0xFF
-        elif f == 4:                             # Paeth
-            for i in range(rowlen):
-                a = row[i - bpp] if i >= bpp else 0
-                c = prev[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (
-                    b if pb <= pc else c)
-                row[i] = (row[i] + pred) & 0xFF
-        elif f != 0:
-            raise PDFError(f"bad PNG predictor filter {f}")
-        out += row
-        prev = row
-        if pos >= len(data):
-            break
-    return bytes(out)
+    if rowlen < 0:
+        raise PDFError("PNG predictor: negative row length")
+    try:
+        return bytes(_png_unfilter(data + bytes(-len(data) % (1 + rowlen)),
+                                   rowlen, max(1, (colors * bpc + 7) // 8)))
+    except ValueError as ex:
+        raise PDFError(f"PNG predictor: {ex}") from None
 
 
 def _tiff_predict(data: bytes, colors: int, bpc: int, columns: int) -> bytes:
+    """Undo TIFF predictor 2 on 8-bit samples; a trailing partial row
+    is left as it is."""
     if bpc != 8:
         raise PDFError("TIFF predictor: only 8 bpc supported")
-    rowlen = colors * columns
-    out = bytearray(data)
-    for r in range(0, len(out) - rowlen + 1, rowlen):
-        for i in range(colors, rowlen):
-            out[r + i] = (out[r + i] + out[r + i - colors]) & 0xFF
-    return bytes(out)
+    if colors < 1 or columns < 1:
+        raise PDFError("TIFF predictor: bad Colors or Columns")
+    import numpy as np
+    from ..operators.tiff import _undo_horizontal
+    whole = len(data) - len(data) % (colors * columns)
+    rows = np.frombuffer(data, np.uint8, whole).reshape(-1, columns, colors)
+    return _undo_horizontal(rows, 8).astype(np.uint8).tobytes() \
+        + data[whole:]
 
 
 def _a85_decode(data: bytes) -> bytes:

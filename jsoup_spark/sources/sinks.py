@@ -6,7 +6,8 @@ resumes from snapshot reads; it activates when the Iceberg runtime jar is
 on the Spark classpath (``iceberg_available``). This container has no
 Iceberg jar, so the default parquet-directory backend keeps the identical
 interface locally (the pytest for the Iceberg path is skipif-gated and
-runs wherever the jar exists — cluster deployment recipe in NOTES_r3.md).
+runs wherever the jar exists — deployment recipe in README.md,
+"Iceberg tables").
 
 Resume contract: a killed job re-runs with ``remaining(input, sink)`` —
 an anti-join of input doc_ids against the already-checkpointed output —

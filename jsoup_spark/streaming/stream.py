@@ -51,18 +51,6 @@ def run_to_parquet(docs_stream: DataFrame, out_path: str,
     )
 
 
-def error_rate_monitor(extracted_stream: DataFrame):
-    """Stateful example: per-trigger parse-error counts (complete mode)."""
-    return (
-        extracted_stream
-        .groupBy()
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum("n_parse_errors").alias("parse_errors"),
-        )
-    )
-
-
 def windowed_error_rates(extracted_stream: DataFrame,
                          ts_col: str = "ingest_ts",
                          watermark: str = "10 minutes",

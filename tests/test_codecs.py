@@ -641,6 +641,71 @@ def test_webp_vp8l_mutated_streams_follow_libwebp():
             assert (got == theirs).all()
 
 
+def _vp8l_normal_green(cl_lengths, green_bits, pixel_bits):
+    """A 2 x 1 VP8L stream whose green code is a normal prefix code over
+    greens 0 and 1. `cl_lengths` are the code-length code's lengths for
+    code lengths 0, 1 and 2, `green_bits` code the two green lengths,
+    and `pixel_bits` code the two pixels' greens; red, blue and alpha
+    are the one-symbol codes 100, 200 and 255."""
+    from jsoup_spark.operators.bits import LsbWriter
+    bw = LsbWriter()
+    for value, nbits in ((0x2F, 8), (1, 14), (0, 14), (1, 1), (0, 3),
+                         (0, 1), (0, 1), (0, 1)):  # no transform/cache/meta
+        bw.write(value, nbits)
+    bw.write(0, 1)   # normal code
+    bw.write(1, 4)   # 5 code-length lengths, in the order 17, 18, 0, 1, 2
+    for n in (0, 0) + cl_lengths:
+        bw.write(n, 3)
+    for value, nbits in ((1, 1), (0, 3), (0, 2)):  # read two lengths
+        bw.write(value, nbits)
+    for b in green_bits:
+        bw.write(b, 1)
+    for s in (100, 200, 255, 0):
+        _vp8l_simple(bw, s)
+    for b in pixel_bits:
+        bw.write(b, 1)
+    return _vp8l_riff(bw.finish())
+
+
+def test_webp_vp8l_incomplete_prefix_code_rejected():
+    """libwebp rejects a normal prefix code whose Kraft sum is below 1,
+    unless it has a single symbol; both the code-length code and the
+    symbol codes are checked."""
+    def rgb(*greens):
+        return np.array([[(100, g, 200) for g in greens]], np.uint8)
+
+    cases = [
+        # greens of lengths 1 and 2: Kraft sum 3/4
+        (_vp8l_normal_green((0, 1, 1), (0, 1), (0, 0)), ValueError),
+        # code lengths 1 and 2 coded with lengths 1 and 2: Kraft sum 3/4
+        (_vp8l_normal_green((0, 1, 2), (0, 0), (0, 0)), ValueError),
+        # complete codes
+        (_vp8l_normal_green((0, 1, 1), (0, 0), (0, 1)), rgb(0, 1)),
+        # one-symbol codes: the green code, then the code-length code
+        (_vp8l_normal_green((1, 1, 0), (1, 0), ()), rgb(0, 0)),
+        (_vp8l_normal_green((0, 1, 0), (), (1, 0)), rgb(1, 0)),
+    ]
+    try:
+        import libwebp_ref as ref
+        lib = ref.available()
+    except ImportError:
+        lib = False
+    for data, want in cases:
+        if want is ValueError:
+            with pytest.raises(ValueError, match="incomplete"):
+                codecs.decode_webp(data)
+        else:
+            assert (codecs.decode_webp(data) == want).all()
+        if lib:
+            try:
+                theirs = ref.decode_rgba(data)
+            except ValueError:
+                assert want is ValueError
+                continue
+            assert want is not ValueError
+            assert (theirs[:, :, :3] == want).all()
+
+
 def test_webp_in_multimodal_pipeline():
     # decode_image_array dispatch: a webp payload produces real pixels
     rng = np.random.RandomState(17)

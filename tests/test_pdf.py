@@ -75,6 +75,87 @@ def test_png_predictor_up_sub_paeth():
     assert _png_predict(raw, 1, 8, 3) == bytes([5, 6, 7])
 
 
+def _png_unfilter_spec(data, bpp, rowlen):
+    """PNG spec section 9 reference: whole rows of filter byte + data."""
+    out, prev = bytearray(), [0] * rowlen
+    for r in range(0, len(data), 1 + rowlen):
+        f, cur = data[r], list(data[r + 1:r + 1 + rowlen])
+        for i in range(rowlen):
+            a = cur[i - bpp] if i >= bpp else 0
+            b, c = prev[i], (prev[i - bpp] if i >= bpp else 0)
+            p = a + b - c
+            paeth = min((abs(p - a), 0, a), (abs(p - b), 1, b),
+                        (abs(p - c), 2, c))[2]
+            cur[i] = (cur[i] + (0, a, b, (a + b) >> 1, paeth)[f]) & 0xFF
+        out += bytes(cur)
+        prev = cur
+    return bytes(out)
+
+
+def test_png_predictor_average_and_paeth():
+    raw = bytes([0, 10, 20, 30]) + bytes([3, 1, 2, 3]) + bytes([4, 1, 1, 1])
+    assert _png_predict(raw, 1, 8, 3) == bytes(
+        [10, 20, 30, 6, 15, 25, 7, 16, 26])
+    rng = random.Random(21)
+    for colors, bpc, columns in ((1, 8, 7), (3, 8, 5), (4, 8, 3),
+                                 (1, 1, 20), (3, 16, 2)):
+        bpp = max(1, (colors * bpc + 7) // 8)
+        rowlen = (colors * bpc * columns + 7) // 8
+        data = b"".join(
+            bytes([rng.randrange(5)])
+            + bytes(rng.randrange(256) for _ in range(rowlen))
+            for _ in range(9))
+        assert _png_predict(data, colors, bpc, columns) == \
+            _png_unfilter_spec(data, bpp, rowlen)
+
+
+def test_png_predictor_short_final_row_is_zero_padded():
+    # the last row [2, 5] (Up) is read as [2, 5, 0, 0]
+    raw = bytes([0, 1, 2, 3]) + bytes([2, 5])
+    assert _png_predict(raw, 1, 8, 3) == bytes([1, 2, 3, 6, 2, 3])
+    # a lone filter byte is a whole row of zero differences
+    raw = bytes([0, 1, 2, 3]) + bytes([2])
+    assert _png_predict(raw, 1, 8, 3) == bytes([1, 2, 3, 1, 2, 3])
+    assert _png_predict(b"", 1, 8, 3) == b""
+
+
+def test_png_predictor_bad_filter_byte_raises():
+    from jsoup_spark.sources.pdf import PDFError
+    for f in (5, 6, 255):
+        with pytest.raises(PDFError):
+            _png_predict(bytes([0, 1, 2, 3, f, 1, 1, 1]), 1, 8, 3)
+
+
+def test_tiff_predictor_colors_and_trailing_partial_row():
+    from jsoup_spark.sources.pdf import _tiff_predict
+    raw = bytes([1, 2, 3, 1, 1, 1, 10, 20, 30, 5, 5, 5, 7, 8])
+    assert _tiff_predict(raw, 3, 8, 2) == bytes(
+        [1, 2, 3, 2, 3, 4, 10, 20, 30, 15, 25, 35, 7, 8])
+    assert _tiff_predict(bytes([200, 100, 9]), 1, 8, 2) == \
+        bytes([200, 44, 9])
+    # through the stream filter chain, as a page's image would reach it
+    st = Stream({"Filter": "FlateDecode",
+                 "DecodeParms": {"Predictor": 2, "Colors": 3,
+                                 "Columns": 2}}, zlib.compress(raw))
+    assert decode_stream(st) == _tiff_predict(raw, 3, 8, 2)
+
+
+def test_predictors_reject_bad_geometry():
+    from jsoup_spark.sources.pdf import PDFError, _tiff_predict
+    with pytest.raises(PDFError):
+        _png_predict(bytes(8), 1, 8, -1)
+    for colors, columns in ((0, 4), (3, 0), (-1, -3)):
+        with pytest.raises(PDFError):
+            _tiff_predict(bytes(12), colors, 8, columns)
+
+
+def test_tiff_predictor_rejects_other_depths():
+    from jsoup_spark.sources.pdf import PDFError, _tiff_predict
+    for bpc in (1, 4, 16):
+        with pytest.raises(PDFError):
+            _tiff_predict(bytes(12), 1, bpc, 4)
+
+
 # --------------------------------------------------------------- lexer
 
 def test_literal_string_escapes():

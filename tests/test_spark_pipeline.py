@@ -235,7 +235,7 @@ def test_iceberg_checkpoint_roundtrip_and_resume(spark, tmp_path):
     """Iceberg-format sink (VERDICT r2 item 9): round-trip + resume via
     the writeTo (DataFrameWriterV2) path. Runs wherever the Iceberg Spark
     runtime jar is on the classpath; skipped in this container (no jar) —
-    deployment recipe in NOTES_r3.md."""
+    deployment recipe in README.md, "Iceberg tables"."""
     import pytest
     from jsoup_spark.sources import sinks
     if not sinks.iceberg_available(spark):

@@ -201,8 +201,8 @@ def test_comment_and_normalize_space():
 # ---------------------------------------------------------------------------
 # Round-8 extensions: arithmetic, following/preceding, filter expressions,
 # the remaining XPath 1.0 core functions, and the Xalan data-model corners
-# probed against the compiled reference (tools/fuzz_xpath.py runs the full
-# differential campaign; these pin the behaviors it established).
+# probed against the compiled reference (fuzzed against it in round 8;
+# these pin the behaviors that campaign established).
 
 def test_arithmetic_in_predicates():
     doc = parse("<ul><li>a</li><li>b</li><li>c</li><li>d</li></ul>")
@@ -338,7 +338,7 @@ def test_xalan_descendant_fusion_divergence():
     # descendant-family step (it fuses the walks and returns every
     # element under the context). We follow the XPath 1.0 spec instead:
     # the predicate filters step 1, and step 2 walks only from there.
-    # tools/fuzz_xpath.py skips this shape (_XALAN_BUG).
+    # The round-8 differential campaign skipped this shape.
     doc = parse("<div><a href='/x'><b>T</b></a><p>n</p></div>")
     els = select_xpath(doc, "descendant::node()[@href]/descendant-or-self::*")
     assert [e.name for e in els] == ["a", "b"]  # spec; Xalan says head..p
@@ -478,7 +478,7 @@ def test_xalan_reverse_axis_position_last_divergence():
     # Forward axes and single-predicate forms are exact on both sides.
     # We follow the XPath 1.0 spec: predicates filter sequentially with
     # proximity positions recounted in axis direction each time.
-    # tools/fuzz_xpath.py skips the shape (_XALAN_BUG2).
+    # The round-8 differential campaign skipped the shape.
     doc = parse("<div><section><article><p><em><b>x</b></em></p>"
                 "</article></section></div>")
     els = select_xpath(
