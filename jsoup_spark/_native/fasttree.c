@@ -1,5 +1,7 @@
 /* fasttree — optional C accelerator for the tree builder's in-body hot
- * path (jsoup_spark/parser/treebuilder.py _run loop / _in_body dispatch).
+ * path (jsoup_spark/parser/treebuilder.py _run loop / _in_body dispatch),
+ * the tokenizer's Data-state scanner (see "the Data-state scanner" below)
+ * and the text and span walkers.
  *
  * Scope (strict subset; the Python tree builder remains the source of
  * truth and the fallback): while the builder sits in the InBody insertion
@@ -150,7 +152,7 @@ static Py_ssize_t off_name = -1, off_ns = -1, off_attrs = -1,
     off_parent = -1, off_value = -1;
 
 static Py_ssize_t
-member_offset_typed(PyObject *cls, const char *name, int t1, int t2)
+member_offset(PyObject *cls, const char *name)
 {
     PyObject *d = PyObject_GetAttrString(cls, name);
     if (d == NULL) {
@@ -160,37 +162,72 @@ member_offset_typed(PyObject *cls, const char *name, int t1, int t2)
     Py_ssize_t off = -1;
     if (Py_TYPE(d) == &PyMemberDescr_Type) {
         PyMemberDef *m = ((PyMemberDescrObject *)d)->d_member;
-        if (m != NULL && (m->type == t1 || m->type == t2))
+        if (m != NULL && (m->type == T_OBJECT_EX || m->type == T_OBJECT))
             off = m->offset;
     }
     Py_DECREF(d);
     return off;
 }
 
-static Py_ssize_t
-member_offset(PyObject *cls, const char *name)
+/* FastToken: the token object of the batched Data-state path (scan()
+ * below, and full-pump bail materialization). It carries the attributes
+ * the tree builder reads off the Python token classes; an unset object
+ * field is NULL and reads as None. */
+typedef struct {
+    PyObject_HEAD
+    int type;
+    PyObject *name;        /* original case (tags) or NULL */
+    PyObject *normal;      /* interned lowercase (tags) or NULL */
+    PyObject *attrs;       /* list of (name, value) pairs or NULL */
+    PyObject *attr_ranges; /* always NULL */
+    PyObject *data;        /* Character text or NULL */
+    int self_closing;
+    Py_ssize_t start_pos;
+    Py_ssize_t end_pos;
+} FastToken;
+
+static void
+FastToken_dealloc(FastToken *self)
 {
-    return member_offset_typed(cls, name, T_OBJECT_EX, T_OBJECT);
+    Py_XDECREF(self->name);
+    Py_XDECREF(self->normal);
+    Py_XDECREF(self->attrs);
+    Py_XDECREF(self->attr_ranges);
+    Py_XDECREF(self->data);
+    Py_TYPE(self)->tp_free((PyObject *)self);
 }
 
-/* FastToken (jsoup_fastscan) field offsets — the dominant token class on
- * the batched path. type/self_closing are C ints, the rest T_OBJECT
- * (NULL reads as None, matching GetAttr on a T_OBJECT member). */
-static PyTypeObject *g_fasttoken_tp = NULL;
-static Py_ssize_t off_ft_type = -1, off_ft_selfc = -1, off_ft_normal = -1,
-    off_ft_attrs = -1, off_ft_data = -1;
-/* extra offsets for C-side FastToken construction (full pump bail
- * materialization); g_ft_make_ok gates the integrated scanner */
-static Py_ssize_t off_ft_name = -1, off_ft_startpos = -1,
-    off_ft_endpos = -1;
-static int g_ft_make_ok = 0;
+static PyMemberDef FastToken_members[] = {
+    {"type", T_INT, offsetof(FastToken, type), READONLY, NULL},
+    {"name", T_OBJECT, offsetof(FastToken, name), 0, NULL},
+    {"normal", T_OBJECT, offsetof(FastToken, normal), 0, NULL},
+    {"attrs", T_OBJECT, offsetof(FastToken, attrs), 0, NULL},
+    {"attr_ranges", T_OBJECT, offsetof(FastToken, attr_ranges), 0, NULL},
+    {"data", T_OBJECT, offsetof(FastToken, data), 0, NULL},
+    {"self_closing", T_INT, offsetof(FastToken, self_closing), 0, NULL},
+    {"start_pos", T_PYSSIZET, offsetof(FastToken, start_pos), 0, NULL},
+    {"end_pos", T_PYSSIZET, offsetof(FastToken, end_pos), 0, NULL},
+    {NULL}
+};
 
-/* token field readers: FastToken slot reads, GetAttr otherwise */
+static PyTypeObject FastTokenType = {
+    PyVarObject_HEAD_INIT(NULL, 0)
+    .tp_name = "jsoup_fasttree.FastToken",
+    .tp_basicsize = sizeof(FastToken),
+    .tp_dealloc = (destructor)FastToken_dealloc,
+    .tp_flags = Py_TPFLAGS_DEFAULT,
+    .tp_members = FastToken_members,
+    .tp_new = PyType_GenericNew,
+};
+
+#define IS_FASTTOKEN(t) (Py_TYPE(t) == &FastTokenType)
+
+/* token field readers: FastToken fields directly, GetAttr otherwise */
 static inline long
 tok_type(PyObject *t)
 {
-    if (Py_TYPE(t) == g_fasttoken_tp && off_ft_type >= 0)
-        return *(int *)((char *)t + off_ft_type);
+    if (IS_FASTTOKEN(t))
+        return ((FastToken *)t)->type;
     PyObject *v = PyObject_GetAttr(t, s_type);
     if (v == NULL)
         return -1;
@@ -202,8 +239,8 @@ tok_type(PyObject *t)
 static inline int
 tok_selfc(PyObject *t)
 {
-    if (Py_TYPE(t) == g_fasttoken_tp && off_ft_selfc >= 0)
-        return *(int *)((char *)t + off_ft_selfc) != 0;
+    if (IS_FASTTOKEN(t))
+        return ((FastToken *)t)->self_closing != 0;
     PyObject *v = PyObject_GetAttr(t, s_self_closing);
     if (v == NULL)
         return -1;
@@ -213,49 +250,15 @@ tok_selfc(PyObject *t)
 }
 
 static inline PyObject *      /* new ref; None when unset */
-tok_obj_field(PyObject *t, Py_ssize_t ft_off, PyObject *sname)
+ft_field(PyObject *v)
 {
-    if (Py_TYPE(t) == g_fasttoken_tp && ft_off >= 0) {
-        PyObject *v = *(PyObject **)((char *)t + ft_off);
-        if (v == NULL)
-            v = Py_None;
-        Py_INCREF(v);
-        return v;
-    }
-    return PyObject_GetAttr(t, sname);
+    return Py_NewRef(v != NULL ? v : Py_None);
 }
-#define TOK_NORMAL(t) tok_obj_field((t), off_ft_normal, s_normal)
-#define TOK_ATTRS(t) tok_obj_field((t), off_ft_attrs, s_attrs)
-#define TOK_DATA(t) tok_obj_field((t), off_ft_data, s_data)
-
-static PyObject *
-configure_tokens(PyObject *self, PyObject *args)
-{
-    PyObject *fasttoken_cls;
-    if (!PyArg_ParseTuple(args, "O", &fasttoken_cls))
-        return NULL;
-    off_ft_type = member_offset_typed(fasttoken_cls, "type", T_INT, T_INT);
-    off_ft_selfc = member_offset_typed(fasttoken_cls, "self_closing",
-                                       T_INT, T_INT);
-    off_ft_normal = member_offset(fasttoken_cls, "normal");
-    off_ft_attrs = member_offset(fasttoken_cls, "attrs");
-    off_ft_data = member_offset(fasttoken_cls, "data");
-    off_ft_name = member_offset(fasttoken_cls, "name");
-    off_ft_startpos = member_offset_typed(fasttoken_cls, "start_pos",
-                                          T_PYSSIZET, T_PYSSIZET);
-    off_ft_endpos = member_offset_typed(fasttoken_cls, "end_pos",
-                                        T_PYSSIZET, T_PYSSIZET);
-    if (off_ft_type >= 0 && off_ft_selfc >= 0 && off_ft_normal >= 0 &&
-        off_ft_attrs >= 0 && off_ft_data >= 0)
-        g_fasttoken_tp = (PyTypeObject *)fasttoken_cls;  /* borrowed-forever */
-    else {
-        g_fasttoken_tp = NULL;
-    }
-    g_ft_make_ok = (g_fasttoken_tp != NULL && off_ft_name >= 0 &&
-                    off_ft_startpos >= 0 && off_ft_endpos >= 0);
-    Py_INCREF(fasttoken_cls);  /* keep alive for the borrowed tp pointer */
-    Py_RETURN_NONE;
-}
+#define TOK_FIELD(t, f, sname) (IS_FASTTOKEN(t) \
+    ? ft_field(((FastToken *)(t))->f) : PyObject_GetAttr((t), (sname)))
+#define TOK_NORMAL(t) TOK_FIELD(t, normal, s_normal)
+#define TOK_ATTRS(t) TOK_FIELD(t, attrs, s_attrs)
+#define TOK_DATA(t) TOK_FIELD(t, data, s_data)
 
 /* new-ref getter: slot read when the receiver is a known node class and
  * the slot is set; PyObject_GetAttr otherwise (including unset slots, so
@@ -1951,26 +1954,30 @@ pump_next(PyObject *tok_o, PyObject *q, PyObject *popleft)
     return PyObject_CallNoArgs(popleft);
 }
 
-/* ---- full pump: integrated Data-state scanner -> RawTok ring --------
- * pump-lite (above) still crossed into Python for every tokenizer batch
- * (_data frame -> jsoup_fastscan.scan -> FastToken allocs -> deque
- * extend -> per-token popleft). The full pump runs the SAME scanner
- * grammar (a strict port of fastscan.c scan(), which remains the source
- * of truth for the non-pump path) directly inside apply(), emitting
- * plain C structs consumed by the dispatch loop: no FastToken objects,
- * no deque round-trip, no tag-name substrings (raw-char -> interned
- * normal hash), and attrs built as the final per-element DICT at scan
- * time (duplicate-key tags fall back to the pairs-list shape so
- * finalize_attrs keeps emitting the dup parse error exactly like the
- * Python path). Tokens leave C only on bail / head-phase, where a real
- * FastToken is materialized from the struct (rt_materialize), so the
- * Python tree builder sees byte-identical tokens.
- *
- * Gating is pump-lite's trusted gate plus: tokenizer state == Data and
- * a letter-led tag ahead. Everything else falls back to pump_next
- * (Python state functions), unchanged. */
+/* ---- the Data-state scanner -------------------------------------------
+ * One grammar, two entries:
+ *   - scan(s, pos, errors): tokenizer._data's batching fast path; returns
+ *     the committed tokens as FastToken objects;
+ *   - cscan_fill(): the full pump inside apply(). pump-lite (above) still
+ *     crosses into Python for every tokenizer batch (_data frame -> scan
+ *     -> FastToken allocs -> deque extend -> per-token popleft); the full
+ *     pump refills apply()'s ring of plain C structs (RawTok) instead: no
+ *     token objects, no deque round trip, no tag-name substrings
+ *     (raw chars -> interned normal hash), and attrs built as the final
+ *     per-element dict. A token leaves C only on bail / head phase, where
+ *     rt_materialize turns it into the FastToken scan() would return.
+ * The pure-Python _data fast path in tokenizer.py (_P_FAST_SIMPLE,
+ * _fast_attr_tag, _P_FAST_END) is the source of truth and the fallback:
+ *   - text runs up to the next '&', '<', NUL or EOF;
+ *   - start tags <name (ws+ attr)* ws* [/]> and end tags </name ws*>,
+ *     name = [a-zA-Z][a-zA-Z0-9:._-]*;
+ *   - text is committed only when the tag that FOLLOWS it parses fast;
+ *   - batching stops after a start tag in the stop set
+ *     (tokenizer._BATCH_STOP) or a self-closing one, and at 48 tags.
+ * Anything else (a charref or NUL in text, an unterminated quote or an
+ * error char in a tag, markup declarations) ends the scan at the '<' of
+ * the tag that failed, where the Python state machine takes over. */
 
-/* char classes — identical to fastscan.c (the scanner grammar contract) */
 static inline int is_alpha_c(Py_UCS4 c)
 {
     return (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z');
@@ -1989,6 +1996,7 @@ static inline int is_tag_ws_c(Py_UCS4 c)
 
 static inline int is_attr_name_char_c(Py_UCS4 c)
 {
+    /* the Python fast path's attr-name class: [^\x00-\x20/=>"'<]+ */
     return c > 0x20 && c != '/' && c != '=' && c != '>' && c != '"' &&
            c != '\'' && c != '<';
 }
@@ -2001,14 +2009,13 @@ typedef struct {
     int type;          /* TOK_START / TOK_END / TOK_CHAR */
     int selfc;
     PyObject *normal;  /* owned interned lowercase (tags) or NULL */
-    PyObject *attrs;   /* owned dict (fast) / list (dup fallback) / NULL */
+    PyObject *attrs;   /* owned dict (full pump) / pairs list / NULL */
     PyObject *data;    /* owned text (TOK_CHAR) or NULL */
     Py_ssize_t name_s, name_e;  /* tag-name span for materialization */
     Py_ssize_t start, end;      /* token source span */
     /* original-case attr-NAME spans, dict shape only: a bailed token must
      * reach Python with raw names (html/body attr merge and foreign
      * content preserve attribute case — observable in the tree) */
-    int n_spans;
     Py_ssize_t aspan_s[RT_MAX_SPANS], aspan_e[RT_MAX_SPANS];
 } RawTok;
 
@@ -2049,7 +2056,7 @@ configure_scan(PyObject *self, PyObject *args)
 /* raw-char -> interned lowercase normal, no substring on a hit.
  * ASCII-folded open-addressing table (tag + attr-name vocabularies are
  * tiny); non-ASCII / long names take the substring + str.lower() path,
- * which is exactly what finalize_attrs / normal_for would do. */
+ * which is exactly what finalize_attrs / the Python tokenizer would do. */
 typedef struct {
     PyObject *normal;  /* owned forever (interned) */
     uint32_t hash;
@@ -2133,76 +2140,81 @@ ring_clear_from(RawTok *ring, int ri, int rn)
         rt_clear(&ring[i]);
 }
 
-/* struct -> real FastToken (bail / head-phase path). Byte-faithful to
- * what fastscan.scan would have queued, except: (a) tag-name case in
- * .name is the original span (substring here), (b) a dict-shaped attrs
- * converts to its insertion-ordered pairs list — lowercased keys, which
- * finalize_attrs lowercases idempotently; dup-key tags never take the
- * dict shape, so the dup parse error is preserved. */
+/* a Character token: text (owned, may be NULL until filled) at [a, b) */
+static void
+rt_char(RawTok *rt, PyObject *text, Py_ssize_t a, Py_ssize_t b)
+{
+    rt->type = TOK_CHAR;
+    rt->selfc = 0;
+    rt->normal = NULL;
+    rt->attrs = NULL;
+    rt->data = text;
+    rt->start = a;
+    rt->end = b;
+}
+
+/* FastToken attrs: [(s[as_[x]:ae_[x]], av[x] or None)] — original-case
+ * names in source order, as the Python fast path hands them to
+ * finalize_attrs (which lowercases them and reports duplicates) */
+static PyObject *
+attr_pairs(PyObject *s, int n, const Py_ssize_t *as_, const Py_ssize_t *ae_,
+           PyObject *const *av)
+{
+    PyObject *pairs = PyList_New(n);
+    for (int x = 0; pairs != NULL && x < n; x++) {
+        PyObject *name = PyUnicode_Substring(s, as_[x], ae_[x]);
+        PyObject *pair = name == NULL ? NULL
+            : PyTuple_Pack(2, name, av[x] != NULL ? av[x] : Py_None);
+        Py_XDECREF(name);
+        if (pair == NULL)
+            Py_CLEAR(pairs);
+        else
+            PyList_SET_ITEM(pairs, x, pair);
+    }
+    return pairs;
+}
+
+/* struct -> FastToken, moving the struct's references into the token (rt
+ * is left cleared, also on error). The tag name is the original-case
+ * span; dict-shaped attrs become the pairs list, names from the recorded
+ * spans and values in dict insertion order (== source order: duplicate
+ * names never take the dict shape). */
 static PyObject *
 rt_materialize(RawTok *rt, PyObject *src)
 {
-    PyObject *ft = g_fasttoken_tp->tp_alloc(g_fasttoken_tp, 0);
+    FastToken *ft = PyObject_New(FastToken, &FastTokenType);
     if (ft == NULL)
         return NULL;
-    *(int *)((char *)ft + off_ft_type) = rt->type;
-    *(int *)((char *)ft + off_ft_selfc) = rt->selfc;
-    *(Py_ssize_t *)((char *)ft + off_ft_startpos) = rt->start;
-    *(Py_ssize_t *)((char *)ft + off_ft_endpos) = rt->end;
-    if (rt->normal != NULL) {
-        Py_INCREF(rt->normal);
-        *(PyObject **)((char *)ft + off_ft_normal) = rt->normal;
-    }
-    if (rt->data != NULL) {
-        Py_INCREF(rt->data);
-        *(PyObject **)((char *)ft + off_ft_data) = rt->data;
-    }
-    if (rt->attrs != NULL) {
-        PyObject *attrs;
-        if (PyDict_Check(rt->attrs)) {
-            /* rebuild the fastscan pairs shape: ORIGINAL-case names from
-             * the recorded spans, values in dict insertion order (==
-             * source order; dup-key tags never take the dict shape) */
-            Py_ssize_t nd = PyDict_GET_SIZE(rt->attrs);
-            if (nd != rt->n_spans || src == NULL) {
-                Py_DECREF(ft);
-                PyErr_SetString(PyExc_RuntimeError,
-                                "fasttree: attr span/dict mismatch");
-                return NULL;
-            }
-            attrs = PyList_New(nd);
-            if (attrs == NULL) { Py_DECREF(ft); return NULL; }
-            PyObject *k, *v;
-            Py_ssize_t pos = 0;
-            int i = 0;
-            while (PyDict_Next(rt->attrs, &pos, &k, &v)) {
-                PyObject *orig = PyUnicode_Substring(
-                    src, rt->aspan_s[i], rt->aspan_e[i]);
-                if (orig == NULL) {
-                    Py_DECREF(attrs); Py_DECREF(ft);
-                    return NULL;
-                }
-                PyObject *pair = PyTuple_Pack(2, orig, v);
-                Py_DECREF(orig);
-                if (pair == NULL) {
-                    Py_DECREF(attrs); Py_DECREF(ft);
-                    return NULL;
-                }
-                PyList_SET_ITEM(attrs, i, pair);
-                i++;
-            }
-        } else {
-            Py_INCREF(rt->attrs);
-            attrs = rt->attrs;
+    ft->type = rt->type;
+    ft->self_closing = rt->selfc;
+    ft->start_pos = rt->start;
+    ft->end_pos = rt->end;
+    ft->normal = rt->normal;
+    ft->attrs = rt->attrs;
+    ft->data = rt->data;
+    ft->name = ft->attr_ranges = NULL;
+    rt->normal = rt->attrs = rt->data = NULL;
+    if (ft->attrs != NULL && PyDict_Check(ft->attrs)) {
+        PyObject *k, *av[RT_MAX_SPANS];
+        Py_ssize_t pos = 0;
+        int n = 0;
+        while (PyDict_Next(ft->attrs, &pos, &k, &av[n]))
+            n++;
+        Py_SETREF(ft->attrs,
+                  attr_pairs(src, n, rt->aspan_s, rt->aspan_e, av));
+        if (ft->attrs == NULL) {
+            Py_DECREF(ft);
+            return NULL;
         }
-        *(PyObject **)((char *)ft + off_ft_attrs) = attrs;
     }
-    if (rt->type != TOK_CHAR && rt->name_s >= 0 && src != NULL) {
-        PyObject *name = PyUnicode_Substring(src, rt->name_s, rt->name_e);
-        if (name == NULL) { Py_DECREF(ft); return NULL; }
-        *(PyObject **)((char *)ft + off_ft_name) = name;
+    if (rt->type != TOK_CHAR) {
+        ft->name = PyUnicode_Substring(src, rt->name_s, rt->name_e);
+        if (ft->name == NULL) {
+            Py_DECREF(ft);
+            return NULL;
+        }
     }
-    return ft;
+    return (PyObject *)ft;
 }
 
 /* bail with unconsumed ring tokens: requeue them (in order) as real
@@ -2220,22 +2232,337 @@ ring_flush_to_q(RawTok *ring, int ri, int rn, PyObject *q, PyObject *src)
         if (r == NULL)
             return -1;
         Py_DECREF(r);
-        rt_clear(&ring[i]);
     }
     return 0;
 }
 
-/* Integrated scanner: strict port of fastscan.c scan() emitting RawTok
- * structs. Returns 1 with *prn filled (>=1 tag committed), 0 to decline
- * (Python path; tokenizer untouched), -1 on error. On success the
- * tokenizer object's pos / markup_start / char_start / last_start are
- * updated exactly as the Python _data fast path would, and pending
- * _chars are flushed into ring[0]. *psrc holds an owned ref to the
- * source string for later materialization. */
+typedef struct {
+    Py_ssize_t end;          /* after the last committed tag */
+    Py_ssize_t markup_start; /* '<' of the last committed tag, or -1 */
+    PyObject *last_start;    /* owned normal of the last start tag or NULL */
+    int count;               /* committed tags */
+} ScanOut;
+
+static void
+drop_vals(PyObject **av, int na)
+{
+    for (int x = 0; x < na; x++)
+        Py_XDECREF(av[x]);
+}
+
+/* The scanner loop: the text from p2 up to the '<' at end2, then [tag]
+ * or [text][tag] pairs, each committed to ring[*prn...] once its tag
+ * confirms. dict_attrs selects the full pump's attrs shape: a dict with
+ * lowercased interned keys when a tag has at most RT_MAX_SPANS attrs and
+ * no duplicate names; otherwise (and always for scan()) the FastToken
+ * pairs list. Returns 0 with *prn and *out filled, -1 on error (the
+ * entries it added are cleared). */
+static int
+scan_tags(PyObject *s, Py_ssize_t p2, Py_ssize_t end2, PyObject *errors,
+          int dict_attrs, RawTok *ring, int *prn, ScanOut *out)
+{
+    const int kind = PyUnicode_KIND(s);
+    const void *data = PyUnicode_DATA(s);
+    const Py_ssize_t n = PyUnicode_GET_LENGTH(s);
+    const int rn0 = *prn;
+    int rn = rn0, stop = 0;
+    out->markup_start = -1;
+    out->last_start = NULL;
+    out->count = 0;
+
+    while (!stop) {
+        /* --- probe a fast tag at end2 (s[end2] == '<') --- */
+        Py_ssize_t i = end2 + 1;
+        int is_end = 0;
+        if (i < n && PyUnicode_READ(kind, data, i) == '/') {
+            is_end = 1;
+            i++;
+        }
+        if (i >= n || !is_alpha_c(PyUnicode_READ(kind, data, i)))
+            break; /* not a letter-led tag: Python path */
+        Py_ssize_t name_start = i;
+        i++;
+        while (i < n && is_name_char_c(PyUnicode_READ(kind, data, i)))
+            i++;
+        Py_ssize_t name_end = i;
+
+        /* --- attributes (start tags only): any NUL, unterminated quote,
+         * error char, or >64 deferred '&' values bails the tag; attrs
+         * past the 512th are dropped --- */
+        PyObject *av[512];              /* value; NULL = none / deferred */
+        Py_ssize_t as_[512], ae_[512];  /* original-case name spans */
+        int na = 0;
+        Py_ssize_t pend_vs[64], pend_ve[64];
+        int pend_ai[64], n_pending = 0;
+        if (!is_end) {
+            while (1) {
+                Py_ssize_t w = i;
+                while (w < n && is_tag_ws_c(PyUnicode_READ(kind, data, w)))
+                    w++;
+                if (w == i || w >= n)
+                    break; /* no separator: tail must follow */
+                Py_UCS4 c0 = PyUnicode_READ(kind, data, w);
+                if (!is_attr_name_char_c(c0))
+                    break; /* '/' or '>' or error char: tail decides */
+                Py_ssize_t an_start = w;
+                while (w < n &&
+                       is_attr_name_char_c(PyUnicode_READ(kind, data, w)))
+                    w++;
+                Py_ssize_t an_end = w;
+                /* optional  ws* '=' ws* value */
+                Py_ssize_t v = w;
+                while (v < n && is_tag_ws_c(PyUnicode_READ(kind, data, v)))
+                    v++;
+                PyObject *val = NULL;
+                int deferred = 0;
+                if (v < n && PyUnicode_READ(kind, data, v) == '=') {
+                    v++;
+                    while (v < n &&
+                           is_tag_ws_c(PyUnicode_READ(kind, data, v)))
+                        v++;
+                    if (v >= n)
+                        goto attr_fail;
+                    Py_UCS4 q = PyUnicode_READ(kind, data, v);
+                    Py_ssize_t vs, ve;
+                    if (q == '"' || q == '\'') {
+                        Py_UCS4 c2 = 0;
+                        int amp = 0;
+                        vs = ve = v + 1;
+                        while (ve < n) {
+                            c2 = PyUnicode_READ(kind, data, ve);
+                            if (c2 == q || c2 == 0)
+                                break;
+                            if (c2 == '&')
+                                amp = 1;
+                            ve++;
+                        }
+                        if (ve >= n || c2 != q)
+                            goto attr_fail; /* NUL or unterminated */
+                        w = ve + 1;
+                        if (amp) {
+                            /* decoded only once the tag's '>' confirms */
+                            if (n_pending >= 64)
+                                goto attr_fail;
+                            pend_vs[n_pending] = vs;
+                            pend_ve[n_pending] = ve;
+                            deferred = 1;
+                        }
+                    } else {
+                        vs = ve = v;
+                        while (ve < n) {
+                            Py_UCS4 c2 = PyUnicode_READ(kind, data, ve);
+                            if (c2 == 0 || is_tag_ws_c(c2) || c2 == '>' ||
+                                c2 == '"' || c2 == '\'' || c2 == '<' ||
+                                c2 == '=' || c2 == '`' || c2 == '&')
+                                break;
+                            ve++;
+                        }
+                        if (ve == vs)
+                            goto attr_fail; /* empty / error-led value */
+                        if (ve < n) {
+                            Py_UCS4 c2 = PyUnicode_READ(kind, data, ve);
+                            if (c2 == '"' || c2 == '\'' || c2 == '<' ||
+                                c2 == '=' || c2 == '`' || c2 == '&' ||
+                                c2 == 0)
+                                goto attr_fail; /* error char ends value */
+                        }
+                        w = ve;
+                    }
+                    if (!deferred && na < 512) {
+                        val = PyUnicode_Substring(s, vs, ve);
+                        if (val == NULL) {
+                            drop_vals(av, na);
+                            goto fail;
+                        }
+                    }
+                }
+                if (na < 512) {
+                    av[na] = val;
+                    as_[na] = an_start;
+                    ae_[na] = an_end;
+                    if (deferred)
+                        pend_ai[n_pending++] = na;
+                    na++;
+                }
+                i = w;
+                continue;
+            attr_fail:
+                drop_vals(av, na);
+                goto done; /* bail this tag to Python */
+            }
+        }
+        while (i < n && is_tag_ws_c(PyUnicode_READ(kind, data, i)))
+            i++;
+        int self_closing = 0;
+        if (!is_end && i < n && PyUnicode_READ(kind, data, i) == '/') {
+            self_closing = 1;
+            i++;
+        }
+        if (i >= n || PyUnicode_READ(kind, data, i) != '>') {
+            drop_vals(av, na);
+            break; /* malformed / EOF: Python path */
+        }
+        Py_ssize_t tend = i + 1;
+
+        /* tag confirmed: decode the deferred '&'-bearing quoted values
+         * (may append parse errors — only now, like the Python path) */
+        for (int pi = 0; pi < n_pending; pi++) {
+            PyObject *decoded = PyObject_CallFunction(
+                g_scan_decode, "OnnO", s, pend_vs[pi], pend_ve[pi], errors);
+            if (decoded == NULL) {
+                drop_vals(av, na);
+                goto fail;
+            }
+            av[pend_ai[pi]] = decoded;
+        }
+
+        PyObject *attrs = NULL;
+        int dict_shape = 0;
+        if (na > 0) {
+            if (dict_attrs && na <= RT_MAX_SPANS) {
+                /* keys lowercased + interned, first wins */
+                attrs = _PyDict_NewPresized(na);
+                for (int x = 0; attrs != NULL && x < na; x++) {
+                    PyObject *key = normal_from_span(s, kind, data,
+                                                     as_[x], ae_[x]);
+                    if (key == NULL ||
+                        PyDict_SetDefault(attrs, key, av[x] != NULL
+                                          ? av[x] : Py_None) == NULL)
+                        Py_CLEAR(attrs);
+                    Py_XDECREF(key);
+                }
+                if (attrs == NULL) {
+                    drop_vals(av, na);
+                    goto fail;
+                }
+                dict_shape = PyDict_GET_SIZE(attrs) == na;
+                if (!dict_shape)  /* duplicate names: finalize_attrs */
+                    Py_CLEAR(attrs);  /* must see the pairs */
+            }
+            if (attrs == NULL)
+                attrs = attr_pairs(s, na, as_, ae_, av);
+            drop_vals(av, na);
+            if (attrs == NULL)
+                goto fail;
+        }
+
+        /* --- commit: text [p2, end2), then the tag --- */
+        if (end2 > p2) {
+            PyObject *text = PyUnicode_Substring(s, p2, end2);
+            if (text == NULL) {
+                Py_XDECREF(attrs);
+                goto fail;
+            }
+            rt_char(&ring[rn++], text, p2, end2);
+        }
+        PyObject *normal = normal_from_span(s, kind, data,
+                                            name_start, name_end);
+        if (normal == NULL) {
+            Py_XDECREF(attrs);
+            goto fail;
+        }
+        RawTok *rt = &ring[rn++];
+        rt->type = is_end ? TOK_END : TOK_START;
+        rt->selfc = self_closing;
+        rt->normal = normal;  /* steal */
+        rt->attrs = attrs;    /* steal (may be NULL) */
+        rt->data = NULL;
+        rt->name_s = name_start;
+        rt->name_e = name_end;
+        rt->start = end2;
+        rt->end = tend;
+        if (dict_shape) {
+            memcpy(rt->aspan_s, as_, na * sizeof(Py_ssize_t));
+            memcpy(rt->aspan_e, ae_, na * sizeof(Py_ssize_t));
+        }
+        out->markup_start = end2;
+        out->count++;
+        if (!is_end) {
+            Py_XSETREF(out->last_start, Py_NewRef(normal));
+            if (self_closing || PySet_Contains(g_scan_stop, normal) == 1)
+                stop = 1;
+        }
+        p2 = end2 = tend;
+        if (out->count >= 48)
+            stop = 1;
+        if (stop)
+            break;
+
+        /* --- advance over plain text to the next '<' --- */
+        Py_ssize_t j = p2;
+        Py_UCS4 c3 = 0;
+        while (j < n) {
+            c3 = PyUnicode_READ(kind, data, j);
+            if (c3 == '<' || c3 == '&' || c3 == 0)
+                break;
+            j++;
+        }
+        if (j >= n || c3 != '<')
+            break; /* EOF / entity / NUL: trailing text to Python */
+        end2 = j;
+    }
+
+done:
+    out->end = p2;
+    *prn = rn;
+    return 0;
+
+fail:
+    ring_clear_from(ring, rn0, rn);
+    Py_CLEAR(out->last_start);
+    return -1;
+}
+
+/* scan(s, pos, errors) -> (tokens, end_pos, markup_start, last_start)
+ * from the '<' at s[pos]: the committed FastTokens (empty: nothing
+ * handled, use the Python path), the position after the last committed
+ * tag (pos if none), that tag's '<' (-1 if none) and the normal of the
+ * last start tag (None if none). Deferred attr decodes append their parse
+ * errors to `errors`. */
+static PyObject *
+scan(PyObject *self, PyObject *args)
+{
+    PyObject *s, *errors;
+    Py_ssize_t pos;
+    if (!PyArg_ParseTuple(args, "UnO", &s, &pos, &errors))
+        return NULL;
+    if (g_scan_stop == NULL) {
+        PyErr_SetString(PyExc_RuntimeError, "fasttree scan not configured");
+        return NULL;
+    }
+    RawTok ring[RING_CAP];
+    int rn = 0;
+    ScanOut r;
+    if (scan_tags(s, pos, pos, errors, 0, ring, &rn, &r) < 0)
+        return NULL;
+    PyObject *tokens = PyList_New(rn);
+    for (int i = 0; tokens != NULL && i < rn; i++) {
+        PyObject *ft = rt_materialize(&ring[i], s);
+        if (ft == NULL)
+            Py_CLEAR(tokens);
+        else
+            PyList_SET_ITEM(tokens, i, ft);
+    }
+    PyObject *res = NULL;
+    if (tokens != NULL)
+        res = Py_BuildValue("(NnnO)", tokens, r.end, r.markup_start,
+                            r.last_start != NULL ? r.last_start : Py_None);
+    else
+        ring_clear_from(ring, 0, rn);
+    Py_XDECREF(r.last_start);
+    return res;
+}
+
+/* Full-pump refill from the tokenizer object. Returns 1 with *prn filled
+ * (>=1 tag committed), 0 to decline (Python path; tokenizer untouched),
+ * -1 on error. On success the tokenizer object's pos / markup_start /
+ * char_start / last_start are updated exactly as the Python _data fast
+ * path would, and pending _chars are flushed into ring[0]. *psrc holds an
+ * owned ref to the source string for later materialization. */
 static int
 cscan_fill(PyObject *tok_o, RawTok *ring, int *prn, PyObject **psrc)
 {
-    if (g_scan_stop == NULL || !g_ft_make_ok)
+    if (g_scan_stop == NULL)
         return 0;
     PyObject *st = PyObject_GetAttr(tok_o, s_tk_state);
     if (st == NULL)
@@ -2276,379 +2603,66 @@ cscan_fill(PyObject *tok_o, RawTok *ring, int *prn, PyObject **psrc)
     }
     if (lt >= n || cc != '<') { Py_DECREF(s); return 0; }
 
-    PyObject *errors = NULL, *chars = NULL, *last_start = NULL;
-    int rn = 0, count = 0, stop = 0, chars_checked = 0;
-    Py_ssize_t p2 = pos, end2 = lt, markup_start = -1;
+    PyObject *errors = NULL, *chars = NULL;
+    ScanOut r = {.last_start = NULL};
+    int rn = 0, flush;
 
     errors = PyObject_GetAttr(tok_o, s_errors);
     if (errors == NULL) goto fail;
     chars = PyObject_GetAttr(tok_o, s_tk_chars);
     if (chars == NULL || !PyList_Check(chars)) goto fail;
-
-    while (!stop) {
-        /* --- probe a fast tag at end2 (s[end2] == '<') --- */
-        Py_ssize_t i = end2 + 1;
-        int is_end = 0;
-        if (i < n && PyUnicode_READ(kind, data, i) == '/') {
-            is_end = 1;
-            i++;
-        }
-        if (i >= n || !is_alpha_c(PyUnicode_READ(kind, data, i)))
-            break; /* not a letter-led tag: Python path */
-        Py_ssize_t name_start = i;
-        i++;
-        while (i < n && is_name_char_c(PyUnicode_READ(kind, data, i)))
-            i++;
-        Py_ssize_t name_end = i;
-
-        /* --- attributes (start tags only; grammar identical to
-         * fastscan.c / _fast_attr_tag: any NUL, unterminated quote,
-         * error char, or >64 deferred '&' values bails the tag) --- */
-        PyObject *ak[512], *av[512];
-        Py_ssize_t as_[512], ae_[512];  /* original-case name spans */
-        int na = 0, dropped = 0;
-        Py_ssize_t pend_vs[64], pend_ve[64];
-        int pend_ai[64], n_pending = 0;
-        if (!is_end) {
-            while (1) {
-                Py_ssize_t w = i;
-                while (w < n && is_tag_ws_c(PyUnicode_READ(kind, data, w)))
-                    w++;
-                if (w == i || w >= n)
-                    break; /* no separator: tail must follow */
-                Py_UCS4 c0 = PyUnicode_READ(kind, data, w);
-                if (!is_attr_name_char_c(c0))
-                    break; /* '/' or '>' or error char: tail decides */
-                Py_ssize_t an_start = w;
-                while (w < n &&
-                       is_attr_name_char_c(PyUnicode_READ(kind, data, w)))
-                    w++;
-                Py_ssize_t an_end = w;
-                Py_ssize_t v = w;
-                while (v < n && is_tag_ws_c(PyUnicode_READ(kind, data, v)))
-                    v++;
-                PyObject *val = NULL;
-                int have_val = 0;
-                if (v < n && PyUnicode_READ(kind, data, v) == '=') {
-                    v++;
-                    while (v < n &&
-                           is_tag_ws_c(PyUnicode_READ(kind, data, v)))
-                        v++;
-                    if (v >= n)
-                        goto attr_fail;
-                    Py_UCS4 q = PyUnicode_READ(kind, data, v);
-                    if (q == '"' || q == '\'') {
-                        Py_ssize_t vs = v + 1, ve = vs;
-                        Py_UCS4 c2 = 0;
-                        int amp = 0;
-                        while (ve < n) {
-                            c2 = PyUnicode_READ(kind, data, ve);
-                            if (c2 == q || c2 == 0)
-                                break;
-                            if (c2 == '&')
-                                amp = 1;
-                            ve++;
-                        }
-                        if (ve >= n || c2 != q)
-                            goto attr_fail; /* NUL or unterminated */
-                        if (amp) {
-                            if (n_pending >= 64)
-                                goto attr_fail;
-                            pend_vs[n_pending] = vs;
-                            pend_ve[n_pending] = ve;
-                            have_val = 2; /* deferred decode */
-                        } else {
-                            val = PyUnicode_Substring(s, vs, ve);
-                            if (val == NULL)
-                                goto attr_err;
-                            have_val = 1;
-                        }
-                        w = ve + 1;
-                    } else {
-                        Py_ssize_t vs = v, ve = v;
-                        while (ve < n) {
-                            Py_UCS4 c2 = PyUnicode_READ(kind, data, ve);
-                            if (c2 == 0 || is_tag_ws_c(c2) || c2 == '>' ||
-                                c2 == '"' || c2 == '\'' || c2 == '<' ||
-                                c2 == '=' || c2 == '`' || c2 == '&')
-                                break;
-                            ve++;
-                        }
-                        if (ve == vs)
-                            goto attr_fail; /* empty / error-led value */
-                        if (ve < n) {
-                            Py_UCS4 c2 = PyUnicode_READ(kind, data, ve);
-                            if (c2 == '"' || c2 == '\'' || c2 == '<' ||
-                                c2 == '=' || c2 == '`' || c2 == '&' ||
-                                c2 == 0)
-                                goto attr_fail; /* error char ends value */
-                        }
-                        val = PyUnicode_Substring(s, vs, ve);
-                        if (val == NULL)
-                            goto attr_err;
-                        have_val = 1;
-                        w = ve;
-                    }
-                }
-                if (na < 512) {
-                    PyObject *aname = normal_from_span(s, kind, data,
-                                                       an_start, an_end);
-                    if (aname == NULL) {
-                        Py_XDECREF(val);
-                        goto attr_err;
-                    }
-                    ak[na] = aname;
-                    av[na] = have_val == 1 ? val : NULL;
-                    as_[na] = an_start;
-                    ae_[na] = an_end;
-                    if (have_val == 2)
-                        pend_ai[n_pending++] = na;
-                    na++;
-                } else {
-                    Py_XDECREF(val);
-                    dropped = 1;
-                    (void)dropped;
-                }
-                i = w;
-                continue;
-            attr_fail:
-                for (int x = 0; x < na; x++) {
-                    Py_DECREF(ak[x]);
-                    Py_XDECREF(av[x]);
-                }
-                goto scan_done; /* bail this tag to Python */
-            attr_err:
-                for (int x = 0; x < na; x++) {
-                    Py_DECREF(ak[x]);
-                    Py_XDECREF(av[x]);
-                }
-                goto fail;
-            }
-        }
-        while (i < n && is_tag_ws_c(PyUnicode_READ(kind, data, i)))
-            i++;
-        int self_closing = 0;
-        if (!is_end && i < n && PyUnicode_READ(kind, data, i) == '/') {
-            self_closing = 1;
-            i++;
-        }
-        if (i >= n || PyUnicode_READ(kind, data, i) != '>') {
-            for (int x = 0; x < na; x++) {
-                Py_DECREF(ak[x]);
-                Py_XDECREF(av[x]);
-            }
-            break; /* malformed / EOF: Python path */
-        }
-        Py_ssize_t tend = i + 1;
-
-        /* tag confirmed: decode deferred '&'-bearing quoted values (may
-         * append parse errors — only now, exactly like fastscan) */
-        for (int pi = 0; pi < n_pending; pi++) {
-            PyObject *decoded = PyObject_CallFunction(
-                g_scan_decode, "OnnO", s, pend_vs[pi], pend_ve[pi], errors);
-            if (decoded == NULL) {
-                for (int x = 0; x < na; x++) {
-                    Py_DECREF(ak[x]);
-                    Py_XDECREF(av[x]);
-                }
-                goto fail;
-            }
-            av[pend_ai[pi]] = decoded;
-        }
-
-        /* attrs object: presized dict (keys pre-lowercased + interned,
-         * first-wins) with original-name spans recorded for bail
-         * materialization; duplicates or >RT_MAX_SPANS attrs fall back to
-         * the fastscan pairs-list shape (original-case substring keys) so
-         * finalize_attrs and Python bail consumers behave identically */
-        PyObject *attrs_obj = NULL;
-        int n_spans = 0;
-        if (na > 0) {
-            PyObject *d = NULL;
-            if (na <= RT_MAX_SPANS) {
-                d = _PyDict_NewPresized(na);
-                if (d == NULL) goto tag_objs_fail;
-                for (int x = 0; x < na; x++) {
-                    if (PyDict_SetDefault(d, ak[x],
-                                          av[x] ? av[x] : Py_None) == NULL) {
-                        Py_DECREF(d);
-                        goto tag_objs_fail;
-                    }
-                }
-                if (PyDict_GET_SIZE(d) < na) {
-                    Py_DECREF(d);  /* dup keys: finalize must see pairs */
-                    d = NULL;
-                }
-            }
-            if (d != NULL) {
-                attrs_obj = d;
-                n_spans = na;  /* spans copied into the RawTok at commit */
-            } else {
-                PyObject *lst = PyList_New(na);
-                if (lst == NULL) goto tag_objs_fail;
-                for (int x = 0; x < na; x++) {
-                    PyObject *orig = PyUnicode_Substring(s, as_[x], ae_[x]);
-                    if (orig == NULL) {
-                        Py_DECREF(lst);
-                        goto tag_objs_fail;
-                    }
-                    PyObject *pair = PyTuple_Pack(
-                        2, orig, av[x] ? av[x] : Py_None);
-                    Py_DECREF(orig);
-                    if (pair == NULL) {
-                        Py_DECREF(lst);
-                        goto tag_objs_fail;
-                    }
-                    PyList_SET_ITEM(lst, x, pair);
-                }
-                attrs_obj = lst;
-            }
-            for (int x = 0; x < na; x++) {
-                Py_DECREF(ak[x]);
-                Py_XDECREF(av[x]);
-            }
-        }
-        goto tag_commit;
-    tag_objs_fail:
-        for (int x = 0; x < na; x++) {
-            Py_DECREF(ak[x]);
-            Py_XDECREF(av[x]);
-        }
+    /* pending _chars precede the first tag: ring[0] is kept for them */
+    flush = PyList_GET_SIZE(chars) > 0;
+    if (flush)
+        rt_char(&ring[rn++], NULL, 0, 0);
+    if (scan_tags(s, pos, lt, errors, 1, ring, &rn, &r) < 0)
         goto fail;
-    tag_commit:;
-
-        /* --- commit: pending chars flush, text [p2,end2), the tag --- */
-        if (!chars_checked) {
-            chars_checked = 1;
-            if (PyList_GET_SIZE(chars) > 0) {
-                PyObject *cd = PyUnicode_Join(g_empty_u, chars);
-                if (cd == NULL) { Py_XDECREF(attrs_obj); goto fail; }
-                PyObject *crs = PyObject_GetAttr(tok_o, s_tk_crs);
-                PyObject *ce = crs ? PyObject_GetAttr(tok_o, s_tk_ce) : NULL;
-                if (ce == NULL) {
-                    Py_XDECREF(crs); Py_DECREF(cd);
-                    Py_XDECREF(attrs_obj);
-                    goto fail;
-                }
-                RawTok *rc2 = &ring[rn++];
-                rc2->type = TOK_CHAR;
-                rc2->selfc = 0;
-                rc2->normal = NULL;
-                rc2->attrs = NULL;
-                rc2->data = cd;
-                rc2->name_s = -1;
-                rc2->name_e = -1;
-                rc2->n_spans = 0;
-                rc2->start = PyLong_AsSsize_t(crs);
-                rc2->end = PyLong_AsSsize_t(ce);
-                Py_DECREF(crs);
-                Py_DECREF(ce);
-                if (PyErr_Occurred() ||
-                    PyList_SetSlice(chars, 0,
-                                    PyList_GET_SIZE(chars), NULL) < 0) {
-                    Py_XDECREF(attrs_obj);
-                    goto fail;
-                }
-            }
-        }
-        if (end2 > p2) {
-            PyObject *text = PyUnicode_Substring(s, p2, end2);
-            if (text == NULL) { Py_XDECREF(attrs_obj); goto fail; }
-            RawTok *rc2 = &ring[rn++];
-            rc2->type = TOK_CHAR;
-            rc2->selfc = 0;
-            rc2->normal = NULL;
-            rc2->attrs = NULL;
-            rc2->data = text;
-            rc2->name_s = -1;
-            rc2->name_e = -1;
-            rc2->n_spans = 0;
-            rc2->start = p2;
-            rc2->end = end2;
-        }
-        PyObject *normal = normal_from_span(s, kind, data,
-                                            name_start, name_end);
-        if (normal == NULL) { Py_XDECREF(attrs_obj); goto fail; }
-        RawTok *rt = &ring[rn++];
-        rt->type = is_end ? TOK_END : TOK_START;
-        rt->selfc = self_closing;
-        rt->normal = normal;    /* steal */
-        rt->attrs = attrs_obj;  /* steal (may be NULL) */
-        rt->data = NULL;
-        rt->name_s = name_start;
-        rt->name_e = name_end;
-        rt->start = end2;
-        rt->end = tend;
-        rt->n_spans = n_spans;
-        for (int x = 0; x < n_spans; x++) {
-            rt->aspan_s[x] = as_[x];
-            rt->aspan_e[x] = ae_[x];
-        }
-        markup_start = end2;
-        count++;
-        if (!is_end) {
-            Py_XDECREF(last_start);
-            Py_INCREF(normal);
-            last_start = normal;
-            if (self_closing ||
-                PySet_Contains(g_scan_stop, normal) == 1)
-                stop = 1;
-        }
-        p2 = tend;
-        end2 = tend;
-        if (count >= 48)
-            stop = 1;
-        if (stop)
-            break;
-
-        /* --- advance over plain text to the next '<' --- */
-        Py_ssize_t j = p2;
-        Py_UCS4 c3 = 0;
-        while (j < n) {
-            c3 = PyUnicode_READ(kind, data, j);
-            if (c3 == '<' || c3 == '&' || c3 == 0)
-                break;
-            j++;
-        }
-        if (j >= n || c3 != '<')
-            break; /* EOF / entity / NUL: trailing text to Python */
-        end2 = j;
-    }
-
-scan_done:
-    if (count == 0) {
-        Py_XDECREF(last_start);
+    if (r.count == 0) {
         Py_DECREF(errors);
         Py_DECREF(chars);
         Py_DECREF(s);
         return 0;
     }
+    if (flush) {
+        PyObject *crs = PyObject_GetAttr(tok_o, s_tk_crs);
+        PyObject *ce = crs ? PyObject_GetAttr(tok_o, s_tk_ce) : NULL;
+        if (ce != NULL) {
+            ring[0].start = PyLong_AsSsize_t(crs);
+            ring[0].end = PyLong_AsSsize_t(ce);
+            if (!PyErr_Occurred())
+                ring[0].data = PyUnicode_Join(g_empty_u, chars);
+        }
+        Py_XDECREF(crs);
+        Py_XDECREF(ce);
+        if (ring[0].data == NULL ||
+            PyList_SetSlice(chars, 0, PyList_GET_SIZE(chars), NULL) < 0)
+            goto fail;
+    }
     /* write back tokenizer cursor exactly like the _data fast path */
     {
-        PyObject *pv = PyLong_FromSsize_t(p2);
-        PyObject *mv = PyLong_FromSsize_t(markup_start);
+        PyObject *pv = PyLong_FromSsize_t(r.end);
+        PyObject *mv = PyLong_FromSsize_t(r.markup_start);
         int rc = (pv != NULL && mv != NULL &&
                   PyObject_SetAttr(tok_o, s_tk_pos, pv) == 0 &&
                   PyObject_SetAttr(tok_o, s_tk_ms, mv) == 0 &&
                   PyObject_SetAttr(tok_o, s_tk_cs, pv) == 0) ? 0 : -1;
         Py_XDECREF(pv);
         Py_XDECREF(mv);
-        if (rc == 0 && last_start != NULL)
-            rc = PyObject_SetAttr(tok_o, s_tk_ls, last_start);
+        if (rc == 0 && r.last_start != NULL)
+            rc = PyObject_SetAttr(tok_o, s_tk_ls, r.last_start);
         if (rc < 0)
             goto fail;
     }
-    Py_XDECREF(last_start);
+    Py_XDECREF(r.last_start);
     Py_DECREF(errors);
     Py_DECREF(chars);
-    Py_XDECREF(*psrc);
-    *psrc = s; /* transfer */
+    Py_XSETREF(*psrc, s); /* transfer */
     *prn = rn;
     return 1;
 
 fail:
     ring_clear_from(ring, 0, rn);
-    Py_XDECREF(last_start);
+    Py_XDECREF(r.last_start);
     Py_XDECREF(errors);
     Py_XDECREF(chars);
     Py_DECREF(s);
@@ -2792,7 +2806,6 @@ apply(PyObject *self, PyObject *args)
                 token = rt_materialize(rt, pump_src);
                 if (token == NULL)
                     goto error_ctx;
-                rt_clear(rt);
                 ri++;
                 rt = NULL;
             }
@@ -3574,7 +3587,6 @@ bail_tok:
         token = rt_materialize(rt, pump_src);
         if (token == NULL)
             goto error_ctx;
-        rt_clear(rt);
         rt = NULL;
         ri++;
     }
@@ -4566,11 +4578,11 @@ static PyMethodDef methods[] = {
     {"prof_stats", prof_stats, METH_NOARGS, "profiler buckets"},
 #endif
     {"configure_scan", configure_scan, METH_VARARGS,
-     "set the full-pump scanner's stop set / attr decoder / Data state"},
+     "configure_scan(stop_set, decode_attr_value, data_state)"},
+    {"scan", scan, METH_VARARGS,
+     "scan(s, pos, errors) -> (tokens, end_pos, markup_start, last_start)"},
     {"configure_pump", configure_pump, METH_VARARGS,
      "set tokenizer state table + Character class for C-side refill"},
-    {"configure_tokens", configure_tokens, METH_VARARGS,
-     "resolve FastToken member offsets"},
     {"configure_prelude", configure_prelude, METH_VARARGS,
      "configure Initial/BeforeHtml prelude + AfterBody endgame"},
     {"configure_head", configure_head, METH_VARARGS,
@@ -4597,7 +4609,7 @@ static struct PyModuleDef moduledef = {
 PyMODINIT_FUNC
 PyInit_jsoup_fasttree(void)
 {
-    if (init_interned() < 0)
+    if (init_interned() < 0 || PyType_Ready(&FastTokenType) < 0)
         return NULL;
     return PyModule_Create(&moduledef);
 }

@@ -1637,7 +1637,9 @@ def decode_webp(payload: bytes) -> np.ndarray:
             # container level to honor the degrade-one-doc contract
             raise ValueError("WebP: truncated %s chunk" % tag.decode())
         if tag == b"VP8L":
-            vp8l = body
+            # libwebp's VP8L bit reader gets the rest of the data, not just
+            # the chunk: a stream may run on into the pad and later bytes
+            vp8l = payload[pos + 8:]
             break
         if tag == b"ALPH":
             alph = body

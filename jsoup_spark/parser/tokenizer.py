@@ -256,13 +256,13 @@ from . import tags as _tags  # noqa: E402 (cycle-safe: tags has no imports)
 
 _CUSTOM_STOP = _tags.DATA | _tags.RCDATA | _tags.SELF_CLOSE
 
-# optional C accelerator for the batching fast path (strict subset: text +
-# attr-less/end tags; see jsoup_spark/_native/fastscan.c). Falls back to
-# the byte-equivalent Python path when the extension is absent.
+# optional C accelerator for the batching fast path (fasttree.c's Data-state
+# scanner, also run by the tree builder's full pump; a strict subset of the
+# Python path, the source of truth and fallback when the extension is absent)
 try:
-    from .._native import jsoup_fastscan as _C
+    from .._native import jsoup_fasttree as _C
 
-    _C.configure(_BATCH_STOP, _decode_attr_value)
+    _C.configure_scan(_BATCH_STOP, _decode_attr_value, DATA)
 except ImportError:  # pragma: no cover - extension not built
     _C = None
 

@@ -2896,16 +2896,12 @@ if _FT is not None:
         C_IN_HEAD_EMPTY, _resolve_url, _DataNode, _CDataNode,
         BEFORE_HEAD, IN_HEAD, AFTER_HEAD, TEXT,
         tz.RCDATA, tz.RAWTEXT, tz.SCRIPT_DATA)
-    if tz._C is not None:
-        _FT.configure_tokens(tz._C.FastToken)
     # C-side queue refill (pump-lite): one apply() call usually covers a
-    # whole document instead of one per tokenizer batch
+    # whole document instead of one per tokenizer batch. The full pump,
+    # where apply() runs the Data-state scanner itself (struct tokens, no
+    # FastToken/deque round trip), uses the scanner configuration the
+    # tokenizer set up (tokenizer._C is this same module).
     _FT.configure_pump(tz._STATES, tz.Character)
-    # full pump: apply() runs the Data-state scanner itself (struct
-    # tokens, no FastToken/deque round trip); same grammar + stop set as
-    # jsoup_fastscan, which remains the source of truth for the non-pump
-    # path
-    _FT.configure_scan(tz._BATCH_STOP, tz._decode_attr_value, tz.DATA)
     _FT.configure_prelude(
         C_END_OTHER_ERRORS,
         # after-head start bails: real rules exist for these (frameset

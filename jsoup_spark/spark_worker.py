@@ -11,12 +11,13 @@ the archive's mtime/size changed; this shim backports that public
 behavior, so a genuinely modified archive still invalidates while the
 unchanged-zip hot path costs one os.stat.
 
-Activate with::
+Activate it through the top-level alias (pyspark's daemon.py silently
+runs the stock worker for a module name not starting with "pyspark")::
 
     SparkSession.builder
-        .config("spark.python.worker.module", "jsoup_spark.spark_worker")
+        .config("spark.python.worker.module", "pyspark_worker_zipcache")
 
-The module must be importable by the worker daemon (local mode: repo on
+The alias must be importable by the worker daemon (local mode: repo on
 the driver's PYTHONPATH; cluster mode: ship the package zip and include
 it in spark.executorEnv.PYTHONPATH). Everything else delegates verbatim
 to ``pyspark.worker``.

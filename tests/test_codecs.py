@@ -641,6 +641,45 @@ def test_webp_vp8l_mutated_streams_follow_libwebp():
             assert (got == theirs).all()
 
 
+def test_webp_vp8l_reads_past_its_chunk_like_libwebp():
+    """libwebp's VP8L bit reader runs over the rest of the data, not just
+    the chunk: a stream cut short still decodes while the bits it lacks
+    come from the RIFF pad byte or bytes after the RIFF, and fails only
+    past the end of the data. Each stream is an encoded image with the
+    VP8L chunk cut by 0-3 bytes (sizes fixed up), followed by 0, 2 or 4
+    more bytes. The 17 x 3 flat image needs 83 of its 96 chunk bits, so
+    with one byte cut it borrows 3 bits of the zero pad byte."""
+    rng = np.random.RandomState(22)
+    images = {"flat": np.full((17, 3, 3), 9, np.uint8),
+              "noise": rng.randint(0, 256, (4, 5, 3)).astype(np.uint8)}
+    tails = (b"", b"\0\0", b"\xff" * 4)
+    decodes = {"flat": ["TTT", "TTT", "FFF", "FFF"],
+               "noise": ["TTT", "FTT", "FTT", "FFT"]}
+    try:
+        import libwebp_ref as ref
+        lib = ref.available()
+    except ImportError:
+        lib = False
+    for name, img in images.items():
+        full = codecs.encode_webp_lossless(img)
+        chunk = full[20:20 + int.from_bytes(full[16:20], "little")]
+        for cut, row in enumerate(decodes[name]):
+            for tail, want in zip(tails, row):
+                data = _vp8l_riff(chunk[:len(chunk) - cut]) + tail
+                try:
+                    got = codecs.decode_webp(data)
+                except ValueError:
+                    got = None
+                assert (got is not None) == (want == "T"), (name, cut, tail)
+                if name == "flat" and got is not None:
+                    assert (got == img).all()
+                if lib and got is not None:
+                    assert (got == ref.decode_rgba(data)[:, :, :3]).all()
+                elif lib:
+                    with pytest.raises(ValueError):
+                        ref.decode_rgba(data)
+
+
 def _vp8l_normal_green(cl_lengths, green_bits, pixel_bits):
     """A 2 x 1 VP8L stream whose green code is a normal prefix code over
     greens 0 and 1. `cl_lengths` are the code-length code's lengths for

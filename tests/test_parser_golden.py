@@ -9,6 +9,7 @@ inside doctype names; we treat them as single codepoints.
 import gzip
 import hashlib
 import os
+import random
 
 import pytest
 from conftest import load_fixture
@@ -37,17 +38,99 @@ def test_fragment_golden():
         assert mine == case["tree"], (case, mine)
 
 
+def _scanner_edge_inputs(htmls):
+    """Inputs at the edges of the C Data-state scanner: hand-written
+    boundary cases (name case, duplicate attributes, the 8-attribute dict
+    shape and the 512-attribute cap, the 64 deferred '&' values, the
+    48-tag batch cap, NUL / CR / LF / unterminated quotes inside tags,
+    stop-set tags mid-batch), each also behind a stop-set tag, then 500
+    seeded mutations of `htmls` made around their tags."""
+    def attrs(n, fmt):
+        return " ".join(fmt.format(i) for i in range(n))
+
+    cases = [
+        "<DiV CLASS=a Id='b' dAtA-X=\"c\">x</dIv><P>y</p><SPAN tItle=t>z"
+        "</SpAn><sVg viewBox='0 0 1 1'><fOreignObject>w",
+        "<p a=1 A=2 a=3>x</p><b c d C e>y</b><i Class=1 class=2 CLASS=3>",
+        "<html Lang=en LANG=fr><body a=1 A=2><div x=1 x=2>t</div>",
+        "<p/>a<br/>b<foo/>c<p / >d<img src=x/>e<p a=b/>f",
+    ]
+    for n in (8, 9, 513):
+        cases += [
+            f"<div {attrs(n, 'a{0}=v{0}')}>x</div><p>y",
+            f"<html {attrs(n, 'Ab{0}')}><body {attrs(n, 'cD{0}=q')}>"
+            f"<svg {attrs(n, 'viewBox{0}=1')}>t</svg><p {attrs(n, 'E=1')}>",
+            "<head><meta " + attrs(n, "N{0}='&amp;{0}'") + "><title>t",
+        ]
+    for n in (63, 64, 65):
+        amp = attrs(n, "a{0}='x&amp;{0}&copy'")
+        cases += [f"<p>t<div {amp}>x</div><p>y",
+                  f"<b {amp}>x<i {amp}>y</i>"]
+    for n in (47, 48, 49):
+        cases += ["".join(f"<span>{i}" for i in range(n)) + "<b>tail",
+                  "<i>" * n + "x" + "</i>" * n + "<u>y",
+                  "a&amp;b" + "<em>" * n + "c",
+                  "<head>" + "<meta a=1>" * n + "<title>t</title>"]
+    cases += [
+        '<p a="x\x00y">t</p><b>u', "<p\x00 a=b>t", "<p a=b\x00>t",
+        "<p a\x00=b>", "t\x00<i>x</i>", "<p>a\x00b<i>c",
+        "<p\r\na=b\r\nc='d\r\ne'\r>x\r\n</p\r\n><b\n>y",
+        '<p a="x>t</p><b>u', "<p a='x>t</p><b>u", '<i>a<p a="x',
+        "<p a=", "<p a", "<p", "<", "</p", "</p ", "<p/", "<p/ >",
+        "<p a=`b>", '<p a=b"c>', "<p a=b'c>", "<p a=b<c>", "<p a=b=c>",
+        "<p =a>", "<p a= >", "<p a=b c=>", "<p a='b'c>", "</p a=b>",
+    ]
+    for stop in ("title", "script", "textarea", "plaintext", "style",
+                 "xmp", "noscript", "pre", "iframe", "listing"):
+        cases += [f"<p>a<b>b</b><{stop}>c<i>d</i></{stop}><u>e</u>",
+                  f"<head><meta a=1><{stop} x=1>c<i>d</{stop}><link>",
+                  "<div>" + "<i>x</i>" * 20 + f"<{stop}/>y<b>z",
+                  f"<p>a<{stop.upper()} A='&amp;'>\nb</{stop}>c<p>d"]
+    # the first batch of a document comes from tokenizer._data (scan());
+    # after a stop-set tag the tree builder's full pump scans the rest
+    cases += ["<title>t</title>" + c for c in cases]
+    cases.append("<p>x<html A=1 b=2><body C=3 c=4><html a=5 D=6><p>y")
+
+    rng = random.Random(22)
+    inserts = ["\x00", "\r\n", "\r", "\n", "\t", "\x0c", "'", '"',
+               "&", "&amp;", "&#0;", "<", ">", "/", "=", " ", "`", " a=1",
+               " A='&lt;x'", "<title>", "</title>", "<script>",
+               "<textarea>", "<plaintext>", "<B>", "</P>", "<br/>"]
+    for _ in range(500):
+        s = rng.choice(htmls)
+        for _ in range(rng.randint(1, 3)):
+            lts = [i for i, c in enumerate(s) if c == "<"] or [0]
+            i = min(len(s), rng.choice(lts) + rng.randrange(16))
+            op = rng.randrange(4)
+            if op == 0:  # case flip
+                j = i + rng.randint(1, 12)
+                s = s[:i] + s[i:j].swapcase() + s[j:]
+            elif op == 1:
+                s = s[:i] + rng.choice(inserts) + s[i:]
+            elif op == 2:
+                s = s[:i] + s[i + rng.randint(1, 4):]
+            else:  # repeat the tag at i (duplicate attributes, runs)
+                a = s.find("<", i)
+                b = s.find(">", a)
+                if a != -1 and b != -1:
+                    s = s[:b + 1] + s[a:b + 1] * rng.randint(1, 3) + s[b + 1:]
+        cases.append(s)
+    return cases
+
+
 def test_c_accelerators_match_python_paths(monkeypatch):
     """The pure-Python tokeniser, tree builder and span walker are the
     source of truth for the C tokeniser (tokenizer._C), tree-builder
     applier (treebuilder._FT) and span walker (spans._CW). On every
-    golden input, each configuration with some of them switched off
-    gives the canonical tree, parse errors and spans of the all-C run."""
+    golden input, and on the scanner edge inputs built from them, each
+    configuration with some of them switched off gives the canonical
+    tree, parse errors and spans of the all-C run."""
     from jsoup_spark.extract import spans
     from jsoup_spark.parser import tokenizer, treebuilder
 
     htmls = [c["html"] for c in load_fixture("golden_tree.json")]
     htmls += [c["html"] for c in load_fixture("golden_bodyhtml.json")]
+    htmls += _scanner_edge_inputs(htmls)
 
     def run():
         out = []
